@@ -337,6 +337,9 @@ def normalized_block(extras: dict, cpu_timings: dict) -> dict:
     }
 
 
+CORE_LINE_MAX = 1900  # survives a 2000-char stdout-tail capture
+
+
 def core_json_line(
     total: float,
     timings: dict,
@@ -368,12 +371,24 @@ def core_json_line(
         "sf": sf_dir,
     }
     line = json.dumps(core, separators=(",", ":"))
-    # the tail-survivability contract is load-bearing — fail loudly in
-    # CI (tests/test_bench_cpu.py pins it) rather than silently regrow
-    assert len(line) <= 1900, (
-        f"bench core JSON line grew to {len(line)} chars — keep it "
-        "tail-survivable (move bulky fields to the detail line)"
-    )
+    # the tail-survivability contract is load-bearing: an over-long
+    # line must still leave a parseable last line (an assert here ran
+    # only after the whole suite, and ``python -O`` stripped it), so
+    # drop trailing per-query walls until it fits and say how many
+    # went — the suite total and the detail line keep every row
+    if len(line) > CORE_LINE_MAX:
+        kept = dict(timings)
+        while kept and len(line) > CORE_LINE_MAX:
+            kept.popitem()
+            core["queries"] = kept
+            core["queries_dropped"] = len(timings) - len(kept)
+            line = json.dumps(core, separators=(",", ":"))
+        print(
+            f"bench: core JSON line over {CORE_LINE_MAX} chars; dropped "
+            f"{core['queries_dropped']} per-query walls from it (move bulky "
+            "fields to the detail line)",
+            file=sys.stderr,
+        )
     return line
 
 
@@ -904,8 +919,8 @@ def main():
     # opens FOUR state stores per partition (two sides × two
     # key-with/without-watermark stores), and the measured per-batch
     # cost is dominated by the per-STORE open/commit fixed term — so at
-    # equal key cardinality the right partition count is a quarter of
-    # the single-store rows', floored at 4 for the ≤1.5k-keys corpora
+    # equal key cardinality the right partition count is half of the
+    # single-store rows', floored at 4 for the ≤1.5k-keys corpora
     # here (≈400 users per partition, state still KBs).  Measured
     # min-of-4 at sf0.1: 3.40 s → 2.09 s wall / 11.5 → 5.3 cpu-s, same
     # output rows.  Parameterised like everything else — a production

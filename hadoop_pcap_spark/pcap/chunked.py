@@ -314,6 +314,66 @@ def index_capture_splits(
         return splits
 
 
+_INDEX_PREFIX = "pcapidx_"
+
+
+def _index_ident(path: str, split_bytes: int) -> "str | None":
+    """Cache identity of a capture's split index (local path + size +
+    mtime_ns + split_bytes), or None when the file cannot be stat'd
+    locally (remote URI, vanished file)."""
+    lp = local_path(path)
+    try:
+        st = os.stat(lp)
+    except OSError:
+        return None
+    return f"{lp}|{st.st_size}|{st.st_mtime_ns}|{split_bytes}"
+
+
+def _read_index(d: str, ident: str) -> tuple:
+    """``(hit, splits)`` from ``d/splits.json``; a hit only when the
+    stored ident matches (hash-collision / stale guard)."""
+    import json
+
+    try:
+        with open(os.path.join(d, "splits.json")) as f:
+            doc = json.load(f)
+    except (OSError, ValueError):
+        return False, None
+    if doc.get("ident") != ident or "splits" not in doc:
+        return False, None
+    splits = doc["splits"]
+    return True, None if splits is None else [tuple(s) for s in splits]
+
+
+def lookup_capture_splits(
+    path: str, split_bytes: int = DEFAULT_CHUNK_BYTES
+) -> tuple:
+    """Walk-free probe of :func:`index_capture_splits_cached`'s cache:
+    ``(True, splits)`` when an index for this exact file identity is
+    published (``splits`` is None for a file cached as unsplittable),
+    ``(False, None)`` on a miss or for a file that cannot be stat'd.
+
+    One ``os.stat`` and one small JSON read: no framing walk, no
+    ``makedirs``, no sibling sweep — cheap enough to run on the
+    driver for every listed file while planning a query.  The only
+    write is a best-effort mtime touch of a hit's dir, the staging
+    protocol's reader keep-alive, so an index that queries keep
+    hitting is not reclaimed as idle."""
+    from ..staging import keyed_tmp_path
+
+    ident = _index_ident(path, split_bytes)
+    if ident is None:
+        return False, None
+    d = keyed_tmp_path(_INDEX_PREFIX, ident)
+    hit, splits = _read_index(d, ident)
+    if hit:
+        try:
+            os.utime(d, None)
+        except OSError:
+            pass
+    return hit, splits
+
+
 def index_capture_splits_cached(
     path: str, split_bytes: int = DEFAULT_CHUNK_BYTES
 ) -> "list | None":
@@ -329,31 +389,20 @@ def index_capture_splits_cached(
     tmp area (guarded idle sweep, atomic publish — staging.py), NOT
     next to the source file, so read-only capture dirs work.  A file
     whose identity cannot be stat'd (remote URI without local stat)
-    just pays the walk each time."""
+    just pays the walk each time.  :func:`lookup_capture_splits` is
+    the walk-free read of the same cache."""
     import json
 
-    lp = local_path(path)
-    try:
-        st = os.stat(lp)
-        ident = f"{lp}|{st.st_size}|{st.st_mtime_ns}|{split_bytes}"
-    except OSError:
+    ident = _index_ident(path, split_bytes)
+    if ident is None:
         return index_capture_splits(path, split_bytes)
     from ..staging import keyed_tmp_dir
 
-    d = keyed_tmp_dir("pcapidx_", ident)
+    d = keyed_tmp_dir(_INDEX_PREFIX, ident)
+    hit, splits = _read_index(d, ident)
+    if hit:
+        return splits
     os.makedirs(d, exist_ok=True)
-    cache = os.path.join(d, "splits.json")
-    try:
-        with open(cache) as f:
-            doc = json.load(f)
-        if doc.get("ident") == ident:  # hash-collision / stale guard
-            return (
-                None
-                if doc["splits"] is None
-                else [tuple(s) for s in doc["splits"]]
-            )
-    except (OSError, ValueError):
-        pass
     splits = index_capture_splits(path, split_bytes)
     import tempfile as _tf
 
@@ -361,7 +410,7 @@ def index_capture_splits_cached(
     try:
         with os.fdopen(fd, "w") as f:
             json.dump({"ident": ident, "splits": splits}, f)
-        os.replace(tmp, cache)
+        os.replace(tmp, os.path.join(d, "splits.json"))
     except OSError:
         if os.path.exists(tmp):
             os.unlink(tmp)

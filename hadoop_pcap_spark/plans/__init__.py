@@ -92,14 +92,16 @@ _MEMO_ATTR = "_hadoop_pcap_read_memo"
 
 def _dir_fingerprint(path: str, st) -> tuple:
     """Identity key component for a DIRECTORY table: the directory's
-    own stat plus the max (name, mtime_ns, size) over its entries —
-    a part-file rewritten in place changes no directory entry count,
-    so the bare dir stat would serve a stale listing/schema
-    (ADVICE r13).  One shallow scandir; parquet dir tables here are
-    flat."""
+    own stat plus every entry's (name, mtime_ns, size) — a part-file
+    rewritten in place changes no directory entry count, so the bare
+    dir stat would serve a stale listing/schema (ADVICE r13), and a
+    rewrite of a part-file that is not the newest (e.g. restored with
+    an older mtime) must change the key too, so no single "newest"
+    entry stands in for the rest.  One shallow scandir; parquet dir
+    tables here are flat."""
     import os
 
-    newest = ()
+    entries = []
     try:
         with os.scandir(path) as it:
             for e in it:
@@ -107,12 +109,10 @@ def _dir_fingerprint(path: str, st) -> tuple:
                     est = e.stat()
                 except OSError:
                     continue
-                cand = (est.st_mtime_ns, est.st_size, e.name)
-                if cand > newest:
-                    newest = cand
+                entries.append((e.name, est.st_mtime_ns, est.st_size))
     except OSError:
         pass
-    return (st.st_mtime_ns, st.st_size, newest)
+    return (st.st_mtime_ns, st.st_size, tuple(sorted(entries)))
 
 
 def _read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:

@@ -457,12 +457,19 @@ def read_pcap(
     ``split_single_files=True`` breaks the reference's whole-file
     parallelism constraint (io/PcapInputFormat.java:72-75 —
     ``isSplitable`` false because pcap framing is a byte-chain): a
-    distributed INDEX pass (one task per file, framing walk only — no
-    decode, I/O speed) emits record-aligned ``chunk_bytes`` splits,
-    the tiny split metadata reshuffles across the cluster, and decode
-    tasks range-read their own split (seek + read — at deployment
-    scale these are object-store range GETs).  One N-GB capture then
-    decodes on every core instead of one.  Output is byte-identical
+    framing-only INDEX (no decode, I/O speed) cuts each file into
+    record-aligned ``chunk_bytes`` splits and decode tasks range-read
+    their own split (seek + read — at deployment scale these are
+    object-store range GETs).  One N-GB capture then decodes on every
+    core instead of one.  The index is cached by file identity: when
+    every file already has one, the driver plans the splits itself
+    and the query is one decode stage with a task per split; any
+    cold, rewritten or remote file instead runs the index as a
+    distributed pass (one task per file) whose tiny split metadata
+    reshuffles to ``min(defaultParallelism, Σ ceil(size /
+    chunk_bytes))`` decode tasks.  As with Spark's own file listing,
+    a warm plan's splits are fixed when the DataFrame is built:
+    rebuild it after rewriting a capture.  Output is byte-identical
     to the serial path (``pkt_no`` rebased per split from the index;
     property-diffed in tests/test_chunked.py).  Files the indexer
     cannot range-split (compressed, pcapng, foreign header) fall back
@@ -754,6 +761,37 @@ def read_pcap_stream(
     )
 
 
+def _listed_path(uri: str) -> str:
+    """A ``DataFrame.inputFiles()`` URI (``file:///x/a%20b.pcap``) in
+    the Hadoop ``Path.toString`` form binaryFile writes to its
+    ``path`` column (``file:/x/a b.pcap``), so driver-planned splits
+    carry the same ``file`` value and index-cache identity as rows
+    planned by the index stage."""
+    from urllib.parse import unquote, urlsplit
+
+    u = urlsplit(uri)
+    auth = f"//{unquote(u.netloc)}" if u.netloc else ""
+    return f"{u.scheme}:{auth}{unquote(u.path)}" if u.scheme else unquote(uri)
+
+
+def _slice_balanced(weights: list, n_slices: int) -> list:
+    """Row order (indices into ``weights``) under which the contiguous
+    slices Spark's ``parallelize`` cuts — the LocalTableScan's
+    partitions — carry near-equal weight: heaviest row first, into
+    the lightest slice that still has room.  Slice lengths follow
+    ``ParallelCollectionRDD.slice``."""
+    n = len(weights)
+    room = [(i + 1) * n // n_slices - i * n // n_slices for i in range(n_slices)]
+    slices: list = [[] for _ in range(n_slices)]
+    load = [0] * n_slices
+    for i in sorted(range(n), key=lambda i: -weights[i]):
+        j = min((k for k in range(n_slices) if room[k]), key=load.__getitem__)
+        slices[j].append(i)
+        room[j] -= 1
+        load[j] += weights[i]
+    return [i for sl in slices for i in sl]
+
+
 def _read_pcap_split(
     spark: SparkSession,
     files: DataFrame,
@@ -763,18 +801,36 @@ def _read_pcap_split(
     engine: str,
 ) -> DataFrame:
     """The split-parallel decode plan behind
-    ``read_pcap(split_single_files=True)``:
+    ``read_pcap(split_single_files=True)``.  Both plans feed split
+    descriptor rows ``(path, offset, n_bytes, first_pkt)`` to the same
+    decode closure (range-read the split, run the columnar kernel,
+    rebase pkt_no), so their output is identical:
 
-    paths → [index tasks: framing walk → (path, offset, n_bytes,
-    first_pkt) split rows] → round-robin repartition of the metadata
-    (bytes stay put — only ~40-byte split descriptors shuffle) →
-    [decode tasks: range-read the split, run the columnar kernel,
-    rebase pkt_no].  Unsplittable files degrade to one whole-file
-    split in place, so mixed directories need no second scan."""
+    * **warm** — every listed file has a published index
+      (:func:`..pcap.chunked.lookup_capture_splits`, a walk-free stat
+      + JSON read on the driver, no Spark job): the descriptors become
+      a JVM ``LocalTableScan`` with ``min(n_splits,
+      defaultParallelism)`` byte-balanced partitions, so the query is
+      ONE decode stage, one task per split, no index stage and no
+      exchange.  Each Python task costs a fixed worker set-up, so the
+      tasks that decode nothing are what this plan removes.
+    * **cold** — any file misses (new or rewritten capture, remote
+      URI): paths → [index tasks: framing walk, publishing the cache
+      the warm plan reads] → round-robin repartition of the metadata
+      (only ~40-byte descriptors shuffle) to ``min(defaultParallelism,
+      Σ ceil(size / chunk_bytes))`` partitions → decode.
+
+    Unsplittable files (compressed, pcapng, short header) become one
+    whole-file pseudo-split ``(-1, size, 1)`` decoded serially, so
+    mixed directories need no second scan.  Zero-byte files are not
+    planned: binaryFile's listing skips them, so no plan reads them."""
+    import math
+
     from ..pcap.chunked import (
         GLOBAL_HEADER_SIZE,
         file_size,
         index_capture_splits_cached,
+        lookup_capture_splits,
         open_raw,
     )
 
@@ -787,28 +843,62 @@ def _read_pcap_split(
         ]
     )
 
-    def index_partition(batches):
+    def descriptor_batch(indexed):
+        """(path, splits) pairs → one batch of descriptor rows; splits
+        None (unsplittable) → the whole-file pseudo-split, decoded
+        serially by one task via the streamed chunk path."""
         import pyarrow as pa
 
-        for rb in batches:
-            rows = {"path": [], "offset": [], "n_bytes": [], "first_pkt": []}
-            for p in rb.column(0).to_pylist():
-                splits = index_capture_splits_cached(p, chunk_bytes)
-                if splits is None:
-                    # unsplittable (compressed/pcapng/short): one
-                    # whole-file pseudo-split, decoded serially by one
-                    # task via the streamed chunk path
-                    splits = [(-1, max(file_size(p), 0), 1)]
-                for off, nb, fp in splits:
-                    rows["path"].append(p)
-                    rows["offset"].append(off)
-                    rows["n_bytes"].append(nb)
-                    rows["first_pkt"].append(fp)
-            yield pa.RecordBatch.from_pydict(rows)
+        rows = [
+            (p, off, nb, fp)
+            for p, splits in indexed
+            for off, nb, fp in (
+                splits if splits is not None else [(-1, max(file_size(p), 0), 1)]
+            )
+        ]
+        cols = list(zip(*rows)) or [()] * 4
+        return pa.RecordBatch.from_arrays(
+            [pa.array(cols[0], pa.string())]
+            + [pa.array(c, pa.int64()) for c in cols[1:]],
+            names=split_schema.fieldNames(),
+        )
 
-    splits_df = files.mapInArrow(index_partition, split_schema).repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    sizes = {}
+    for uri in files.inputFiles():
+        p = _listed_path(uri)
+        size = file_size(p)
+        if size:
+            sizes[p] = size
+    looked = {p: lookup_capture_splits(p, chunk_bytes) for p in sizes}
+    parallelism = spark.sparkContext.defaultParallelism
+
+    if all(hit for hit, _ in looked.values()):
+        import pyarrow as pa
+
+        batch = descriptor_batch((p, splits) for p, (_, splits) in looked.items())
+        order = _slice_balanced(
+            batch.column("n_bytes").to_pylist(),
+            max(1, min(batch.num_rows, parallelism)),
+        )
+        splits_df = spark.createDataFrame(
+            pa.Table.from_batches([batch.take(pa.array(order, pa.int64()))]),
+            split_schema,
+        )
+    else:
+
+        def index_partition(batches):
+            for rb in batches:
+                yield descriptor_batch(
+                    (p, index_capture_splits_cached(p, chunk_bytes))
+                    for p in rb.column(0).to_pylist()
+                )
+
+        n_splits = sum(
+            max(1, math.ceil(size / chunk_bytes)) for size in sizes.values()
+        )
+        splits_df = files.mapInArrow(index_partition, split_schema).repartition(
+            max(1, min(parallelism, n_splits))
+        )
 
     to_batches = (
         decode_files_to_arrow_columnar if engine == "arrow" else decode_files_to_arrow

@@ -54,6 +54,7 @@ __all__ = [
     "ensure_staged",
     "hold_stage",
     "keyed_tmp_dir",
+    "keyed_tmp_path",
 ]
 
 
@@ -220,15 +221,23 @@ def hold_stage(d: str) -> Iterator[str]:
         lf.close()
 
 
+def keyed_tmp_path(prefix: str, key: str, n: int = 12) -> str:
+    """The dir :func:`keyed_tmp_dir` resolves to, computed only: no
+    touch, no sweep, no mkdir — for read-only probes of a keyed
+    artifact."""
+    return os.path.join(
+        tempfile.gettempdir(), prefix + hashlib.md5(key.encode()).hexdigest()[:n]
+    )
+
+
 def keyed_tmp_dir(prefix: str, key: str, n: int = 12) -> str:
     """Resolve a tmp dir named by ``prefix`` + md5(``key``) with the
     same touch + guarded idle sweep as :func:`staged_dir`, for
     derived artifacts keyed by something other than a source file
     (e.g. streaming_queries' per-invocation sink spills).  The caller
     owns the contents; this only bounds tmp growth."""
-    tmp = tempfile.gettempdir()
-    name = prefix + hashlib.md5(key.encode()).hexdigest()[:n]
-    keep = os.path.join(tmp, name)
+    keep = keyed_tmp_path(prefix, key, n)
+    tmp, name = os.path.split(keep)
     if os.path.isdir(keep):
         try:
             os.utime(keep, None)

@@ -152,3 +152,28 @@ def test_bench_core_json_line_tail_survivable():
     assert parsed["drifted"] is False
     assert parsed["runs"] == 3
     assert parsed["sf"] == "/root/testdata/sf0.1"
+
+
+def test_bench_core_json_line_over_limit_still_parses(capsys):
+    """An over-long core line is cut down to the limit rather than
+    asserted on after the suite (``python -O`` strips asserts): the
+    last line still parses, keeps the contract fields, and marks how
+    many per-query walls it dropped."""
+    import json
+
+    timings = {f"row_with_a_deliberately_long_name_{i:03d}": 1.5 for i in range(80)}
+    line = bench.core_json_line(120.0, timings, False, False, 3, "/data/sf0.1")
+    assert len(line) <= bench.CORE_LINE_MAX
+    assert "\n" not in line
+    parsed = json.loads(line)
+    assert parsed["metric"] == "headline_suite_total"
+    assert parsed["value"] == 120.0
+    assert parsed["sf"] == "/data/sf0.1"
+    kept = parsed["queries"]
+    assert 0 < len(kept) < len(timings)
+    assert parsed["queries_dropped"] == len(timings) - len(kept)
+    assert all(timings[k] == v for k, v in kept.items())
+    assert "dropped" in capsys.readouterr().err
+    # within the limit nothing is dropped and no marker appears
+    short = json.loads(bench.core_json_line(1.0, {"a": 1.0}, False, False, 3, "x"))
+    assert "queries_dropped" not in short

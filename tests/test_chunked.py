@@ -706,6 +706,138 @@ def test_split_read_equals_serial(spark, tmp_path):
     assert split == serial
 
 
+def _split_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _sorted_rows(df):
+    return sorted((r.asDict() for r in df.collect()), key=lambda r: (r["file"], r["pkt_no"]))
+
+
+def test_split_read_warm_plans_splits_on_driver(spark, tmp_path):
+    """Once the index cache is warm, the split read is ONE decode stage
+    over a driver-built LocalTableScan: no index stage, no exchange,
+    min(n_splits, defaultParallelism) tasks — and the same rows as the
+    serial read, truncated tail and gz neighbour included.  The space
+    in the file name pins that driver-listed paths match binaryFile's
+    ``path`` column."""
+    from hadoop_pcap_spark.pcap.chunked import lookup_capture_splits
+    from hadoop_pcap_spark.sources import read_pcap
+
+    d = tmp_path / "caps"
+    d.mkdir()
+    data = _pcap_many(200, payload_size=120)
+    (d / "big file.pcap").write_bytes(data[:-7])  # truncated tail row
+    (d / "sibling.pcap.gz").write_bytes(gzip.compress(_pcap_many(13)))
+
+    def split_read():
+        return read_pcap(
+            spark, str(d), calculate_md5=True,
+            split_single_files=True, chunk_bytes=4096,
+        )
+
+    serial = _sorted_rows(read_pcap(spark, str(d), calculate_md5=True))
+    cold = split_read()
+    assert "Exchange" in _split_plan(cold)
+    assert _sorted_rows(cold) == serial  # this run publishes the index
+
+    warm = split_read()
+    plan = _split_plan(warm)
+    assert "Exchange" not in plan, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "LocalTableScan" in plan, plan
+    hits = [lookup_capture_splits(f"file:{p}", 4096) for p in sorted(d.iterdir())]
+    assert all(hit for hit, _ in hits)
+    big, gz = (s for _, s in hits)
+    assert gz is None and len(big) > 1
+    n_splits = len(big) + 1
+    parts = warm._jdf.queryExecution().toRdd().getNumPartitions()
+    assert parts == min(n_splits, spark.sparkContext.defaultParallelism)
+    rows = _sorted_rows(warm)
+    assert len(rows) == 200 + 13  # 199 full + 1 ts-only + 13 gz
+    assert rows == serial
+
+
+def test_split_read_rewritten_file_falls_back_to_index_stage(spark, tmp_path):
+    """A rewrite changes the file identity (mtime alone, or size), so
+    the driver lookup misses and the plan goes back to the index stage
+    — whose output equals a fresh serial read of the new bytes."""
+    from hadoop_pcap_spark.sources import read_pcap
+
+    d = tmp_path / "rw"
+    d.mkdir()
+    p = d / "r.pcap"
+    p.write_bytes(_pcap_many(60, payload_size=80))
+
+    def split_read():
+        return read_pcap(spark, str(d), split_single_files=True, chunk_bytes=2048)
+
+    split_read().collect()  # warm the index
+    assert "Exchange" not in _split_plan(split_read())
+
+    st = p.stat()
+    os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns + 5_000_000_000))
+    touched = split_read()
+    assert _split_plan(touched).count("MapInArrow") == 2
+    assert _sorted_rows(touched) == _sorted_rows(read_pcap(spark, str(d)))
+
+    p.write_bytes(_pcap_many(90, payload_size=50)[:-3])
+    rewritten = split_read()
+    plan = _split_plan(rewritten)
+    assert "Exchange" in plan and plan.count("MapInArrow") == 2, plan
+    serial = _sorted_rows(read_pcap(spark, str(d)))
+    assert len(serial) == 90
+    assert _sorted_rows(rewritten) == serial
+    assert "Exchange" not in _split_plan(split_read())  # warm again
+
+
+def test_lookup_capture_splits_is_walk_free(tmp_path):
+    """The driver-side lookup never walks and never creates the cache
+    dir on a miss; it hits once the walk-and-publish wrapper ran, and
+    reports a cached unsplittable file as a hit with ``None``."""
+    from hadoop_pcap_spark.pcap.chunked import (
+        _INDEX_PREFIX,
+        _index_ident,
+        index_capture_splits_cached,
+        lookup_capture_splits,
+    )
+    from hadoop_pcap_spark.staging import keyed_tmp_path
+
+    p = tmp_path / "l.pcap"
+    p.write_bytes(_pcap_many(30))
+    cache_dir = keyed_tmp_path(_INDEX_PREFIX, _index_ident(str(p), 400))
+    assert lookup_capture_splits(str(p), 400) == (False, None)
+    assert not os.path.exists(cache_dir)
+    splits = index_capture_splits_cached(str(p), 400)
+    assert os.path.isdir(cache_dir)
+    assert lookup_capture_splits(str(p), 400) == (True, splits)
+    assert lookup_capture_splits(f"file://{p}", 400) == (True, splits)
+    assert lookup_capture_splits(str(p), 401) == (False, None)  # other size
+    # unstat-able paths and remote URIs miss without touching tmp
+    assert lookup_capture_splits(str(tmp_path / "absent.pcap")) == (False, None)
+    assert lookup_capture_splits("s3://bucket/key.pcap") == (False, None)
+    g = tmp_path / "l.pcap.gz"
+    g.write_bytes(gzip.compress(_pcap_many(5)))
+    assert lookup_capture_splits(str(g)) == (False, None)
+    assert index_capture_splits_cached(str(g)) is None
+    assert lookup_capture_splits(str(g)) == (True, None)
+
+
+def test_slice_balanced_evens_out_parallelize_slices():
+    """Driver-planned descriptors are ordered so the contiguous slices
+    a LocalTableScan cuts carry near-equal bytes: two big splits that
+    arrive adjacent do not share one task."""
+    from hadoop_pcap_spark.sources.pcap_source import _listed_path, _slice_balanced
+
+    weights = [1, 1, 1, 1, 1, 1, 100, 100]
+    order = _slice_balanced(weights, 4)
+    assert sorted(order) == list(range(8))
+    loads = [sum(weights[i] for i in order[k * 2 : k * 2 + 2]) for k in range(4)]
+    assert max(loads) == 101
+    assert _listed_path("file:///t/a%20b%2520.pcap") == "file:/t/a b%20.pcap"
+    assert _listed_path("hdfs://nn:8020/c/d.pcap") == "hdfs://nn:8020/c/d.pcap"
+
+
 def test_split_read_requires_arrow_and_streamed(spark, tmp_path):
     from hadoop_pcap_spark.sources import read_pcap
 

@@ -862,3 +862,37 @@ def test_float_sensitive_queries_are_run_deterministic(spark):
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", "8")
         assert a == b, name
+
+
+def test_dir_fingerprint_sees_rewrite_of_older_entry(tmp_path):
+    """The bare-path reader memo keys a directory table on EVERY
+    entry's (name, mtime_ns, size): rewriting a part-file that is not
+    the newest — here restored with an even older mtime, same size —
+    must change the key, or the memo serves the stale reader."""
+    from types import SimpleNamespace
+
+    from hadoop_pcap_spark.plans import _dir_fingerprint, _read_parquet_memo
+
+    d = tmp_path / "t.parquet"
+    d.mkdir()
+    old, new = d / "part-0.parquet", d / "part-1.parquet"
+    old.write_bytes(b"a" * 64)
+    new.write_bytes(b"b" * 64)
+    os.utime(old, ns=(1_000_000_000_000, 1_000_000_000_000))
+    os.utime(new, ns=(2_000_000_000_000, 2_000_000_000_000))
+    key0 = _dir_fingerprint(str(d), os.stat(d))
+
+    reads = []
+    fake = SimpleNamespace(
+        read=SimpleNamespace(parquet=lambda p: reads.append(p) or object())
+    )
+    first = _read_parquet_memo(fake, str(d))
+    assert _read_parquet_memo(fake, str(d)) is first  # memo hit
+    dir_ns = os.stat(d).st_mtime_ns
+
+    old.write_bytes(b"c" * 64)  # in-place rewrite: no entry added
+    os.utime(old, ns=(500_000_000_000, 500_000_000_000))
+    assert os.stat(d).st_mtime_ns == dir_ns  # the dir stat cannot see it
+    assert _dir_fingerprint(str(d), os.stat(d)) != key0
+    assert _read_parquet_memo(fake, str(d)) is not first
+    assert len(reads) == 2
