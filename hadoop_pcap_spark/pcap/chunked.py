@@ -420,11 +420,14 @@ def index_capture_splits_cached(
 def local_path(spark_path: str) -> str:
     """``file:/x`` / ``file:///x`` URIs (as emitted by Spark's
     binaryFile source) → a local filesystem path; other strings pass
-    through untouched."""
+    through untouched.  binaryFile's ``path`` column is Hadoop's
+    ``Path.toString``, which is already unescaped, so only the scheme
+    and an empty ``//`` authority are stripped — no URI decoding, which
+    would turn ``cap#1.pcap`` into ``cap`` and ``a%41.pcap`` into
+    ``aA.pcap``."""
     if spark_path.startswith("file:"):
-        from urllib.parse import unquote, urlparse
-
-        return unquote(urlparse(spark_path).path)
+        p = spark_path[len("file:"):]
+        return p[2:] if p.startswith("///") else p
     return spark_path
 
 

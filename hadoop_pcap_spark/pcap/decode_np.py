@@ -22,7 +22,9 @@ hot path computes whole-file *columns* instead of per-packet dicts:
    (opt-in hashlib).
 
 Output is a column dict ready to become pyarrow RecordBatches — the
-``read_pcap(engine='arrow')`` path.  Correctness contract: for any
+one decode behind every Spark ingest path
+(``sources/pcap_source.py::decode_files_to_arrow_columnar``).
+Correctness contract: for any
 input bytes and options, rows here == rows from decode.decode_pcap
 (tests/test_decode_columnar.py diffs both kernels field-by-field over
 the golden fixtures and the property-test generators).

@@ -21,8 +21,10 @@ behavior and will flag the upstream fix).  The supported SQL entry is
 same reader — full pushdown/pruning), matching the serde-table
 workflow end to end.
 
-Partitioning: one InputPartition per file — the same parallelism grain
-as the reference (pcap is unsplittable, io/PcapInputFormat.java:72-75).
+Partitioning: one InputPartition per file, batch and streaming alike —
+the same parallelism grain as the reference (pcap is unsplittable,
+io/PcapInputFormat.java:72-75).  Each partition is decoded on an
+executor by the columnar kernel into Arrow RecordBatches.
 """
 
 from __future__ import annotations
@@ -34,32 +36,13 @@ from typing import Iterator, List
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
+    DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 from pyspark.sql.types import StructType
 
-from ..pcap.decode import DecodeOptions, decode_pcap
+from ..pcap.decode import DecodeOptions
 from .pcap_source import packet_schema
-
-
-import contextlib
-
-
-@contextlib.contextmanager
-def _skip_broken_stream(path: str, stream=None):
-    """A corrupt/truncated rotated file must not kill the stream query
-    — decompression errors mid-read skip the file (its complete
-    chunks already decoded stand, like a truncated raw capture).
-    The codec-specific error set comes from the opened stream's type
-    (zstd's ZstdError / lz4's RuntimeError included only for streams
-    those codecs opened — ADVICE r3)."""
-    from ..pcap.chunked import stream_error_types
-
-    try:
-        yield
-    except stream_error_types(stream) as exc:
-        del exc
 
 
 def _expand_paths(path: str) -> List[str]:
@@ -151,8 +134,10 @@ class PcapDataSourceReader(DataSourceReader):
 
     def read(self, partition: _PcapFilePartition):
         """Yields pyarrow RecordBatches (PySpark 4 DataSource API fast
-        path) built by the vectorized columnar kernel — same rows as
-        the scalar per-tuple path, ~3.5× the decode throughput.
+        path) built by the vectorized columnar kernel.  Shared by the
+        batch and the streaming reader; ``mode`` governs both decode
+        errors and unreadable files (PERMISSIVE skips, FAILFAST fails
+        the task).
 
         Bounded memory: the file streams through record-aligned chunks
         (``chunkbytes`` option, default 64 MiB) instead of one
@@ -237,11 +222,14 @@ def _decode_opts(options: dict, schema: StructType | None = None) -> DecodeOptio
     )
 
 
-class PcapSimpleStreamReader(SimpleDataSourceStreamReader):
+class PcapStreamReader(DataSourceStreamReader):
     """Live-capture streaming: each micro-batch decodes the capture
     files that appeared in the directory since the last offset — the
     'live feed = more pcap files arriving' model (SURVEY §2.4
-    streaming analogs).
+    streaming analogs).  The driver only lists files and plans one
+    :class:`_PcapFilePartition` per new file; executors decode them
+    through :meth:`PcapDataSourceReader.read`, so ``mode`` and
+    ``chunkbytes`` mean what they mean for batch ``format("pcap")``.
 
     Offset (compacted, bounded): ``{"wm": <mtime-ns watermark>,
     "recent": {path: mtime_ns, ...}}``.  A file is *already processed*
@@ -250,16 +238,16 @@ class PcapSimpleStreamReader(SimpleDataSourceStreamReader):
     prunes ``recent`` entries older than the new watermark, so the
     offset size is bounded by the file-arrival rate × retention window
     instead of growing with every file ever seen (capture-rotation
-    dirs run forever).  Files processed in the current batch are kept
-    in ``recent`` unconditionally until the *next* batch so
-    ``readBetweenOffsets`` can replay the exact delta after a restart
-    (effectively-once).  Tradeoff, same as Spark's FileStreamSource
-    ``maxFileAge``: a file that first appears with an mtime older than
-    ``retention`` behind the newest file is treated as already
-    processed and skipped — set option ``offsetretentionsec`` (default
-    300) to the max expected arrival lateness.  Legacy ``{"seen":
-    [...]}`` offsets from pre-compaction checkpoints are still
-    understood."""
+    dirs run forever).  Files of the current batch are kept in
+    ``recent`` unconditionally until the *next* batch, so
+    ``partitions(start, end)`` is a pure function of the two offsets
+    and a restart replays the exact delta (effectively-once).
+    Tradeoff, same as Spark's FileStreamSource ``maxFileAge``: a file
+    that first appears with an mtime older than ``retention`` behind
+    the newest file is treated as already processed and skipped — set
+    option ``offsetretentionsec`` (default 300) to the max expected
+    arrival lateness.  Legacy ``{"seen": [...]}`` offsets from
+    pre-compaction checkpoints are still understood."""
 
     def __init__(self, schema: StructType, options: dict):
         self._schema = schema
@@ -270,6 +258,11 @@ class PcapSimpleStreamReader(SimpleDataSourceStreamReader):
         self._retention_ns = int(
             float(options.get("offsetretentionsec", "300")) * 1e9
         )
+        # the offset the next latestOffset() advances from; a query
+        # restarting from a checkpoint seeds it through partitions()
+        # (Spark replays the logged batch, or calls partitions(end,
+        # end) for a committed one) or commit()
+        self._current = None
 
     def initialOffset(self) -> dict:
         return {"wm": 0, "recent": {}}
@@ -306,35 +299,13 @@ class PcapSimpleStreamReader(SimpleDataSourceStreamReader):
                 out.append((p, st.st_mtime_ns))
         return out
 
-    def _decode_files(self, files):
-        from ..pcap.chunked import iter_capture_chunks, open_decompressed
-
-        names = [f.name for f in self._schema.fields]
-        opts = _decode_opts(self._options, self._schema)
-        out = []
-        for path in files:
-            try:
-                stream = open_decompressed(path)
-            except OSError:
-                continue  # rotated away between listing and read
-            with _skip_broken_stream(path, stream), stream:
-                pkt_off = 0
-                for chunk in iter_capture_chunks(stream, name=path):
-                    seen = 0
-                    for pkt in decode_pcap(chunk, name=path, opts=opts):
-                        pkt["file"] = path
-                        pkt["pkt_no"] += pkt_off
-                        seen = pkt["pkt_no"] - pkt_off
-                        out.append(tuple(pkt.get(n) for n in names))
-                    pkt_off += seen
-        return out
-
-    def read(self, start: dict):
+    def latestOffset(self) -> dict:
+        if self._current is None:
+            self._current = self.initialOffset()
+        start = self._current
         current = self._list_files()
         cur = dict(current)
-        new = sorted(
-            (p, m) for p, m in current if not self._processed(start, p, m)
-        )
+        new = [(p, m) for p, m in current if not self._processed(start, p, m)]
         max_m = max((m for _, m in current), default=0)
         wm = max(start.get("wm", 0), max_m - self._retention_ns)
         recent = {}
@@ -354,18 +325,26 @@ class PcapSimpleStreamReader(SimpleDataSourceStreamReader):
             # mtimes (missing files pin to wm and age out immediately)
             recent.update({p: cur.get(p, wm) for p in start["seen"]})
         # batch files stay in `recent` regardless of wm so that
-        # readBetweenOffsets(start, end) can replay them exactly
+        # partitions(start, end) can replay them exactly
         recent.update(dict(new))
-        end = {"wm": wm, "recent": recent}
-        return iter(self._decode_files([p for p, _ in new])), end
+        self._current = {"wm": wm, "recent": recent}
+        return self._current
 
-    def readBetweenOffsets(self, start: dict, end: dict):
-        delta = sorted(
-            p
-            for p, m in end.get("recent", {}).items()
-            if not self._processed(start, p, m)
-        )
-        return iter(self._decode_files(delta))
+    def partitions(self, start: dict, end: dict) -> List[InputPartition]:
+        if self._current is None:
+            self._current = end
+        return [
+            _PcapFilePartition(p)
+            for p in sorted(end.get("recent", {}))
+            if not self._processed(start, p, end["recent"][p])
+        ]
+
+    def commit(self, end: dict) -> None:
+        if self._current is None:
+            self._current = end
+
+    def read(self, partition: _PcapFilePartition):
+        return PcapDataSourceReader(self._schema, self._options).read(partition)
 
 
 DDL_OPTIONS_ENV = "SPARK_PCAP_DDL_OPTIONS"
@@ -501,8 +480,8 @@ class PcapDataSource(DataSource):
         )
         return cls(schema, opts)
 
-    def simpleStreamReader(self, schema: StructType) -> PcapSimpleStreamReader:
-        return PcapSimpleStreamReader(schema, dict(self.options))
+    def streamReader(self, schema: StructType) -> PcapStreamReader:
+        return PcapStreamReader(schema, dict(self.options))
 
 
 def register_pcap_datasource(spark) -> None:

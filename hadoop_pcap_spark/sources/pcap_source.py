@@ -9,13 +9,17 @@ PcapDeserializer.java:21-66) with two Spark-native paths:
 1. ``read_pcap(spark, path, ...)`` — ``binaryFile`` scan (one row per
    file; pcap is unsplittable, same constraint as the reference's
    ``isSplitable → false``) followed by a columnar decode into a fixed
-   wide schema (``mapInArrow`` by default, ``mapInPandas`` via
-   ``engine='pandas'``).  Spark's ``spark.sql.files.maxPartitionBytes``
-   / ``openCostInBytes`` give the small-file packing that
-   `CombinePcapInputFormat` hand-rolled.
+   wide schema (``mapInArrow``).  Spark's
+   ``spark.sql.files.maxPartitionBytes`` / ``openCostInBytes`` give the
+   small-file packing that `CombinePcapInputFormat` hand-rolled.
 
 2. a registered Python DataSource (``spark.read.format("pcap")`` /
    ``CREATE TABLE ... USING pcap``) — see :mod:`.datasource`.
+
+Every Spark ingest path — both of these, ``read_pcap_stream`` and
+``decode_frames`` — decodes through one kernel,
+:func:`decode_files_to_arrow_columnar`; the scalar per-packet kernel
+is kept only as the differential oracle in tests and for the dump CLI.
 
 Scale design (100 TB): the decode is embarrassingly parallel per file
 (one task per file, Arrow batches out); the recommended pipeline is
@@ -38,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..pcap.decode import DecodeOptions, PcapFormatError, decode_pcap
+from ..pcap.decode import DecodeOptions, PcapFormatError
 
 # --- the wide packet schema (SURVEY.md §1.5; FIXTURES.md §1-2) ---------------
 
@@ -124,101 +128,27 @@ def packet_schema(
     )
 
 
-def decode_files_to_frames(
-    file_rows: Iterable[tuple],
-    schema: T.StructType,
-    opts: DecodeOptions,
-    batch_rows: int = 8192,
-) -> Iterator[pd.DataFrame]:
-    """(path, bytes) pairs → pandas frames matching ``schema``.
-
-    Shared by the mapInPandas path and the DataSource V2 reader.
-    Missing keys become None → NULL, mirroring the Hive SerDe's
-    missing-key→NULL projection (PcapDeserializer.java:50-60).
-
-    Continuation contract (all three ``decode_files_to_*``):
-    consecutive pairs with the SAME path are record-aligned chunks of
-    one file (see :mod:`..pcap.chunked`) — ``pkt_no`` continues across
-    them, so chunked and whole-file decode yield identical rows.
-    """
-    names = [f.name for f in schema.fields]
-    buf: List[dict] = []
-    prev_path, pkt_off = None, 0
-    for path, data in file_rows:
-        if path != prev_path:
-            prev_path, pkt_off = path, 0
-        seen = 0
-        for pkt in decode_pcap(data, name=path, opts=opts):
-            pkt["file"] = path
-            pkt["pkt_no"] += pkt_off
-            seen = pkt["pkt_no"] - pkt_off
-            buf.append(pkt)
-            if len(buf) >= batch_rows:
-                yield pd.DataFrame(
-                    {n: [row.get(n) for row in buf] for n in names}
-                )
-                buf = []
-        pkt_off += seen
-    if buf:
-        yield pd.DataFrame({n: [row.get(n) for row in buf] for n in names})
-
-
-def decode_files_to_arrow(
-    file_rows: Iterable[tuple],
-    schema: T.StructType,
-    opts: DecodeOptions,
-    batch_rows: int = 8192,
-):
-    """(path, bytes) pairs → pyarrow RecordBatches (columnar, no
-    pandas detour — measurably faster than the pandas path for the
-    string-heavy packet schema)."""
-    import pyarrow as pa
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema = to_arrow_schema(schema)
-    names = [f.name for f in schema.fields]
-    cols = {n: [] for n in names}
-    count = 0
-    prev_path, pkt_off = None, 0
-    for path, data in file_rows:
-        if path != prev_path:
-            prev_path, pkt_off = path, 0
-        seen = 0
-        for pkt in decode_pcap(data, name=path, opts=opts):
-            pkt["file"] = path
-            pkt["pkt_no"] += pkt_off
-            seen = pkt["pkt_no"] - pkt_off
-            for n in names:
-                cols[n].append(pkt.get(n))
-            count += 1
-            if count >= batch_rows:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[n], type=arrow_schema.field(n).type) for n in names],
-                    schema=arrow_schema,
-                )
-                cols = {n: [] for n in names}
-                count = 0
-        pkt_off += seen
-    if count:
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(cols[n], type=arrow_schema.field(n).type) for n in names],
-            schema=arrow_schema,
-        )
-
-
 def decode_files_to_arrow_columnar(
     file_rows: Iterable[tuple],
     schema: T.StructType,
     opts: DecodeOptions,
     batch_rows: int = 65536,
+    pkt_base: int = 0,
 ):
     """(path, bytes) pairs → pyarrow RecordBatches via the vectorized
     columnar kernel (:mod:`..pcap.decode_np`): whole-file numpy column
     extraction, then zero-copy-ish Arrow construction (numeric columns
     hand over the ndarray + null mask directly).  ~3.5× the scalar
     kernel's packets/s/core — at 100 TB the decode IS the job, so this
-    is the default ``read_pcap`` path."""
+    is the one decode behind every Spark ingest path.
+
+    Continuation contract: consecutive pairs with the SAME path are
+    record-aligned chunks of one file (see :mod:`..pcap.chunked`) —
+    ``pkt_no`` continues across them, so chunked and whole-file decode
+    yield identical rows.  ``pkt_base`` is added to every row's
+    ``pkt_no`` (a split's or a frame batch's position in its stream).
+    Missing values become NULL, mirroring the Hive SerDe's
+    missing-key→NULL projection (PcapDeserializer.java:50-60)."""
     import pyarrow as pa
 
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -234,9 +164,10 @@ def decode_files_to_arrow_columnar(
         if path != prev_path:
             prev_path, pkt_off = path, 0
         res = decode_pcap_columnar(data, name=path, opts=opts)
-        if pkt_off:
-            # consecutive chunks of one file: continue the ordinal
-            res.numeric["pkt_no"][0][:] += pkt_off
+        if pkt_off + pkt_base:
+            # consecutive chunks of one file continue the ordinal;
+            # pkt_base shifts it as a whole
+            res.numeric["pkt_no"][0][:] += pkt_off + pkt_base
         pkt_off += res.n
         for s0, s1 in _batch_ranges(res, batch_rows, np):
             arrays = []
@@ -411,6 +342,31 @@ def _spans_arrow(res, spans, objs_col, s0: int, s1: int, np, pa):
     )
 
 
+def _decode_plan(
+    decoder: str,
+    columns: Optional[Iterable[str]],
+    keep_frame: bool,
+    calculate_md5: bool,
+    keep_payload: bool,
+    strict_reference: bool,
+    mode: str,
+):
+    """(output schema, DecodeOptions) for the ``read_pcap`` family's
+    shared arguments: a ``columns`` list is pushed into the decoder as
+    ``wanted``, and naming a frame column turns ``keep_frame`` on."""
+    schema = packet_schema(decoder, columns, keep_frame)
+    wanted = set(f.name for f in schema.fields) if columns is not None else None
+    return schema, DecodeOptions(
+        decoder=decoder,
+        calculate_md5=calculate_md5,
+        keep_payload=keep_payload,
+        strict_reference=strict_reference,
+        mode=mode,
+        wanted=wanted,
+        keep_frame=keep_frame or bool(wanted and (wanted & _FRAME_COLS)),
+    )
+
+
 def read_pcap(
     spark: SparkSession,
     path: str,
@@ -421,7 +377,6 @@ def read_pcap(
     mode: str = "FAILFAST",
     columns: Optional[Iterable[str]] = None,
     path_glob: Optional[str] = None,
-    engine: str = "arrow",
     chunk_bytes: Optional[int] = None,
     keep_frame: bool = False,
     split_single_files: bool = False,
@@ -435,12 +390,9 @@ def read_pcap(
 
     The reference's pluggable-reader conf
     (``net.ripe.hadoop.pcap.io.reader.class``) becomes the ``decoder``
-    argument; ``calculateMD5`` becomes ``calculate_md5``.
-    ``engine='arrow'`` (default) runs the vectorized columnar kernel
-    and builds Arrow batches directly (mapInArrow);
-    ``'arrow-scalar'`` keeps the per-packet kernel behind the same
-    Arrow plumbing (cross-check path); ``'pandas'`` the mapInPandas
-    path.
+    argument; ``calculateMD5`` becomes ``calculate_md5``.  Decode runs
+    the vectorized columnar kernel and builds Arrow batches directly
+    (mapInArrow).
 
     Memory: local files are decoded in bounded memory — the driver
     lists paths only (no ``content`` materialization, so binaryFile's
@@ -473,32 +425,19 @@ def read_pcap(
     to the serial path (``pkt_no`` rebased per split from the index;
     property-diffed in tests/test_chunked.py).  Files the indexer
     cannot range-split (compressed, pcapng, foreign header) fall back
-    to the serial streamed path automatically; requires an ``arrow``
-    engine and a seekable (streamed) source.
+    to the serial streamed path automatically; requires a seekable
+    (streamed) source.
     """
-    if engine not in ("arrow", "arrow-scalar", "pandas"):
-        raise ValueError(
-            f"engine must be 'arrow', 'arrow-scalar' or 'pandas', got {engine!r}"
-        )
     from urllib.parse import urlparse
 
-    from ..pcap.chunked import DEFAULT_CHUNK_BYTES, stream_file_chunks
+    from ..pcap.chunked import DEFAULT_CHUNK_BYTES, supports_scheme
 
     if chunk_bytes is None:
         chunk_bytes = DEFAULT_CHUNK_BYTES
-    schema = packet_schema(decoder, columns, keep_frame)
-    wanted = set(f.name for f in schema.fields) if columns is not None else None
-    opts = DecodeOptions(
-        decoder=decoder,
-        calculate_md5=calculate_md5,
-        keep_payload=keep_payload,
-        strict_reference=strict_reference,
-        mode=mode,
-        wanted=wanted,
-        keep_frame=keep_frame or bool(wanted and (wanted & _FRAME_COLS)),
+    schema, opts = _decode_plan(
+        decoder, columns, keep_frame,
+        calculate_md5, keep_payload, strict_reference, mode,
     )
-    from ..pcap.chunked import supports_scheme
-
     streamed = bool(chunk_bytes) and supports_scheme(urlparse(path).scheme)
 
     reader = spark.read.format("binaryFile")
@@ -511,49 +450,24 @@ def read_pcap(
     )
 
     if split_single_files:
-        if engine not in ("arrow", "arrow-scalar"):
-            raise ValueError("split_single_files requires an arrow engine")
         if not streamed:
             raise ValueError(
                 "split_single_files requires a seekable streamed source "
                 "(local path or pyarrow.fs-reachable URI, chunk_bytes > 0)"
             )
-        return _read_pcap_split(
-            spark, files, schema, opts, chunk_bytes, engine
-        )
+        return _read_pcap_split(spark, files, schema, opts, chunk_bytes)
 
-    if engine in ("arrow", "arrow-scalar"):
-        return files.mapInArrow(
-            _arrow_decode_fn(schema, opts, streamed, chunk_bytes, engine),
-            schema,
-        )
-
-    def decode_partition(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def gen():
-            for pdf in it:
-                if streamed:
-                    yield from stream_file_chunks(
-                        pdf["path"], chunk_bytes, permissive=opts.mode == "PERMISSIVE"
-                    )
-                else:
-                    yield from zip(pdf["path"], pdf["content"])
-        yield from decode_files_to_frames(gen(), schema, opts)
-
-    return files.mapInPandas(decode_partition, schema)
+    return files.mapInArrow(
+        _arrow_decode_fn(schema, opts, streamed, chunk_bytes), schema
+    )
 
 
-def _arrow_decode_fn(schema, opts, streamed: bool, chunk_bytes: int, engine: str):
+def _arrow_decode_fn(schema, opts, streamed: bool, chunk_bytes: int):
     """The per-partition decode closure shared by the batch reader
     (mapInArrow over binaryFile rows) and the streaming reader (same
     mapInArrow over the binaryFile STREAM): path rows in, typed Arrow
     record batches out, via the chunked O(1)-memory feed."""
     from ..pcap.chunked import stream_file_chunks
-
-    to_batches = (
-        decode_files_to_arrow_columnar
-        if engine == "arrow"
-        else decode_files_to_arrow
-    )
 
     def decode_partition_arrow(batches):
         def gen():
@@ -567,7 +481,7 @@ def _arrow_decode_fn(schema, opts, streamed: bool, chunk_bytes: int, engine: str
                     contents = rb.column(1).to_pylist()
                     yield from zip(paths, contents)
 
-        yield from to_batches(gen(), schema, opts)
+        yield from decode_files_to_arrow_columnar(gen(), schema, opts)
 
     return decode_partition_arrow
 
@@ -583,13 +497,12 @@ def decode_frames(
     strict_reference: bool = True,
     mode: str = "FAILFAST",
     columns: Optional[Iterable[str]] = None,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Decode raw link-layer FRAMES already sitting in a DataFrame
     column — the message-bus deployment shape (packets arriving as
     Kafka/event rows, no capture files anywhere).  The reference can
     only ever read files through its InputFormat; here the decode
-    kernel is a column transformation, so the same engine serves both
+    kernel is a column transformation, so the same kernel serves both
     at-rest captures and in-flight packet streams (``df`` may be a
     STREAMING DataFrame — ``mapInArrow`` works identically and the
     per-partition ordinal just continues per micro-batch partition).
@@ -606,19 +519,9 @@ def decode_frames(
     per-row work."""
     import struct as _struct
 
-    schema = packet_schema(decoder, columns, False)
-    wanted = set(f.name for f in schema.fields) if columns is not None else None
-    opts = DecodeOptions(
-        decoder=decoder,
-        calculate_md5=calculate_md5,
-        keep_payload=keep_payload,
-        strict_reference=strict_reference,
-        mode=mode,
-        wanted=wanted,
-        keep_frame=bool(wanted and (wanted & _FRAME_COLS)),
-    )
-    to_batches = (
-        decode_files_to_arrow_columnar if engine == "arrow" else decode_files_to_arrow
+    schema, opts = _decode_plan(
+        decoder, columns, False,
+        calculate_md5, keep_payload, strict_reference, mode,
     )
     cols = [frame_col] + ([ts_col] if ts_col else [])
     src = df.select(*cols)
@@ -627,9 +530,6 @@ def decode_frames(
     )
 
     def fn(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
         base = 0
         for rb in batches:
             frames = rb.column(0).to_pylist()
@@ -652,18 +552,10 @@ def decode_frames(
                 n += 1
             if not n:
                 continue
-            for out in to_batches(
-                iter([("<frames>", b"".join(parts))]), schema, opts
-            ):
-                if base:
-                    i = out.schema.get_field_index("pkt_no")
-                    if i >= 0:
-                        out = out.set_column(
-                            i,
-                            out.schema.field(i),
-                            pc.add(out.column(i), pa.scalar(base, pa.int64())),
-                        )
-                yield out
+            yield from decode_files_to_arrow_columnar(
+                iter([("<frames>", b"".join(parts))]), schema, opts,
+                pkt_base=base,
+            )
             base += n
 
     return src.mapInArrow(fn, schema)
@@ -684,7 +576,6 @@ def read_pcap_stream(
     mode: str = "FAILFAST",
     columns: Optional[Iterable[str]] = None,
     path_glob: Optional[str] = None,
-    engine: str = "arrow",
     chunk_bytes: Optional[int] = None,
     keep_frame: bool = False,
     max_files_per_trigger: Optional[int] = None,
@@ -695,15 +586,13 @@ def read_pcap_stream(
     a Structured Streaming DataFrame — compose with watermarked
     windows / flows / writeStream like any other stream.
 
-    This is the Arrow-batched FAST twin of the DSv2 streaming source
-    (`spark.readStream.format("pcap")`,
-    datasource.py::PcapSimpleStreamReader): same file-atomic arrival
-    contract, but file discovery/offsets ride Spark's own binaryFile
+    Same file-atomic arrival contract and the same columnar decode as
+    the DSv2 streaming source (`spark.readStream.format("pcap")`,
+    datasource.py::PcapStreamReader); the difference is discovery:
+    here file listing and offsets ride Spark's own binaryFile
     FileStreamSource (checkpointed listing, maxFilesPerTrigger,
-    cleanSource options all inherited) and decode goes through the
-    columnar kernel via mapInArrow instead of per-row tuple yield —
-    use this one for throughput, the DSv2 form where the
-    `format("pcap")` surface is required.
+    cleanSource options all inherited), there a watermark-on-mtime
+    offset the source keeps itself.
 
     Mechanics: the ``binaryFile`` file STREAM discovers newly landed
     files per micro-batch; only the ``path`` column is consumed, so
@@ -722,10 +611,7 @@ def read_pcap_stream(
 
     Scale: discovery cost is one listing per trigger; decode
     parallelism follows files-per-batch.  Requires the streamed
-    chunked path (local or pyarrow.fs-reachable URI) and an arrow
-    engine."""
-    if engine not in ("arrow", "arrow-scalar"):
-        raise ValueError("read_pcap_stream requires an arrow engine")
+    chunked path (local or pyarrow.fs-reachable URI)."""
     from urllib.parse import urlparse
 
     from ..pcap.chunked import DEFAULT_CHUNK_BYTES, supports_scheme
@@ -737,16 +623,9 @@ def read_pcap_stream(
             "read_pcap_stream requires the streamed chunked path "
             "(local path or pyarrow.fs-reachable URI, chunk_bytes > 0)"
         )
-    schema = packet_schema(decoder, columns, keep_frame)
-    wanted = set(f.name for f in schema.fields) if columns is not None else None
-    opts = DecodeOptions(
-        decoder=decoder,
-        calculate_md5=calculate_md5,
-        keep_payload=keep_payload,
-        strict_reference=strict_reference,
-        mode=mode,
-        wanted=wanted,
-        keep_frame=keep_frame or bool(wanted and (wanted & _FRAME_COLS)),
+    schema, opts = _decode_plan(
+        decoder, columns, keep_frame,
+        calculate_md5, keep_payload, strict_reference, mode,
     )
     reader = spark.readStream.format("binaryFile").schema(
         _BINARYFILE_STREAM_SCHEMA
@@ -756,9 +635,7 @@ def read_pcap_stream(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
     files = reader.load(path).select("path")
-    return files.mapInArrow(
-        _arrow_decode_fn(schema, opts, True, chunk_bytes, engine), schema
-    )
+    return files.mapInArrow(_arrow_decode_fn(schema, opts, True, chunk_bytes), schema)
 
 
 def _listed_path(uri: str) -> str:
@@ -798,7 +675,6 @@ def _read_pcap_split(
     schema: T.StructType,
     opts: DecodeOptions,
     chunk_bytes: int,
-    engine: str,
 ) -> DataFrame:
     """The split-parallel decode plan behind
     ``read_pcap(split_single_files=True)``.  Both plans feed split
@@ -900,14 +776,7 @@ def _read_pcap_split(
             max(1, min(parallelism, n_splits))
         )
 
-    to_batches = (
-        decode_files_to_arrow_columnar if engine == "arrow" else decode_files_to_arrow
-    )
-
     def decode_split_partition(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
         from ..pcap.chunked import stream_file_chunks
 
         for rb in batches:
@@ -925,19 +794,12 @@ def _read_pcap_split(
                         f.seek(off)
                         data = f.read(row["n_bytes"])
                     feed = iter([(p, header + data)])
-                # one to_batches call per split: pkt_no restarts at 1
-                # for each split and is rebased from the index below —
+                # one decode call per split, rebased from the index —
                 # feeding consecutive same-path splits through one call
                 # would let the chunk-continuation logic double-count
-                for out in to_batches(feed, schema, opts):
-                    i = out.schema.get_field_index("pkt_no")
-                    if base and i >= 0:
-                        out = out.set_column(
-                            i,
-                            out.schema.field(i),
-                            pc.add(out.column(i), pa.scalar(base, pa.int64())),
-                        )
-                    yield out
+                yield from decode_files_to_arrow_columnar(
+                    feed, schema, opts, pkt_base=base
+                )
 
     return splits_df.mapInArrow(decode_split_partition, schema)
 

@@ -529,8 +529,9 @@ def streaming_dns_tcp_reassembly(
     TTL (timeoutConf + state.hasTimedOut) sized to the capture's flow
     timeout; NoTimeout keeps the demo deterministic.
 
-    Input: a streaming packet DataFrame (``readStream.format("pcap")``)
-    with at least src/dst/src_port/dst_port/protocol/pkt_no/ts/payload.
+    Input: a streaming packet DataFrame (``readStream.format("pcap")``
+    or ``read_pcap_stream``) with at least
+    src/dst/src_port/dst_port/protocol/pkt_no/ts/payload.
     """
     import pandas as pd
 

@@ -184,6 +184,9 @@ def test_local_path_strips_file_uri():
     assert local_path("file:/a/b c.pcap") == "/a/b c.pcap"
     assert local_path("file:///a/b.pcap") == "/a/b.pcap"
     assert local_path("/plain/path.pcap") == "/plain/path.pcap"
+    # binaryFile paths are already unescaped: no URI decoding
+    assert local_path("file:/x/cap#1.pcap") == "/x/cap#1.pcap"
+    assert local_path("file:/x/a%41.pcap") == "/x/a%41.pcap"
 
 
 def test_stream_file_chunks_continuation_pairs(tmp_path):
@@ -192,22 +195,27 @@ def test_stream_file_chunks_continuation_pairs(tmp_path):
     p.write_bytes(data)
     pairs = list(stream_file_chunks([str(p)], chunk_bytes=200))
     assert len(pairs) > 1 and all(path == str(p) for path, _ in pairs)
-    from pyspark.sql.types import StructType
+    import pyarrow as pa
 
     from hadoop_pcap_spark.sources.pcap_source import (
-        decode_files_to_frames,
+        decode_files_to_arrow_columnar,
         packet_schema,
     )
 
-    schema: StructType = packet_schema("ip")
-    frames = list(
-        decode_files_to_frames(pairs, schema, DecodeOptions(), batch_rows=10**6)
+    schema = packet_schema("ip")
+    chunked = pa.Table.from_batches(
+        list(decode_files_to_arrow_columnar(pairs, schema, DecodeOptions()))
     )
-    whole = list(
-        decode_files_to_frames([(str(p), data)], schema, DecodeOptions(), batch_rows=10**6)
+    whole = pa.Table.from_batches(
+        list(
+            decode_files_to_arrow_columnar(
+                [(str(p), data)], schema, DecodeOptions()
+            )
+        )
     )
-    assert len(frames) == len(whole) == 1
-    assert frames[0].equals(whole[0])
+    assert chunked.num_rows == whole.num_rows == 25
+    assert chunked.column("pkt_no").to_pylist() == list(range(1, 26))
+    assert chunked.equals(whole)
 
 
 # --- Spark integration -------------------------------------------------------
@@ -220,16 +228,13 @@ def test_read_pcap_streamed_equals_content_path(spark, tmp_path):
     (d / "b.pcap").write_bytes(S.dns_exchange_pcap())
     from hadoop_pcap_spark.sources import read_pcap
 
-    for engine in ("arrow", "pandas"):
-        streamed = read_pcap(
-            spark, str(d), decoder="dns", calculate_md5=True,
-            engine=engine, chunk_bytes=128,
-        ).orderBy("file", "pkt_no").collect()
-        whole = read_pcap(
-            spark, str(d), decoder="dns", calculate_md5=True,
-            engine=engine, chunk_bytes=0,
-        ).orderBy("file", "pkt_no").collect()
-        assert streamed == whole and len(streamed) > 0
+    streamed = read_pcap(
+        spark, str(d), decoder="dns", calculate_md5=True, chunk_bytes=128,
+    ).orderBy("file", "pkt_no").collect()
+    whole = read_pcap(
+        spark, str(d), decoder="dns", calculate_md5=True, chunk_bytes=0,
+    ).orderBy("file", "pkt_no").collect()
+    assert streamed == whole and len(streamed) > 0
 
 
 def test_datasource_chunked_option(spark, tmp_path):
@@ -706,6 +711,29 @@ def test_split_read_equals_serial(spark, tmp_path):
     assert split == serial
 
 
+def test_read_pcap_uri_special_file_names(spark, tmp_path):
+    """Capture names that URI-decoding would mangle (``#`` starts a
+    fragment, ``%41`` decodes to ``A``) are read from the right file,
+    serially and split — cold index and warm plan alike."""
+    from hadoop_pcap_spark.sources import read_pcap
+
+    d = tmp_path / "odd"
+    d.mkdir()
+    (d / "a#1.pcap").write_bytes(_pcap_many(7))
+    (d / "b%41.pcap").write_bytes(_pcap_many(11))
+
+    def counts(df):
+        rows = df.groupBy("file").count().collect()
+        return {os.path.basename(r["file"]): r["count"] for r in rows}
+
+    want = {"a#1.pcap": 7, "b%41.pcap": 11}
+    assert counts(read_pcap(spark, str(d))) == want
+    for warm in (False, True):  # the first split read publishes the index
+        split = read_pcap(spark, str(d), split_single_files=True, chunk_bytes=256)
+        assert ("Exchange" not in _split_plan(split)) == warm
+        assert counts(split) == want
+
+
 def _split_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
@@ -843,8 +871,6 @@ def test_split_read_requires_arrow_and_streamed(spark, tmp_path):
 
     p = tmp_path / "x.pcap"
     p.write_bytes(_pcap_many(3))
-    with pytest.raises(ValueError, match="arrow engine"):
-        read_pcap(spark, str(p), engine="pandas", split_single_files=True)
     with pytest.raises(ValueError, match="seekable"):
         read_pcap(spark, str(p), chunk_bytes=0, split_single_files=True)
 

@@ -150,20 +150,29 @@ def test_write_packets_parquet_roundtrip(spark, pcap_dir, tmp_path):
 
 
 def test_engines_identical(spark, pcap_dir):
-    """columnar (default), scalar-arrow and pandas paths must emit
-    identical rows for both decoders."""
+    """read_pcap (columnar kernel) must emit exactly the rows the
+    scalar oracle kernel builds, for both decoders."""
+    from hadoop_pcap_spark.pcap import DecodeOptions, decode_pcap
+    from hadoop_pcap_spark.sources import packet_schema
+
     for decoder in ("ip", "dns"):
-        frames = {
-            eng: sorted(
-                tuple(r)
-                for r in read_pcap(
-                    spark, pcap_dir, decoder=decoder,
-                    calculate_md5=True, engine=eng,
-                ).collect()
+        names = packet_schema(decoder).fieldNames()
+        got = sorted(
+            (os.path.basename(r["file"]),) + tuple(r)[1:]
+            for r in read_pcap(
+                spark, pcap_dir, decoder=decoder, calculate_md5=True
+            ).collect()
+        )
+        opts = DecodeOptions(decoder=decoder, calculate_md5=True)
+        want = sorted(
+            (name,) + tuple(pkt.get(n) for n in names[1:])
+            for name in os.listdir(pcap_dir)
+            for pkt in decode_pcap(
+                open(os.path.join(pcap_dir, name), "rb").read(), name, opts
             )
-            for eng in ("arrow", "arrow-scalar", "pandas")
-        }
-        assert frames["arrow"] == frames["arrow-scalar"] == frames["pandas"]
+        )
+        assert names[0] == "file" and len(got) == 4
+        assert got == want
 
 
 def test_datasource_file_filter_pushdown(spark, pcap_dir):
@@ -350,8 +359,6 @@ def test_read_pcap_stream_equals_batch(spark):
 def test_read_pcap_stream_argument_guards(spark, tmp_path):
     from hadoop_pcap_spark.sources import read_pcap_stream
 
-    with pytest.raises(ValueError, match="arrow engine"):
-        read_pcap_stream(spark, str(tmp_path), engine="pandas")
     with pytest.raises(ValueError, match="streamed chunked path"):
         read_pcap_stream(spark, str(tmp_path), chunk_bytes=0)
 
@@ -464,3 +471,31 @@ def test_decode_frames_streaming_smoke(spark, tmp_path):
     got = {r.protocol: r.n for r in spark.table(name).collect()}
     spark.catalog.dropTempView(name)
     assert got == {"UDP": 20, "TCP": 20}
+
+
+def test_sources_never_reach_scalar_kernel():
+    """One decode kernel behind every Spark ingest path: no module
+    under hadoop_pcap_spark/sources/ imports or names the scalar
+    per-packet ``decode_pcap`` (kept as the test oracle and for the
+    dump CLI only)."""
+    import ast
+    import pathlib
+
+    import hadoop_pcap_spark.sources as sources_pkg
+
+    root = pathlib.Path(sources_pkg.__file__).parent
+    modules = sorted(root.glob("*.py"))
+    assert {m.name for m in modules} >= {"pcap_source.py", "datasource.py"}
+    offenders = []
+    for mod in modules:
+        for node in ast.walk(ast.parse(mod.read_text(), str(mod))):
+            names = []
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                names = [a.name.rsplit(".", 1)[-1] for a in node.names]
+            elif isinstance(node, ast.Name):
+                names = [node.id]
+            elif isinstance(node, ast.Attribute):
+                names = [node.attr]
+            if "decode_pcap" in names:
+                offenders.append(f"{mod.name}:{node.lineno}")
+    assert offenders == []

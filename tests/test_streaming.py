@@ -268,21 +268,31 @@ def test_stateful_flow_counts_accumulates_across_batches(spark, tmp_path):
     assert all(first[u] < expected[u] for u in first)
 
 
+def _stream_rows(rdr, start, end):
+    """The rows a micro-batch from ``start`` to ``end`` delivers: every
+    planned partition read, as dicts."""
+    return [
+        row
+        for part in rdr.partitions(start, end)
+        for batch in rdr.read(part)
+        for row in batch.to_pylist()
+    ]
+
+
 def test_pcap_stream_offset_compaction(tmp_path):
     """Offset stays bounded (watermark-on-mtime prunes `recent`),
     replay between offsets is exact, legacy offsets upgrade."""
     import os
 
     from hadoop_pcap_spark.pcap import synth as S
-    from hadoop_pcap_spark.sources.datasource import PcapSimpleStreamReader
+    from hadoop_pcap_spark.sources.datasource import PcapStreamReader
     from hadoop_pcap_spark.sources.pcap_source import packet_schema
 
     d = tmp_path / "caps"
     d.mkdir()
     schema = packet_schema("ip")
-    rdr = PcapSimpleStreamReader(
-        schema, {"path": str(d), "offsetretentionsec": "100"}
-    )
+    options = {"path": str(d), "offsetretentionsec": "100"}
+    rdr = PcapStreamReader(schema, options)
 
     def write(name, age_sec):
         p = d / name
@@ -294,36 +304,41 @@ def test_pcap_stream_offset_compaction(tmp_path):
     o0 = rdr.initialOffset()
     a = write("a.pcap", 500)
     b = write("b.pcap", 400)
-    rows1, o1 = rdr.read(o0)
-    rows1 = list(rows1)
+    o1 = rdr.latestOffset()
+    rows1 = _stream_rows(rdr, o0, o1)
     assert len(rows1) == 4  # 2 files x 2 packets
+    assert len(rdr.partitions(o0, o1)) == 2  # one partition per new file
     assert set(o1["recent"]) == {a, b}
 
     # batch 2: newer file advances the watermark far past a/b, so the
     # offset compacts to just the fresh window
     c = write("c.pcap", 0)
-    rows2, o2 = rdr.read(o1)
-    assert len(list(rows2)) == 2
+    o2 = rdr.latestOffset()
+    assert len(_stream_rows(rdr, o1, o2)) == 2
     assert set(o2["recent"]) == {c}  # a,b pruned: mtime < wm
     assert o2["wm"] > o1["wm"]
 
     # batch 3: nothing new; a file appearing older than retention
     # behind the newest is skipped (documented maxFileAge tradeoff)
     write("late.pcap", 900)
-    rows3, o3 = rdr.read(o2)
-    assert list(rows3) == []
+    o3 = rdr.latestOffset()
+    assert _stream_rows(rdr, o2, o3) == []
     assert set(o3["recent"]) == {c}
 
     # restart replay: delta between consecutive offsets is exact
-    assert len(list(rdr.readBetweenOffsets(o0, o1))) == 4
-    assert len(list(rdr.readBetweenOffsets(o1, o2))) == 2
-    assert list(rdr.readBetweenOffsets(o2, o3)) == []
+    assert len(_stream_rows(rdr, o0, o1)) == 4
+    assert len(_stream_rows(rdr, o1, o2)) == 2
+    assert _stream_rows(rdr, o2, o3) == []
 
     # legacy {"seen": [...]} offsets: only the unseen file replays,
-    # and the offset upgrades to the compacted shape
+    # and the offset upgrades to the compacted shape (a restarted
+    # reader resumes from the checkpointed offset Spark commits)
     legacy = {"seen": [a, b]}
-    rows_l, o_l = rdr.read(legacy)
-    assert {t[0] for t in rows_l} == {c, str(d / "late.pcap")} - set()
+    restarted = PcapStreamReader(schema, options)
+    restarted.commit(legacy)
+    o_l = restarted.latestOffset()
+    rows_l = _stream_rows(restarted, legacy, o_l)
+    assert {r["file"] for r in rows_l} == {c, str(d / "late.pcap")} - set()
     assert "wm" in o_l and "seen" not in o_l
 
 
@@ -334,12 +349,12 @@ def test_pcap_stream_live_appended_file_not_redelivered(tmp_path):
     import os
 
     from hadoop_pcap_spark.pcap import synth as S
-    from hadoop_pcap_spark.sources.datasource import PcapSimpleStreamReader
+    from hadoop_pcap_spark.sources.datasource import PcapStreamReader
     from hadoop_pcap_spark.sources.pcap_source import packet_schema
 
     d = tmp_path / "caps"
     d.mkdir()
-    rdr = PcapSimpleStreamReader(
+    rdr = PcapStreamReader(
         packet_schema("ip"), {"path": str(d), "offsetretentionsec": "100"}
     )
     base = 1_700_000_000
@@ -348,8 +363,9 @@ def test_pcap_stream_live_appended_file_not_redelivered(tmp_path):
     live.write_bytes(S.dns_exchange_pcap())
     os.utime(live, (base, base))
 
-    rows1, o1 = rdr.read(rdr.initialOffset())
-    assert len(list(rows1)) == 2
+    o0 = rdr.initialOffset()
+    o1 = rdr.latestOffset()
+    assert len(_stream_rows(rdr, o0, o1)) == 2
 
     # 400s later: live file was appended (mtime advanced), plus a new
     # rotated file arrived — watermark jumps past the ORIGINAL mtime
@@ -358,8 +374,8 @@ def test_pcap_stream_live_appended_file_not_redelivered(tmp_path):
     rot.write_bytes(S.dns_exchange_pcap())
     os.utime(rot, (base + 400, base + 400))
 
-    rows2, o2 = rdr.read(o1)
-    files2 = {t[0] for t in rows2}
+    o2 = rdr.latestOffset()
+    files2 = {r["file"] for r in _stream_rows(rdr, o1, o2)}
     assert files2 == {str(rot)}  # live file NOT re-delivered
     assert str(live) in o2["recent"]  # entry refreshed, not pruned
 
@@ -370,8 +386,8 @@ def test_pcap_stream_live_appended_file_not_redelivered(tmp_path):
     fresh = d / "fresh.pcap"
     fresh.write_bytes(S.dns_exchange_pcap())
     os.utime(fresh, (far, far))
-    rows3, o3 = rdr.read(o2)
-    assert {t[0] for t in rows3} == {str(fresh)}
+    o3 = rdr.latestOffset()
+    assert {r["file"] for r in _stream_rows(rdr, o2, o3)} == {str(fresh)}
     assert str(live) not in o3["recent"]
 
 
@@ -383,6 +399,7 @@ def test_streaming_lists_remote_files(tmp_path, monkeypatch):
     from hadoop_pcap_spark.pcap import chunked as C
     from hadoop_pcap_spark.pcap import synth as S
     from hadoop_pcap_spark.sources import datasource as DS
+    from hadoop_pcap_spark.sources.pcap_source import packet_schema
 
     fs = pafs.SubTreeFileSystem(str(tmp_path), pafs.LocalFileSystem())
     real = C._filesystem_for
@@ -396,11 +413,114 @@ def test_streaming_lists_remote_files(tmp_path, monkeypatch):
     (tmp_path / "a.pcap").write_bytes(S.dns_exchange_pcap())
     (tmp_path / "b.pcap").write_bytes(S.dns_exchange_pcap(ts=1317994000))
 
-    reader = DS.PcapSimpleStreamReader.__new__(DS.PcapSimpleStreamReader)
-    reader._path = "rmt://"
+    reader = DS.PcapStreamReader(packet_schema("ip"), {"path": "rmt://"})
     files = reader._list_files()
     assert sorted(p.split("://")[1] for p, _m in files) == ["a.pcap", "b.pcap"]
     assert all(m > 0 for _p, m in files)
+    start = reader.initialOffset()
+    rows = _stream_rows(reader, start, reader.latestOffset())
+    assert sorted({r["file"] for r in rows}) == ["rmt://a.pcap", "rmt://b.pcap"]
+    assert len(rows) == 4
+
+
+def test_pcap_stream_mode_governs_bad_capture(spark, tmp_path):
+    """A file that is not a capture fails a FAILFAST format("pcap")
+    stream (it must not be dropped silently); PERMISSIVE skips it and
+    delivers exactly the good file's rows — the batch mode contract."""
+    from pyspark.errors import StreamingQueryException
+
+    from hadoop_pcap_spark.pcap import synth as S
+    from hadoop_pcap_spark.sources import register_pcap_datasource
+
+    register_pcap_datasource(spark)
+    d = tmp_path / "mixed"
+    d.mkdir()
+    (d / "good.pcap").write_bytes(S.dns_exchange_pcap())
+    (d / "bad.pcap").write_bytes(b"this is not a capture file" * 4)
+
+    def run(name, mode):
+        stream = (
+            spark.readStream.format("pcap")
+            .option("path", str(d))
+            .option("mode", mode)
+            .load()
+        )
+        q = stream.writeStream.format("memory").queryName(name).start()
+        try:
+            q.processAllAvailable()
+            return spark.sql(f"SELECT file FROM {name}").collect()
+        finally:
+            q.stop()
+
+    with pytest.raises(StreamingQueryException):
+        run("bad_failfast", "FAILFAST")
+    rows = run("bad_permissive", "PERMISSIVE")
+    assert len(rows) == 2
+    assert all(r.file.endswith("good.pcap") for r in rows)
+
+
+def test_pcap_stream_restart_from_checkpoint_exactly_once(spark, tmp_path):
+    """A checkpointed format("pcap") stream resumes where it stopped:
+    a file landing while the query is down is delivered after the
+    restart, and no file is delivered twice.  A batch whose sink
+    commit was lost replays with exactly its original rows."""
+    import glob
+    import os
+
+    from hadoop_pcap_spark.pcap import synth as S
+    from hadoop_pcap_spark.sources import register_pcap_datasource
+
+    register_pcap_datasource(spark)
+    d = tmp_path / "rot"
+    d.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    got = []  # (batch_id, file, pkt_no) over every run
+
+    def run():
+        def sink(batch_df, batch_id):
+            got.extend(
+                (batch_id, os.path.basename(r.file), r.pkt_no)
+                for r in batch_df.collect()
+            )
+
+        q = (
+            spark.readStream.format("pcap").option("path", str(d)).load()
+            .writeStream.foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    (d / "a.pcap").write_bytes(S.dns_exchange_pcap())
+    run()
+    (d / "b.pcap").write_bytes(S.dns_exchange_pcap(ts=1317994000))
+    run()
+    delivered = sorted((f, n) for _b, f, n in got)
+    assert delivered == [("a.pcap", 1), ("a.pcap", 2), ("b.pcap", 1), ("b.pcap", 2)]
+
+    # lose the last sink commit (crash between offset log and commit
+    # log): the restart replays that batch from its logged offsets
+    last = max(
+        glob.glob(os.path.join(ckpt, "commits", "[0-9]*")),
+        key=lambda p: int(os.path.basename(p)),
+    )
+    os.remove(last)
+    crc = os.path.join(os.path.dirname(last), f".{os.path.basename(last)}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    before = list(got)
+    (d / "c.pcap").write_bytes(S.dns_exchange_pcap(ts=1317995000))
+    run()
+    replay_id = int(os.path.basename(last))
+    replayed = sorted(t for t in got[len(before):] if t[0] == replay_id)
+    assert replayed == sorted(t for t in before if t[0] == replay_id)
+    assert replayed and {f for _b, f, _n in replayed} == {"b.pcap"}
+    once = sorted({(f, n) for _b, f, n in got})
+    assert once == delivered + [("c.pcap", 1), ("c.pcap", 2)]
+    assert len(got) == len(before) + len(replayed) + 2
 
 
 def test_reassembly_hot_flow_guard_recovers(spark, tmp_path):

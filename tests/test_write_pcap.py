@@ -23,19 +23,25 @@ def capture(tmp_path_factory):
 
 
 def test_keep_frame_columns_both_engines(spark, capture):
+    """The columnar read path's keep_frame rows equal the scalar oracle
+    kernel's, and the frames are the source file's record bytes."""
+    from hadoop_pcap_spark.pcap import DecodeOptions, decode_pcap
+
     d, raw = capture
-    for engine in ("arrow", "arrow-scalar"):
-        rows = (
-            read_pcap(spark, d, keep_frame=True, engine=engine)
-            .orderBy("pkt_no")
-            .collect()
-        )
-        assert len(rows) == 2
-        for r in rows:
-            assert r["frame"] is not None and len(r["frame"]) == r["size"]
-            assert r["orig_len"] == len(r["frame"])  # synth: orig == incl
-        # frame bytes are the exact record slices of the source file
-        assert raw.find(bytes(rows[0]["frame"])) > 0
+    df = read_pcap(spark, d, keep_frame=True)
+    rows = df.orderBy("pkt_no").collect()
+    assert len(rows) == 2
+    for r in rows:
+        assert r["frame"] is not None and len(r["frame"]) == r["size"]
+        assert r["orig_len"] == len(r["frame"])  # synth: orig == incl
+    # frame bytes are the exact record slices of the source file
+    assert raw.find(bytes(rows[0]["frame"])) > 0
+    names = df.columns[1:]  # all but `file`
+    oracle = [
+        tuple(pkt.get(n) for n in names)
+        for pkt in decode_pcap(raw, "a.pcap", DecodeOptions(keep_frame=True))
+    ]
+    assert [tuple(r)[1:] for r in rows] == oracle
 
 
 def test_default_schema_has_no_frame(spark, capture):
