@@ -17,7 +17,25 @@ Layout:
   streaming/  Structured Streaming analogs
 """
 
+import sys
+
 __version__ = "0.1.0"
+
+
+def _in_pyspark_worker() -> bool:
+    # sys.modules only: never imports pyspark, so the Spark-free import
+    # path below stays Spark-free and a driver is left untouched
+    files = sys.modules.get("pyspark.files")
+    spark_files = getattr(files, "SparkFiles", None)
+    return bool(getattr(spark_files, "_is_running_on_worker", False))
+
+
+if _in_pyspark_worker():
+    # every engine Python stage unpickles a function from this package,
+    # so each reused worker installs this on its first task
+    from . import _pyworker
+
+    _pyworker.install()
 
 # The one-import user surface: session, ingest, SQL front door, ETL —
 # resolved LAZILY (PEP 562) so Spark-free consumers (the pcap-dump

@@ -716,15 +716,20 @@ def incremental_dedup_step(
     # keep-min(id) representative per fingerprint via min_by over ONE
     # hash aggregate (r14): map-side partial aggregation replaces the
     # former row_number window's full per-partition sort — same kept
-    # rows (ids are a total order within a batch), one exchange either
-    # way, no sort.
-    data_cols = [c for c in batch_df.columns if c != fp_col]
+    # rows, one exchange either way, no sort.  min_by skips NULL
+    # ordering values, so order by a never-NULL struct that restores
+    # the window's ascending-id, NULLs-first order.
+    fingerprinted = batch_df.withColumn(fp_col, exact_fingerprint(F.col(text_col)))
+    data_cols = [c for c in fingerprinted.columns if c != fp_col]
+    order = F.struct(F.col(id_col).isNotNull(), F.col(id_col))
     batch = (
-        batch_df.withColumn(fp_col, exact_fingerprint(F.col(text_col)))
-        .groupBy(fp_col)
-        .agg(F.min_by(F.struct(*data_cols), F.col(id_col)).alias("_rep"))
+        fingerprinted.groupBy(fp_col)
+        .agg(F.min_by(F.struct(*data_cols), order).alias("_rep"))
         .select(
-            *[F.col(f"_rep.{c}").alias(c) for c in data_cols], F.col(fp_col)
+            *[
+                F.col(fp_col) if c == fp_col else F.col(f"_rep.{c}").alias(c)
+                for c in fingerprinted.columns
+            ]
         )
     )
     prior = [

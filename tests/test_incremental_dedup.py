@@ -156,3 +156,24 @@ def test_compaction_noop_on_single_foldable_dir(spark, tmp_path):
     # one foldable dir (epoch=0) is not worth a rewrite
     assert STRM.compact_fingerprint_snapshot(spark, snap) == 0
     assert _fp_dirs(snap) == ["epoch=0", "epoch=1"]
+
+
+def test_step_keeps_null_id_rows_and_column_order(spark, tmp_path):
+    # min_by skips NULL ordering values: the keep rule must still pick
+    # the NULL-id row (ascending id, NULLs first), never a NULL struct
+    rows = [(None, "a"), (None, "a"), (None, "b"), (3, "b"), (5, "c")]
+    kept = STRM.incremental_dedup_step(
+        _batch(spark, rows), 0, str(tmp_path / "snap"), persist=False
+    )
+    assert kept.columns == ["doc_id", "text", "fp"]
+    got = [(r.doc_id, r.text) for r in kept.collect()]
+    assert len(got) == 3 and set(got) == {(None, "a"), (None, "b"), (5, "c")}
+
+    # an input fp column keeps its place; its values are recomputed
+    mid = spark.createDataFrame(
+        [(1, "stale", "x"), (2, "stale", "x")], "doc_id long, fp string, text string"
+    )
+    kept = STRM.incremental_dedup_step(mid, 0, str(tmp_path / "snap2"), persist=False)
+    assert kept.columns == ["doc_id", "fp", "text"]
+    [row] = kept.collect()
+    assert (row.doc_id, row.text) == (1, "x") and row.fp != "stale"
