@@ -469,15 +469,13 @@ def main():
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from hadoop_pcap_spark.session import SESSION_CONF
+
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("hadoop_pcap_spark-bench")
+        .config(map=SESSION_CONF)
         .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .getOrCreate()
     )
@@ -689,42 +687,32 @@ def main():
     )
     leases.enter_context(hold_stage(stage_dir))
 
-    # State-partition sizing for the streaming rows: the measured cost
-    # of a stateful streaming micro-batch is DOMINATED by a ~0.45
-    # cpu-s per-state-partition fixed term (state-store commit + one
-    # Python worker fork per partition — tools/profile_streaming.py;
-    # per-row work is noise at this rate), so state partitions are a
-    # capacity knob sized to key cardinality × arrival rate, NOT to
-    # core count.  The corpora here carry ≤1.5k keys per batch → 8
-    # partitions (19.6 → ~6.7 cpu-s on the flow counters, identical
-    # output); at 100× the rate the same sizing logic yields a bigger
-    # number.  spark.sql.shuffle.partitions is read at FIRST query
-    # start and freezes into the checkpoint, so it is set around each
-    # streaming query and restored for the batch queries.
+    # State-partition sizing for the streaming rows: a stateful
+    # micro-batch pays a fixed cost per state partition (a Python
+    # worker for applyInPandasWithState, a state-store load and
+    # commit), so state partitions are a capacity knob sized to key
+    # cardinality × arrival rate, NOT to core count.  Measured min-of-3
+    # at sf0.1 on local[32] (4-core host): the flow counter costs 5.1
+    # cpu-s at 8 partitions vs 14.5 at 32 (~0.4 cpu-s per partition),
+    # the stream join 3.2 vs 7.5, the corpus filter 2.1 vs 2.2.  The
+    # corpora here carry ≤1.5k keys per batch → 8 partitions; at 100×
+    # the rate the same sizing logic yields a bigger number.  spark.sql.shuffle.partitions is read at FIRST
+    # query start and freezes into the checkpoint, so it is set around
+    # each streaming query and restored for the batch queries.
+    #
+    # State store: Spark's default HDFS-backed (in-memory map) store.
+    # At these state sizes it beats RocksDB on every row (same runs, 8
+    # partitions: flow counter 5.1 vs 7.5 cpu-s, corpus filter 2.1 vs
+    # 2.8, stream join 3.2 vs 6.5).  RocksDB's off-heap state and
+    # incremental snapshots are for per-partition state far larger than
+    # these corpora's (tools/profile_state_scale.py measures RocksDB at
+    # 10k–1M keys).
     stream_parts = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8")
-
-    # State-store provider is a PER-QUERY choice, read from the
-    # session conf at query start: RocksDB's native commit path wins
-    # wherever one state store per partition carries the keys
-    # (flow counters 8.5→7.1 cpu-s, corpus filter 4.1→3.5,
-    # incremental dedup 7.4→5.4 — measured min-of-3 at sf0.1), but the
-    # stream-stream join opens FOUR stores per partition and its
-    # per-store open/commit fixed cost exceeds the tiny-state savings
-    # (9.8→11.6 cpu-s), so the join keeps the in-memory map store at
-    # this scale.  At production state sizes the trade flips toward
-    # RocksDB everywhere (off-heap state, incremental snapshots).
-    _PROVIDER = {
-        "rocksdb": "org.apache.spark.sql.execution.streaming.state."
-                   "RocksDBStateStoreProvider",
-        "hdfs": "org.apache.spark.sql.execution.streaming.state."
-                "HDFSBackedStateStoreProvider",
-    }
 
     def time_stream(
         name: str,
         build,
         output_mode: str,
-        provider: str = "rocksdb",
         partitions: "str | None" = None,
     ) -> None:
         """Min-of-N a streaming query end-to-end (source → noop sink,
@@ -736,9 +724,6 @@ def main():
         best = best_cpu = None
         spark.conf.set(
             "spark.sql.shuffle.partitions", partitions or stream_parts
-        )
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", _PROVIDER[provider]
         )
         try:
             for _ in range(runs):
@@ -761,7 +746,6 @@ def main():
                 best_cpu = dc if best_cpu is None else min(best_cpu, dc)
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", cpus)
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
         timings[name] = round(best, 3)
         cpu_timings[name] = round(best_cpu, 3)
         print(
@@ -830,9 +814,6 @@ def main():
         name = "streaming_incremental_dedup"
         best = best_cpu = None
         spark.conf.set("spark.sql.shuffle.partitions", stream_parts)
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", _PROVIDER["rocksdb"]
-        )
         try:
             for _ in range(runs):
                 snap = tempfile.mkdtemp(prefix="bench_incdedup_snap_")
@@ -859,7 +840,6 @@ def main():
                 best_cpu = dc if best_cpu is None else min(best_cpu, dc)
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", cpus)
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
         timings[name] = round(best, 3)
         cpu_timings[name] = round(best_cpu, 3)
         print(
@@ -922,16 +902,15 @@ def main():
     # equal key cardinality the right partition count is half of the
     # single-store rows', floored at 4 for the ≤1.5k-keys corpora
     # here (≈400 users per partition, state still KBs).  Measured
-    # min-of-4 at sf0.1: 3.40 s → 2.09 s wall / 11.5 → 5.3 cpu-s, same
-    # output rows.  Parameterised like everything else — a production
-    # deployment scales it with arrival rate × gap window.
+    # min-of-5 at sf0.1 on local[32], 8 → 4 partitions: 1.91 s → 1.66 s
+    # wall / 3.1 → 2.6 cpu-s.  Parameterised like everything else — a
+    # production deployment scales it with arrival rate × gap window.
     ssj_parts = os.environ.get(
         "SPARK_GRAFT_STREAM_JOIN_PARTITIONS",
         str(max(4, int(stream_parts) // 2)),
     )
     time_stream(
-        "streaming_join_interval", _ssj_build, "append", provider="hdfs",
-        partitions=ssj_parts,
+        "streaming_join_interval", _ssj_build, "append", partitions=ssj_parts
     )
 
     leases.close()  # release the hold_stage reader leases

@@ -22,8 +22,19 @@ from typing import List, Optional
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType, IntegerType
 
 from .partitioning import spread
+
+
+# The type ``functions.lit`` gives a primitive JVM array: ``ArrayType``
+# with ``containsNull=true``.  The parsed ``array(…)`` fallback is cast
+# to the same type (a legal nullability widening), so a plan's schema
+# does not depend on which path built its literals.
+_LITERAL_TYPES = {
+    "double": ArrayType(DoubleType(), containsNull=True),
+    "int": ArrayType(IntegerType(), containsNull=True),
+}
 
 
 def _jvm_array_literal(values, kind: str) -> "F.Column | None":
@@ -104,7 +115,7 @@ def _lit_double_array(values) -> "F.Column":
         return lit
     return F.expr(
         "array(" + ",".join(_dlit(x) for x in vals) + ")"
-    )
+    ).cast(_LITERAL_TYPES["double"])
 
 
 def _dlit(x) -> str:
@@ -145,7 +156,9 @@ def _lit_int_array(values) -> "F.Column":
     lit = _jvm_array_literal(vals, "int")
     if lit is not None:
         return lit
-    return F.expr("array(" + ",".join(str(x) for x in vals) + ")")
+    return F.expr("array(" + ",".join(str(x) for x in vals) + ")").cast(
+        _LITERAL_TYPES["int"]
+    )
 
 
 def _dot(a, b, dim: Optional[int] = None):

@@ -20,9 +20,11 @@ with ``maxFilesPerTrigger=1`` over time-ordered files.)
 Scale: these queries exist to pin SEMANTICS; rate/throughput behavior
 is benched separately (bench.py streaming rows, tools/
 profile_streaming.py).  The state-partition sizing lesson applies:
-state-store fixed cost is per partition per micro-batch, so
-``spark.sql.shuffle.partitions`` at query *start* should track key
-cardinality — frozen into the checkpoint thereafter.
+a stateful operator pays a fixed cost per state partition per
+micro-batch (state-store load and commit, plus a Python worker for
+``applyInPandasWithState``), so ``spark.sql.shuffle.partitions`` at
+query *start* should track key cardinality — frozen into the
+checkpoint thereafter.
 """
 
 from __future__ import annotations

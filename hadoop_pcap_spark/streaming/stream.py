@@ -149,19 +149,19 @@ def stateful_flow_counts(events: DataFrame, key_col: str = "user_id") -> DataFra
     micro-batch touches only keys present in the batch.
 
     Cost model (measured, tools/profile_streaming.py, 100k rows /
-    1500 keys / 1 micro-batch): the dominant term is a PER-STATE-
-    PARTITION fixed cost of ~0.45 cpu-s per micro-batch — state-store
-    commit plus a Python worker fork per partition — shared roughly
-    half/half between the JVM floor (a no-Python built-in streaming
-    agg pays it too) and the Python boundary; per-ROW and per-KEY
-    work, state tuple serde, and the 1-row output frames are all in
-    the noise.  So the operative knob is ``spark.sql.shuffle.
-    partitions`` AT FIRST QUERY START (it freezes into the
-    checkpoint): size it to key cardinality × arrival rate, not to
-    the box's core count — 1500 keys want ~8 partitions (4.4 cpu-s
-    end-to-end), not 32 (18.4 cpu-s for identical output).  At 100×
-    the event rate the per-partition cost amortizes over 100× the
-    rows and the same sizing logic simply yields a bigger number."""
+    1500 keys / 1 micro-batch, local[32] on a 4-core host, HDFS-backed
+    store): the dominant term is a PER-STATE-PARTITION fixed cost of
+    ~0.5 cpu-s per micro-batch.  About 0.1 of it is the JVM floor (a
+    no-Python built-in streaming agg pays it too: state-store load and
+    commit, task launch); the rest is the Python boundary, a worker
+    per partition.  Per-ROW and per-KEY work, state tuple serde, and
+    the 1-row output frames are all in the noise.  So the operative
+    knob is ``spark.sql.shuffle.partitions`` AT FIRST QUERY START (it
+    freezes into the checkpoint): size it to key cardinality × arrival
+    rate, not to the box's core count — 1500 keys want ~8 partitions
+    (8.4 cpu-s end-to-end), not 32 (20.0 cpu-s).  At 100× the event
+    rate the per-partition cost amortizes over 100× the rows and the
+    same sizing logic simply yields a bigger number."""
     import numpy as np
     import pandas as pd
 

@@ -16,14 +16,13 @@ SF_CORRECT = os.environ.get("SPARK_GRAFT_SF_CORRECT", "/root/testdata/sf0.01")
 def spark():
     from pyspark.sql import SparkSession
 
+    from hadoop_pcap_spark.session import SESSION_CONF
+
     s = (
         SparkSession.builder.master("local[8]")
         .appName("hadoop_pcap_spark-tests")
+        .config(map=SESSION_CONF)
         .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
     s.sparkContext.setLogLevel("ERROR")

@@ -1502,6 +1502,32 @@ def test_qcol_escapes_backticks(spark):
     assert row.d == 1.0 * 3.0 + 2.0 * 4.0
 
 
+def test_array_literal_fallback_type_matches_jvm_literal(spark, monkeypatch):
+    """The model-matrix literals have one type whichever path builds
+    them: the JVM ``Literal`` gives ``containsNull=true``, and the
+    parsed ``array(…)`` fallback (taken when no JVM gateway is
+    reachable) is cast to that type; the values are bit-identical."""
+    from hadoop_pcap_spark.operators import similarity as S
+
+    vals = [0.1, -2.5, 1e-300, 3.0]
+    one = spark.range(1)
+
+    def frame():
+        return one.select(
+            S._lit_double_array(vals).alias("d"),
+            S._lit_int_array([3, -1, 7]).alias("i"),
+        )
+
+    jvm = frame()
+    assert jvm.schema["d"].dataType == S._LITERAL_TYPES["double"]
+    assert jvm.schema["i"].dataType == S._LITERAL_TYPES["int"]
+    monkeypatch.setattr(S, "_jvm_array_literal", lambda values, kind: None)
+    parsed = frame()
+    assert parsed.schema == jvm.schema
+    assert parsed.first() == jvm.first()
+    assert parsed.first().d == vals
+
+
 def test_ann_index_prune_rejects_malformed_query_vectors(spark, emb):
     """ADVICE r11: the driver-side routing replay must fail loudly on
     a query vector violating the index dim contract (NULL / wrong

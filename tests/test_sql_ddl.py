@@ -134,3 +134,76 @@ def test_register_packets_view_sql_front_door(spark):
     assert [r.src for r in rows] == ["193.0.10.82", "193.0.14.129"]
     assert {r.dns_qname for r in rows} == {"ripe.net."}
     spark.catalog.dropTempView("_pkts_smoke")
+
+
+# The two tests above read the reference's own capture, which a checkout
+# without the reference tree lacks.  Their twins below drive the same
+# front doors over pcap/synth.py's ``dns_exchange_pcap()``, a capture
+# of the same shape (query + response for ``ripe.net.`` between the
+# same two hosts), so the DDL bridge and the view are exercised on
+# every host.
+
+
+@pytest.fixture
+def synth_dns_pcap(tmp_path):
+    from hadoop_pcap_spark.pcap.synth import dns_exchange_pcap
+
+    p = tmp_path / "dns_exchange.pcap"
+    p.write_bytes(dns_exchange_pcap())
+    return str(p)
+
+
+def test_ddl_options_bridge_end_to_end_synth(spark, synth_dns_pcap):
+    """CREATE TABLE … USING pcap + plain SELECT through the session
+    defaults bridge, over the synthesized DNS exchange; the defaults
+    file at the real default path is saved and restored."""
+    from hadoop_pcap_spark.sources.datasource import (
+        _ddl_options_path,
+        register_pcap_datasource,
+        set_pcap_ddl_options,
+    )
+
+    register_pcap_datasource(spark)
+    spark.sql("DROP TABLE IF EXISTS _ddl_bridge_synth")
+    cfg = _ddl_options_path()
+    saved = None
+    try:
+        with open(cfg, "rb") as f:
+            saved = f.read()
+    except OSError:
+        pass
+    set_pcap_ddl_options(path=synth_dns_pcap, decoder="dns")
+    try:
+        spark.sql(
+            f"CREATE TABLE _ddl_bridge_synth USING pcap "
+            f"OPTIONS (path '{synth_dns_pcap}', decoder 'dns')"
+        )
+        rows = spark.sql(
+            "SELECT src, dns_qname FROM _ddl_bridge_synth "
+            "WHERE dns_qname IS NOT NULL ORDER BY pkt_no"
+        ).collect()
+        assert [r.src for r in rows] == ["193.0.10.82", "193.0.14.129"]
+        assert {r.dns_qname for r in rows} == {"ripe.net."}
+    finally:
+        spark.sql("DROP TABLE IF EXISTS _ddl_bridge_synth")
+        set_pcap_ddl_options()  # clear
+        if saved is not None:
+            with open(cfg, "wb") as f:
+                f.write(saved)
+
+
+def test_register_packets_view_sql_front_door_synth(spark, synth_dns_pcap):
+    """View registration + plain SQL over the synthesized DNS
+    exchange: packet 1 is the query, packet 2 the response."""
+    from hadoop_pcap_spark.sql import register_packets_view
+
+    register_packets_view(
+        spark, synth_dns_pcap, name="_pkts_synth", decoder="dns"
+    )
+    rows = spark.sql(
+        "SELECT src, dns_qname FROM _pkts_synth "
+        "WHERE dns_qname IS NOT NULL ORDER BY pkt_no"
+    ).collect()
+    assert [r.src for r in rows] == ["193.0.10.82", "193.0.14.129"]
+    assert {r.dns_qname for r in rows} == {"ripe.net."}
+    spark.catalog.dropTempView("_pkts_synth")

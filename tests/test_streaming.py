@@ -523,6 +523,136 @@ def test_pcap_stream_restart_from_checkpoint_exactly_once(spark, tmp_path):
     assert len(got) == len(before) + len(replayed) + 2
 
 
+_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_FILE_CONTEXT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
+
+
+def _checkpoint_manager(spark, path) -> str:
+    """The class of the checkpoint manager a query on ``spark`` would
+    open for ``path``, as Spark's own streaming code resolves it."""
+    jvm = spark._jvm
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    mgr = checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    return mgr.getClass().getName()
+
+
+def test_engine_sessions_use_filesystem_checkpoint_manager(
+    spark, tmp_path, monkeypatch
+):
+    """Checkpoints go through the FileSystem-based manager: its rename
+    does no link-status lookup, so without native libhadoop it forks no
+    ``readlink`` per offset-log, commit-log and state-store file.
+    ``get_spark`` applies the mapping that carries it, and so does the
+    test session."""
+    from hadoop_pcap_spark import session as SESSION
+
+    manager = SESSION.SESSION_CONF[_MANAGER_KEY]
+    assert manager.endswith(".FileSystemBasedCheckpointFileManager")
+    assert _checkpoint_manager(spark, tmp_path) == manager
+
+    class Builder:
+        def __init__(self):
+            self.conf = {}
+
+        def master(self, _m):
+            return self
+
+        def appName(self, _n):
+            return self
+
+        def config(self, key=None, value=None, *, map=None):
+            self.conf.update(map or {key: value})
+            return self
+
+        def getOrCreate(self):
+            return self.conf
+
+    monkeypatch.setattr(SESSION.SparkSession, "builder", Builder())
+    assert SESSION.get_spark(cpus=2)[_MANAGER_KEY] == manager
+
+
+def _pcap_src_counts_two_runs(spark, tmp_path, managers):
+    """A checkpointed stateful ``format("pcap")`` stream (packets per
+    ``src``, update mode) run twice over one checkpoint: the first run
+    under ``managers[0]``, then a capture lands while the query is down
+    and the restart runs under ``managers[1]``.  Returns every
+    delivered (batch_id, src, count)."""
+    from hadoop_pcap_spark.pcap import synth as S
+    from hadoop_pcap_spark.sources import register_pcap_datasource
+
+    register_pcap_datasource(spark)
+    d = tmp_path / "caps"
+    d.mkdir(parents=True)
+    ckpt = tmp_path / "ckpt"
+    got = []
+
+    def sink(batch_df, batch_id):
+        got.extend((batch_id, r.src, r["count"]) for r in batch_df.collect())
+
+    def run(manager):
+        prior = spark.conf.get(_MANAGER_KEY, None)
+        spark.conf.set(_MANAGER_KEY, manager)
+        try:
+            assert _checkpoint_manager(spark, ckpt) == manager
+            q = (
+                spark.readStream.format("pcap").option("path", str(d)).load()
+                .groupBy("src").count()
+                .writeStream.outputMode("update")
+                .foreachBatch(sink)
+                .option("checkpointLocation", str(ckpt))
+                .start()
+            )
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+        finally:
+            if prior is None:
+                spark.conf.unset(_MANAGER_KEY)
+            else:
+                spark.conf.set(_MANAGER_KEY, prior)
+
+    (d / "a.pcap").write_bytes(S.dns_exchange_pcap())
+    run(managers[0])
+    (d / "b.pcap").write_bytes(S.dns_exchange_pcap(ts=1317994000))
+    run(managers[1])
+    return sorted(got)
+
+
+@pytest.mark.parametrize("direction", ["file_context_to_engine",
+                                       "engine_to_file_context"])
+def test_checkpoint_resumes_across_checkpoint_managers(
+    spark, tmp_path, direction
+):
+    """A checkpoint written by Spark's default FileContext-based manager
+    resumes under the engine's FileSystem-based one, and the reverse:
+    offsets, commits and state-store files read back, each batch is
+    delivered once, and the rows equal a run under one manager."""
+    from hadoop_pcap_spark.session import SESSION_CONF
+
+    engine = SESSION_CONF[_MANAGER_KEY]
+    managers = {
+        "file_context_to_engine": (_FILE_CONTEXT_MANAGER, engine),
+        "engine_to_file_context": (engine, _FILE_CONTEXT_MANAGER),
+    }[direction]
+    crossed = _pcap_src_counts_two_runs(spark, tmp_path / "crossed", managers)
+    single = _pcap_src_counts_two_runs(
+        spark, tmp_path / "single", (engine, engine)
+    )
+    assert crossed == single
+    # batch 1 sees a.pcap, batch 2 only b.pcap on top of restored state
+    assert crossed == [
+        (0, "193.0.10.82", 1), (0, "193.0.14.129", 1),
+        (1, "193.0.10.82", 2), (1, "193.0.14.129", 2),
+    ]
+
+
 def test_reassembly_hot_flow_guard_recovers(spark, tmp_path):
     """A flow whose buffered residual exceeds max_flow_bytes must be
     RESET, not tail-clipped: the old guard re-truncated every batch to

@@ -161,14 +161,13 @@ def main():
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
+    from hadoop_pcap_spark.session import SESSION_CONF
 
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
         .appName("compare_oracle")
+        .config(map=SESSION_CONF)
         .config("spark.sql.shuffle.partitions", args.cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
         # pyspark's 1g default heap is fine at sf0.01 but genuinely
         # undersized for sf1-scale runs (broadcast build + 6M-row
         # shuffles on 8 local threads OOM'd the JVM mid-suite)

@@ -61,16 +61,13 @@ def _sweep(sf: str, cpus: int, runs: int, names: list) -> dict:
     from bench import proc_tree_cpu
     from hadoop_pcap_spark import plans
     from hadoop_pcap_spark.operators.cache import release_persisted
+    from hadoop_pcap_spark.session import SESSION_CONF
 
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(f"core-scaling-{cpus}")
+        .config(map=SESSION_CONF)
         .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .getOrCreate()
     )

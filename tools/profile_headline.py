@@ -47,15 +47,13 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from hadoop_pcap_spark.session import SESSION_CONF
+
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
         .appName("profile-headline")
+        .config(map=SESSION_CONF)
         .config("spark.sql.shuffle.partitions", args.cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .getOrCreate()
     )

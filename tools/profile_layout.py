@@ -62,13 +62,12 @@ def main() -> int:
         rowgroup_prune_stats,
         write_zordered,
     )
+    from hadoop_pcap_spark.session import SESSION_CONF
 
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
+        .config(map=SESSION_CONF)
         .config("spark.sql.shuffle.partitions", args.cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .getOrCreate()
     )

@@ -42,13 +42,13 @@ def main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from hadoop_pcap_spark.session import SESSION_CONF
+
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
         .appName("profile_merge")
+        .config(map=SESSION_CONF)
         .config("spark.sql.shuffle.partitions", str(args.buckets))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "24g")
         .getOrCreate()
     )

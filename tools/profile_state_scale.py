@@ -265,12 +265,12 @@ def main():
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from hadoop_pcap_spark.session import SESSION_CONF
+
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
         .appName("profile_state_scale")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
+        .config(map=SESSION_CONF)
         .config(
             "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g")
         )

@@ -41,9 +41,8 @@ def main():
                     help="shuffle partitions (default: --cpus)")
     ap.add_argument("--provider", default="hdfs", choices=["hdfs", "rocksdb"],
                     help="state-store provider. Measured at sf0.1/8 "
-                         "partitions: rocksdb runs the full flow counter "
-                         "at 6.8 cpu-s vs hdfs 8.5 (state commit is "
-                         "native, no JVM-heap map copy); at big per-key "
+                         "partitions on local[32]: the full flow counter "
+                         "costs 8.4 cpu-s on either; at big per-key "
                          "state rocksdb is the scalability choice "
                          "(off-heap, incremental snapshots).  NOTE: the "
                          "transformWithStateInPandas API (Spark 4's "
@@ -63,13 +62,13 @@ def main():
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from hadoop_pcap_spark.session import SESSION_CONF
+
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
         .appName("profile_streaming")
+        .config(map=SESSION_CONF)
         .config("spark.sql.shuffle.partitions", parts)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.sql.streaming.stateStore.providerClass",
                 _PROVIDERS[args.provider])
