@@ -75,8 +75,8 @@ _FLOW_KEY = ["file", "src", "dst", "src_port", "dst_port"]
 def canonical_pair_exprs():
     """The ONE definition of connection-key canonicalization, shared
     by every consumer (batch extractors here, the SQL front-door
-    queries, the streaming HTTP operator): returns ``(a_first,
-    src_ep, dst_ep)`` where ``a_first`` is true when the (src,
+    queries, the streaming L7 operators' ``conn`` key): returns
+    ``(a_first, src_ep, dst_ep)`` where ``a_first`` is true when the (src,
     src_port) endpoint sorts first (string IP order; NULL port sorts
     as -1) and the two struct expressions are ``{ip, port}`` endpoint
     structs.  A drift between copies would silently split one
@@ -108,10 +108,13 @@ def connection_segments(
     downstream extractors consume the result with ``mapInPandas`` so
     ONE Python invocation parses a whole Arrow batch of connections —
     per-connection Python overhead is amortized across the batch,
-    unlike per-group ``applyInPandas`` whose fixed cost (pandas frame
-    construction per group) dominates when connections are small and
-    numerous (measured ~5 ms/group → it WAS the runtime of the 2000-
-    connection fixture).  ``flow_filter`` applies before the shuffle.
+    unlike per-group ``applyInPandas``, whose fixed cost per group (one
+    pandas conversion per column, then a frame) dominates when
+    connections are small and numerous.  The streaming HTTP operator
+    pays the same per-group conversion: ~7.3 ms of Python CPU per group
+    call with ten columns, ~4.7 ms with five (``pcap_stream``, 4-core
+    host, per-task costs included).  ``flow_filter`` applies before
+    the shuffle.
 
     ``window`` (a duration string, e.g. ``"5 minutes"``) adds a
     tumbling event-time bucket on ``ts`` to the group key — the
@@ -412,8 +415,9 @@ def reassemble_tcp_streams(
     ``collect_list`` (whole-stage codegen), and ONE ``mapInPandas``
     invocation assembles a whole Arrow batch of flows — the same
     per-group-overhead amortization as :func:`connection_segments`
-    (per-group ``applyInPandas`` costs ~5 ms/flow of fixed pandas
-    overhead, the dominant term on many-small-flow captures)."""
+    (per-group ``applyInPandas`` pays a fixed pandas conversion per
+    column per flow, ~5-7 ms of Python CPU at five to ten columns, the
+    dominant term on many-small-flow captures)."""
     if order not in ("capture", "seq"):
         raise ValueError(f"order must be 'capture' or 'seq', got {order!r}")
     if order == "seq" and "tcp_seq" not in packets.columns:

@@ -154,10 +154,15 @@ def stateful_flow_counts(events: DataFrame, key_col: str = "user_id") -> DataFra
     ~0.5 cpu-s per micro-batch.  About 0.1 of it is the JVM floor (a
     no-Python built-in streaming agg pays it too: state-store load and
     commit, task launch); the rest is the Python boundary, a worker
-    per partition.  Per-ROW and per-KEY work, state tuple serde, and
-    the 1-row output frames are all in the noise.  So the operative
-    knob is ``spark.sql.shuffle.partitions`` AT FIRST QUERY START (it
-    freezes into the checkpoint): size it to key cardinality × arrival
+    per partition.  Per-ROW work, state tuple serde and the 1-row
+    output frames are in the noise, and so is per-KEY work for this
+    two-column input.  That last term grows with the columns sent,
+    because Spark converts each group's Arrow slice to pandas one
+    column at a time: the HTTP operator below measured ~7.3 ms of
+    Python CPU per group call at ten columns and ~4.7 ms at five
+    (see ``_l7_segments``).  So the operative knob is
+    ``spark.sql.shuffle.partitions`` AT FIRST QUERY START (it freezes
+    into the checkpoint): size it to key cardinality × arrival
     rate, not to the box's core count — 1500 keys want ~8 partitions
     (8.4 cpu-s end-to-end), not 32 (20.0 cpu-s).  At 100× the event
     rate the per-partition cost amortizes over 100× the rows and the
@@ -190,6 +195,101 @@ def stateful_flow_counts(events: DataFrame, key_col: str = "user_id") -> DataFra
         outputMode="update",
         timeoutConf="NoTimeout",
     )
+
+
+# --- the streaming L7 operators' shared segment layout ------------------------
+#
+# applyInPandasWithState converts every group's Arrow slice to pandas
+# one column at a time and then joins the columns per group, so the
+# operators' cost per connection per micro-batch grows with the number
+# of columns they send.  The three L7 operators below therefore group
+# by ONE string key and send four value columns (three for DNS); the
+# Python side sorts and joins a group's payloads with numpy, no
+# per-row loop.  Measured on the pcap_stream benchmark (seed 71, 4
+# state partitions, 4-core host): the HTTP operator's state tasks took
+# 2.57 cpu-s of Python per pass with ten columns and a per-row loop,
+# 1.65 with this layout, over 353 group calls per pass.
+
+
+def _l7_segments(packets: DataFrame, directional: bool = False) -> DataFrame:
+    """The payload-bearing TCP segments of ``packets`` in the streaming
+    L7 operators' narrow layout:
+
+    * ``conn`` — ``"ip|port|ip|port"``, the one grouping key.  By
+      default the canonical (unordered) connection from
+      :func:`..operators.flows.canonical_pair_exprs`, a-side first;
+      ``directional=True`` keys the directed flow (src, src_port, dst,
+      dst_port) instead.  A NULL field renders as ``""`` (plain
+      ``concat_ws`` would skip it and shift the later fields);
+      :func:`_conn_endpoints` parses it back.
+    * ``from_a`` — the row's source is the key's a-side (canonical keys
+      only; a self-connection puts both directions on the a-side).
+    * ``t_us`` — ``ts`` · 10⁶ + ``ts_usec`` (``ts_usec`` when the input
+      carries it): with ``pkt_no`` the capture order, also across the
+      rotated files of one micro-batch, where ``pkt_no`` restarts.
+    * ``pkt_no``, ``payload``."""
+    from ..operators.flows import canonical_pair_exprs
+
+    segs = packets.filter(
+        (F.col("protocol") == "TCP")
+        & F.col("payload").isNotNull()
+        & (F.length("payload") > 0)
+    )
+    usec = (
+        F.coalesce(F.col("ts_usec").cast("long"), F.lit(0))
+        if "ts_usec" in packets.columns else F.lit(0)
+    )
+    if directional:
+        ends = [F.col("src"), F.col("src_port"), F.col("dst"), F.col("dst_port")]
+        side = []
+    else:
+        a_first, src_ep, dst_ep = canonical_pair_exprs()
+        a = F.when(a_first, src_ep).otherwise(dst_ep)
+        b = F.when(a_first, dst_ep).otherwise(src_ep)
+        ends = [a["ip"], a["port"], b["ip"], b["port"]]
+        side = [F.coalesce(a_first, F.lit(False)).alias("from_a")]
+    conn = F.concat_ws(
+        "|", *(F.coalesce(e.cast("string"), F.lit("")) for e in ends)
+    )
+    return segs.select(
+        conn.alias("conn"),
+        *side,
+        (F.col("ts").cast("long") * 1_000_000 + usec).alias("t_us"),
+        F.col("pkt_no").cast("long").alias("pkt_no"),
+        "payload",
+    )
+
+
+def _conn_endpoints(conn: str) -> tuple:
+    """``conn`` key → ``(ip, port, ip, port)`` in key order; the empty
+    field of a NULL endpoint part comes back as None."""
+    ip1, p1, ip2, p2 = conn.split("|")
+    return (
+        ip1 or None, int(p1) if p1 else None,
+        ip2 or None, int(p2) if p2 else None,
+    )
+
+
+def _segment_bytes(pdfs) -> tuple:
+    """One group's segments (the chunks ``applyInPandasWithState``
+    hands over) → ``(a_bytes, b_bytes, n_segments)``: payloads joined
+    per direction in (``t_us``, ``pkt_no``) order, stable for ties.
+    Without a ``from_a`` column every byte is a-side."""
+    import numpy as np
+    import pandas as pd
+
+    chunks = list(pdfs)
+    if not chunks:
+        return b"", b"", 0
+    batch = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+    if not len(batch):
+        return b"", b"", 0
+    order = np.lexsort((batch["pkt_no"].to_numpy(), batch["t_us"].to_numpy()))
+    payload = batch["payload"].to_numpy()[order]
+    if "from_a" not in batch.columns:
+        return b"".join(payload), b"", len(batch)
+    from_a = batch["from_a"].to_numpy(dtype=bool)[order]
+    return b"".join(payload[from_a]), b"".join(payload[~from_a]), len(batch)
 
 
 DNS_TCP_OUTPUT = (
@@ -239,7 +339,14 @@ def streaming_http_objects(
     direction (dropping buffered bytes) rather than growing state.
 
     Input: a streaming packet DataFrame with at least
-    src/dst/src_port/dst_port/protocol/ts/pkt_no/payload."""
+    src/dst/src_port/dst_port/protocol/ts/pkt_no/payload; ``ts_usec``,
+    when present, orders same-second segments across the rotated files
+    of one micro-batch.  Each connection reaches Python in the narrow
+    :func:`_l7_segments` layout, keyed by its canonical ``conn`` string,
+    so state is keyed by that one column: a checkpoint whose state was
+    keyed by the four endpoint columns (a_ip, a_port, b_ip, b_port)
+    does not resume — Spark stops the query at start with
+    STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE."""
     import json as _json
 
     import pandas as pd
@@ -250,27 +357,6 @@ def streaming_http_objects(
         parse_responses_incremental,
     )
 
-    from ..operators.flows import canonical_pair_exprs
-
-    a_first, _src_ep, _dst_ep = canonical_pair_exprs()
-    segments = (
-        packets.filter(
-            (F.col("protocol") == "TCP")
-            & F.col("payload").isNotNull()
-            & (F.length("payload") > 0)
-        )
-        .select(
-            F.when(a_first, F.col("src")).otherwise(F.col("dst")).alias("a_ip"),
-            F.when(a_first, F.col("src_port")).otherwise(F.col("dst_port"))
-            .alias("a_port"),
-            F.when(a_first, F.col("dst")).otherwise(F.col("src")).alias("b_ip"),
-            F.when(a_first, F.col("dst_port")).otherwise(F.col("src_port"))
-            .alias("b_port"),
-            "src", "src_port", "ts", "pkt_no", "payload",
-            *(["ts_usec"] if "ts_usec" in packets.columns else []),
-        )
-    )
-
     def _classify(res: bytes):
         if res.startswith(_METHODS):
             return "req"
@@ -279,29 +365,14 @@ def streaming_http_objects(
         return None
 
     def update(key, pdfs, state):
-        a_ip, a_port, b_ip, b_port = key
+        a_ip, a_port, b_ip, b_port = _conn_endpoints(key[0])
         a_res, b_res, client_is_a, n_objs, pending_json = (
             state.get if state.exists else (b"", b"", 0, 0, "[]")
         )
-        a_res, b_res = bytes(a_res or b""), bytes(b_res or b"")
         pending = _json.loads(pending_json or "[]")
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if len(batch):
-            # ts is whole seconds and pkt_no restarts per capture file:
-            # a micro-batch spanning a rotation boundary needs the
-            # sub-second ts_usec tie-break to keep same-second segments
-            # of one connection in capture order across files
-            order = [c for c in ("ts", "ts_usec", "pkt_no") if c in batch.columns]
-            batch = batch.sort_values(order, kind="stable")
-            for _, row in batch.iterrows():
-                p = row["payload"]
-                if p is None:
-                    continue
-                sp = None if pd.isna(row["src_port"]) else int(row["src_port"])
-                if (row["src"], sp) == (a_ip, a_port):
-                    a_res += bytes(p)
-                else:
-                    b_res += bytes(p)
+        a_new, b_new, _n = _segment_bytes(pdfs)
+        a_res = bytes(a_res or b"") + a_new
+        b_res = bytes(b_res or b"") + b_new
         if client_is_a == 0:
             ka, kb = _classify(a_res), _classify(b_res)
             if ka == "req" or kb == "resp":
@@ -370,9 +441,7 @@ def streaming_http_objects(
         if rows:
             yield pd.DataFrame(rows)
 
-    return segments.groupBy(
-        "a_ip", "a_port", "b_ip", "b_port"
-    ).applyInPandasWithState(
+    return _l7_segments(packets).groupBy("conn").applyInPandasWithState(
         update,
         outputStructType=HTTP_STREAM_OUTPUT,
         stateStructType=HTTP_STREAM_STATE,
@@ -407,34 +476,18 @@ def streaming_tls_clienthellos(
     connection's remaining traffic is consumed at zero state cost).  A
     direction exceeding ``max_handshake_bytes`` without a parseable
     ClientHello marks the connection done (not TLS / missed handshake
-    — state bounded either way)."""
+    — state bounded either way).
+
+    Input and state key as :func:`streaming_http_objects`: one
+    canonical ``conn`` key in the :func:`_l7_segments` layout, so a
+    checkpoint keyed by the four endpoint columns does not resume."""
     import pandas as pd
 
-    from ..operators.flows import canonical_pair_exprs
     from ..operators.tls import handshake_messages, ja3_string, parse_client_hello
     from ..operators.tls import _md5 as _ja3_md5
 
-    a_first, _se, _de = canonical_pair_exprs()
-    segments = (
-        packets.filter(
-            (F.col("protocol") == "TCP")
-            & F.col("payload").isNotNull()
-            & (F.length("payload") > 0)
-        )
-        .select(
-            F.when(a_first, F.col("src")).otherwise(F.col("dst")).alias("a_ip"),
-            F.when(a_first, F.col("src_port")).otherwise(F.col("dst_port"))
-            .alias("a_port"),
-            F.when(a_first, F.col("dst")).otherwise(F.col("src")).alias("b_ip"),
-            F.when(a_first, F.col("dst_port")).otherwise(F.col("src_port"))
-            .alias("b_port"),
-            "src", "src_port", "ts", "pkt_no", "payload",
-            *(["ts_usec"] if "ts_usec" in packets.columns else []),
-        )
-    )
-
     def update(key, pdfs, state):
-        a_ip, a_port, b_ip, b_port = key
+        a_ip, a_port, b_ip, b_port = _conn_endpoints(key[0])
         a_res, b_res, done = (
             state.get if state.exists else (b"", b"", False)
         )
@@ -443,20 +496,9 @@ def streaming_tls_clienthellos(
                 pass  # drain: connection already reported (or ruled out)
             state.update((b"", b"", True))
             return
-        a_res, b_res = bytes(a_res or b""), bytes(b_res or b"")
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if len(batch):
-            order = [c for c in ("ts", "ts_usec", "pkt_no") if c in batch.columns]
-            batch = batch.sort_values(order, kind="stable")
-            for _, row in batch.iterrows():
-                p = row["payload"]
-                if p is None:
-                    continue
-                sp = None if pd.isna(row["src_port"]) else int(row["src_port"])
-                if (row["src"], sp) == (a_ip, a_port):
-                    a_res += bytes(p)
-                else:
-                    b_res += bytes(p)
+        a_new, b_new, _n = _segment_bytes(pdfs)
+        a_res = bytes(a_res or b"") + a_new
+        b_res = bytes(b_res or b"") + b_new
         ch = None
         ch_dir_a = True
         for is_a, stream in ((True, a_res), (False, b_res)):
@@ -493,9 +535,7 @@ def streaming_tls_clienthellos(
             return
         state.update((a_res, b_res, False))
 
-    return segments.groupBy(
-        "a_ip", "a_port", "b_ip", "b_port"
-    ).applyInPandasWithState(
+    return _l7_segments(packets).groupBy("conn").applyInPandasWithState(
         update,
         outputStructType=TLS_STREAM_OUTPUT,
         stateStructType=TLS_STREAM_STATE,
@@ -531,33 +571,29 @@ def streaming_dns_tcp_reassembly(
 
     Input: a streaming packet DataFrame (``readStream.format("pcap")``
     or ``read_pcap_stream``) with at least
-    src/dst/src_port/dst_port/protocol/pkt_no/ts/payload.
+    src/dst/src_port/dst_port/protocol/pkt_no/ts/payload.  Segments are
+    ordered by (``ts``·10⁶ + ``ts_usec``, ``pkt_no``): a micro-batch can
+    carry several rotated captures, whose ``pkt_no`` restarts at 1 in
+    each file.  Each flow reaches Python in the narrow
+    :func:`_l7_segments` layout under its directional ``conn`` key
+    (src|src_port|dst|dst_port); a checkpoint keyed by the four
+    columns (src, dst, src_port, dst_port) does not resume.
     """
     import pandas as pd
 
     from ..operators.flows import _frame_messages
     from ..pcap import dns as _dns
 
-    segments = packets.filter(
-        (F.col("protocol") == "TCP")
-        & ((F.col("src_port") == 53) | (F.col("dst_port") == 53))
-        & F.col("payload").isNotNull()
-        & (F.length("payload") > 0)
-    ).select("src", "dst", "src_port", "dst_port", "ts", "pkt_no", "payload")
-
     def update(key, pdfs, state):
+        new, _b, n = _segment_bytes(pdfs)
+        if n == 0:
+            return
+        src, src_port, dst, dst_port = _conn_endpoints(key[0])
         residual, n_msgs, n_segs = (
             state.get if state.exists else (b"", 0, 0)
         )
-        residual = bytes(residual or b"")
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if len(batch) == 0:
-            return
-        batch = batch.sort_values(["ts", "pkt_no"], kind="stable")
-        n_segs += len(batch)
-        stream = residual + b"".join(
-            bytes(p) for p in batch["payload"] if p is not None
-        )
+        n_segs += n
+        stream = bytes(residual or b"") + new
         msgs = _frame_messages(stream)
         consumed = sum(2 + len(m) for m in msgs)
         residual = stream[consumed:]
@@ -574,8 +610,8 @@ def streaming_dns_tcp_reassembly(
                 continue  # silent-skip parity
             rows.append(
                 {
-                    "src": key[0], "dst": key[1],
-                    "src_port": key[2], "dst_port": key[3],
+                    "src": src, "dst": dst,
+                    "src_port": src_port, "dst_port": dst_port,
                     "msg_no": n_msgs,
                     "dns_queryid": msg.query_id,
                     "dns_flags": msg.flags_text,
@@ -595,7 +631,10 @@ def streaming_dns_tcp_reassembly(
         if rows:
             yield pd.DataFrame(rows)
 
-    return segments.groupBy("src", "dst", "src_port", "dst_port").applyInPandasWithState(
+    port53 = packets.filter((F.col("src_port") == 53) | (F.col("dst_port") == 53))
+    return _l7_segments(port53, directional=True).groupBy(
+        "conn"
+    ).applyInPandasWithState(
         update,
         outputStructType=DNS_TCP_OUTPUT,
         stateStructType=DNS_TCP_STATE,

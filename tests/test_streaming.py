@@ -1390,3 +1390,261 @@ def test_streaming_tls_clienthellos_cross_batch(spark, tmp_path):
         r = rows[c]
         assert (r.sni, r.alpn, r.ja3, r.ja3_md5) == (
             t["sni"], t["alpn"], t["ja3"], t["ja3_md5"]), c
+
+
+def test_streaming_dns_tcp_orders_rotated_files_by_ts_usec(spark, tmp_path):
+    """Two rotated captures in ONE micro-batch: pkt_no restarts at 1 in
+    each file, so same-second segments of one flow must be ordered by
+    the sub-second timestamp.  Ordered by (ts, pkt_no) alone, the second
+    file's response segment lands first, the flow frames garbage and
+    the 20-answer response is silently lost."""
+    import os
+
+    from hadoop_pcap_spark.pcap import synth as S
+    from hadoop_pcap_spark.sources import register_pcap_datasource
+
+    register_pcap_datasource(spark)
+    d = tmp_path / "rotcaps"
+    os.makedirs(d)
+    q_msg = S.dns_query(0x5151, "bigzone.example", 252)
+    resp = S.dns_response(
+        0x5151, "bigzone.example", 252,
+        answers=[(f"h{i}.bigzone.example", 600, 1, S.a_rdata(f"10.2.{i}.1"))
+                 for i in range(20)],
+    )
+    cli, srv, t = "192.0.2.10", "192.0.2.53", 1700000000
+    (q_seg,) = S.dns_tcp_segments([q_msg], [2 + len(q_msg)])
+    rs1, rs2 = S.dns_tcp_segments([resp], [120])
+    (d / "a.pcap").write_bytes(
+        S.global_header(1)
+        + S.record(t, S.ethernet(S.ipv4(S.tcp(q_seg, 40000, 53), 6, cli, srv)),
+                   ts_usec=100)
+        + S.record(t, S.ethernet(S.ipv4(S.tcp(rs1, 53, 40000), 6, srv, cli)),
+                   ts_usec=200000)
+    )
+    (d / "b.pcap").write_bytes(
+        S.global_header(1)
+        + S.record(t, S.ethernet(S.ipv4(S.tcp(rs2, 53, 40000), 6, srv, cli)),
+                   ts_usec=300000)
+    )
+    stream = spark.readStream.format("pcap").option("path", str(d)).load()
+    q = (
+        STRM.streaming_dns_tcp_reassembly(stream)
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName("tcp_rot_usec")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        # both files in one micro-batch
+        assert [p["numInputRows"] for p in q.recentProgress
+                if p["numInputRows"]] == [3]
+        rows = spark.sql("SELECT * FROM tcp_rot_usec ORDER BY src").collect()
+    finally:
+        q.stop()
+    assert [(r.src, r.msg_no, r.dns_queryid, r.dns_qr, r.n_segments)
+            for r in rows] == [(cli, 1, 0x5151, False, 1),
+                               (srv, 1, 0x5151, True, 2)]
+    assert len(rows[1].dns_answer) == 20
+
+
+def _l7_input(spark, rows):
+    """A static packet frame in the pcap source's column types."""
+    schema = (
+        "src STRING, dst STRING, src_port INT, dst_port INT, protocol STRING, "
+        "ts LONG, ts_usec LONG, pkt_no LONG, payload BINARY"
+    )
+    return spark.createDataFrame(
+        [(s, d, sp, dp, "TCP", 1700000000, 0, i, b"x")
+         for i, (s, d, sp, dp) in enumerate(rows, 1)],
+        schema,
+    )
+
+
+def test_l7_conn_key_round_trip(spark):
+    """The streaming L7 operators' one string key: canonical (HTTP/TLS)
+    keys are direction-free with ``from_a`` marking the a-side, the
+    directional (DNS) key keeps src first, a NULL port renders empty
+    without shifting later fields, and IPv6 colons survive the parse."""
+    v6a, v6b = "2001:db8::1", "2001:db8::2"
+    rows = [
+        (v6b, v6a, 50000, 443),        # IPv6, b-side sends first
+        (v6a, v6b, 443, 50000),
+        ("10.0.0.1", "10.0.0.2", None, 80),  # NULL port
+        ("10.0.0.2", "10.0.0.1", 80, None),
+        ("10.0.0.9", "10.0.0.9", 7, 7),  # self-connection
+    ]
+    pkts = _l7_input(spark, rows)
+    canon = STRM._l7_segments(pkts).orderBy("pkt_no").collect()
+    assert [c.conn for c in canon] == [
+        f"{v6a}|443|{v6b}|50000", f"{v6a}|443|{v6b}|50000",
+        "10.0.0.1||10.0.0.2|80", "10.0.0.1||10.0.0.2|80",
+        "10.0.0.9|7|10.0.0.9|7",
+    ]
+    assert [c.from_a for c in canon] == [False, True, True, False, True]
+    assert [STRM._conn_endpoints(c.conn) for c in canon[1:4:2]] == [
+        (v6a, 443, v6b, 50000), ("10.0.0.1", None, "10.0.0.2", 80),
+    ]
+    assert STRM._conn_endpoints(canon[4].conn) == ("10.0.0.9", 7, "10.0.0.9", 7)
+    directed = STRM._l7_segments(pkts, directional=True).orderBy("pkt_no")
+    assert directed.columns == ["conn", "t_us", "pkt_no", "payload"]
+    got = [STRM._conn_endpoints(c.conn) for c in directed.collect()]
+    assert got == [(s, sp, d, dp) for s, d, sp, dp in rows]
+
+
+def test_l7_segment_bytes_orders_by_time_then_pkt_no():
+    """The Python half of the layout: chunks of one group are joined in
+    (t_us, pkt_no) order per direction, ties keep arrival order."""
+    import pandas as pd
+
+    def chunk(rows):
+        return pd.DataFrame(rows, columns=["from_a", "t_us", "pkt_no", "payload"])
+
+    first = chunk([(True, 20, 1, b"C"), (False, 10, 2, b"y")])
+    second = chunk([(True, 10, 1, b"A"), (True, 10, 2, b"B"),
+                    (False, 10, 1, b"x"), (True, 20, 1, b"D")])
+    assert STRM._segment_bytes(iter([first, second])) == (b"ABCD", b"xy", 6)
+    one_way = second.drop(columns="from_a")
+    assert STRM._segment_bytes(iter([one_way])) == (b"AxBD", b"", 4)
+    assert STRM._segment_bytes(iter([])) == (b"", b"", 0)
+
+    # against the per-row loop it replaces (stable sort, then append)
+    import random
+
+    rng = random.Random(7)
+    for _ in range(50):
+        chunks = [
+            chunk([(rng.random() < 0.5, rng.randrange(3), rng.randrange(3),
+                    bytes([rng.randrange(256)]) * rng.randrange(1, 4))
+                   for _ in range(rng.randrange(1, 6))])
+            for _ in range(rng.randrange(1, 4))
+        ]
+        ref = pd.concat(chunks, ignore_index=True).sort_values(
+            ["t_us", "pkt_no"], kind="stable")
+        a = b = b""
+        for _, row in ref.iterrows():
+            if row["from_a"]:
+                a += row["payload"]
+            else:
+                b += row["payload"]
+        assert STRM._segment_bytes(iter(chunks)) == (a, b, len(ref))
+
+
+def _stateful_pandas_nodes(df):
+    """The FlatMapGroupsInPandasWithState nodes of a streaming frame's
+    analyzed plan (a streaming plan cannot be optimized unstarted)."""
+    out, todo = [], [df._jdf.queryExecution().analyzed()]
+    while todo:
+        node = todo.pop()
+        if node.getClass().getSimpleName() == "FlatMapGroupsInPandasWithState":
+            out.append(node)
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
+    return out
+
+
+@pytest.mark.parametrize(
+    "op, n_cols",
+    [("streaming_http_objects", 5), ("streaming_tls_clienthellos", 5),
+     ("streaming_dns_tcp_reassembly", 4)],
+)
+def test_l7_operators_send_narrow_layout(spark, tmp_path, op, n_cols):
+    """Per-group Arrow → pandas conversion runs per column, so each L7
+    operator groups by ONE key column and sends only the narrow layout
+    (conn [, from_a], t_us, pkt_no, payload) to Python."""
+    from hadoop_pcap_spark.sources import register_pcap_datasource
+
+    register_pcap_datasource(spark)
+    pkts = spark.readStream.format("pcap").option("path", str(tmp_path)).load()
+    (node,) = _stateful_pandas_nodes(getattr(STRM, op)(pkts))
+    assert node.groupingAttributes().size() == 1
+    names = [a.name() for a in
+             (node.child().output().apply(i)
+              for i in range(node.child().output().size()))]
+    expect = ["conn", "from_a", "t_us", "pkt_no", "payload"]
+    assert names == [c for c in expect if n_cols == 5 or c != "from_a"]
+
+
+def test_l7_checkpoint_from_four_column_key_refuses_to_resume(spark, tmp_path):
+    """The key layout change is NOT resume-compatible: a checkpoint
+    whose state was keyed by the four endpoint columns (a_ip, a_port,
+    b_ip, b_port) must stop the one-key operator at start with Spark's
+    state-schema error, delivering nothing — never resume silently
+    against state it cannot look up."""
+    import os as _os
+
+    from pyspark.errors import StreamingQueryException
+
+    from hadoop_pcap_spark.operators.flows import canonical_pair_exprs
+    from hadoop_pcap_spark.pcap import synth as S
+    from hadoop_pcap_spark.sources import read_pcap_stream
+
+    d = tmp_path / "rot"
+    d.mkdir()
+    blobs = S.http_rotated_pcaps(3)
+
+    def land(fi):
+        p = d / f"rot{fi}.pcap"
+        p.write_bytes(blobs[fi])
+        t = 1700000000 + fi * 10
+        _os.utime(p, (t, t))
+
+    land(0)
+    pkts = read_pcap_stream(
+        spark, str(d), strict_reference=False, max_files_per_trigger=1,
+        columns=["src", "dst", "src_port", "dst_port", "protocol", "ts",
+                 "pkt_no", "payload"],
+    )
+    a_first, _src_ep, _dst_ep = canonical_pair_exprs()
+    four_key = pkts.filter(
+        (F.col("protocol") == "TCP") & F.col("payload").isNotNull()
+    ).select(
+        F.when(a_first, F.col("src")).otherwise(F.col("dst")).alias("a_ip"),
+        F.when(a_first, F.col("src_port")).otherwise(F.col("dst_port"))
+        .alias("a_port"),
+        F.when(a_first, F.col("dst")).otherwise(F.col("src")).alias("b_ip"),
+        F.when(a_first, F.col("dst_port")).otherwise(F.col("src_port"))
+        .alias("b_port"),
+        "src", "src_port", "ts", "pkt_no", "payload",
+    )
+
+    def keep_state(key, pdfs, state):
+        for _ in pdfs:
+            pass
+        state.update((b"", b"", 0, 0, "[]"))
+        return iter([])
+
+    old = four_key.groupBy("a_ip", "a_port", "b_ip", "b_port") \
+        .applyInPandasWithState(
+            keep_state,
+            outputStructType=STRM.HTTP_STREAM_OUTPUT,
+            stateStructType=STRM.HTTP_STREAM_STATE,
+            outputMode="append",
+            timeoutConf="NoTimeout",
+        )
+    ckpt = str(tmp_path / "ckpt")
+    delivered = []
+
+    def run(df):
+        return (
+            df.writeStream.outputMode("append")
+            .foreachBatch(lambda b, epoch: delivered.append((epoch, b.count())))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    run(old).awaitTermination()
+    assert delivered == [(0, 0)]
+    land(1)
+    land(2)
+    q = run(STRM.streaming_http_objects(pkts))
+    with pytest.raises(StreamingQueryException,
+                       match="STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE"):
+        q.awaitTermination()
+    assert delivered == [(0, 0)]
+    assert sorted(
+        f for f in _os.listdir(_os.path.join(ckpt, "commits"))
+        if not f.startswith(".")
+    ) == ["0"]
