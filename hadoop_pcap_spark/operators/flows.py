@@ -195,6 +195,42 @@ def directional_streams(segs, max_bytes: int, order: str = "capture") -> list:
     ]
 
 
+def _join_capped(segs, max_bytes: int) -> tuple:
+    """Ordered segments' payloads joined up to ``max_bytes`` (the
+    hot-flow guard) → ``(stream, truncated)``; reaching the cap exactly
+    still truncates if a payload-bearing segment remains unread."""
+    chunks: List[bytes] = []
+    total = 0
+    for si, s in enumerate(segs):
+        if s["payload"] is None:
+            continue
+        b = bytes(s["payload"])
+        if total + len(b) > max_bytes:
+            chunks.append(b[: max_bytes - total])
+            return b"".join(chunks), True
+        chunks.append(b)
+        total += len(b)
+        if total >= max_bytes:
+            rest = any(t["payload"] is not None for t in segs[si + 1 :])
+            return b"".join(chunks), rest
+    return b"".join(chunks), False
+
+
+def map_rows(df: DataFrame, cols: list, fn, schema: T.StructType) -> DataFrame:
+    """``fn(*values)`` → output row dicts for every row of ``df``'s
+    ``cols``, in ONE ``mapInPandas`` (a Python call per Arrow batch of
+    groups, not per group).  Only ``cols`` reach Python: mapInPandas
+    is opaque to column pruning."""
+    names = schema.fieldNames()
+
+    def batch_fn(batches):
+        for pdf in batches:
+            rows = [r for vals in zip(*(pdf[c] for c in cols)) for r in fn(*vals)]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.select(*cols).mapInPandas(batch_fn, schema)
+
+
 def _frame_messages(stream: bytes) -> List[bytes]:
     """Walk RFC 1035 §4.2.2 2-byte length-prefix framing; an incomplete
     trailing message (capture cut mid-flow) is dropped, not an error."""
@@ -207,6 +243,37 @@ def _frame_messages(stream: bytes) -> List[bytes]:
         out.append(stream[pos + 2 : pos + 2 + mlen])
         pos += 2 + mlen
     return out
+
+
+def dns_messages(frames: List[bytes], first_no: int = 1) -> Iterator[tuple]:
+    """``(msg_no, parsed message)`` per framed DNS message; ``msg_no``
+    counts every frame from ``first_no``, and a frame that fails to
+    parse is skipped silently (parity with the per-packet path)."""
+    from ..pcap import dns as _dns
+
+    for no, raw in enumerate(frames, start=first_no):
+        try:
+            msg = _dns.parse_message(raw)
+        except Exception:
+            continue
+        yield no, msg
+
+
+def dns_columns(msg) -> dict:
+    """A parsed DNS message's ``dns_*`` columns."""
+    return {
+        "dns_queryid": msg.query_id,
+        "dns_flags": msg.flags_text,
+        "dns_qr": msg.qr,
+        "dns_opcode": msg.opcode_text,
+        "dns_rcode": msg.rcode_text,
+        "dns_qname": msg.qname,
+        "dns_qtype": msg.qtype,
+        "dns_qtype_str": msg.qtype_text,
+        "dns_answer": msg.answers,
+        "dns_authority": msg.authority,
+        "dns_additional": msg.additional,
+    }
 
 
 def reassemble_dns_tcp(
@@ -226,8 +293,6 @@ def reassemble_dns_tcp(
     invocation (the :func:`connection_segments` amortization — a busy
     resolver trace is exactly the many-small-flows shape where
     per-group ``applyInPandas`` overhead dominates)."""
-    from ..pcap import dns as _dns
-
     segments = packets.filter(
         (F.col("protocol") == "TCP")
         & ((F.col("src_port") == 53) | (F.col("dst_port") == 53))
@@ -245,63 +310,23 @@ def reassemble_dns_tcp(
     flows = segments.groupBy(*keys).agg(
         F.collect_list(F.struct("pkt_no", "payload")).alias("segs")
     )
-    names = [f.name for f in REASSEMBLED_SCHEMA.fields]
 
-    def batch_fn(batches):
-        for pdf in batches:
-            rows = []
-            for file, src, dst, sp, dp, segs in zip(
-                pdf["file"], pdf["src"], pdf["dst"],
-                pdf["src_port"], pdf["dst_port"], pdf["segs"],
-            ):
-                segs = sorted(segs, key=lambda s: s["pkt_no"])
-                chunks: List[bytes] = []
-                total = 0
-                for s in segs:
-                    if s["payload"] is None:
-                        continue
-                    b = bytes(s["payload"])
-                    if total + len(b) > max_flow_bytes:
-                        b = b[: max_flow_bytes - total]  # hot-flow guard
-                    chunks.append(b)
-                    total += len(b)
-                    if total >= max_flow_bytes:
-                        break
-                stream = b"".join(chunks)
-                for i, msg_bytes in enumerate(_frame_messages(stream), start=1):
-                    try:
-                        msg = _dns.parse_message(msg_bytes)
-                    except Exception:
-                        continue  # silent-skip parity with the per-packet path
-                    rows.append(
-                        {
-                            "file": file,
-                            "src": src,
-                            "dst": dst,
-                            "src_port": None if pd.isna(sp) else int(sp),
-                            "dst_port": None if pd.isna(dp) else int(dp),
-                            "n_segments": int(len(segs)),
-                            "msg_no": i,
-                            "dns_queryid": msg.query_id,
-                            "dns_flags": msg.flags_text,
-                            "dns_qr": msg.qr,
-                            "dns_opcode": msg.opcode_text,
-                            "dns_rcode": msg.rcode_text,
-                            "dns_qname": msg.qname,
-                            "dns_qtype": msg.qtype,
-                            "dns_qtype_str": msg.qtype_text,
-                            "dns_answer": msg.answers,
-                            "dns_authority": msg.authority,
-                            "dns_additional": msg.additional,
-                        }
-                    )
-            yield (
-                pd.DataFrame(rows, columns=names)
-                if rows
-                else pd.DataFrame(columns=names)
-            )
+    def _parse_flow(file, src, dst, sp, dp, segs):
+        segs = sorted(segs, key=lambda s: s["pkt_no"])
+        stream, _cut = _join_capped(segs, max_flow_bytes)
+        for i, msg in dns_messages(_frame_messages(stream)):
+            yield {
+                "file": file,
+                "src": src,
+                "dst": dst,
+                "src_port": None if pd.isna(sp) else int(sp),
+                "dst_port": None if pd.isna(dp) else int(dp),
+                "n_segments": int(len(segs)),
+                "msg_no": i,
+                **dns_columns(msg),
+            }
 
-    return flows.mapInPandas(batch_fn, REASSEMBLED_SCHEMA)
+    return map_rows(flows, [*_FLOW_KEY, "segs"], _parse_flow, REASSEMBLED_SCHEMA)
 
 
 TCP_STREAM_SCHEMA = T.StructType(
@@ -445,59 +470,26 @@ def reassemble_tcp_streams(
             F.collect_list(F.struct(*seg_fields)).alias("segs"),
         )
     )
-    names = [f.name for f in TCP_STREAM_SCHEMA.fields]
 
-    def batch_fn(batches):
-        for pdf in batches:
-            rows = []
-            for file, src, dst, sp, dp, segs in zip(
-                pdf["file"], pdf["src"], pdf["dst"],
-                pdf["src_port"], pdf["dst_port"], pdf["segs"],
-            ):
-                segs = sorted(segs, key=lambda s: s["pkt_no"])
-                if order == "seq":
-                    segs = _seq_order(segs)
-                chunks: List[bytes] = []
-                total = 0
-                truncated = False
-                for si, s in enumerate(segs):
-                    if s["payload"] is None:
-                        continue
-                    b = bytes(s["payload"])
-                    if total + len(b) > max_flow_bytes:
-                        b = b[: max_flow_bytes - total]
-                        truncated = True
-                    chunks.append(b)
-                    total += len(b)
-                    if total >= max_flow_bytes:
-                        # cap reached EXACTLY still truncates if any
-                        # payload-bearing segment remains unconsumed
-                        truncated = truncated or any(
-                            t["payload"] is not None for t in segs[si + 1:]
-                        )
-                        break
-                stream = b"".join(chunks)
-                rows.append(
-                    {
-                        "file": file,
-                        "src": src,
-                        "dst": dst,
-                        "src_port": None if pd.isna(sp) else int(sp),
-                        "dst_port": None if pd.isna(dp) else int(dp),
-                        "n_segments": int(len(segs)),
-                        "first_pkt_no": int(segs[0]["pkt_no"]),
-                        "stream_len": len(stream),
-                        "truncated": truncated,
-                        "stream": stream,
-                    }
-                )
-            yield (
-                pd.DataFrame(rows, columns=names)
-                if rows
-                else pd.DataFrame(columns=names)
-            )
+    def _join_flow(file, src, dst, sp, dp, segs):
+        segs = sorted(segs, key=lambda s: s["pkt_no"])
+        if order == "seq":
+            segs = _seq_order(segs)
+        stream, truncated = _join_capped(segs, max_flow_bytes)
+        yield {
+            "file": file,
+            "src": src,
+            "dst": dst,
+            "src_port": None if pd.isna(sp) else int(sp),
+            "dst_port": None if pd.isna(dp) else int(dp),
+            "n_segments": int(len(segs)),
+            "first_pkt_no": int(segs[0]["pkt_no"]),
+            "stream_len": len(stream),
+            "truncated": truncated,
+            "stream": stream,
+        }
 
-    return flows.mapInPandas(batch_fn, TCP_STREAM_SCHEMA)
+    return map_rows(flows, [*_FLOW_KEY, "segs"], _join_flow, TCP_STREAM_SCHEMA)
 
 
 IPV4_REASSEMBLED_SCHEMA = T.StructType(
@@ -570,7 +562,6 @@ def reassemble_ipv4_fragments(
             ).alias("frags")
         )
     )
-    names = [f.name for f in IPV4_REASSEMBLED_SCHEMA.fields]
 
     def _reassemble(file, src, dst, proto, ident, frag_rows):
         frag_rows = sorted(
@@ -617,7 +608,7 @@ def reassemble_ipv4_fragments(
             dp = int.from_bytes(datagram[2:4], "big")
             doff = (datagram[12] >> 4) * 4
             payload = datagram[doff:] if doff >= 20 else datagram[20:]
-        return {
+        yield {
             "file": file,
             "src": src,
             "dst": dst,
@@ -631,22 +622,12 @@ def reassemble_ipv4_fragments(
             "payload": payload,
         }
 
-    def batch_fn(batches):
-        for pdf in batches:
-            rows = [
-                _reassemble(f, s, d, p, i, fr)
-                for f, s, d, p, i, fr in zip(
-                    pdf["file"], pdf["src"], pdf["dst"],
-                    pdf["protocol"], pdf["ip_ident"], pdf["frags"],
-                )
-            ]
-            yield (
-                pd.DataFrame(rows, columns=names)
-                if rows
-                else pd.DataFrame(columns=names)
-            )
-
-    return grouped.mapInPandas(batch_fn, IPV4_REASSEMBLED_SCHEMA)
+    return map_rows(
+        grouped,
+        ["file", "src", "dst", "protocol", "ip_ident", "frags"],
+        _reassemble,
+        IPV4_REASSEMBLED_SCHEMA,
+    )
 
 
 def flow_stats(packets: DataFrame, bidirectional: bool = True) -> DataFrame:

@@ -43,13 +43,11 @@ reordering are out of scope (documented divergence, not silent).
 from __future__ import annotations
 
 import gzip
+import re
 import zlib
 from typing import List, Optional, Tuple
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 __all__ = [
@@ -57,8 +55,6 @@ __all__ = [
     "http_objects",
     "parse_requests",
     "parse_responses",
-    "parse_requests_incremental",
-    "parse_responses_incremental",
 ]
 
 HTTP_OBJECT_SCHEMA = T.StructType(
@@ -113,22 +109,16 @@ def _headers(block: bytes) -> Tuple[bytes, dict]:
     return lines[0], hdrs
 
 
-def _content_length(hdrs: dict) -> Optional[int]:
-    v = hdrs.get("content-length")
-    if v is None:
-        return None
-    try:
-        n = int(v.split(",")[0].strip())
-        return n if n >= 0 else None
-    except ValueError:
-        return None
+_HEXDIG = re.compile(rb"[0-9A-Fa-f]+")
+_DIGITS = re.compile(r"[0-9]+")
 
 
 def _read_chunked(stream: bytes, pos: int) -> Tuple[bytes, int, bool]:
     """Decode chunked transfer coding from ``pos``; returns (body,
     position after the terminating CRLF, complete?).  An incomplete
-    tail (capture cut mid-chunk) returns what decoded so far with
-    complete=False."""
+    tail (capture cut mid-chunk) or a chunk size that is not
+    ``1*HEXDIG`` (RFC 9112 §7.1 — a sign, ``0x`` or ``_`` is desync)
+    returns what decoded so far with complete=False."""
     out: List[bytes] = []
     n = len(stream)
     while True:
@@ -136,10 +126,9 @@ def _read_chunked(stream: bytes, pos: int) -> Tuple[bytes, int, bool]:
         if eol < 0:
             return b"".join(out), n, False
         size_tok = stream[pos:eol].split(b";")[0].strip()  # drop extensions
-        try:
-            size = int(size_tok, 16)
-        except ValueError:
+        if not _HEXDIG.fullmatch(size_tok):
             return b"".join(out), n, False
+        size = int(size_tok, 16)
         pos = eol + 2
         if size == 0:
             # trailer section: zero or more header lines then CRLF
@@ -155,31 +144,73 @@ def _read_chunked(stream: bytes, pos: int) -> Tuple[bytes, int, bool]:
             return b"".join(out), n, False
         out.append(stream[pos : pos + size])
         pos += size + 2  # chunk data + its CRLF
-    # unreachable
 
 
-def parse_requests(stream: bytes) -> List[dict]:
-    """The request stream as a list of {method, target, host} in
-    pipeline order.  Request bodies (Content-Length / chunked) are
-    consumed and discarded — the extraction target is the response
-    object; the request contributes the URL."""
+def _read_body(
+    stream: bytes, pos: int, hdrs: dict, to_close: bool, at_end: bool
+) -> Tuple[bytes, int, bool]:
+    """The body framed at ``pos`` → (body, position after it,
+    complete?).  Chunked coding wins over Content-Length, which must be
+    ``1*DIGIT`` (RFC 9112 §8.6; anything else is desync: incomplete).
+    With neither, a response body (``to_close``) runs to stream end and
+    is complete only ``at_end``; a request has none."""
+    if "chunked" in hdrs.get("transfer-encoding", "").lower():
+        return _read_chunked(stream, pos)
+    n = len(stream)
+    cl = hdrs.get("content-length")
+    if cl is not None:
+        cl = cl.split(",")[0].strip()
+        if not _DIGITS.fullmatch(cl):
+            return b"", n, False
+        end = pos + int(cl)
+        return stream[pos:end], min(end, n), end <= n
+    if to_close:
+        return stream[pos:], n, at_end
+    return b"", pos, True
+
+
+def _decode_body(body: bytes, enc: Optional[str]) -> Tuple[bytes, Optional[str]]:
+    """Undo a gzip/deflate Content-Encoding with the stdlib → (body,
+    ``<enc>;decoded``); a failure keeps the raw bytes and ``enc``, so
+    an undecodable body is flagged by its encoding."""
+    if enc not in ("gzip", "x-gzip", "deflate") or not body:
+        return body, enc
+    try:
+        if enc == "deflate":
+            try:
+                return zlib.decompress(body), enc + ";decoded"
+            except zlib.error:
+                return zlib.decompress(body, -zlib.MAX_WBITS), enc + ";decoded"
+        return gzip.decompress(body), enc + ";decoded"
+    except (OSError, zlib.error, EOFError):
+        return body, enc
+
+
+def parse_requests(stream: bytes, at_end: bool = True) -> Tuple[List[dict], int]:
+    """The request stream as ``(requests, consumed)``: {method, target,
+    host} per request in pipeline order, and the offset parsing stopped
+    at.  Request bodies (Content-Length / chunked) are consumed and
+    discarded — the request contributes the URL.
+
+    ``at_end=False`` (a live stream) stops at the first request whose
+    body is incomplete, ``consumed`` at its start: the caller carries
+    ``stream[consumed:]`` into the next micro-batch, so a split request
+    is parsed once, when its last byte arrives.  ``at_end=True`` (the
+    flow has ended) also emits a request whose body was cut."""
     out: List[dict] = []
     pos = 0
     while True:
+        start_pos = pos
         block, pos = _split_head(stream, pos)
         if block is None:
-            break
+            return out, start_pos
         start, hdrs = _headers(block)
         parts = start.split(b" ")
         if len(parts) < 3 or not start.startswith(_METHODS):
-            break  # desynchronized: stop rather than emit garbage
-        cl = _content_length(hdrs)
-        if "chunked" in hdrs.get("transfer-encoding", "").lower():
-            _, pos, ok = _read_chunked(stream, pos)
-            if not ok:
-                pass  # truncated request body: URL already parsed
-        elif cl:
-            pos = min(pos + cl, len(stream))
+            return out, start_pos  # desynchronized: stop rather than emit garbage
+        _body, pos, complete = _read_body(stream, pos, hdrs, False, at_end)
+        if not (complete or at_end):
+            return out, start_pos  # body incomplete: wait for more
         out.append(
             {
                 "method": parts[0].decode("latin-1"),
@@ -187,14 +218,17 @@ def parse_requests(stream: bytes) -> List[dict]:
                 "host": hdrs.get("host"),
             }
         )
-    return out
 
 
 def parse_responses(
-    stream: bytes, methods: Optional[List[str]] = None, decode_content: bool = True
-) -> List[dict]:
-    """The response stream as a list of {status, content_type,
-    content_encoding, chunked, body, truncated} in pipeline order.
+    stream: bytes,
+    methods: Optional[List[str]] = None,
+    decode_content: bool = True,
+    at_end: bool = True,
+) -> Tuple[List[dict], int]:
+    """The response stream as ``(responses, consumed)``: {status,
+    content_type, content_encoding, chunked, body, truncated} per
+    response in pipeline order, and the offset parsing stopped at.
 
     ``methods`` (the paired requests' methods, pipeline order) decides
     HEAD framing: a HEAD response carries headers but NO body bytes on
@@ -202,190 +236,115 @@ def parse_responses(
     with no Content-Length and no chunked coding is close-delimited —
     the rest of the stream (only valid as the final response).
 
-    ``decode_content=True`` undoes gzip/deflate Content-Encoding with
-    the stdlib; failures keep the raw bytes (flagged by leaving
-    content_encoding set — a decoded body reports encoding
-    ``<enc>;decoded``)."""
+    ``at_end=True`` (the flow has ended) emits a cut tail as
+    ``truncated`` and reads a close-delimited body to stream end.
+    ``at_end=False`` (a live stream) stops at the first incomplete or
+    close-delimited response, ``consumed`` at its start, as
+    :func:`parse_requests` does.
+
+    ``decode_content=True`` undoes gzip/deflate Content-Encoding
+    (:func:`_decode_body`)."""
     out: List[dict] = []
     pos = 0
-    i = 0
-    n = len(stream)
-    while True:
-        block, pos = _split_head(stream, pos)
-        if block is None:
-            break
-        start, hdrs = _headers(block)
-        if not start.startswith(b"HTTP/1."):
-            break  # desynchronized
-        parts = start.split(b" ")
-        try:
-            status = int(parts[1])
-        except (IndexError, ValueError):
-            break
-        method = methods[i] if methods and i < len(methods) else None
-        chunked = "chunked" in hdrs.get("transfer-encoding", "").lower()
-        cl = _content_length(hdrs)
-        truncated = False
-        if method == "HEAD" or status in _NO_BODY_STATUS or 100 <= status < 200:
-            body = b""
-        elif chunked:
-            body, pos, ok = _read_chunked(stream, pos)
-            truncated = not ok
-        elif cl is not None:
-            body = stream[pos : pos + cl]
-            truncated = len(body) < cl
-            pos = min(pos + cl, n)
-        else:
-            body = stream[pos:]  # close-delimited: rest of the stream
-            pos = n
-        enc = hdrs.get("content-encoding", "").lower() or None
-        if decode_content and enc in ("gzip", "x-gzip", "deflate") and body:
-            try:
-                if enc == "deflate":
-                    try:
-                        body = zlib.decompress(body)
-                    except zlib.error:
-                        body = zlib.decompress(body, -zlib.MAX_WBITS)
-                else:
-                    body = gzip.decompress(body)
-                enc = enc + ";decoded"
-            except (OSError, zlib.error, EOFError):
-                pass  # keep raw bytes; enc stays undecoded
-        out.append(
-            {
-                "status": status,
-                "content_type": hdrs.get("content-type"),
-                "content_encoding": enc,
-                "chunked": chunked,
-                "body": body,
-                "truncated": truncated,
-            }
-        )
-        i += 1
-    return out
-
-
-def parse_requests_incremental(stream: bytes) -> Tuple[List[dict], int]:
-    """Streaming twin of :func:`parse_requests`: parse only requests
-    that are COMPLETE in ``stream`` (head and body fully present) and
-    return ``(requests, consumed)`` where ``consumed`` is the byte
-    offset of the first incomplete request — the caller carries
-    ``stream[consumed:]`` as state into the next micro-batch, so a
-    request split across batches is parsed exactly once, when its
-    last byte arrives."""
-    out: List[dict] = []
-    pos = 0
-    n = len(stream)
     while True:
         start_pos = pos
         block, pos = _split_head(stream, pos)
         if block is None:
             return out, start_pos
         start, hdrs = _headers(block)
+        if not start.startswith(b"HTTP/1."):
+            return out, start_pos  # desynchronized
         parts = start.split(b" ")
-        if len(parts) < 3 or not start.startswith(_METHODS):
-            return out, start_pos  # desynchronized: stop, don't consume
-        cl = _content_length(hdrs)
-        if "chunked" in hdrs.get("transfer-encoding", "").lower():
-            _, pos, ok = _read_chunked(stream, pos)
-            if not ok:
-                return out, start_pos  # body incomplete: wait for more
-        elif cl:
-            if pos + cl > n:
+        try:
+            status = int(parts[1])
+        except (IndexError, ValueError):
+            return out, start_pos
+        i = len(out)
+        method = methods[i] if methods and i < len(methods) else None
+        if method == "HEAD" or status in _NO_BODY_STATUS or 100 <= status < 200:
+            body, complete = b"", True
+        else:
+            body, pos, complete = _read_body(stream, pos, hdrs, True, at_end)
+            if not (complete or at_end):
                 return out, start_pos
-            pos += cl
+        enc = hdrs.get("content-encoding", "").lower() or None
+        if decode_content:
+            body, enc = _decode_body(body, enc)
         out.append(
             {
-                "method": parts[0].decode("latin-1"),
-                "target": parts[1].decode("latin-1"),
-                "host": hdrs.get("host"),
+                "status": status,
+                "content_type": hdrs.get("content-type"),
+                "content_encoding": enc,
+                "chunked": "chunked" in hdrs.get("transfer-encoding", "").lower(),
+                "body": body,
+                "truncated": not complete,
             }
         )
 
 
-def parse_responses_incremental(
-    stream: bytes,
-    methods: Optional[List[str]] = None,
+def request_url(rq: dict, server: Optional[str], port: Optional[int]) -> str:
+    """A parsed request's URL: an absolute-form (proxy) target as is,
+    else ``http://<Host><target>`` — Host-less requests fall back to
+    the server endpoint ``server[:port]``."""
+    target = rq["target"]
+    if target.startswith(("http://", "https://")):
+        return target
+    host = rq["host"] or (server if port is None else f"{server}:{port}")
+    return f"http://{host or ''}{target}"
+
+
+def http_exchanges(
+    req_stream: bytes,
+    resp_stream: bytes,
+    server: Optional[str],
+    port: Optional[int],
     decode_content: bool = True,
-) -> Tuple[List[dict], int]:
-    """Streaming twin of :func:`parse_responses`: emit only responses
-    whose framing COMPLETED in ``stream``; returns ``(responses,
-    consumed)``.  A close-delimited response (no Content-Length, not
-    chunked) has no knowable end on a live stream — parsing stops at
-    its start and it is never emitted (documented streaming
-    limitation; the batch operator handles it at flow end)."""
-    out: List[dict] = []
-    pos = 0
-    i = 0
-    n = len(stream)
-    while True:
-        start_pos = pos
-        block, pos = _split_head(stream, pos)
-        if block is None:
-            return out, start_pos
-        start, hdrs = _headers(block)
-        if not start.startswith(b"HTTP/1."):
-            return out, start_pos
-        parts = start.split(b" ")
-        try:
-            status = int(parts[1])
-        except (IndexError, ValueError):
-            return out, start_pos
-        method = methods[i] if methods and i < len(methods) else None
-        chunked = "chunked" in hdrs.get("transfer-encoding", "").lower()
-        cl = _content_length(hdrs)
-        if method == "HEAD" or status in _NO_BODY_STATUS or 100 <= status < 200:
-            body = b""
-        elif chunked:
-            body, pos, ok = _read_chunked(stream, pos)
-            if not ok:
-                return out, start_pos
-        elif cl is not None:
-            if pos + cl > n:
-                return out, start_pos
-            body = stream[pos : pos + cl]
-            pos += cl
-        else:
-            return out, start_pos  # close-delimited: end unknowable live
-        enc = hdrs.get("content-encoding", "").lower() or None
-        if decode_content and enc in ("gzip", "x-gzip", "deflate") and body:
-            try:
-                if enc == "deflate":
-                    try:
-                        body = zlib.decompress(body)
-                    except zlib.error:
-                        body = zlib.decompress(body, -zlib.MAX_WBITS)
-                else:
-                    body = gzip.decompress(body)
-                enc = enc + ";decoded"
-            except (OSError, zlib.error, EOFError):
-                pass  # keep raw bytes; enc stays undecoded
-        out.append(
-            {
-                "status": status,
-                "content_type": hdrs.get("content-type"),
-                "content_encoding": enc,
-                "chunked": chunked,
-                "body": body,
-                "truncated": False,  # incremental form never emits partial
-            }
-        )
-        i += 1
+    resp_cut: bool = False,
+) -> List[Tuple[str, str, dict]]:
+    """A finished connection's ``(method, url, response)`` objects,
+    paired in pipeline order.  ``resp_cut`` (the response stream hit a
+    byte cap) marks the last response truncated: a close-delimited
+    body would otherwise report truncated=False."""
+    requests, _ = parse_requests(req_stream)
+    responses, _ = parse_responses(
+        resp_stream,
+        methods=[r["method"] for r in requests],
+        decode_content=decode_content,
+    )
+    if responses and resp_cut:
+        responses[-1]["truncated"] = True
+    return [
+        (rq["method"], request_url(rq, server, port), rs)
+        for rq, rs in zip(requests, responses)
+    ]
 
 
-def _classify_streams(streams: List[Tuple[tuple, bytes]]):
-    """Split a connection's directional streams into (request_dir,
-    response_dir) by CONTENT — the request stream starts with an HTTP
-    method token, the response stream with ``HTTP/1.`` — so no port
-    convention is assumed.  Returns (req, resp) as (key, bytes) pairs
-    or (None, None) when the connection isn't parseable HTTP/1.x."""
-    req = resp = None
-    for key, stream in streams:
-        if stream.startswith(_METHODS):
-            req = (key, stream)
-        elif stream.startswith(b"HTTP/1."):
-            resp = (key, stream)
-    return req, resp
+def object_fields(obj_no: int, method, url, rs: dict) -> dict:
+    """One HTTP object's columns, ``obj_no`` through ``body`` in
+    HTTP_OBJECT_SCHEMA order."""
+    return {
+        "obj_no": obj_no,
+        "method": method,
+        "url": url,
+        "status": rs["status"],
+        "content_type": rs["content_type"],
+        "content_encoding": rs["content_encoding"],
+        "chunked": rs["chunked"],
+        "body_len": len(rs["body"]),
+        "body_truncated": rs["truncated"],
+        "body": rs["body"],
+    }
+
+
+def classify_stream(stream: bytes) -> Optional[str]:
+    """A directional stream's role by CONTENT, so no port convention is
+    assumed: ``"req"`` when it opens with an HTTP method token,
+    ``"resp"`` when it opens with ``HTTP/1.``, else None."""
+    if stream.startswith(_METHODS):
+        return "req"
+    if stream.startswith(b"HTTP/1."):
+        return "resp"
+    return None
 
 
 def http_objects(
@@ -422,7 +381,7 @@ def http_objects(
     parsing — retransmitted duplicates drop and reordered segments
     re-sort, so damaged crawl captures still yield correct objects;
     the default stays capture order."""
-    from .flows import connection_segments, directional_streams
+    from .flows import connection_segments, directional_streams, map_rows
 
     if order not in ("capture", "seq"):
         raise ValueError(f"order must be 'capture' or 'seq', got {order!r}")
@@ -434,74 +393,34 @@ def http_objects(
     conns = connection_segments(
         packets, flow_filter, window=window, with_seq=(order == "seq")
     )
-    names = [f.name for f in HTTP_OBJECT_SCHEMA.fields]
 
-    def _parse_connection(fname, segs, rows):
-        dirs = directional_streams(segs, max_flow_bytes, order=order)
-        joined = [(k, stream) for k, stream, _tr in dirs]
-        trunc = {k: tr for k, _stream, tr in dirs}
-        req, resp = _classify_streams(joined)
+    def _parse_connection(fname, segs):
+        req = resp = None
+        for key, stream, cut in directional_streams(segs, max_flow_bytes, order=order):
+            role = classify_stream(stream)
+            if role == "req":
+                req = (key, stream)
+            elif role == "resp":
+                resp = (key, stream, cut)
         if req is None or resp is None:
             return
         (client, _cport), req_stream = req
-        (server, sport), resp_stream = resp
-        requests = parse_requests(req_stream)
-        responses = parse_responses(
-            resp_stream,
-            methods=[r["method"] for r in requests],
-            decode_content=decode_content,
+        (server, sport), resp_stream, resp_cut = resp
+        objs = http_exchanges(
+            req_stream, resp_stream, server, sport, decode_content, resp_cut
         )
-        if responses and trunc.get((server, sport)):
-            # the response stream was CAP-truncated: the last parsed
-            # object absorbed the cut (close-delimited bodies read to
-            # stream end and would otherwise report truncated=False)
-            responses[-1]["truncated"] = True
-        for i, (rq, rs) in enumerate(zip(requests, responses), start=1):
-            target = rq["target"]
-            if target.startswith("http://") or target.startswith("https://"):
-                url = target  # absolute-form (proxy) target
-            else:
-                host = rq["host"] or (
-                    server if sport is None else f"{server}:{sport}"
-                )
-                url = f"http://{host}{target}"
-            rows.append(
-                {
-                    "file": fname,
-                    "client": client,
-                    "server": server,
-                    "server_port": sport,
-                    "obj_no": i,
-                    "method": rq["method"],
-                    "url": url,
-                    "status": rs["status"],
-                    "content_type": rs["content_type"],
-                    "content_encoding": rs["content_encoding"],
-                    "chunked": rs["chunked"],
-                    "body_len": len(rs["body"]),
-                    "body_truncated": rs["truncated"],
-                    "body": rs["body"],
-                }
-            )
+        for i, (method, url, rs) in enumerate(objs, start=1):
+            yield {
+                "file": fname,
+                "client": client,
+                "server": server,
+                "server_port": sport,
+                **object_fields(i, method, url, rs),
+            }
 
-    def batch_fn(batches):
-        for pdf in batches:
-            rows: list = []
-            for fname, segs in zip(pdf["file"], pdf["segs"]):
-                _parse_connection(fname, segs, rows)
-            yield (
-                pd.DataFrame(rows, columns=names)
-                if rows
-                else pd.DataFrame(columns=names)
-            )
-
-    # mapInPandas is opaque to column pruning (guide §4): without the
-    # explicit select, the canonical endpoint-pair key structs _a/_b
-    # (and _w when windowed) — which batch_fn never reads, direction
-    # is decided by stream CONTENT — would be Arrow-converted and
-    # shipped to every Python worker alongside the segments.  Measured
-    # on the 2000-connection fixture: full query min wall 2.78 → 1.85 s
-    # (cpu 11.2 → 9.9 s) from this projection alone (r14).
-    return conns.select("file", "segs").mapInPandas(
-        batch_fn, HTTP_OBJECT_SCHEMA
-    )
+    # only file + segs reach Python: the canonical endpoint-pair key
+    # structs _a/_b (and _w when windowed) are never read, direction is
+    # decided by stream CONTENT.  Measured on the 2000-connection
+    # fixture: full query min wall 2.78 → 1.85 s (cpu 11.2 → 9.9 s)
+    # from this projection alone (r14).
+    return map_rows(conns, ["file", "segs"], _parse_connection, HTTP_OBJECT_SCHEMA)

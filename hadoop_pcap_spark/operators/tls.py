@@ -43,10 +43,7 @@ import hashlib
 import struct
 from typing import Iterator, List, Optional, Tuple
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 __all__ = [
@@ -278,6 +275,44 @@ def _version_name(v: Optional[int]) -> Optional[str]:
     return _VERSION_NAMES.get(v, f"0x{v:04x}")
 
 
+def first_hellos(streams) -> tuple:
+    """``(client_hello, its_direction, server_hello, its_direction)``
+    of a connection's ``(direction, bytes)`` streams, classified by
+    CONTENT: each stream's first handshake message decides it.  A hello
+    is None when absent or malformed."""
+    ch = sh = None
+    ch_dir = sh_dir = None
+    for direction, stream in streams:
+        for msg_type, body in handshake_messages(stream):
+            if msg_type == _CLIENT_HELLO and ch is None:
+                ch, ch_dir = parse_client_hello(body), direction
+            elif msg_type == _SERVER_HELLO and sh is None:
+                sh, sh_dir = parse_server_hello(body), direction
+            break  # the first handshake message classifies a direction
+    return ch, ch_dir, sh, sh_dir
+
+
+def session_fields(ch: dict, sh: Optional[dict]) -> dict:
+    """One session's columns from its parsed hellos, ``sni`` through
+    ``server_hello_seen`` in TLS_SESSION_SCHEMA order."""
+    ja3 = ja3_string(ch)
+    ja3s = ja3s_string(sh) if sh else None
+    return {
+        "sni": ch["sni"],
+        "alpn": ",".join(ch["alpn"]) if ch["alpn"] else None,
+        "alpn_chosen": sh["alpn"] if sh else None,
+        "tls_version": _version_name(
+            (sh["supported_version"] or sh["version"]) if sh else None
+        ),
+        "cipher_suite": sh["cipher"] if sh else None,
+        "ja3": ja3,
+        "ja3_md5": _md5(ja3),
+        "ja3s": ja3s,
+        "ja3s_md5": _md5(ja3s) if ja3s else None,
+        "server_hello_seen": sh is not None,
+    }
+
+
 def tls_handshakes(
     packets: DataFrame,
     flow_filter=None,
@@ -300,64 +335,32 @@ def tls_handshakes(
     (:func:`..operators.flows.connection_segments`) + ONE
     ``mapInPandas`` parsing a whole Arrow batch of connections per
     invocation — the same amortized form as ``http_objects``."""
-    from .flows import connection_segments, directional_streams
+    from .flows import connection_segments, directional_streams, map_rows
 
     conns = connection_segments(packets, flow_filter, window=window)
-    names = [f.name for f in TLS_SESSION_SCHEMA.fields]
 
     def _parse_connection(fname, a, b, segs):
-        ch = sh = None
-        ch_key = sh_key = None
-        for key, stream, _tr in directional_streams(segs, max_handshake_bytes):
-            for msg_type, body in handshake_messages(stream):
-                if msg_type == _CLIENT_HELLO and ch is None:
-                    ch, ch_key = parse_client_hello(body), key
-                elif msg_type == _SERVER_HELLO and sh is None:
-                    sh, sh_key = parse_server_hello(body), key
-                break  # the first handshake message classifies a direction
-        if ch is None or ch_key is None:
-            return None
+        ch, ch_key, sh, sh_key = first_hellos(
+            (key, stream)
+            for key, stream, _tr in directional_streams(segs, max_handshake_bytes)
+        )
+        if ch is None:
+            return
         client, _cport = ch_key
-        if sh is not None and sh_key is not None:
+        if sh is not None:
             server, sport = sh_key
         else:
             # no ServerHello: the other endpoint of the pair is the server
             other = b if (a["ip"], a["port"]) == (client, _cport) else a
             server, sport = other["ip"], other["port"]
-        ja3 = ja3_string(ch)
-        negotiated = None
-        if sh is not None:
-            negotiated = sh["supported_version"] or sh["version"]
-        return {
+        yield {
             "file": fname,
             "client": client,
             "server": server,
             "server_port": None if sport is None else int(sport),
-            "sni": ch["sni"],
-            "alpn": ",".join(ch["alpn"]) if ch["alpn"] else None,
-            "alpn_chosen": sh["alpn"] if sh else None,
-            "tls_version": _version_name(negotiated),
-            "cipher_suite": sh["cipher"] if sh else None,
-            "ja3": ja3,
-            "ja3_md5": _md5(ja3),
-            "ja3s": ja3s_string(sh) if sh else None,
-            "ja3s_md5": _md5(ja3s_string(sh)) if sh else None,
-            "server_hello_seen": sh is not None,
+            **session_fields(ch, sh),
         }
 
-    def batch_fn(batches):
-        for pdf in batches:
-            rows = []
-            for fname, a, b, segs in zip(
-                pdf["file"], pdf["_a"], pdf["_b"], pdf["segs"]
-            ):
-                row = _parse_connection(fname, a, b, segs)
-                if row is not None:
-                    rows.append(row)
-            yield (
-                pd.DataFrame(rows, columns=names)
-                if rows
-                else pd.DataFrame(columns=names)
-            )
-
-    return conns.mapInPandas(batch_fn, TLS_SESSION_SCHEMA)
+    return map_rows(
+        conns, ["file", "_a", "_b", "segs"], _parse_connection, TLS_SESSION_SCHEMA
+    )

@@ -88,35 +88,20 @@ def register_pcap_udtfs(spark: SparkSession) -> None:
     class HttpObjectsUdtf:
         def eval(self, req_stream, resp_stream, server=None, server_port=None):
             from hadoop_pcap_spark.operators.http import (
-                parse_requests,
-                parse_responses,
+                http_exchanges,
+                object_fields,
             )
 
             if req_stream is None or resp_stream is None:
                 return
-            reqs = parse_requests(bytes(req_stream))
-            resps = parse_responses(
-                bytes(resp_stream), methods=[r["method"] for r in reqs]
+            # a Host-less request falls back to the server endpoint, as
+            # in the batch operator (pass server/server_port as the
+            # optional 3rd/4th LATERAL arguments)
+            objs = http_exchanges(
+                bytes(req_stream), bytes(resp_stream), server, server_port
             )
-            for i, (rq, rs) in enumerate(zip(reqs, resps), start=1):
-                target = rq["target"]
-                if target.startswith(("http://", "https://")):
-                    url = target
-                else:
-                    # same Host-less fallback as the batch operator:
-                    # the server endpoint (pass server/server_port as
-                    # the optional 3rd/4th LATERAL arguments)
-                    host = rq["host"] or (
-                        server
-                        if server_port is None
-                        else f"{server}:{server_port}"
-                    )
-                    url = f"http://{host or ''}{target}"
-                yield (
-                    i, rq["method"], url, rs["status"], rs["content_type"],
-                    rs["content_encoding"], rs["chunked"], len(rs["body"]),
-                    rs["truncated"], rs["body"],
-                )
+            for i, (method, url, rs) in enumerate(objs, start=1):
+                yield tuple(object_fields(i, method, url, rs).values())
 
     @udtf(
         returnType="msg_no int, dns_queryid int, dns_qr boolean,"
@@ -126,21 +111,19 @@ def register_pcap_udtfs(spark: SparkSession) -> None:
     )
     class DnsMessagesUdtf:
         def eval(self, stream):
-            from hadoop_pcap_spark.operators.flows import _frame_messages
-            from hadoop_pcap_spark.pcap import dns as _dns
+            from hadoop_pcap_spark.operators.flows import (
+                _frame_messages,
+                dns_columns,
+                dns_messages,
+            )
 
             if stream is None:
                 return
-            for i, msg_bytes in enumerate(
-                _frame_messages(bytes(stream)), start=1
-            ):
-                try:
-                    msg = _dns.parse_message(msg_bytes)
-                except Exception:
-                    continue  # silent-skip parity with the packet path
+            for i, msg in dns_messages(_frame_messages(bytes(stream))):
+                c = dns_columns(msg)
                 yield (
-                    i, msg.query_id, msg.qr, msg.qname, msg.qtype,
-                    msg.rcode_text, len(msg.answers),
+                    i, c["dns_queryid"], c["dns_qr"], c["dns_qname"],
+                    c["dns_qtype"], c["dns_rcode"], len(c["dns_answer"]),
                 )
 
     @udtf(
@@ -152,37 +135,16 @@ def register_pcap_udtfs(spark: SparkSession) -> None:
     )
     class TlsSessionUdtf:
         def eval(self, stream_a, stream_b):
-            from hadoop_pcap_spark.operators import tls as _tls
+            from hadoop_pcap_spark.operators.tls import (
+                first_hellos,
+                session_fields,
+            )
 
-            ch = sh = None
-            for s in (stream_a, stream_b):
-                if s is None:
-                    continue
-                for msg_type, body in _tls.handshake_messages(bytes(s)):
-                    if msg_type == 1 and ch is None:
-                        ch = _tls.parse_client_hello(body)
-                    elif msg_type == 2 and sh is None:
-                        sh = _tls.parse_server_hello(body)
-                    break  # first handshake message classifies a direction
-            if ch is None:
-                return
-            ja3 = _tls.ja3_string(ch)
-            negotiated = (
-                (sh["supported_version"] or sh["version"]) if sh else None
+            ch, _, sh, _ = first_hellos(
+                (None, bytes(s)) for s in (stream_a, stream_b) if s is not None
             )
-            ja3s = _tls.ja3s_string(sh) if sh else None
-            yield (
-                ch["sni"],
-                ",".join(ch["alpn"]) if ch["alpn"] else None,
-                sh["alpn"] if sh else None,
-                _tls._version_name(negotiated),
-                sh["cipher"] if sh else None,
-                ja3,
-                _tls._md5(ja3),
-                ja3s,
-                _tls._md5(ja3s) if ja3s else None,
-                sh is not None,
-            )
+            if ch is not None:
+                yield tuple(session_fields(ch, sh).values())
 
     spark.udtf.register("http_objects", HttpObjectsUdtf)
     spark.udtf.register("dns_messages", DnsMessagesUdtf)

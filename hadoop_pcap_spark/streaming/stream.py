@@ -334,7 +334,9 @@ def streaming_http_objects(
     Documented streaming limitation: a CLOSE-DELIMITED response (no
     Content-Length, not chunked) has no knowable end on a live stream
     — it is never emitted here (the batch operator recovers it at
-    flow end); ``parse_responses_incremental`` stops at its start.
+    flow end): the shared parser
+    (:func:`..operators.http.parse_responses` with ``at_end=False``)
+    stops at its start.
     Hot-flow guard: a residual beyond ``max_flow_bytes`` resets that
     direction (dropping buffered bytes) rather than growing state.
 
@@ -352,17 +354,14 @@ def streaming_http_objects(
     import pandas as pd
 
     from ..operators.http import (
-        _METHODS,
-        parse_requests_incremental,
-        parse_responses_incremental,
+        classify_stream,
+        object_fields,
+        parse_requests,
+        parse_responses,
+        request_url,
     )
 
-    def _classify(res: bytes):
-        if res.startswith(_METHODS):
-            return "req"
-        if res.startswith(b"HTTP/1."):
-            return "resp"
-        return None
+    names = [c.split()[0] for c in HTTP_STREAM_OUTPUT.split(", ")]
 
     def update(key, pdfs, state):
         a_ip, a_port, b_ip, b_port = _conn_endpoints(key[0])
@@ -374,7 +373,7 @@ def streaming_http_objects(
         a_res = bytes(a_res or b"") + a_new
         b_res = bytes(b_res or b"") + b_new
         if client_is_a == 0:
-            ka, kb = _classify(a_res), _classify(b_res)
+            ka, kb = classify_stream(a_res), classify_stream(b_res)
             if ka == "req" or kb == "resp":
                 client_is_a = 1
             elif kb == "req" or ka == "resp":
@@ -392,20 +391,14 @@ def streaming_http_objects(
                 # bytes stay in the residual, bounded by the byte cap)
                 # — dropping already-parsed entries would desync the
                 # FIFO request/response pairing permanently
-                reqs, used = parse_requests_incremental(req_res)
+                reqs, used = parse_requests(req_res, at_end=False)
                 req_res = req_res[used:]
-                for rq in reqs:
-                    target = rq["target"]
-                    if target.startswith(("http://", "https://")):
-                        url = target
-                    else:
-                        host = rq["host"] or (
-                            server if sport is None else f"{server}:{sport}"
-                        )
-                        url = f"http://{host}{target}"
-                    pending.append({"method": rq["method"], "url": url})
-            resps, used = parse_responses_incremental(
-                resp_res, methods=[p["method"] for p in pending]
+                pending.extend(
+                    {"method": rq["method"], "url": request_url(rq, server, sport)}
+                    for rq in reqs
+                )
+            resps, used = parse_responses(
+                resp_res, methods=[p["method"] for p in pending], at_end=False
             )
             resp_res = resp_res[used:]
             for rs in resps:
@@ -416,15 +409,7 @@ def streaming_http_objects(
                         "client": client,
                         "server": server,
                         "server_port": sport,
-                        "obj_no": n_objs,
-                        "method": rq["method"],
-                        "url": rq["url"],
-                        "status": rs["status"],
-                        "content_type": rs["content_type"],
-                        "content_encoding": rs["content_encoding"],
-                        "chunked": rs["chunked"],
-                        "body_len": len(rs["body"]),
-                        "body": rs["body"],
+                        **object_fields(n_objs, rq["method"], rq["url"], rs),
                     }
                 )
             if client_is_a == 1:
@@ -439,7 +424,7 @@ def streaming_http_objects(
             (a_res, b_res, client_is_a, n_objs, _json.dumps(pending))
         )
         if rows:
-            yield pd.DataFrame(rows)
+            yield pd.DataFrame(rows, columns=names)
 
     return _l7_segments(packets).groupBy("conn").applyInPandasWithState(
         update,
@@ -483,8 +468,9 @@ def streaming_tls_clienthellos(
     checkpoint keyed by the four endpoint columns does not resume."""
     import pandas as pd
 
-    from ..operators.tls import handshake_messages, ja3_string, parse_client_hello
-    from ..operators.tls import _md5 as _ja3_md5
+    from ..operators.tls import first_hellos, session_fields
+
+    names = [c.split()[0] for c in TLS_STREAM_OUTPUT.split(", ")]
 
     def update(key, pdfs, state):
         a_ip, a_port, b_ip, b_port = _conn_endpoints(key[0])
@@ -499,36 +485,20 @@ def streaming_tls_clienthellos(
         a_new, b_new, _n = _segment_bytes(pdfs)
         a_res = bytes(a_res or b"") + a_new
         b_res = bytes(b_res or b"") + b_new
-        ch = None
-        ch_dir_a = True
-        for is_a, stream in ((True, a_res), (False, b_res)):
-            for msg_type, body in handshake_messages(stream):
-                if msg_type == 1:
-                    ch = parse_client_hello(body)
-                    ch_dir_a = is_a
-                break  # first message classifies the direction
-            if ch is not None:
-                break
+        ch, ch_dir_a, _, _ = first_hellos(((True, a_res), (False, b_res)))
         if ch is not None:
             state.update((b"", b"", True))
             if ch_dir_a:
                 client, server, sport = a_ip, b_ip, b_port
             else:
                 client, server, sport = b_ip, a_ip, a_port
-            ja3 = ja3_string(ch)
-            yield pd.DataFrame(
-                [
-                    {
-                        "client": client,
-                        "server": server,
-                        "server_port": None if sport is None else int(sport),
-                        "sni": ch["sni"],
-                        "alpn": ",".join(ch["alpn"]) if ch["alpn"] else None,
-                        "ja3": ja3,
-                        "ja3_md5": _ja3_md5(ja3),
-                    }
-                ]
-            )
+            row = {
+                "client": client,
+                "server": server,
+                "server_port": None if sport is None else int(sport),
+                **session_fields(ch, None),
+            }
+            yield pd.DataFrame([row], columns=names)
             return
         if len(a_res) > max_handshake_bytes or len(b_res) > max_handshake_bytes:
             state.update((b"", b"", True))  # not TLS / missed: rule out
@@ -565,9 +535,10 @@ def streaming_dns_tcp_reassembly(
     the hot-flow guard; clipping the NEW bytes instead would wedge
     the flow forever on a poisoned length prefix, since every batch
     would re-truncate back to the same stuck residual), and a zero
-    length prefix (protocol violation, same wedge) clears it too.  Production deployments should add an idle-flow
-    TTL (timeoutConf + state.hasTimedOut) sized to the capture's flow
-    timeout; NoTimeout keeps the demo deterministic.
+    length prefix (protocol violation, same wedge) clears it too.
+    Production deployments should add an idle-flow TTL (timeoutConf +
+    state.hasTimedOut) sized to the capture's flow timeout; NoTimeout
+    keeps the demo deterministic.
 
     Input: a streaming packet DataFrame (``readStream.format("pcap")``
     or ``read_pcap_stream``) with at least
@@ -581,8 +552,7 @@ def streaming_dns_tcp_reassembly(
     """
     import pandas as pd
 
-    from ..operators.flows import _frame_messages
-    from ..pcap import dns as _dns
+    from ..operators.flows import _frame_messages, dns_columns, dns_messages
 
     def update(key, pdfs, state):
         new, _b, n = _segment_bytes(pdfs)
@@ -601,33 +571,17 @@ def streaming_dns_tcp_reassembly(
             residual = b""  # hot-flow guard: reset, resync later
         if residual[:2] == b"\x00\x00":
             residual = b""  # zero-length prefix: unstick the flow
-        rows = []
-        for m in msgs:
-            n_msgs += 1
-            try:
-                msg = _dns.parse_message(m)
-            except Exception:
-                continue  # silent-skip parity
-            rows.append(
-                {
-                    "src": src, "dst": dst,
-                    "src_port": src_port, "dst_port": dst_port,
-                    "msg_no": n_msgs,
-                    "dns_queryid": msg.query_id,
-                    "dns_flags": msg.flags_text,
-                    "dns_qr": msg.qr,
-                    "dns_opcode": msg.opcode_text,
-                    "dns_rcode": msg.rcode_text,
-                    "dns_qname": msg.qname,
-                    "dns_qtype": msg.qtype,
-                    "dns_qtype_str": msg.qtype_text,
-                    "dns_answer": msg.answers,
-                    "dns_authority": msg.authority,
-                    "dns_additional": msg.additional,
-                    "n_segments": n_segs,
-                }
-            )
-        state.update((residual, n_msgs, n_segs))
+        rows = [
+            {
+                "src": src, "dst": dst,
+                "src_port": src_port, "dst_port": dst_port,
+                "msg_no": no,
+                **dns_columns(msg),
+                "n_segments": n_segs,
+            }
+            for no, msg in dns_messages(msgs, n_msgs + 1)
+        ]
+        state.update((residual, n_msgs + len(msgs), n_segs))
         if rows:
             yield pd.DataFrame(rows)
 

@@ -10,9 +10,11 @@ are additionally unit-pinned on the pure parsers."""
 import gzip
 import hashlib
 import os
+import signal
 import sys
 
 import pytest
+from hypothesis import given, settings, strategies as st
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -34,7 +36,8 @@ def test_parse_requests_pipelined_with_post_body():
         b"POST /b HTTP/1.1\r\nHost: h.example\r\nContent-Length: 5\r\n\r\nhello"
         b"GET /c HTTP/1.1\r\nHost: h2.example\r\n\r\n"
     )
-    reqs = parse_requests(stream)
+    reqs, used = parse_requests(stream)
+    assert used == len(stream)
     assert [(r["method"], r["target"], r["host"]) for r in reqs] == [
         ("GET", "/a", "h.example"),
         ("POST", "/b", "h.example"),
@@ -45,9 +48,9 @@ def test_parse_requests_pipelined_with_post_body():
 def test_parse_responses_content_length_and_truncation():
     body = b"x" * 40
     full = b"HTTP/1.1 200 OK\r\nContent-Length: 40\r\n\r\n" + body
-    (r,) = parse_responses(full)
+    (r,), _ = parse_responses(full)
     assert (r["status"], r["body"], r["truncated"]) == (200, body, False)
-    (r,) = parse_responses(full[:-10])  # capture cut mid-body
+    (r,), _ = parse_responses(full[:-10])  # capture cut mid-body
     assert r["truncated"] and r["body"] == body[:-10]
 
 
@@ -58,7 +61,7 @@ def test_parse_responses_chunked_with_trailer():
         b"0\r\nX-T: v\r\n\r\n"
         b"HTTP/1.1 204 No Content\r\n\r\n"  # next response must still parse
     )
-    rs = parse_responses(wire)
+    rs, _ = parse_responses(wire)
     assert rs[0]["body"] == b"Wikipedia in chunks.\n"
     assert rs[0]["chunked"] and not rs[0]["truncated"]
     assert rs[1]["status"] == 204 and rs[1]["body"] == b""
@@ -72,13 +75,13 @@ def test_parse_responses_gzip_decode_and_raw_fallback():
         + b"\r\n\r\n"
         + gzip.compress(text, mtime=0)
     )
-    (r,) = parse_responses(wire_ok)
+    (r,), _ = parse_responses(wire_ok)
     assert r["body"] == text and r["content_encoding"] == "gzip;decoded"
     wire_bad = (
         b"HTTP/1.1 200 OK\r\nContent-Encoding: gzip\r\n"
         b"Content-Length: 9\r\n\r\nnot-gzip!"
     )
-    (r,) = parse_responses(wire_bad)
+    (r,), _ = parse_responses(wire_bad)
     assert r["body"] == b"not-gzip!" and r["content_encoding"] == "gzip"
 
 
@@ -87,13 +90,154 @@ def test_parse_responses_head_suppresses_body():
         b"HTTP/1.1 200 OK\r\nContent-Length: 10\r\n\r\n"
         b"HTTP/1.1 200 OK\r\nContent-Length: 2\r\n\r\nok"
     )
-    rs = parse_responses(wire, methods=["HEAD", "GET"])
+    rs, _ = parse_responses(wire, methods=["HEAD", "GET"])
     assert rs[0]["body"] == b"" and rs[1]["body"] == b"ok"
 
 
 def test_parse_desync_stops_cleanly():
-    assert parse_requests(b"garbage bytes not http\r\n\r\nmore") == []
-    assert parse_responses(b"SMTP 220 hi\r\n\r\n") == []
+    assert parse_requests(b"garbage bytes not http\r\n\r\nmore") == ([], 0)
+    assert parse_responses(b"SMTP 220 hi\r\n\r\n") == ([], 0)
+
+
+@pytest.mark.parametrize(
+    "framing",
+    [
+        *(b"Transfer-Encoding: chunked\r\n\r\n" + size
+          + b"\r\nxxxxxxxxxxxxxxxxxx\r\n0\r\n\r\n"
+          for size in (b"-6", b"+5", b"0x4", b"1_0")),
+        *(b"Content-Length: " + value + b"\r\n\r\nabcde"
+          for value in (b"-5", b"+5", b"0x4", b"1_0", b"5a", b"")),
+    ],
+)
+def test_framing_numbers_must_be_plain_digits(framing):
+    """A chunk size that is not 1*HEXDIG (RFC 9112 §7.1) or a
+    Content-Length that is not 1*DIGIT (§8.6) is desync: the message
+    never completes, nothing is consumed on a live stream, and the
+    parser returns.  ``int(tok, 16)`` accepts a sign, ``0x`` and
+    ``_``; a negative chunk size moved the read back onto its own size
+    line, so ``-6`` looped forever — hence the alarm."""
+
+    def _hung(signum, frame):
+        raise TimeoutError(f"parser hung on {framing!r}")
+
+    old = signal.signal(signal.SIGALRM, _hung)
+    signal.alarm(5)
+    try:
+        resp = b"HTTP/1.1 200 OK\r\n" + framing
+        req = b"POST /u HTTP/1.1\r\nHost: h\r\n" + framing
+        (rs,), used = parse_responses(resp)
+        assert rs["truncated"] and rs["body"] == b"" and used == len(resp)
+        (rq,), used = parse_requests(req)
+        assert rq["target"] == "/u" and used == len(req)
+        assert parse_responses(resp, at_end=False) == ([], 0)
+        assert parse_requests(req, at_end=False) == ([], 0)
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, old)
+
+
+def _chunked(body: bytes, sizes) -> bytes:
+    """``body`` in chunked coding: chunks of ``sizes`` (lower-case hex,
+    with an extension), the rest as one upper-case-hex chunk, then a
+    trailer field."""
+    out, pos = [], 0
+    for n in sizes:
+        if pos >= len(body):
+            break
+        piece = body[pos : pos + n]
+        out.append(b"%x;ext=1\r\n" % len(piece) + piece + b"\r\n")
+        pos += len(piece)
+    if pos < len(body):
+        out.append(b"%X\r\n" % (len(body) - pos) + body[pos:] + b"\r\n")
+    return b"".join(out) + b"0\r\nX-Trailer: t\r\n\r\n"
+
+
+@st.composite
+def _exchange(draw, last: bool):
+    """One pipelined (request bytes, response bytes, method,
+    close-delimited response?)."""
+    method = draw(st.sampled_from(["GET", "POST", "HEAD"]))
+    target = "/" + draw(st.text("abc/", max_size=6))
+    req = f"{method} {target} HTTP/1.1\r\nHost: h.example\r\n".encode()
+    if method == "POST":
+        rbody = draw(st.binary(max_size=40))
+        if draw(st.booleans()):
+            req += b"Transfer-Encoding: chunked\r\n\r\n" + _chunked(
+                rbody, draw(st.lists(st.integers(1, 9), max_size=4))
+            )
+        else:
+            req += b"Content-Length: %d\r\n\r\n" % len(rbody) + rbody
+    else:
+        req += b"\r\n"
+    status = draw(st.sampled_from([200, 204, 404]))
+    body = draw(st.binary(max_size=60)) if status != 204 else b""
+    head = b"HTTP/1.1 %d X\r\nContent-Type: text/plain\r\n" % status
+    if body and draw(st.booleans()):
+        body = gzip.compress(body, mtime=0)
+        head += b"Content-Encoding: gzip\r\n"
+    framing = "length"
+    if method == "HEAD" or status == 204:
+        resp = head + b"Content-Length: %d\r\n\r\n" % len(body)
+    else:
+        framing = draw(
+            st.sampled_from(["length", "chunked"] + (["close"] if last else []))
+        )
+        if framing == "length":
+            resp = head + b"Content-Length: %d\r\n\r\n" % len(body) + body
+        elif framing == "chunked":
+            resp = head + b"Transfer-Encoding: chunked\r\n\r\n" + _chunked(
+                body, draw(st.lists(st.integers(1, 17), max_size=5))
+            )
+        else:
+            resp = head + b"\r\n" + body  # close-delimited: rest of the stream
+    return req, resp, method, framing == "close"
+
+
+def _feed(fn, stream: bytes, cuts, methods=None):
+    """``fn`` over ``stream`` cut at ``cuts``, live (``at_end=False``)
+    with the residual carried, then flushed at flow end → (live
+    messages, flushed messages)."""
+    got, resid = [], b""
+    kw = lambda: {} if methods is None else {"methods": methods[len(got):]}
+    bounds = [0, *sorted(cuts), len(stream)]
+    for a, b in zip(bounds, bounds[1:]):
+        resid += stream[a:b]
+        out, used = fn(resid, at_end=False, **kw())
+        assert 0 <= used <= len(resid)
+        got += out
+        resid = resid[used:]
+    tail, _ = fn(resid, **kw())
+    return got, tail
+
+
+@settings(max_examples=200, deadline=None)
+@given(data=st.data())
+def test_split_anywhere_emits_what_the_whole_stream_does(data):
+    """A live stream cut into 2 or 3 pieces at any bytes (the residual
+    carried between pieces, as a streaming micro-batch does) emits
+    exactly what one end-of-flow parse of the whole stream emits,
+    minus a final close-delimited response, which only the flush at
+    flow end can complete."""
+    n = data.draw(st.integers(1, 4))
+    exs = [data.draw(_exchange(last=(i == n - 1))) for i in range(n)]
+    req_stream = b"".join(e[0] for e in exs)
+    resp_stream = b"".join(e[1] for e in exs)
+    methods = [e[2] for e in exs]
+    reqs, _ = parse_requests(req_stream)
+    resps, _ = parse_responses(resp_stream, methods=methods)
+    assert [r["method"] for r in reqs] == methods
+    assert len(resps) == n and not any(r["truncated"] for r in resps)
+    for fn, stream, whole, kw in (
+        (parse_requests, req_stream, reqs, {}),
+        (parse_responses, resp_stream, resps, {"methods": methods}),
+    ):
+        cuts = data.draw(
+            st.lists(st.integers(0, len(stream)), min_size=1, max_size=2)
+        )
+        live, flushed = _feed(fn, stream, cuts, **kw)
+        close_last = fn is parse_responses and exs[-1][3]
+        assert live == (whole[:-1] if close_last else whole)
+        assert live + flushed == whole
 
 
 # --- end-to-end golden over the synthesized capture ---------------------------
@@ -160,6 +304,44 @@ def test_http_objects_flow_filter_pushes_down(spark, http_capture_dir):
     assert {r.server_port for r in only80.collect()} == {80}
 
 
+def test_http_objects_udtf_sql_matches_operator(spark, http_capture_dir):
+    """The http_objects UDTF through spark.sql LATERAL over the
+    reassembled request/response streams yields the same objects as the
+    batch operator on the same capture."""
+    from hadoop_pcap_spark.operators.flows import reassemble_tcp_streams
+    from hadoop_pcap_spark.sql import register_pcap_udtfs
+
+    register_pcap_udtfs(spark)
+    pkts = read_pcap(
+        spark, http_capture_dir,
+        columns=["file", "src", "dst", "src_port", "dst_port",
+                 "protocol", "pkt_no", "payload"],
+        strict_reference=False,
+    )
+    reassemble_tcp_streams(pkts).createOrReplaceTempView("_http_streams")
+    rows = spark.sql(
+        """
+        WITH d AS (
+            SELECT *, substring(stream, 1, 7) = CAST('HTTP/1.' AS BINARY) AS is_resp
+            FROM _http_streams
+        ), c AS (
+            SELECT q.src AS client, r.src AS server, r.src_port AS server_port,
+                   q.stream AS req, r.stream AS resp
+            FROM d q JOIN d r
+              ON q.file = r.file AND q.src = r.dst AND q.src_port = r.dst_port
+             AND q.dst = r.src AND q.dst_port = r.src_port
+            WHERE NOT q.is_resp AND r.is_resp
+        )
+        SELECT c.client, c.server, c.server_port, t.*
+        FROM c, LATERAL http_objects(c.req, c.resp, c.server, c.server_port) t
+        """
+    ).collect()
+    spark.catalog.dropTempView("_http_streams")
+    want = http_objects(pkts).drop("file").collect()
+    assert len(want) == len(S.http_exchange_truth())
+    assert sorted(map(tuple, rows), key=repr) == sorted(map(tuple, want), key=repr)
+
+
 def test_dns_messages_udtf_sql(spark, tmp_path):
     """The dns_messages UDTF (SQL payload→rows explosion — SURVEY
     §2.4's @udtf row): LATERAL over reassembled DNS-over-TCP streams
@@ -217,47 +399,39 @@ def test_http_corpus_bridge_flags_mirror_duplicate(spark, http_capture_dir):
 
 
 def test_parse_requests_incremental_carries_partial():
-    from hadoop_pcap_spark.operators.http import parse_requests_incremental
-
     full = (
         b"GET /a HTTP/1.1\r\nHost: h\r\n\r\n"
         b"POST /b HTTP/1.1\r\nHost: h\r\nContent-Length: 5\r\n\r\nhello"
     )
     # cut mid-body of the POST: only GET emits; consumed points at POST
     cut = full[:-3]
-    reqs, used = parse_requests_incremental(cut)
+    reqs, used = parse_requests(cut, at_end=False)
     assert [r["target"] for r in reqs] == ["/a"]
     assert cut[used:].startswith(b"POST ")
     # feeding the carried residual + the rest completes the POST
-    reqs2, used2 = parse_requests_incremental(cut[used:] + full[-3:])
+    reqs2, used2 = parse_requests(cut[used:] + full[-3:], at_end=False)
     assert [r["target"] for r in reqs2] == ["/b"]
 
 
 def test_parse_responses_incremental_never_truncates_and_blocks_close():
-    from hadoop_pcap_spark.operators.http import parse_responses_incremental
-
     body = b"y" * 30
     r1 = b"HTTP/1.1 200 OK\r\nContent-Length: 30\r\n\r\n" + body
     close = b"HTTP/1.1 200 OK\r\nConnection: close\r\n\r\ntail..."
     # mid-body cut: nothing emits (no truncated ghosts), nothing consumed
-    resps, used = parse_responses_incremental(r1[:-10])
+    resps, used = parse_responses(r1[:-10], at_end=False)
     assert resps == [] and used == 0
     # complete + close-delimited: first emits, close never does
-    resps, used = parse_responses_incremental(r1 + close)
+    resps, used = parse_responses(r1 + close, at_end=False)
     assert len(resps) == 1 and resps[0]["body"] == body
     assert (r1 + close)[used:] == close
 
 
 def test_incremental_parsers_never_crash_and_never_overconsume():
-    """Fuzz the incremental parsers: arbitrary bytes must not raise,
-    and consumed must never exceed the input length (the residual
-    carried into the next micro-batch must be a valid suffix)."""
+    """Fuzz the parsers at both ``at_end`` values: arbitrary bytes
+    must not raise, and consumed must never exceed the input length
+    (the residual carried into the next micro-batch must be a valid
+    suffix)."""
     import random
-
-    from hadoop_pcap_spark.operators.http import (
-        parse_requests_incremental,
-        parse_responses_incremental,
-    )
 
     rng = random.Random(0x4774)
     seeds = [
@@ -275,9 +449,10 @@ def test_incremental_parsers_never_crash_and_never_overconsume():
                 blob = rng.choice(
                     [b"GET / HTTP/1.1\r\n", b"HTTP/1.1 200 OK\r\n"]
                 ) + blob
-        for fn in (parse_requests_incremental, parse_responses_incremental):
-            out, used = fn(blob)
-            assert 0 <= used <= len(blob), (fn.__name__, blob)
+        for fn in (parse_requests, parse_responses):
+            for at_end in (False, True):
+                out, used = fn(blob, at_end=at_end)
+                assert 0 <= used <= len(blob), (fn.__name__, at_end, blob)
 
 
 def test_http_objects_window_plumbs_through(spark, http_capture_dir):

@@ -120,6 +120,41 @@ def test_tls_handshakes_golden(spark, tls_capture_dir):
             assert getattr(r, k) == t[k], (t["client"], k)
 
 
+def test_tls_session_udtf_sql_matches_operator(spark, tls_capture_dir):
+    """The tls_session UDTF through spark.sql LATERAL over each
+    connection's two reassembled streams (in either order: direction
+    is classified by content) yields the same session fields as the
+    batch operator on the same capture."""
+    from hadoop_pcap_spark.operators.flows import reassemble_tcp_streams
+    from hadoop_pcap_spark.sql import register_pcap_udtfs
+
+    register_pcap_udtfs(spark)
+    pkts = _decode(spark, tls_capture_dir)
+    reassemble_tcp_streams(pkts).createOrReplaceTempView("_tls_streams")
+    rows = spark.sql(
+        """
+        WITH c AS (
+            SELECT max(CASE WHEN substring(stream, 1, 1) = X'16'
+                             AND substring(stream, 6, 1) = X'01'
+                            THEN src END) AS client,
+                   collect_list(stream) AS s
+            FROM _tls_streams
+            GROUP BY file, least(concat_ws('|', src, src_port), concat_ws('|', dst, dst_port)),
+                     greatest(concat_ws('|', src, src_port), concat_ws('|', dst, dst_port))
+        )
+        SELECT c.client, t.*
+        FROM c, LATERAL tls_session(get(c.s, 0), get(c.s, 1)) t
+        """
+    ).collect()
+    spark.catalog.dropTempView("_tls_streams")
+    fields = ["client", "sni", "alpn", "alpn_chosen", "tls_version",
+              "cipher_suite", "ja3", "ja3_md5", "ja3s", "ja3s_md5",
+              "server_hello_seen"]
+    want = tls_handshakes(pkts).select(*fields).collect()
+    assert len(want) == len(S.tls_exchange_truth())
+    assert sorted(map(tuple, rows), key=repr) == sorted(map(tuple, want), key=repr)
+
+
 def test_tls_handshakes_flow_filter_pushes_down(spark, tls_capture_dir):
     from pyspark.sql import functions as F
 
