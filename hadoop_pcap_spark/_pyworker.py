@@ -1,26 +1,43 @@
-"""Python-worker start-up: stat-keyed zip-import invalidation.
+"""Python-worker start-up: two fixed per-task costs of reused workers.
 
-Before every task a PySpark worker calls ``importlib.invalidate_caches()``
-(``pyspark/worker_util.setup_spark_files``).  On Python < 3.12,
-``zipimport.zipimporter.invalidate_caches`` eagerly re-parses its
-archive's central directory, once per cached importer: a worker holds
-one importer per imported package directory of ``pyspark.zip`` (15 or
-more, over a 1,328-entry archive), so each task starts with ~0.2 cpu-s
-of re-reads of a file that has not changed.  CPython 3.12 made the
-re-read lazy.
+1. Stat-keyed zip-import invalidation.  Before every task a PySpark
+   worker calls ``importlib.invalidate_caches()``
+   (``pyspark/worker_util.setup_spark_files``).  On Python < 3.12,
+   ``zipimport.zipimporter.invalidate_caches`` eagerly re-parses its
+   archive's central directory, once per cached importer: a worker
+   holds one importer per imported package directory of
+   ``pyspark.zip`` (15 or more, over a 1,328-entry archive), so each
+   task starts with ~0.2 cpu-s of re-reads of a file that has not
+   changed.  CPython 3.12 made the re-read lazy.  The replacement is
+   keyed on the archive's ``(st_ino, st_size, st_mtime_ns)``, the rule
+   importlib's ``FileFinder`` applies to directories: the directory is
+   re-read only when the key differs from the one recorded at that
+   archive's last read, or when the stat fails; otherwise the importer
+   rebinds the shared cached directory.
 
-:func:`install` swaps in a version keyed on the archive's
-``(st_ino, st_size, st_mtime_ns)``, the rule importlib's ``FileFinder``
-applies to directories: the directory is re-read only when the key
-differs from the one recorded at that archive's last read, or when the
-stat fails; otherwise the importer rebinds the shared cached directory.
-The package installs it only inside PySpark workers (see
-``hadoop_pcap_spark/__init__.py``); the driver's import system is left
-alone.
+2. Freezing what survives the post-task collection.  After every task
+   a reused worker runs a full ``gc.collect()`` in PySpark's daemon
+   loop (``pyspark/daemon.py``, ``manager``), which walks every
+   container object alive in the worker: the ~75k that pyspark,
+   pyarrow, numpy, pandas and this package leave behind, at ~40 ms per
+   task.  The loop looks up the daemon module's ``gc`` global at each
+   call; that global is rebound to :class:`_FreezingGC`, whose
+   ``collect()`` runs the same full collection and then moves the
+   survivors to the permanent generation (``gc.freeze()``), so later
+   collections (the post-task one and the automatic ones inside
+   tasks) walk only what the tasks since then left alive.  Garbage
+   present at a task boundary is still collected there; a reference
+   cycle that was alive at one boundary and dies later is reclaimed
+   only when the worker exits.  The process-wide ``gc`` module is left
+   alone, so a UDF's own ``gc.collect()`` behaves as before.
+
+The package installs both only inside PySpark workers (see
+``hadoop_pcap_spark/__init__.py``); outside them nothing changes.
 """
 
 from __future__ import annotations
 
+import gc
 import os
 import sys
 import zipimport
@@ -55,7 +72,20 @@ def _invalidate_caches(self) -> None:
         _keys.pop(archive, None)
 
 
-def install() -> None:
+class _FreezingGC:
+    """The daemon's ``gc`` global: ``collect()`` is the full collection
+    followed by ``gc.freeze()``; every other attribute is ``gc``'s."""
+
+    def collect(self, *args, **kwargs):
+        found = gc.collect(*args, **kwargs)
+        gc.freeze()
+        return found
+
+    def __getattr__(self, name):
+        return getattr(gc, name)
+
+
+def _install_zip_invalidation() -> None:
     """Install the stat-keyed ``zipimporter.invalidate_caches``.
 
     Idempotent.  A no-op on Python >= 3.12, whose re-read is already
@@ -76,3 +106,25 @@ def install() -> None:
             pass
     _original = cls.invalidate_caches
     cls.invalidate_caches = _invalidate_caches
+
+
+def _install_gc_freeze() -> None:
+    """Rebind the PySpark daemon's ``gc`` global to :class:`_FreezingGC`.
+
+    Only when ``__main__`` is ``pyspark.daemon`` (a forked worker keeps
+    the daemon as ``__main__``) and its ``gc`` global is still the
+    ``gc`` module: a second call, another ``__main__`` or a daemon
+    whose loop no longer reads that global leave everything as is.
+    """
+    main = sys.modules.get("__main__")
+    spec = getattr(main, "__spec__", None)
+    if getattr(spec, "name", None) != "pyspark.daemon":
+        return
+    if getattr(main, "gc", None) is gc:
+        main.gc = _FreezingGC()
+
+
+def install() -> None:
+    """Install both worker fixes; idempotent."""
+    _install_zip_invalidation()
+    _install_gc_freeze()

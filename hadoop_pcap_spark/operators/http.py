@@ -52,6 +52,7 @@ from pyspark.sql import types as T
 
 __all__ = [
     "HTTP_OBJECT_SCHEMA",
+    "desynchronized",
     "http_objects",
     "parse_requests",
     "parse_responses",
@@ -113,22 +114,56 @@ _HEXDIG = re.compile(rb"[0-9A-Fa-f]+")
 _DIGITS = re.compile(r"[0-9]+")
 
 
+def _chunk_size(line: bytes) -> Optional[int]:
+    """A chunk-size line's size (extensions dropped), or None when it is
+    not ``1*HEXDIG`` (RFC 9112 §7.1 — a sign, ``0x`` or ``_`` is
+    desync)."""
+    tok = line.split(b";")[0].strip()
+    return int(tok, 16) if _HEXDIG.fullmatch(tok) else None
+
+
+def _content_length(value: str) -> Optional[int]:
+    """A Content-Length value (the first of a list), or None when it is
+    not ``1*DIGIT`` (RFC 9112 §8.6; anything else is desync)."""
+    value = value.split(",")[0].strip()
+    return int(value) if _DIGITS.fullmatch(value) else None
+
+
+def _request_line_ok(line: bytes) -> bool:
+    return line.startswith(_METHODS) and len(line.split(b" ")) >= 3
+
+
+def _status(line: bytes) -> Optional[int]:
+    """A status line's code, or None when the line is no HTTP/1.x
+    status line."""
+    if not line.startswith(b"HTTP/1."):
+        return None
+    try:
+        return int(line.split(b" ")[1])
+    except (IndexError, ValueError):
+        return None
+
+
+def _bodiless(status: int, method: Optional[str]) -> bool:
+    """A response that carries no body bytes on the wire whatever its
+    framing headers say (RFC 9112 §6.3)."""
+    return method == "HEAD" or status in _NO_BODY_STATUS or 100 <= status < 200
+
+
 def _read_chunked(stream: bytes, pos: int) -> Tuple[bytes, int, bool]:
     """Decode chunked transfer coding from ``pos``; returns (body,
     position after the terminating CRLF, complete?).  An incomplete
     tail (capture cut mid-chunk) or a chunk size that is not
-    ``1*HEXDIG`` (RFC 9112 §7.1 — a sign, ``0x`` or ``_`` is desync)
-    returns what decoded so far with complete=False."""
+    ``1*HEXDIG`` returns what decoded so far with complete=False."""
     out: List[bytes] = []
     n = len(stream)
     while True:
         eol = stream.find(b"\r\n", pos)
         if eol < 0:
             return b"".join(out), n, False
-        size_tok = stream[pos:eol].split(b";")[0].strip()  # drop extensions
-        if not _HEXDIG.fullmatch(size_tok):
+        size = _chunk_size(stream[pos:eol])
+        if size is None:
             return b"".join(out), n, False
-        size = int(size_tok, 16)
         pos = eol + 2
         if size == 0:
             # trailer section: zero or more header lines then CRLF
@@ -151,7 +186,7 @@ def _read_body(
 ) -> Tuple[bytes, int, bool]:
     """The body framed at ``pos`` → (body, position after it,
     complete?).  Chunked coding wins over Content-Length, which must be
-    ``1*DIGIT`` (RFC 9112 §8.6; anything else is desync: incomplete).
+    ``1*DIGIT`` (anything else is desync: incomplete).
     With neither, a response body (``to_close``) runs to stream end and
     is complete only ``at_end``; a request has none."""
     if "chunked" in hdrs.get("transfer-encoding", "").lower():
@@ -159,10 +194,10 @@ def _read_body(
     n = len(stream)
     cl = hdrs.get("content-length")
     if cl is not None:
-        cl = cl.split(",")[0].strip()
-        if not _DIGITS.fullmatch(cl):
+        cl = _content_length(cl)
+        if cl is None:
             return b"", n, False
-        end = pos + int(cl)
+        end = pos + cl
         return stream[pos:end], min(end, n), end <= n
     if to_close:
         return stream[pos:], n, at_end
@@ -205,9 +240,9 @@ def parse_requests(stream: bytes, at_end: bool = True) -> Tuple[List[dict], int]
         if block is None:
             return out, start_pos
         start, hdrs = _headers(block)
-        parts = start.split(b" ")
-        if len(parts) < 3 or not start.startswith(_METHODS):
+        if not _request_line_ok(start):
             return out, start_pos  # desynchronized: stop rather than emit garbage
+        parts = start.split(b" ")
         _body, pos, complete = _read_body(stream, pos, hdrs, False, at_end)
         if not (complete or at_end):
             return out, start_pos  # body incomplete: wait for more
@@ -252,16 +287,12 @@ def parse_responses(
         if block is None:
             return out, start_pos
         start, hdrs = _headers(block)
-        if not start.startswith(b"HTTP/1."):
+        status = _status(start)
+        if status is None:
             return out, start_pos  # desynchronized
-        parts = start.split(b" ")
-        try:
-            status = int(parts[1])
-        except (IndexError, ValueError):
-            return out, start_pos
         i = len(out)
         method = methods[i] if methods and i < len(methods) else None
-        if method == "HEAD" or status in _NO_BODY_STATUS or 100 <= status < 200:
+        if _bodiless(status, method):
             body, complete = b"", True
         else:
             body, pos, complete = _read_body(stream, pos, hdrs, True, at_end)
@@ -280,6 +311,49 @@ def parse_responses(
                 "truncated": not complete,
             }
         )
+
+
+def desynchronized(
+    residual: bytes, request: bool, method: Optional[str] = None
+) -> bool:
+    """Whether a live parse stopped at ``residual`` for good, not for
+    want of bytes.  ``residual`` is the stream from the ``consumed``
+    offset :func:`parse_requests` (``request=True``) or
+    :func:`parse_responses` returned with ``at_end=False``; ``method``
+    is the request the next response answers.  True when its first
+    line is complete but no HTTP start line, or its header block is
+    complete and frames the body with a chunk size or Content-Length
+    that is not plain digits: no later bytes can make it parse."""
+    eol = residual.find(b"\r\n")
+    if eol < 0:
+        return False
+    line = residual[:eol]
+    if request:
+        if not _request_line_ok(line):
+            return True
+    else:
+        status = _status(line)
+        if status is None:
+            return True
+        if _bodiless(status, method):
+            return False
+    block, pos = _split_head(residual, 0)
+    if block is None:
+        return False
+    _start, hdrs = _headers(block)
+    if "chunked" in hdrs.get("transfer-encoding", "").lower():
+        while True:
+            eol = residual.find(b"\r\n", pos)
+            if eol < 0:
+                return False
+            size = _chunk_size(residual[pos:eol])
+            if size is None:
+                return True
+            if size == 0:
+                return False
+            pos = eol + 2 + size + 2  # chunk data + its CRLF
+    cl = hdrs.get("content-length")
+    return cl is not None and _content_length(cl) is None
 
 
 def request_url(rq: dict, server: Optional[str], port: Optional[int]) -> str:

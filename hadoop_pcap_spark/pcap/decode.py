@@ -139,7 +139,9 @@ class DecodeOptions:
     strict_reference: bool = True  # preserve signed-proto quirk etc.
     mode: str = "FAILFAST"  # FAILFAST | PERMISSIVE (bad file → 0 rows)
     # Columns requested by the caller; None = all.  Lets the Spark source
-    # push column pruning into the decoder (skip md5/DNS/payload work).
+    # push column pruning into the decoder (skip md5/DNS/payload work and
+    # the ether_type/src/dst text; protocol is always rendered: the DNS
+    # pass reads it).
     wanted: Optional[set] = None
     # Emit the raw captured frame bytes + record orig_len (the write_pcap
     # round-trip columns).  Off by default: frame duplicates the whole
@@ -420,8 +422,10 @@ def _decode_l3_l4(packet: dict, data: bytes, ip_start: int, opts: DecodeOptions)
         packet["protocol"] = PROTOCOL_NAMES.get(raw_proto, str(display_id))
         src_b = data[ip_start + 12 : ip_start + 16]
         dst_b = data[ip_start + 16 : ip_start + 20]
-        packet["src"] = _ipv4_text(src_b)
-        packet["dst"] = _ipv4_text(dst_b)
+        if _want(opts, "src"):
+            packet["src"] = _ipv4_text(src_b)
+        if _want(opts, "dst"):
+            packet["dst"] = _ipv4_text(dst_b)
         l4_start = ip_start + ihl * 4
         if not opts.strict_reference:
             # v4 fragmentation (SURVEY §1.4): the reference ignores the
@@ -462,8 +466,10 @@ def _decode_l3_l4(packet: dict, data: bytes, ip_start: int, opts: DecodeOptions)
         packet["ttl"] = data[ip_start + 7]  # hop limit stored in ttl
         src_b = data[ip_start + 8 : ip_start + 24]
         dst_b = data[ip_start + 24 : ip_start + 40]
-        packet["src"] = _ipv6_text(src_b)
-        packet["dst"] = _ipv6_text(dst_b)
+        if _want(opts, "src"):
+            packet["src"] = _ipv6_text(src_b)
+        if _want(opts, "dst"):
+            packet["dst"] = _ipv6_text(dst_b)
         first_next = data[ip_start + 6]
         protocol_id, l4_start, ext_count, names, frag = _walk_ipv6_ext(
             data, ip_start, first_next, opts.strict_reference
@@ -681,6 +687,8 @@ def decode_pcap(
             )
         lt = per_links[pkt_no - 1] if per_links is not None else link_type
         ip_start = _ip_start(lt, packet, pkt_data, opts)
+        if not _want(opts, "ether_type"):
+            del packet["ether_type"]
         _decode_l3_l4(packet, pkt_data, ip_start, opts)
         if dns_mode:
             _decode_dns(packet, opts)

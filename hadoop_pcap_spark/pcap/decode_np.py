@@ -538,6 +538,9 @@ def decode_pcap_columnar(
 
     ip_rel = np.full(m, -1, dtype=np.int64)
     is_ip = np.zeros(m, dtype=bool)
+    # string columns a projected read did not select are never rendered
+    want_et = _want(opts, "ether_type")
+    want_src, want_dst = _want(opts, "src"), _want(opts, "dst")
     et_acc = np.empty(m, dtype=object)
     et_acc[:] = ""
 
@@ -555,13 +558,14 @@ def decode_pcap_columnar(
             # ether_type: '' when frame <14B; 'vlan' for tagged (strict
             # reads only offset 12); inner name in non-strict
             # [PcapReader.java:256-280]
-            shown = et_out if strict else et_in
-            shown = np.where(vlan_short, 0x8100, shown)
-            names = _take_names(
-                shown, has_eth, lambda c: ETHERTYPE_NAMES.get(c, "0x%04x" % c)
-            )
+            if want_et:
+                shown = et_out if strict else et_in
+                shown = np.where(vlan_short, 0x8100, shown)
+                names = _take_names(
+                    shown, has_eth, lambda c: ETHERTYPE_NAMES.get(c, "0x%04x" % c)
+                )
+                et_acc[has_eth] = names[has_eth]
             ip_rel[lmask] = np.where(vlan_ok, 18, 14)[lmask]
-            et_acc[has_eth] = names[has_eth]
             is_ip |= (
                 has_eth & ~vlan_short & ((et_in == 0x0800) | (et_in == 0x86DD))
             )
@@ -576,12 +580,13 @@ def decode_pcap_columnar(
             vlan_ok = vlan & (caplen >= 20)
             vlan_short = vlan & ~vlan_ok
             proto_in = np.where(vlan_ok, _be16(u, pkt + 18, vlan_ok), proto_out)
-            shown = np.where(vlan_short, 0x8100, proto_in)
-            names = _take_names(
-                shown, has_sll, lambda c: ETHERTYPE_NAMES.get(c, "0x%04x" % c)
-            )
+            if want_et:
+                shown = np.where(vlan_short, 0x8100, proto_in)
+                names = _take_names(
+                    shown, has_sll, lambda c: ETHERTYPE_NAMES.get(c, "0x%04x" % c)
+                )
+                et_acc[has_sll] = names[has_sll]
             ip_rel[lmask] = np.where(vlan_ok, 20, 16)[lmask]
-            et_acc[has_sll] = names[has_sll]
             is_ip |= (
                 has_sll
                 & ~vlan_short
@@ -593,7 +598,8 @@ def decode_pcap_columnar(
         # unknown link (reachable only via a mixed capture): row keeps
         # ts/size with ether_type '' — ip_rel stays -1, is_ip False,
         # matching the scalar kernel's _ip_start fall-through
-    res.overlay("ether_type", et_acc)
+    if want_et:
+        res.overlay("ether_type", et_acc)
 
     # _decode_l3_l4 guard: ip_start within the packet bytes
     l3 = is_ip & (ip_rel < caplen)
@@ -624,14 +630,11 @@ def decode_pcap_columnar(
             ),
         )
         res.overlay("protocol", pn)
-        res.overlay(
-            "src",
-            _ip_strings(u, ip + 12, v4, 4, lambda b: "%d.%d.%d.%d" % (b[0], b[1], b[2], b[3])),
-        )
-        res.overlay(
-            "dst",
-            _ip_strings(u, ip + 16, v4, 4, lambda b: "%d.%d.%d.%d" % (b[0], b[1], b[2], b[3])),
-        )
+        v4_text = lambda b: "%d.%d.%d.%d" % (b[0], b[1], b[2], b[3])  # noqa: E731
+        if want_src:
+            res.overlay("src", _ip_strings(u, ip + 12, v4, 4, v4_text))
+        if want_dst:
+            res.overlay("dst", _ip_strings(u, ip + 16, v4, 4, v4_text))
         proto_id = np.where(v4, raw, proto_id)
         l4_rel = np.where(v4, ip_rel + ihl * 4, l4_rel)
         has_l4 = has_l4 | v4
@@ -670,8 +673,11 @@ def decode_pcap_columnar(
 
         res.set_num("payload_len", v6, _be16(u, ip + 4, v6)[v6])
         res.set_num("ttl", v6, _byte(u, ip + 7, v6)[v6])
-        res.overlay("src", _ip_strings(u, ip + 8, v6, 16, lambda b: str(_ipa.IPv6Address(b))))
-        res.overlay("dst", _ip_strings(u, ip + 24, v6, 16, lambda b: str(_ipa.IPv6Address(b))))
+        v6_text = lambda b: str(_ipa.IPv6Address(b))  # noqa: E731
+        if want_src:
+            res.overlay("src", _ip_strings(u, ip + 8, v6, 16, v6_text))
+        if want_dst:
+            res.overlay("dst", _ip_strings(u, ip + 24, v6, 16, v6_text))
         first_next = _byte(u, ip + 6, v6)
         needs_walk = v6 & (
             np.isin(first_next, list(IPV6_EXT_NAMES)) | (first_next == IPV6_NO_NEXT_HEADER)

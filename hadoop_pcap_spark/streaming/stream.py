@@ -338,7 +338,11 @@ def streaming_http_objects(
     (:func:`..operators.http.parse_responses` with ``at_end=False``)
     stops at its start.
     Hot-flow guard: a residual beyond ``max_flow_bytes`` resets that
-    direction (dropping buffered bytes) rather than growing state.
+    direction (dropping buffered bytes) rather than growing state.  So
+    does a direction that desynchronizes (a start line that is not
+    HTTP, a chunk size or Content-Length that is not plain digits:
+    :func:`..operators.http.desynchronized`), which no later bytes
+    could make parse; the objects it completed before stay emitted.
 
     Input: a streaming packet DataFrame with at least
     src/dst/src_port/dst_port/protocol/ts/pkt_no/payload; ``ts_usec``,
@@ -355,6 +359,7 @@ def streaming_http_objects(
 
     from ..operators.http import (
         classify_stream,
+        desynchronized,
         object_fields,
         parse_requests,
         parse_responses,
@@ -393,6 +398,8 @@ def streaming_http_objects(
                 # FIFO request/response pairing permanently
                 reqs, used = parse_requests(req_res, at_end=False)
                 req_res = req_res[used:]
+                if desynchronized(req_res, request=True):
+                    req_res = b""  # desync guard: reset, resync later
                 pending.extend(
                     {"method": rq["method"], "url": request_url(rq, server, sport)}
                     for rq in reqs
@@ -412,6 +419,11 @@ def streaming_http_objects(
                         **object_fields(n_objs, rq["method"], rq["url"], rs),
                     }
                 )
+            if desynchronized(
+                resp_res, request=False,
+                method=pending[0]["method"] if pending else None,
+            ):
+                resp_res = b""
             if client_is_a == 1:
                 a_res, b_res = req_res, resp_res
             else:

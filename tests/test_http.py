@@ -19,6 +19,7 @@ from hypothesis import given, settings, strategies as st
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hadoop_pcap_spark.operators.http import (
+    desynchronized,
     http_objects,
     parse_requests,
     parse_responses,
@@ -131,6 +132,10 @@ def test_framing_numbers_must_be_plain_digits(framing):
         assert rq["target"] == "/u" and used == len(req)
         assert parse_responses(resp, at_end=False) == ([], 0)
         assert parse_requests(req, at_end=False) == ([], 0)
+        # ... and that is desync, not a message waiting for bytes
+        assert desynchronized(resp, request=False)
+        assert desynchronized(req, request=True)
+        assert not desynchronized(resp, request=False, method="HEAD")
     finally:
         signal.alarm(0)
         signal.signal(signal.SIGALRM, old)
@@ -238,6 +243,57 @@ def test_split_anywhere_emits_what_the_whole_stream_does(data):
         close_last = fn is parse_responses and exs[-1][3]
         assert live == (whole[:-1] if close_last else whole)
         assert live + flushed == whole
+
+
+def test_desynchronized_tells_desync_from_incomplete():
+    """The live parsers return ``([], 0)`` both for a message still
+    waiting for bytes and for a stream no bytes can resynchronize;
+    :func:`desynchronized` tells the two apart."""
+    for junk in (b"garbage bytes not http\r\n", b"SSH-2.0-x\r\nmore",
+                 b"\r\nGET / HTTP/1.1\r\n\r\n", b"GET /\r\n"):
+        assert parse_requests(junk, at_end=False) == ([], 0)
+        assert desynchronized(junk, request=True), junk
+    for junk in (b"SMTP 220 hi\r\n", b"HTTP/1.1 abc OK\r\n", b"\x16\x03\x01\r\n"):
+        assert desynchronized(junk, request=False), junk
+    for waiting in (b"", b"GET /ind", b"GET /index HTTP/1.1\r\nHo",
+                    b"POST / HTTP/1.1\r\nContent-Length: 9\r\n\r\nabc",
+                    b"POST / HTTP/1.1\r\nTransfer-Encoding: chunked\r\n\r\n5\r\nab"):
+        assert parse_requests(waiting, at_end=False) == ([], 0)
+        assert not desynchronized(waiting, request=True), waiting
+    for waiting in (b"HTTP/1.", b"HTTP/1.1 200 OK\r\nContent-Le",
+                    b"HTTP/1.1 200 OK\r\nContent-Length: 9\r\n\r\nabc",
+                    b"HTTP/1.1 200 OK\r\n\r\nclose-delimited body",
+                    b"HTTP/1.1 200 OK\r\nTransfer-Encoding: chunked\r\n\r\n"
+                    b"3\r\nabc\r\n4\r\nab"):
+        assert parse_responses(waiting, at_end=False) == ([], 0)
+        assert not desynchronized(waiting, request=False), waiting
+    # a later chunk size is checked too; a bodiless response frames nothing
+    bad_later = (b"HTTP/1.1 200 OK\r\nTransfer-Encoding: chunked\r\n\r\n"
+                 b"3\r\nabc\r\n-1\r\n")
+    assert desynchronized(bad_later, request=False)
+    assert not desynchronized(bad_later, request=False, method="HEAD")
+    assert not desynchronized(
+        b"HTTP/1.1 304 Not Modified\r\nContent-Length: x\r\n\r\n", request=False
+    )
+
+
+@settings(max_examples=200, deadline=None)
+@given(data=st.data())
+def test_a_cut_valid_stream_is_never_desynchronized(data):
+    """Wherever a valid pipelined stream is cut, what a live parse
+    leaves over is waiting for bytes, never desync."""
+    n = data.draw(st.integers(1, 3))
+    exs = [data.draw(_exchange(last=(i == n - 1))) for i in range(n)]
+    methods = [e[2] for e in exs]
+    req_stream = b"".join(e[0] for e in exs)
+    resp_stream = b"".join(e[1] for e in exs)
+    cut = data.draw(st.integers(0, len(req_stream)))
+    _, used = parse_requests(req_stream[:cut], at_end=False)
+    assert not desynchronized(req_stream[used:cut], request=True)
+    cut = data.draw(st.integers(0, len(resp_stream)))
+    rs, used = parse_responses(resp_stream[:cut], methods=methods, at_end=False)
+    nxt = methods[len(rs)] if len(rs) < n else None
+    assert not desynchronized(resp_stream[used:cut], request=False, method=nxt)
 
 
 # --- end-to-end golden over the synthesized capture ---------------------------

@@ -499,3 +499,81 @@ def test_sources_never_reach_scalar_kernel():
             if "decode_pcap" in names:
                 offenders.append(f"{mod.name}:{node.lineno}")
     assert offenders == []
+
+
+def _v6_vlan_pcap() -> bytes:
+    """Tagged and untagged IPv4/IPv6, an IPv6 extension chain, ARP and a
+    runt frame: every branch that renders ether_type or address text."""
+    recs = []
+    for i in range(24):
+        vlan = 10 + i if i % 3 == 0 else None
+        if i % 4 == 0:
+            pkt = S.ethernet(S.ipv6(S.udp(b"v6" * i, 5000 + i, 53), 17,
+                                    "2001:db8::%x" % i, "fe80::1"),
+                             ethertype=0x86DD, vlan=vlan)
+        elif i % 4 == 1:
+            pkt = S.ethernet(S.ipv6(S.tcp(b"x" * i, 443, 40000 + i), 6,
+                                    "::1", "2001:db8::99",
+                                    ext_headers=[(44, S.fragment_ext())]),
+                             ethertype=0x86DD, vlan=vlan)
+        elif i % 4 == 2:
+            pkt = S.ethernet(S.ipv4(S.tcp(b"y" * i, 80, 30000 + i), 6,
+                                    "10.0.0.%d" % i, "10.0.1.1"), vlan=vlan)
+        else:
+            pkt = S.ethernet(b"\x00" * 28, ethertype=0x0806, vlan=vlan)
+        recs.append(S.record(1500000000 + i, pkt, ts_usec=i))
+    recs.append(S.record(1500000100, b"\x02\x00\x00"))
+    return S.global_header() + b"".join(recs)
+
+
+@pytest.mark.parametrize("strict", [True, False])
+@pytest.mark.parametrize(
+    "decoder,columns",
+    [
+        ("ip", ["protocol", "dst_port", "size"]),
+        ("dns", ["dns_qname"]),
+        ("ip", ["md5"]),
+        ("ip", ["src", "dst"]),
+        ("ip", ["ether_type", "ts"]),
+        ("ip", ["dst", "payload"]),
+        ("dns", ["src", "protocol", "dns_qname", "dns_answer"]),
+    ],
+)
+def test_projected_decode_equals_unprojected_columns(decoder, columns, strict):
+    """A ``columns=`` read skips rendering what it did not select, and
+    every column it did select equals that column of the full read."""
+    import pyarrow as pa
+
+    from hadoop_pcap_spark.sources.pcap_source import (
+        _decode_plan,
+        decode_files_to_arrow_columnar,
+    )
+
+    files = [
+        ("dns.pcap", S.dns_exchange_pcap()),
+        ("dns_tcp.pcap", S.dns_tcp_exchange_pcap()),
+        ("http.pcap", S.http_exchange_pcap()),
+        ("analytics.pcap", S.analytics_pcap()),
+        ("v4frag.pcap", S.v4frag_pcap()),
+        ("v6_vlan.pcap", _v6_vlan_pcap()),
+    ]
+    if not strict:
+        files.append(("sll.pcap", S.sll_pcap()))  # strict rejects link 113
+    if os.path.exists(REF_FIXTURE):
+        with open(REF_FIXTURE, "rb") as f:
+            files.append(("ref.pcap", f.read()))
+
+    def read(cols):
+        schema, opts = _decode_plan(
+            decoder, cols, keep_frame=False, calculate_md5="md5" in columns,
+            keep_payload=True, strict_reference=strict, mode="FAILFAST",
+        )
+        return pa.Table.from_batches(
+            list(decode_files_to_arrow_columnar(files, schema, opts))
+        )
+
+    full = read(None)
+    projected = read(columns)
+    assert sorted(projected.column_names) == sorted(columns)
+    assert full.num_rows > 100
+    assert projected.equals(full.select(projected.column_names))

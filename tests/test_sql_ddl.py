@@ -67,6 +67,7 @@ def test_create_table_using_pcap_ddl(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS _ddl_pcaps_smoke")
 
 
+@pytest.mark.skipif(not os.path.exists(REF_PCAP), reason="reference fixture absent")
 def test_ddl_options_bridge_end_to_end(spark):
     """VERDICT r12 item 8: with session defaults set, CREATE TABLE …
     USING pcap + plain SELECT works end to end — decoder option
@@ -118,6 +119,7 @@ def test_ddl_options_bridge_end_to_end(spark):
         assert _ddl_default_options() == {}
 
 
+@pytest.mark.skipif(not os.path.exists(REF_PCAP), reason="reference fixture absent")
 def test_register_packets_view_sql_front_door(spark):
     """The supported SQL workflow end-to-end on the reference's own
     capture: view registration + plain SQL, matching the serde-table

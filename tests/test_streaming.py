@@ -1648,3 +1648,108 @@ def test_l7_checkpoint_from_four_column_key_refuses_to_resume(spark, tmp_path):
         f for f in _os.listdir(_os.path.join(ckpt, "commits"))
         if not f.startswith(".")
     ) == ["0"]
+
+
+def test_streaming_http_objects_drops_a_desynchronized_direction(spark, tmp_path):
+    """A response direction that desynchronizes in batch 1 (a start line
+    that is not HTTP; a chunk size that is not hex) and keeps sending in
+    batches 2-3 is dropped from state like the hot-flow guard, instead
+    of being carried and re-parsed every micro-batch: after each batch
+    the state holds at most that batch's bytes of it.  The objects it
+    completed before the desync equal batch ``http_objects``, and the
+    other connections' rows are unchanged."""
+    import os as _os
+
+    from hadoop_pcap_spark.operators.http import http_objects
+    from hadoop_pcap_spark.pcap import synth as S
+    from hadoop_pcap_spark.sources import read_pcap, read_pcap_stream
+    from hadoop_pcap_spark.streaming.stream import streaming_http_objects
+
+    def req(path):
+        return f"GET {path} HTTP/1.1\r\nHost: d.example\r\n\r\n".encode()
+
+    def resp(body):
+        return (b"HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n"
+                b"Content-Length: %d\r\n\r\n%s" % (len(body), body))
+
+    # (client, server) -> per batch (request bytes, response bytes)
+    desync = {
+        ("10.9.0.1", "10.9.0.2"): [
+            (req("/a") + req("/b"), resp(b"one") + b"SSH-2.0-junk\r\n" + b"x" * 40),
+            (req("/c"), b"more junk\r\n" * 20),
+            (b"", b"tail junk\r\n" * 30),
+        ],
+        ("10.9.0.3", "10.9.0.4"): [
+            (req("/a") + req("/b"), resp(b"two") + b"HTTP/1.1 200 OK\r\n"
+             b"Transfer-Encoding: chunked\r\n\r\n-5\r\nhello\r\n"),
+            (b"", b"0\r\n\r\n" + b"y" * 300),
+            (b"", b"z" * 500),
+        ],
+    }
+    d = tmp_path / "rot"
+    d.mkdir()
+    for fi, blob in enumerate(S.http_rotated_pcaps(3)):
+        recs = []
+        for ci, ((cli, srv), batches) in enumerate(desync.items()):
+            q, r = batches[fi]
+            for k, (payload, src, dst, sp, dp) in enumerate(
+                [(q, cli, srv, 41000 + ci, 80), (r, srv, cli, 80, 41000 + ci)]
+            ):
+                if payload:
+                    frame = S.ethernet(S.ipv4(S.tcp(payload, sp, dp), 6, src, dst))
+                    recs.append(S.record(1700000000 + fi * 10 + k, frame))
+        p = d / f"rot{fi}.pcap"
+        p.write_bytes(blob + b"".join(recs))
+        t = 1700000000 + fi * 10
+        _os.utime(p, (t, t))
+    cols = ["file", "src", "dst", "src_port", "dst_port", "protocol", "ts",
+            "pkt_no", "payload"]
+    pkts = read_pcap_stream(
+        spark, str(d), strict_reference=False, max_files_per_trigger=1,
+        columns=cols,
+    )
+    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    q = (
+        streaming_http_objects(pkts)
+        .writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+    for batch_id in range(3):
+        state = spark.read.format("statestore").option("batchId", batch_id).load(ckpt)
+        # a-side ip -> (a residual, b residual)
+        resid = {
+            r.key.conn.split("|")[0]: (r.value.groupState.a_resid,
+                                       r.value.groupState.b_resid)
+            for r in state.collect()
+        }
+        for (cli, srv), batches in desync.items():
+            resp_res = resid[cli][1] if cli in resid else resid[srv][0]
+            assert len(resp_res or b"") <= len(batches[batch_id][1]), (cli, batch_id)
+
+    rows = spark.read.parquet(sink).collect()
+    ours = {c for c, _ in desync}
+    fields = ["client", "server", "server_port", "obj_no", "method", "url",
+              "status", "content_type", "content_encoding", "chunked",
+              "body_len", "body"]
+    live = sorted(tuple(r[f] for f in fields) for r in rows if r.client in ours)
+    whole = http_objects(read_pcap(spark, str(d), strict_reference=False, columns=cols))
+    batch = [r for r in whole.collect() if r.client in ours]
+    assert sorted(r.client for r in batch if r.body_truncated) == ["10.9.0.3"]
+    assert live == sorted(
+        tuple(r[f] for f in fields) for r in batch if not r.body_truncated
+    )
+    assert [r[3] for r in live] == [1, 1]
+    truth = S.http_streaming_truth()
+    others = [r for r in rows if r.client not in ours]
+    assert len(others) == len(truth)
+    got = {(r.client, r.server_port, r.obj_no): r for r in others}
+    for t in truth:
+        r = got[(t["client"], t["server_port"], t["obj_no"])]
+        assert (r.method, r.url, r.status, r.body_len) == (
+            t["method"], t["url"], t["status"], t["body_len"]), t
