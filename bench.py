@@ -531,8 +531,11 @@ def main():
         )
 
     # Serial reference for the single-giant-file row: the same file
-    # through the same kernel and aggregation but WITHOUT the split
-    # index — one task, the reference's whole-file constraint.
+    # through the same kernel and aggregation but WITHOUT splits — one
+    # task, the reference's whole-file constraint.  read_pcap splits a
+    # capture larger than chunk_bytes whose index is published (the
+    # parallel row just published it), so the serial read passes a
+    # chunk_bytes no smaller than the capture: one whole-file task.
     # Min-of-2 (r13): the parallel row is a warm min-of-3, and a
     # single cold serial run mixes page-cache state into the ratio
     # (observed 2.9 s vs 6.9 s for identical work across bench runs);
@@ -543,13 +546,18 @@ def main():
     from hadoop_pcap_spark.plans.pcap_queries import giant_dir
     from hadoop_pcap_spark.sources import read_pcap as _read_pcap
 
+    giant_bytes = max(
+        os.path.getsize(os.path.join(root, f))
+        for root, _dirs, files in os.walk(giant_dir())
+        for f in files
+    )
     serial_wall = serial_cpu = None
     for _ in range(2):
         t0 = time.time()
         c0 = proc_tree_cpu()
         (
             _read_pcap(
-                spark, giant_dir(),
+                spark, giant_dir(), chunk_bytes=giant_bytes,
                 columns=["file", "pkt_no", "protocol", "src", "len"],
             )
             .groupBy("protocol")

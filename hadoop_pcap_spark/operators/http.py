@@ -421,6 +421,20 @@ def classify_stream(stream: bytes) -> Optional[str]:
     return None
 
 
+def never_http(stream: bytes) -> bool:
+    """True once a directional stream can no longer open as HTTP/1.x:
+    it is non-empty and neither begins with an HTTP method token or
+    ``HTTP/1.`` nor is a proper prefix of one (``GE`` and ``HTTP/``
+    may still grow into one).  :func:`http_objects` emits a
+    connection's rows only when one direction classifies as ``"req"``
+    and the other as ``"resp"``, so a connection with such a direction
+    yields no rows, whatever bytes follow."""
+    return bool(stream) and not any(
+        stream.startswith(t) or t.startswith(stream)
+        for t in _METHODS + (b"HTTP/1.",)
+    )
+
+
 def http_objects(
     packets: DataFrame,
     flow_filter=None,

@@ -15,6 +15,9 @@ reference's physical property for Spark tasks:
   whole records), so the existing scalar and columnar kernels decode
   each chunk unchanged.  Peak memory is ``chunk_bytes`` + the largest
   single record, independent of file size.
+* the split index (:func:`index_capture_splits`) — the same walk's
+  chunk offsets, published by a whole-file decode as a by-product —
+  and :func:`plan_splits`, the one planner of every pcap read.
 
 Record alignment: within a chunk the framing walk
 (ts_sec,ts_usec,incl_len,orig_len @ incl_len-sized hops) finds the
@@ -47,11 +50,9 @@ RECORD_HEADER_SIZE = 16
 DEFAULT_CHUNK_BYTES = 64 << 20  # 64 MiB: ~0.1 s of decode per chunk,
 # small enough that 32 concurrent tasks stay ≪ executor memory
 
-# first 4 file bytes read as a little-endian u32
-_MAGIC_LE_US = 0xA1B2C3D4
-_MAGIC_LE_NS = 0xA1B23C4D
-_MAGIC_BE_US = 0xD4C3B2A1
-_MAGIC_BE_NS = 0x4D3CB2A1
+# classic magic (first 4 file bytes read as a little-endian u32: LE µs,
+# LE ns, BE µs, BE ns) -> byte order of its record headers' incl_len
+_FRAMING = {0xA1B2C3D4: "<I", 0xA1B23C4D: "<I", 0xD4C3B2A1: ">I", 0x4D3CB2A1: ">I"}
 
 
 # URI schemes routed through pyarrow.fs (when importable).  Hadoop-ish
@@ -137,8 +138,7 @@ def open_decompressed(path: str) -> BinaryIO:
     # a recognizable capture magic wins over a misleading extension
     # (a raw pcap named *.gz must not be fed to GzipFile)
     if len(magic) >= 4:
-        m = int.from_bytes(magic[:4], "little")
-        if m in (_MAGIC_LE_US, _MAGIC_LE_NS, _MAGIC_BE_US, _MAGIC_BE_NS) or magic[
+        if int.from_bytes(magic[:4], "little") in _FRAMING or magic[
             :4
         ] == b"\x0a\x0d\x0d\x0a":
             return raw
@@ -173,6 +173,59 @@ def open_decompressed(path: str) -> BinaryIO:
     return raw
 
 
+def _walk_chunks(stream: BinaryIO, chunk_bytes: int) -> Iterator[tuple]:
+    """The one framing walk, behind chunked decode and the split index:
+    reads ``chunk_bytes`` at a time and yields ``(offset, chunk,
+    first_pkt)`` — the global header plus the complete records from
+    file offset ``offset``, the first numbered ``first_pkt`` — and
+    last the bytes after the last complete record (a truncated record,
+    or nothing when no chunk came before).
+
+    ``offset`` None marks a stream that cannot be split: one the walk
+    cannot frame (``chunk_bytes <= 0``, pcapng, a foreign or short
+    header) comes whole as ``(None, stream, None)``; the first
+    ``incl_len`` past the sanity bound (a corrupt 0xFFFFFFFF) yields
+    ``(None, None, None)`` before the walk reads on, so an indexer
+    stops there while a decoder keeps the serial semantics."""
+    if chunk_bytes <= 0:
+        yield None, stream.read(), None
+        return
+    header = stream.read(GLOBAL_HEADER_SIZE)
+    fmt = _FRAMING.get(int.from_bytes(header[:4], "little"))
+    if fmt is None or len(header) < GLOBAL_HEADER_SIZE:
+        # kernel decides: empty -> 0 rows, short -> error, pcapng ->
+        # normalized, junk -> error
+        yield None, header + stream.read(), None
+        return
+    unpack_u32 = struct.Struct(fmt).unpack_from
+    max_incl = max(chunk_bytes, 1 << 26)
+    buf = bytearray()
+    offset, pkt, framed = GLOBAL_HEADER_SIZE, 1, True
+    while True:
+        data = stream.read(chunk_bytes)
+        if not data:
+            break
+        buf += data
+        pos, n, first = 0, len(buf), pkt
+        while pos + RECORD_HEADER_SIZE <= n:
+            incl = unpack_u32(buf, pos + 8)[0]
+            if framed and incl > max_incl:
+                framed = False
+                yield None, None, None
+            nxt = pos + RECORD_HEADER_SIZE + incl
+            if nxt > n:
+                break
+            pos = nxt
+            pkt += 1
+        if pos:
+            # single-copy assembly (header + aligned records)
+            yield offset, b"".join((header, memoryview(buf)[:pos])), first
+            del buf[:pos]
+            offset += pos
+    if buf or offset == GLOBAL_HEADER_SIZE:
+        yield offset, b"".join((header, buf)), pkt
+
+
 def iter_capture_chunks(
     stream: BinaryIO,
     name: str = "",
@@ -184,54 +237,13 @@ def iter_capture_chunks(
     header, so the per-file decode kernels accept it verbatim; callers
     stitch ``pkt_no`` continuity (consecutive chunks of the same file
     continue the ordinal).  Non-classic input (pcapng, junk, short
-    header) is yielded as ONE whole-stream chunk so error/normalize
-    semantics stay byte-identical with the whole-file path.
+    header) and ``chunk_bytes <= 0`` yield ONE whole-stream chunk so
+    error/normalize semantics stay byte-identical with the whole-file
+    path.
     """
-    if chunk_bytes <= 0:
-        # "no chunking": the whole stream as one self-contained blob
-        # (the documented chunk_bytes=0 escape hatch — previously a
-        # read(0) loop here silently yielded only the global header)
-        yield stream.read()
-        return
-    header = stream.read(GLOBAL_HEADER_SIZE)
-    if len(header) < GLOBAL_HEADER_SIZE:
-        yield header  # kernel decides: empty→0 rows, short→error
-        return
-    magic = int.from_bytes(header[:4], "little")
-    if magic in (_MAGIC_LE_US, _MAGIC_LE_NS):
-        fmt = "<I"
-    elif magic in (_MAGIC_BE_US, _MAGIC_BE_NS):
-        fmt = ">I"
-    else:
-        # pcapng / unknown: stateful or unframeable — whole stream
-        yield header + stream.read()
-        return
-
-    unpack_u32 = struct.Struct(fmt).unpack_from
-    buf = bytearray()
-    yielded = False
-    while True:
-        chunk = stream.read(chunk_bytes)
-        if not chunk:
-            break
-        buf += chunk
-        # last complete-record boundary in buf
-        pos = 0
-        n = len(buf)
-        while pos + RECORD_HEADER_SIZE <= n:
-            nxt = pos + RECORD_HEADER_SIZE + unpack_u32(buf, pos + 8)[0]
-            if nxt > n:
-                break
-            pos = nxt
-        if pos:
-            # single-copy assembly (header + aligned records)
-            yield b"".join((header, memoryview(buf)[:pos]))
-            yielded = True
-            del buf[:pos]
-    if buf or not yielded:
-        # tail: a trailing partial record (→ ts-only row), or an
-        # empty/record-less file that still must reach the kernel once
-        yield b"".join((header, buf))
+    for _offset, chunk, _first in _walk_chunks(stream, chunk_bytes):
+        if chunk is not None:
+            yield chunk
 
 
 def index_capture_splits(
@@ -243,16 +255,15 @@ def index_capture_splits(
     ``global_header + file[offset : offset+n_bytes]`` reproduces
     exactly records ``first_pkt_no..`` of the serial decode.
 
-    This is the index pass that breaks the reference's whole-file
+    This is the index that breaks the reference's whole-file
     constraint (io/PcapInputFormat.java:72-75 `isSplitable` → false —
     inherited by S2): pcap framing is a byte-chain (each record header
     states its own length, PcapReader.java:167-181), so SPLITTING
-    requires one sequential walk — but the walk reads only framing,
-    no decode, so it runs at I/O speed; the expensive decode then
-    parallelizes across the emitted splits (sources/pcap_source.py
-    ``split_single_files``).  Returns None when the input cannot be
-    range-split (compressed stream, pcapng, short/foreign header) —
-    callers fall back to the serial whole-file path.
+    requires one sequential walk — the one the chunked decode runs
+    (:func:`_walk_chunks`), which is why a whole-file decode publishes
+    this index as a by-product.  Returns None when the input cannot
+    be range-split (compressed stream, pcapng, short/foreign header,
+    an ``incl_len`` past the sanity bound).
 
     The truncated tail, if any, rides in the LAST split so the
     ts-only-row semantics (PcapReader.java:177-180, D3) land exactly
@@ -262,55 +273,11 @@ def index_capture_splits(
     except OSError:
         return None
     with raw:
-        header = raw.read(GLOBAL_HEADER_SIZE)
-        if len(header) < GLOBAL_HEADER_SIZE:
-            return None
-        magic = int.from_bytes(header[:4], "little")
-        if magic in (_MAGIC_LE_US, _MAGIC_LE_NS):
-            fmt = "<I"
-        elif magic in (_MAGIC_BE_US, _MAGIC_BE_NS):
-            fmt = ">I"
-        else:
-            return None  # compressed / pcapng / junk → serial path
-        unpack_u32 = struct.Struct(fmt).unpack_from
-        # Sanity bound on incl_len: a corrupt record header (e.g.
-        # 0xFFFFFFFF) must not make the walk buffer the rest of the
-        # file in memory and emit it as one giant split — beyond any
-        # plausible snaplen we bail to the serial streamed path, which
-        # handles the corrupt tail with bounded memory.
-        max_incl = max(split_bytes, 1 << 26)
         splits = []
-        buf = bytearray()
-        buf_base = GLOBAL_HEADER_SIZE  # file offset of buf[0]
-        split_off, first_pkt, pkt = GLOBAL_HEADER_SIZE, 1, 1
-        while True:
-            chunk = raw.read(DEFAULT_CHUNK_BYTES)
-            if not chunk:
-                break
-            buf += chunk
-            pos, n = 0, len(buf)
-            while pos + RECORD_HEADER_SIZE <= n:
-                incl = unpack_u32(buf, pos + 8)[0]
-                if incl > max_incl:
-                    return None
-                nxt = pos + RECORD_HEADER_SIZE + incl
-                if nxt > n:
-                    break
-                pos = nxt
-                pkt += 1
-                cur_off = buf_base + pos
-                if cur_off - split_off >= split_bytes:
-                    splits.append((split_off, cur_off - split_off, first_pkt))
-                    split_off, first_pkt = cur_off, pkt
-            del buf[:pos]
-            buf_base += pos
-        # tail: trailing complete records below split_bytes and/or a
-        # truncated final record (→ ts-only row in the last split);
-        # an empty/record-less file still needs one (possibly 0-byte)
-        # split so the kernel sees it exactly once
-        rem = (buf_base + len(buf)) - split_off
-        if rem > 0 or not splits:
-            splits.append((split_off, rem, first_pkt))
+        for offset, chunk, first_pkt in _walk_chunks(raw, split_bytes):
+            if offset is None:
+                return None
+            splits.append((offset, len(chunk) - GLOBAL_HEADER_SIZE, first_pkt))
         return splits
 
 
@@ -345,20 +312,56 @@ def _read_index(d: str, ident: str) -> tuple:
     return True, None if splits is None else [tuple(s) for s in splits]
 
 
+def _publish_index(path: str, ident: str, splits: "list | None") -> None:
+    """Publish ``splits`` (None: the unsplittable marker) under
+    ``ident``, taken before the walk, so a capture rewritten during it
+    is published under an identity it no longer has.  One atomic
+    replace in the staging tmp area (staging.py), not next to the
+    capture.  Splits must cover the raw file from a classic magic to
+    the identity's size: a compressed capture's walk counts
+    decompressed offsets, so it gets the marker.  Best effort."""
+    import json
+    import tempfile
+
+    from ..staging import keyed_tmp_dir
+
+    if splits is not None:
+        try:
+            with open_raw(path) as raw:
+                magic = int.from_bytes(raw.read(4), "little")
+        except OSError:
+            return
+        if magic not in _FRAMING:
+            splits = None
+        elif splits[-1][0] + splits[-1][1] != int(ident.rsplit("|", 3)[1]):
+            return
+    d = keyed_tmp_dir(_INDEX_PREFIX, ident)
+    tmp = None
+    try:
+        os.makedirs(d, exist_ok=True)
+        fd, tmp = tempfile.mkstemp(dir=d, suffix=".json")
+        with os.fdopen(fd, "w") as f:
+            json.dump({"ident": ident, "splits": splits}, f)
+        os.replace(tmp, os.path.join(d, "splits.json"))
+    except OSError:
+        if tmp is not None and os.path.exists(tmp):
+            os.unlink(tmp)
+
+
 def lookup_capture_splits(
     path: str, split_bytes: int = DEFAULT_CHUNK_BYTES
 ) -> tuple:
-    """Walk-free probe of :func:`index_capture_splits_cached`'s cache:
-    ``(True, splits)`` when an index for this exact file identity is
-    published (``splits`` is None for a file cached as unsplittable),
-    ``(False, None)`` on a miss or for a file that cannot be stat'd.
+    """Walk-free probe of the split-index cache: ``(True, splits)`` when
+    an index for this exact file identity is published (``splits`` is
+    None for a file cached as unsplittable), ``(False, None)`` on a
+    miss or for a file that cannot be stat'd.
 
     One ``os.stat`` and one small JSON read: no framing walk, no
     ``makedirs``, no sibling sweep — cheap enough to run on the
-    driver for every listed file while planning a query.  The only
-    write is a best-effort mtime touch of a hit's dir, the staging
-    protocol's reader keep-alive, so an index that queries keep
-    hitting is not reclaimed as idle."""
+    driver for every large listed file while planning a query.  The
+    only write is a best-effort mtime touch of a hit's dir, the
+    staging protocol's reader keep-alive, so an index that queries
+    keep hitting is not reclaimed as idle."""
     from ..staging import keyed_tmp_path
 
     ident = _index_ident(path, split_bytes)
@@ -377,44 +380,51 @@ def lookup_capture_splits(
 def index_capture_splits_cached(
     path: str, split_bytes: int = DEFAULT_CHUNK_BYTES
 ) -> "list | None":
-    """:func:`index_capture_splits` behind a sidecar cache keyed by the
-    file's identity (path + size + mtime_ns + split_bytes).
-
-    The framing walk is the one inherently SEQUENTIAL part of split-
-    parallel decode (the record chain must be followed from byte 24 —
-    same property the reference's isSplitable=false encodes); a real
-    deployment therefore indexes each capture ONCE at ingest and every
-    subsequent query decodes fully parallel — exactly how parquet
-    amortizes footer metadata.  The cache lives in the shared staging
-    tmp area (guarded idle sweep, atomic publish — staging.py), NOT
-    next to the source file, so read-only capture dirs work.  A file
-    whose identity cannot be stat'd (remote URI without local stat)
-    just pays the walk each time.  :func:`lookup_capture_splits` is
-    the walk-free read of the same cache."""
-    import json
-
-    ident = _index_ident(path, split_bytes)
-    if ident is None:
-        return index_capture_splits(path, split_bytes)
-    from ..staging import keyed_tmp_dir
-
-    d = keyed_tmp_dir(_INDEX_PREFIX, ident)
-    hit, splits = _read_index(d, ident)
-    if hit:
-        return splits
-    os.makedirs(d, exist_ok=True)
-    splits = index_capture_splits(path, split_bytes)
-    import tempfile as _tf
-
-    fd, tmp = _tf.mkstemp(dir=d, suffix=".json")
-    try:
-        with os.fdopen(fd, "w") as f:
-            json.dump({"ident": ident, "splits": splits}, f)
-        os.replace(tmp, os.path.join(d, "splits.json"))
-    except OSError:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
+    """:func:`index_capture_splits` behind the sidecar cache keyed by
+    the file's identity (path + size + mtime_ns + split_bytes) — the
+    explicit form of what a whole-file decode publishes as a
+    by-product: index each capture ONCE (e.g. at ingest) and every
+    later read decodes it split-parallel, the way parquet amortizes
+    footer metadata.  A file whose identity cannot be stat'd (remote
+    URI without local stat) just pays the walk each time."""
+    hit, splits = lookup_capture_splits(path, split_bytes)
+    if not hit:
+        ident = _index_ident(path, split_bytes)
+        splits = index_capture_splits(path, split_bytes)
+        if ident is not None:
+            _publish_index(path, ident, splits)
     return splits
+
+
+def plan_splits(files, chunk_bytes: int = DEFAULT_CHUNK_BYTES) -> list:
+    """The one split planner behind every file-based pcap read:
+    ``(path, size)`` pairs → ``(path, offset, n_bytes, first_pkt)``
+    descriptors.  A capture larger than ``chunk_bytes`` whose split
+    index is published becomes that index's splits (range-read by
+    :func:`read_split`); every other file one whole-file descriptor
+    ``(path, -1, size, 1)`` (streamed by :func:`stream_file_chunks`,
+    which publishes a large raw capture's index).  Only files larger
+    than ``chunk_bytes`` pay the lookup's stat and JSON read."""
+    out = []
+    for path, size in files:
+        splits = None
+        if 0 < chunk_bytes < size:
+            _hit, splits = lookup_capture_splits(path, chunk_bytes)
+        if splits:
+            out.extend((path, off, n_bytes, first) for off, n_bytes, first in splits)
+        else:
+            out.append((path, -1, size, 1))
+    return out
+
+
+def read_split(path: str, offset: int, n_bytes: int) -> bytes:
+    """One split as a self-contained capture: the global header plus
+    ``n_bytes`` from ``offset`` (seek + read — at deployment scale an
+    object-store range GET)."""
+    with open_raw(path) as f:
+        header = f.read(GLOBAL_HEADER_SIZE)
+        f.seek(offset)
+        return header + f.read(n_bytes)
 
 
 def local_path(spark_path: str) -> str:
@@ -453,6 +463,7 @@ def stream_file_chunks(
     paths,
     chunk_bytes: int = DEFAULT_CHUNK_BYTES,
     permissive: bool = False,
+    publish_index: bool = False,
 ) -> Iterator[tuple]:
     """(display_path, chunk_bytes) pairs for a sequence of capture
     files — the chunked drop-in for the ``(path, whole_file_bytes)``
@@ -463,22 +474,39 @@ def stream_file_chunks(
     layer the whole-file path never exposed: a file that cannot be
     opened or whose decompression stream breaks mid-read is skipped
     (chunks already yielded stand — the same partial-output semantics
-    as a truncated raw capture) instead of failing the task."""
+    as a truncated raw capture) instead of failing the task.
+
+    ``publish_index=True`` publishes each file's chunks, once read to
+    the end, as its ``chunk_bytes`` split index — or the unsplittable
+    marker when the walk could not split it or the stream broke."""
     for p in paths:
+        ident = _index_ident(p, chunk_bytes) if publish_index else None
         try:
             f = open_decompressed(p)
         except (OSError, ValueError):
             if permissive:
                 continue
             raise
+        splits = []
         try:
             with f:
-                for chunk in iter_capture_chunks(f, name=p, chunk_bytes=chunk_bytes):
-                    yield p, chunk
+                for offset, chunk, first_pkt in _walk_chunks(f, chunk_bytes):
+                    if offset is None:
+                        splits = None
+                    elif splits is not None:
+                        splits.append(
+                            (offset, len(chunk) - GLOBAL_HEADER_SIZE, first_pkt)
+                        )
+                    if chunk is not None:
+                        yield p, chunk
         except stream_error_types(f) as exc:
+            if ident is not None:
+                _publish_index(p, ident, None)
             if permissive:
                 continue
             raise OSError(f"{p}: {exc}") from exc
+        if ident is not None:
+            _publish_index(p, ident, splits)
 
 
 def file_size(path: str) -> int:

@@ -694,7 +694,8 @@ def http_tput_truth_path(n_conns: int = 2000) -> str:
 )
 def q_pcap_http_extract_2k(spark: SparkSession, sf: str) -> DataFrame:
     """HTTP object extraction AT SCALE: 2000 connections from one
-    capture file, decoded split-parallel, reassembled and parsed in
+    capture file, decoded split-parallel once its split index is
+    published (the first read publishes it), reassembled and parsed in
     one pass — every body md5-pinned against synthesis intent.  The
     scale shape the 3-connection branch fixture can't measure: group
     count (connections) × applyInPandas dominates, which is exactly
@@ -705,7 +706,6 @@ def q_pcap_http_extract_2k(spark: SparkSession, sf: str) -> DataFrame:
     pkts = read_pcap(
         spark,
         http_tput_dir(),
-        split_single_files=True,
         columns=["file", "src", "dst", "src_port", "dst_port",
                  "protocol", "pkt_no", "payload"],
         strict_reference=False,
@@ -1830,8 +1830,8 @@ def giant_dir(pkts: int = 1_200_000) -> str:
     intents as :func:`throughput_dir`) — the single-giant-file shape
     behind ``pcap_decode_1file_parallel``.  The reference cannot
     parallelize inside one file at all (io/PcapInputFormat.java:72-75
-    isSplitable → false); this fixture exists to prove the index-pass
-    split path beats that constraint instead of inheriting it."""
+    isSplitable → false); this fixture exists to prove the split path
+    beats that constraint instead of inheriting it."""
     d = _fixture_subdir("giant1")
     path = os.path.join(d, "giant.pcap")
     if os.path.exists(path):
@@ -1902,12 +1902,12 @@ def giant_truth_path(pkts: int = 1_200_000) -> str:
     """,
 )
 def q_pcap_decode_1file_parallel(spark: SparkSession, sf: str) -> DataFrame:
-    """Split-parallel decode of ONE giant capture
-    (read_pcap(split_single_files=True), sources/pcap_source.py): a
-    framing-only index pass emits record-aligned splits, decode
-    range-reads them on every core — beating the reference's
-    whole-file constraint (io/PcapInputFormat.java:72-75) rather than
-    inheriting it (S2).  min/max(pkt_no) in the oracle pins the
+    """Split-parallel decode of ONE giant capture (read_pcap,
+    sources/pcap_source.py): once the capture's split index is
+    published — a by-product of its first whole-file decode — the
+    driver plans its record-aligned splits and decode range-reads them
+    on every core, beating the reference's whole-file constraint
+    (io/PcapInputFormat.java:72-75) rather than inheriting it (S2).  min/max(pkt_no) in the oracle pins the
     per-split ordinal REBASE, not just the row multiset: a rebase bug
     that collided or shifted ordinals would break first/last even
     with counts intact.  8 MiB splits model the production 64 MiB
@@ -1923,7 +1923,7 @@ def q_pcap_decode_1file_parallel(spark: SparkSession, sf: str) -> DataFrame:
     stays like-for-like."""
     return (
         read_pcap(
-            spark, giant_dir(), split_single_files=True, chunk_bytes=8 << 20,
+            spark, giant_dir(), chunk_bytes=8 << 20,
             columns=["file", "pkt_no", "protocol", "src", "len"],
         )
         .groupBy("protocol")

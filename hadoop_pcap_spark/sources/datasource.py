@@ -21,10 +21,15 @@ behavior and will flag the upstream fix).  The supported SQL entry is
 same reader — full pushdown/pruning), matching the serde-table
 workflow end to end.
 
-Partitioning: one InputPartition per file, batch and streaming alike —
-the same parallelism grain as the reference (pcap is unsplittable,
-io/PcapInputFormat.java:72-75).  Each partition is decoded on an
-executor by the columnar kernel into Arrow RecordBatches.
+Partitioning: one InputPartition per split descriptor from the planner
+``read_pcap`` uses (:func:`..pcap.chunked.plan_splits`) — one per file,
+except that a capture larger than ``chunkbytes`` whose split index is
+published becomes one partition per record-aligned split (the
+reference keeps it in one task: io/PcapInputFormat.java:72-75).  A
+streaming micro-batch plans one whole-file partition per new file.
+Every partition is decoded on an executor by the decoder all pcap
+reads share (:func:`.pcap_source.decode_splits`) into Arrow
+RecordBatches.
 """
 
 from __future__ import annotations
@@ -41,8 +46,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from ..pcap.decode import DecodeOptions
-from .pcap_source import packet_schema
+from .pcap_source import _decode_plan
 
 
 def _expand_paths(path: str) -> List[str]:
@@ -85,9 +89,11 @@ def _expand_paths(path: str) -> List[str]:
     return matches if matches else [path]
 
 
-class _PcapFilePartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
+class _PcapSplit(InputPartition):
+    """One split descriptor ``(path, offset, n_bytes, first_pkt)``."""
+
+    def __init__(self, *split):
+        self.split, self.path = split, split[0]
 
 
 class PcapDataSourceReader(DataSourceReader):
@@ -126,35 +132,25 @@ class PcapDataSourceReader(DataSourceReader):
                 ".option('path', …) or register a SQL view via "
                 "hadoop_pcap_spark.sql.register_packets_view instead."
             )
-        return [
-            _PcapFilePartition(p)
-            for p in _expand_paths(path)
-            if self._keep_file(p)
-        ]
+        from ..pcap.chunked import file_size, plan_splits
 
-    def read(self, partition: _PcapFilePartition):
+        files = [(p, file_size(p)) for p in _expand_paths(path) if self._keep_file(p)]
+        return [_PcapSplit(*d) for d in plan_splits(files, _chunk_bytes(self._options))]
+
+    def read(self, partition: _PcapSplit):
         """Yields pyarrow RecordBatches (PySpark 4 DataSource API fast
-        path) built by the vectorized columnar kernel.  Shared by the
-        batch and the streaming reader; ``mode`` governs both decode
-        errors and unreadable files (PERMISSIVE skips, FAILFAST fails
-        the task).
+        path) from the decoder every pcap read shares
+        (:func:`.pcap_source.decode_splits`): bounded memory
+        (``chunkbytes`` option, default 64 MiB), ``mode`` governing
+        decode errors and unreadable files alike.  Shared by the batch
+        and the streaming reader."""
+        from .pcap_source import decode_splits
 
-        Bounded memory: the file streams through record-aligned chunks
-        (``chunkbytes`` option, default 64 MiB) instead of one
-        ``f.read()`` — the reference's O(1) DataInputStream property
-        (PcapReader.java:67,75-77) at Spark-task grain, so multi-GiB
-        rotated captures decode without per-task memory spikes."""
-        from ..pcap.chunked import DEFAULT_CHUNK_BYTES, stream_file_chunks
-        from .pcap_source import decode_files_to_arrow_columnar
-
-        opts = _decode_opts(self._options, self._schema)
-        chunk_bytes = int(self._options.get("chunkbytes", DEFAULT_CHUNK_BYTES))
-        yield from decode_files_to_arrow_columnar(
-            stream_file_chunks(
-                [partition.path], chunk_bytes, permissive=opts.mode == "PERMISSIVE"
-            ),
+        yield from decode_splits(
+            [partition.split],
             self._schema,
-            opts,
+            _options_plan(self._options, self._schema)[1],
+            _chunk_bytes(self._options),
         )
 
 
@@ -193,32 +189,41 @@ class PcapPushdownReader(PcapDataSourceReader):
                 yield f
 
 
-def _decode_opts(options: dict, schema: StructType | None = None) -> DecodeOptions:
-    """Build decoder options; when ``schema`` is a strict subset of the
-    decoder's full schema (via the ``columns`` option or a
-    user-supplied ``.schema(...)``), push the projection INTO the
-    decoder — MD5 / DNS / payload work is skipped entirely, matching
-    the reference's conditional-decode laziness
-    (PcapReader.java:79-91,184; DnsPcapReader.java:38).  The Python
+def _chunk_bytes(options: dict) -> int:
+    from ..pcap.chunked import DEFAULT_CHUNK_BYTES
+
+    return int(options.get("chunkbytes", DEFAULT_CHUNK_BYTES))
+
+
+def _options_plan(options: dict, schema: StructType | None = None) -> tuple:
+    """``(schema, DecodeOptions)`` from the DataSource's option strings,
+    through the policy every pcap front door shares
+    (:func:`.pcap_source._decode_plan`).  The column list is the
+    ``columns`` option, or the reader's schema when given (the
+    ``columns`` option's or a user-supplied ``.schema(...)``), so a
+    pruned schema reaches the decoder as ``wanted``: MD5 / DNS /
+    payload work is skipped entirely, matching the reference's
+    conditional-decode laziness (PcapReader.java:79-91,184;
+    DnsPcapReader.java:38).  The Python
     DSv2 API has no pruneColumns hook yet; when it grows one, wire it
     here and Catalyst projections will prune automatically too."""
-    wanted = None
-    keep_frame = str(options.get("keepframe", "false")).lower() == "true"
+
+    def flag(key: str, default: str) -> bool:
+        return str(options.get(key, default)).lower() == "true"
+
     if schema is not None:
-        frame_cols = {"frame", "orig_len"}
-        full = {f.name for f in packet_schema(options.get("decoder", "ip")).fields}
-        names = {f.name for f in schema.fields}
-        keep_frame = keep_frame or bool(names & frame_cols)
-        if names - frame_cols < full:
-            wanted = names
-    return DecodeOptions(
-        decoder=options.get("decoder", "ip"),
-        calculate_md5=str(options.get("calculatemd5", "false")).lower() == "true",
-        keep_payload=str(options.get("keeppayload", "true")).lower() == "true",
-        strict_reference=str(options.get("strictreference", "true")).lower() == "true",
-        mode=options.get("mode", "FAILFAST"),
-        wanted=wanted,
-        keep_frame=keep_frame,
+        columns = schema.fieldNames()
+    else:
+        cols = options.get("columns")
+        columns = [c.strip() for c in cols.split(",")] if cols else None
+    return _decode_plan(
+        options.get("decoder", "ip"),
+        columns,
+        flag("keepframe", "false"),
+        flag("calculatemd5", "false"),
+        flag("keeppayload", "true"),
+        flag("strictreference", "true"),
+        options.get("mode", "FAILFAST"),
     )
 
 
@@ -227,7 +232,7 @@ class PcapStreamReader(DataSourceStreamReader):
     files that appeared in the directory since the last offset — the
     'live feed = more pcap files arriving' model (SURVEY §2.4
     streaming analogs).  The driver only lists files and plans one
-    :class:`_PcapFilePartition` per new file; executors decode them
+    whole-file :class:`_PcapSplit` per new file; executors decode them
     through :meth:`PcapDataSourceReader.read`, so ``mode`` and
     ``chunkbytes`` mean what they mean for batch ``format("pcap")``.
 
@@ -333,8 +338,10 @@ class PcapStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict) -> List[InputPartition]:
         if self._current is None:
             self._current = end
+        from ..pcap.chunked import file_size
+
         return [
-            _PcapFilePartition(p)
+            _PcapSplit(p, -1, file_size(p), 1)
             for p in sorted(end.get("recent", {}))
             if not self._processed(start, p, end["recent"][p])
         ]
@@ -343,7 +350,7 @@ class PcapStreamReader(DataSourceStreamReader):
         if self._current is None:
             self._current = end
 
-    def read(self, partition: _PcapFilePartition):
+    def read(self, partition: _PcapSplit):
         return PcapDataSourceReader(self._schema, self._options).read(partition)
 
 
@@ -463,13 +470,7 @@ class PcapDataSource(DataSource):
         option (comma-separated) — the pruned subset, in canonical
         field order.  Pruning reaches the decode kernels: unrequested
         md5/DNS/payload work is skipped, not computed-then-dropped."""
-        cols = self.options.get("columns")
-        return packet_schema(
-            self.options.get("decoder", "ip"),
-            [c.strip() for c in cols.split(",")] if cols else None,
-            keep_frame=str(self.options.get("keepframe", "false")).lower()
-            == "true",
-        )
+        return _options_plan(self.options)[0]
 
     def reader(self, schema: StructType) -> PcapDataSourceReader:
         opts = dict(self.options)

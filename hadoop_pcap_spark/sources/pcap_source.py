@@ -6,26 +6,30 @@ Replaces the reference's `PcapInputFormat` / `CombinePcapInputFormat` /
 io/reader/PcapRecordReader.java:16-77, hadoop-pcap-serde/.../
 PcapDeserializer.java:21-66) with two Spark-native paths:
 
-1. ``read_pcap(spark, path, ...)`` — ``binaryFile`` scan (one row per
-   file; pcap is unsplittable, same constraint as the reference's
-   ``isSplitable → false``) followed by a columnar decode into a fixed
-   wide schema (``mapInArrow``).  Spark's
-   ``spark.sql.files.maxPartitionBytes`` / ``openCostInBytes`` give the
-   small-file packing that `CombinePcapInputFormat` hand-rolled.
+1. ``read_pcap(spark, path, ...)`` — the driver lists the files and
+   plans split descriptors into a byte-balanced ``LocalTableScan``
+   (the small-file packing `CombinePcapInputFormat` hand-rolled), and
+   one ``mapInArrow`` decodes them into a fixed wide schema.
 
 2. a registered Python DataSource (``spark.read.format("pcap")`` /
    ``CREATE TABLE ... USING pcap``) — see :mod:`.datasource`.
 
-Every Spark ingest path — both of these, ``read_pcap_stream`` and
-``decode_frames`` — decodes through one kernel,
-:func:`decode_files_to_arrow_columnar`; the scalar per-packet kernel
-is kept only as the differential oracle in tests and for the dump CLI.
+Every file-based read — both of these and ``read_pcap_stream``, batch
+and streaming — plans with one planner
+(:func:`..pcap.chunked.plan_splits`) and decodes with one decoder
+(:func:`decode_splits`), on one kernel,
+:func:`decode_files_to_arrow_columnar`, which ``decode_frames``
+shares; the scalar per-packet kernel is kept only as the
+differential oracle in tests and for the dump CLI.
 
-Scale design (100 TB): the decode is embarrassingly parallel per file
-(one task per file, Arrow batches out); the recommended pipeline is
-decode-once → write Parquet partitioned by capture date → query many
-times with full pushdown.  Column pruning is pushed *into* the decoder
-via ``columns=`` (skips MD5 / DNS / payload work when those columns
+Scale design (100 TB): the decode is embarrassingly parallel per
+file, and per record-aligned split once a capture's split index is
+published — a by-product of its first whole-file decode, so there is
+no knob and no index stage (the reference's ``isSplitable → false``
+is beaten, not inherited).  The recommended pipeline is decode-once →
+write Parquet partitioned by capture date → query many times with
+full pushdown.  Column pruning is pushed *into* the decoder via
+``columns=`` (skips MD5 / DNS / payload work when those columns
 aren't requested), mirroring the reference's conditional-decode
 laziness (L4 only for TCP/UDP, L7 only on port 53, MD5 only if
 configured).
@@ -351,19 +355,22 @@ def _decode_plan(
     strict_reference: bool,
     mode: str,
 ):
-    """(output schema, DecodeOptions) for the ``read_pcap`` family's
-    shared arguments: a ``columns`` list is pushed into the decoder as
-    ``wanted``, and naming a frame column turns ``keep_frame`` on."""
+    """(output schema, DecodeOptions) for the shared arguments of every
+    pcap front door (the DataSource parses its option strings into
+    them): a ``columns`` list is pushed into the decoder as
+    ``wanted`` unless it names the decoder's whole default schema, and
+    naming a frame column turns ``keep_frame`` on."""
     schema = packet_schema(decoder, columns, keep_frame)
-    wanted = set(f.name for f in schema.fields) if columns is not None else None
+    names = set(schema.fieldNames())
+    full = set(packet_schema(decoder).fieldNames())
     return schema, DecodeOptions(
         decoder=decoder,
         calculate_md5=calculate_md5,
         keep_payload=keep_payload,
         strict_reference=strict_reference,
         mode=mode,
-        wanted=wanted,
-        keep_frame=keep_frame or bool(wanted and (wanted & _FRAME_COLS)),
+        wanted=None if columns is None or names - _FRAME_COLS == full else names,
+        keep_frame=keep_frame or bool(names & _FRAME_COLS),
     )
 
 
@@ -379,7 +386,7 @@ def read_pcap(
     path_glob: Optional[str] = None,
     chunk_bytes: Optional[int] = None,
     keep_frame: bool = False,
-    split_single_files: bool = False,
+    split_single_files: Optional[bool] = None,
 ) -> DataFrame:
     """Read pcap file(s) into a typed DataFrame.
 
@@ -394,96 +401,131 @@ def read_pcap(
     the vectorized columnar kernel and builds Arrow batches directly
     (mapInArrow).
 
-    Memory: local files are decoded in bounded memory — the driver
-    lists paths only (no ``content`` materialization, so binaryFile's
-    2 GiB cap does not apply) and each task streams its file through
-    record-aligned chunks (``chunk_bytes``, default 64 MiB — the
-    reference's O(1) DataInputStream loop, PcapReader.java:75-77,
-    re-expressed per-chunk).  Remote URIs (s3/s3a, gs, hdfs, abfs)
-    stream through pyarrow.fs when it is importable — same
-    record-aligned chunk feed, random-access reads, O(1) memory;
-    unrecognised schemes fall back to whole-content materialization
-    via binaryFile.  Pass ``chunk_bytes=0`` to force the whole-file
-    path for local files too.
+    Plan: the driver lists the files (binaryFile's listing, so
+    ``pathGlobFilter`` and the ``file`` values are Spark's), plans
+    split descriptors (:func:`..pcap.chunked.plan_splits`) into a
+    ``LocalTableScan`` of ``min(n_descriptors, defaultParallelism)``
+    byte-balanced partitions, and ONE ``mapInArrow`` decodes them
+    (:func:`decode_splits`) — no exchange, whatever the files.
 
-    ``split_single_files=True`` breaks the reference's whole-file
-    parallelism constraint (io/PcapInputFormat.java:72-75 —
-    ``isSplitable`` false because pcap framing is a byte-chain): a
-    framing-only INDEX (no decode, I/O speed) cuts each file into
-    record-aligned ``chunk_bytes`` splits and decode tasks range-read
-    their own split (seek + read — at deployment scale these are
-    object-store range GETs).  One N-GB capture then decodes on every
-    core instead of one.  The index is cached by file identity: when
-    every file already has one, the driver plans the splits itself
-    and the query is one decode stage with a task per split; any
-    cold, rewritten or remote file instead runs the index as a
-    distributed pass (one task per file) whose tiny split metadata
-    reshuffles to ``min(defaultParallelism, Σ ceil(size /
-    chunk_bytes))`` decode tasks.  As with Spark's own file listing,
-    a warm plan's splits are fixed when the DataFrame is built:
-    rebuild it after rewriting a capture.  Output is byte-identical
-    to the serial path (``pkt_no`` rebased per split from the index;
-    property-diffed in tests/test_chunked.py).  Files the indexer
-    cannot range-split (compressed, pcapng, foreign header) fall back
-    to the serial streamed path automatically; requires a seekable
-    (streamed) source.
-    """
+    Splitting needs no knob and beats the reference's whole-file
+    constraint (io/PcapInputFormat.java:72-75): a cold capture larger
+    than ``chunk_bytes`` is decoded whole by one task, whose framing
+    walk publishes its record-aligned split index (cached by file
+    identity); every later read plans its splits, one range-read task
+    each, so one N-GB capture decodes on every core.  Compressed,
+    pcapng and foreign files are always decoded whole.  A plan's
+    splits are fixed when the DataFrame is built: rebuild it after
+    rewriting a capture.  Rows are identical either way.
+
+    Memory: each task streams its file through record-aligned chunks
+    (``chunk_bytes``, default 64 MiB — the reference's O(1)
+    DataInputStream loop, PcapReader.java:75-77); remote URIs (s3/s3a,
+    gs, hdfs, abfs) stream through pyarrow.fs, other schemes raise
+    ValueError.  ``chunk_bytes=0`` reads each file as one chunk and
+    never splits.  ``split_single_files`` is accepted and ignored."""
+    import pyarrow as pa
     from urllib.parse import urlparse
 
-    from ..pcap.chunked import DEFAULT_CHUNK_BYTES, supports_scheme
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from ..pcap.chunked import (
+        DEFAULT_CHUNK_BYTES,
+        file_size,
+        plan_splits,
+        supports_scheme,
+    )
 
     if chunk_bytes is None:
         chunk_bytes = DEFAULT_CHUNK_BYTES
+    if not supports_scheme(urlparse(path).scheme):
+        raise ValueError(
+            "read_pcap reads local paths and pyarrow.fs-reachable URIs "
+            f"(s3/s3a, gs, hdfs, abfs), not {path!r}"
+        )
     schema, opts = _decode_plan(
         decoder, columns, keep_frame,
         calculate_md5, keep_payload, strict_reference, mode,
     )
-    streamed = bool(chunk_bytes) and supports_scheme(urlparse(path).scheme)
-
     reader = spark.read.format("binaryFile")
     if path_glob:
         reader = reader.option("pathGlobFilter", path_glob)
-    files = (
-        reader.load(path).select("path")
-        if streamed
-        else reader.load(path).select("path", "content")
+    files = []
+    for uri in reader.load(path).inputFiles():
+        p = _listed_path(uri)
+        size = file_size(p)
+        if size:  # an empty file decodes to no rows
+            files.append((p, size))
+    splits = plan_splits(files, chunk_bytes)
+    order = _slice_balanced(
+        [n_bytes for _p, _off, n_bytes, _first in splits],
+        max(1, min(len(splits), spark.sparkContext.defaultParallelism)),
+    )
+    descriptors = pa.Table.from_pylist(
+        [dict(zip(SPLIT_SCHEMA.fieldNames(), splits[i])) for i in order],
+        schema=to_arrow_schema(SPLIT_SCHEMA),
+    )
+    return spark.createDataFrame(descriptors, SPLIT_SCHEMA).mapInArrow(
+        _split_decoder(schema, opts, chunk_bytes), schema
     )
 
-    if split_single_files:
-        if not streamed:
-            raise ValueError(
-                "split_single_files requires a seekable streamed source "
-                "(local path or pyarrow.fs-reachable URI, chunk_bytes > 0)"
+
+# One split descriptor: a whole file is (path, -1, size, 1); a split of
+# a published index is (path, offset, n_bytes, first_pkt).
+SPLIT_SCHEMA = T.StructType(
+    [
+        T.StructField("path", T.StringType(), False),
+        T.StructField("offset", T.LongType(), False),
+        T.StructField("n_bytes", T.LongType(), False),
+        T.StructField("first_pkt", T.LongType(), False),
+    ]
+)
+
+
+def decode_splits(
+    splits: Iterable[tuple],
+    schema: T.StructType,
+    opts: DecodeOptions,
+    chunk_bytes: int,
+):
+    """The one decode behind every file-based pcap read (``read_pcap``,
+    ``read_pcap_stream``, ``format("pcap")`` batch and streaming):
+    ``(path, offset, n_bytes, first_pkt)`` descriptors → Arrow
+    RecordBatches of ``schema``, ``pkt_no`` rebased by ``first_pkt``.
+    A split (``offset >= 0``) is range-read; a whole file streams
+    through ``chunk_bytes`` chunks in bounded memory and, when larger
+    than ``chunk_bytes``, publishes its split index on the way.
+    ``mode`` governs decode errors and unreadable files alike."""
+    from ..pcap.chunked import read_split, stream_file_chunks
+
+    for path, offset, n_bytes, first_pkt in splits:
+        if offset < 0:
+            feed = stream_file_chunks(
+                [path], chunk_bytes,
+                permissive=opts.mode == "PERMISSIVE",
+                publish_index=0 < chunk_bytes < n_bytes,
             )
-        return _read_pcap_split(spark, files, schema, opts, chunk_bytes)
+        else:
+            feed = [(path, read_split(path, offset, n_bytes))]
+        # one decode call per descriptor: feeding consecutive splits of
+        # one path through one call would let the chunk-continuation
+        # logic count their records twice
+        yield from decode_files_to_arrow_columnar(
+            feed, schema, opts, pkt_base=first_pkt - 1
+        )
 
-    return files.mapInArrow(
-        _arrow_decode_fn(schema, opts, streamed, chunk_bytes), schema
-    )
 
+def _split_decoder(schema, opts, chunk_bytes: int):
+    """:func:`decode_splits` as a ``mapInArrow`` function over
+    :data:`SPLIT_SCHEMA` rows."""
 
-def _arrow_decode_fn(schema, opts, streamed: bool, chunk_bytes: int):
-    """The per-partition decode closure shared by the batch reader
-    (mapInArrow over binaryFile rows) and the streaming reader (same
-    mapInArrow over the binaryFile STREAM): path rows in, typed Arrow
-    record batches out, via the chunked O(1)-memory feed."""
-    from ..pcap.chunked import stream_file_chunks
+    def decode(batches):
+        for rb in batches:
+            yield from decode_splits(
+                zip(*(c.to_pylist() for c in rb.columns)), schema, opts, chunk_bytes
+            )
 
-    def decode_partition_arrow(batches):
-        def gen():
-            for rb in batches:
-                paths = rb.column(0).to_pylist()
-                if streamed:
-                    yield from stream_file_chunks(
-                        paths, chunk_bytes, permissive=opts.mode == "PERMISSIVE"
-                    )
-                else:
-                    contents = rb.column(1).to_pylist()
-                    yield from zip(paths, contents)
-
-        yield from decode_files_to_arrow_columnar(gen(), schema, opts)
-
-    return decode_partition_arrow
+    return decode
 
 
 def decode_frames(
@@ -595,12 +637,13 @@ def read_pcap_stream(
     offset the source keeps itself.
 
     Mechanics: the ``binaryFile`` file STREAM discovers newly landed
-    files per micro-batch; only the ``path`` column is consumed, so
-    each task streams its file through the same record-aligned
-    chunked feed as the batch reader (O(1) memory, decompression
-    included) — the decode closure is literally shared
-    (:func:`_arrow_decode_fn`).  ``max_files_per_trigger`` bounds
-    micro-batch size for steady-state latency.
+    files per micro-batch; its ``path`` and ``length`` columns become
+    whole-file descriptors (never ``content``), so each task streams
+    its file through the same record-aligned chunked feed as the
+    batch reader (O(1) memory, decompression included) — the decode
+    is literally shared (:func:`decode_splits`).
+    ``max_files_per_trigger`` bounds micro-batch size for steady-state
+    latency.
 
     Semantics: a capture FILE is the atomic unit of arrival (files
     are assumed complete when they land — the standard rotation
@@ -634,16 +677,20 @@ def read_pcap_stream(
         reader = reader.option("pathGlobFilter", path_glob)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    files = reader.load(path).select("path")
-    return files.mapInArrow(_arrow_decode_fn(schema, opts, True, chunk_bytes), schema)
+    files = reader.load(path).select(
+        "path",
+        F.lit(-1).cast("long").alias("offset"),
+        F.col("length").alias("n_bytes"),
+        F.lit(1).cast("long").alias("first_pkt"),
+    )
+    return files.mapInArrow(_split_decoder(schema, opts, chunk_bytes), schema)
 
 
 def _listed_path(uri: str) -> str:
     """A ``DataFrame.inputFiles()`` URI (``file:///x/a%20b.pcap``) in
     the Hadoop ``Path.toString`` form binaryFile writes to its
-    ``path`` column (``file:/x/a b.pcap``), so driver-planned splits
-    carry the same ``file`` value and index-cache identity as rows
-    planned by the index stage."""
+    ``path`` column (``file:/x/a b.pcap``), so driver-planned
+    descriptors carry the ``file`` value binaryFile's listing gives."""
     from urllib.parse import unquote, urlsplit
 
     u = urlsplit(uri)
@@ -667,141 +714,6 @@ def _slice_balanced(weights: list, n_slices: int) -> list:
         room[j] -= 1
         load[j] += weights[i]
     return [i for sl in slices for i in sl]
-
-
-def _read_pcap_split(
-    spark: SparkSession,
-    files: DataFrame,
-    schema: T.StructType,
-    opts: DecodeOptions,
-    chunk_bytes: int,
-) -> DataFrame:
-    """The split-parallel decode plan behind
-    ``read_pcap(split_single_files=True)``.  Both plans feed split
-    descriptor rows ``(path, offset, n_bytes, first_pkt)`` to the same
-    decode closure (range-read the split, run the columnar kernel,
-    rebase pkt_no), so their output is identical:
-
-    * **warm** — every listed file has a published index
-      (:func:`..pcap.chunked.lookup_capture_splits`, a walk-free stat
-      + JSON read on the driver, no Spark job): the descriptors become
-      a JVM ``LocalTableScan`` with ``min(n_splits,
-      defaultParallelism)`` byte-balanced partitions, so the query is
-      ONE decode stage, one task per split, no index stage and no
-      exchange.  Each Python task costs a fixed worker set-up, so the
-      tasks that decode nothing are what this plan removes.
-    * **cold** — any file misses (new or rewritten capture, remote
-      URI): paths → [index tasks: framing walk, publishing the cache
-      the warm plan reads] → round-robin repartition of the metadata
-      (only ~40-byte descriptors shuffle) to ``min(defaultParallelism,
-      Σ ceil(size / chunk_bytes))`` partitions → decode.
-
-    Unsplittable files (compressed, pcapng, short header) become one
-    whole-file pseudo-split ``(-1, size, 1)`` decoded serially, so
-    mixed directories need no second scan.  Zero-byte files are not
-    planned: binaryFile's listing skips them, so no plan reads them."""
-    import math
-
-    from ..pcap.chunked import (
-        GLOBAL_HEADER_SIZE,
-        file_size,
-        index_capture_splits_cached,
-        lookup_capture_splits,
-        open_raw,
-    )
-
-    split_schema = T.StructType(
-        [
-            T.StructField("path", T.StringType(), False),
-            T.StructField("offset", T.LongType(), False),
-            T.StructField("n_bytes", T.LongType(), False),
-            T.StructField("first_pkt", T.LongType(), False),
-        ]
-    )
-
-    def descriptor_batch(indexed):
-        """(path, splits) pairs → one batch of descriptor rows; splits
-        None (unsplittable) → the whole-file pseudo-split, decoded
-        serially by one task via the streamed chunk path."""
-        import pyarrow as pa
-
-        rows = [
-            (p, off, nb, fp)
-            for p, splits in indexed
-            for off, nb, fp in (
-                splits if splits is not None else [(-1, max(file_size(p), 0), 1)]
-            )
-        ]
-        cols = list(zip(*rows)) or [()] * 4
-        return pa.RecordBatch.from_arrays(
-            [pa.array(cols[0], pa.string())]
-            + [pa.array(c, pa.int64()) for c in cols[1:]],
-            names=split_schema.fieldNames(),
-        )
-
-    sizes = {}
-    for uri in files.inputFiles():
-        p = _listed_path(uri)
-        size = file_size(p)
-        if size:
-            sizes[p] = size
-    looked = {p: lookup_capture_splits(p, chunk_bytes) for p in sizes}
-    parallelism = spark.sparkContext.defaultParallelism
-
-    if all(hit for hit, _ in looked.values()):
-        import pyarrow as pa
-
-        batch = descriptor_batch((p, splits) for p, (_, splits) in looked.items())
-        order = _slice_balanced(
-            batch.column("n_bytes").to_pylist(),
-            max(1, min(batch.num_rows, parallelism)),
-        )
-        splits_df = spark.createDataFrame(
-            pa.Table.from_batches([batch.take(pa.array(order, pa.int64()))]),
-            split_schema,
-        )
-    else:
-
-        def index_partition(batches):
-            for rb in batches:
-                yield descriptor_batch(
-                    (p, index_capture_splits_cached(p, chunk_bytes))
-                    for p in rb.column(0).to_pylist()
-                )
-
-        n_splits = sum(
-            max(1, math.ceil(size / chunk_bytes)) for size in sizes.values()
-        )
-        splits_df = files.mapInArrow(index_partition, split_schema).repartition(
-            max(1, min(parallelism, n_splits))
-        )
-
-    def decode_split_partition(batches):
-        from ..pcap.chunked import stream_file_chunks
-
-        for rb in batches:
-            for row in rb.to_pylist():
-                p, off, base = row["path"], row["offset"], row["first_pkt"] - 1
-                if off < 0:
-                    # whole-file fallback split: serial streamed decode
-                    feed = stream_file_chunks(
-                        [p], chunk_bytes,
-                        permissive=opts.mode == "PERMISSIVE",
-                    )
-                else:
-                    with open_raw(p) as f:
-                        header = f.read(GLOBAL_HEADER_SIZE)
-                        f.seek(off)
-                        data = f.read(row["n_bytes"])
-                    feed = iter([(p, header + data)])
-                # one decode call per split, rebased from the index —
-                # feeding consecutive same-path splits through one call
-                # would let the chunk-continuation logic double-count
-                yield from decode_files_to_arrow_columnar(
-                    feed, schema, opts, pkt_base=base
-                )
-
-    return splits_df.mapInArrow(decode_split_partition, schema)
 
 
 def write_packets_parquet(

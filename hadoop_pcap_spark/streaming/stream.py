@@ -343,6 +343,12 @@ def streaming_http_objects(
     HTTP, a chunk size or Content-Length that is not plain digits:
     :func:`..operators.http.desynchronized`), which no later bytes
     could make parse; the objects it completed before stay emitted.
+    A connection that a direction rules out as HTTP before it is
+    classified (:func:`..operators.http.never_http`: no method token
+    or ``HTTP/1.`` can begin it any more — TLS, SSH) can never yield
+    a row, as in the batch operator: its state is marked
+    (``client_is_a = -1``) and its bytes are dropped, then and in
+    every later micro-batch.
 
     Input: a streaming packet DataFrame with at least
     src/dst/src_port/dst_port/protocol/ts/pkt_no/payload; ``ts_usec``,
@@ -360,6 +366,7 @@ def streaming_http_objects(
     from ..operators.http import (
         classify_stream,
         desynchronized,
+        never_http,
         object_fields,
         parse_requests,
         parse_responses,
@@ -379,10 +386,15 @@ def streaming_http_objects(
         b_res = bytes(b_res or b"") + b_new
         if client_is_a == 0:
             ka, kb = classify_stream(a_res), classify_stream(b_res)
-            if ka == "req" or kb == "resp":
+            if never_http(a_res) or never_http(b_res):
+                client_is_a = -1  # not HTTP: rule out, drain from now on
+            elif ka == "req" or kb == "resp":
                 client_is_a = 1
             elif kb == "req" or ka == "resp":
                 client_is_a = 2
+        if client_is_a == -1:
+            state.update((b"", b"", -1, n_objs, "[]"))
+            return
         rows = []
         if client_is_a:
             if client_is_a == 1:

@@ -251,6 +251,32 @@ def test_datasource_chunked_option(spark, tmp_path):
     assert small == default and len(small) == 23
 
 
+def test_datasource_splits_a_published_capture(spark, tmp_path):
+    """``format("pcap")`` plans with read_pcap's planner: the first read
+    decodes a capture larger than ``chunkbytes`` whole and publishes
+    its index, the second plans one partition per split — same rows,
+    ``pkt_no`` rebased."""
+    d = tmp_path / "caps3"
+    d.mkdir()
+    (d / "a.pcap").write_bytes(_pcap_many(n_pkts=40, payload_size=60)[:-5])
+    (d / "b.pcap").write_bytes(_pcap_many(n_pkts=2))
+    from hadoop_pcap_spark.sources import register_pcap_datasource
+
+    register_pcap_datasource(spark)
+
+    def read():
+        return spark.read.format("pcap").option("chunkbytes", "512").load(str(d))
+
+    want = _sorted_rows(spark.read.format("pcap").load(str(d)))
+    assert len(want) == 40 + 2
+    cold = read()
+    assert cold.rdd.getNumPartitions() == 2
+    assert _sorted_rows(cold) == want
+    warm = read()
+    assert warm.rdd.getNumPartitions() > 3
+    assert _sorted_rows(warm) == want
+
+
 # --- payload batch budget (ADVICE r2 medium) ---------------------------------
 
 
@@ -679,9 +705,10 @@ def test_index_splits_bails_on_corrupt_incl_len(tmp_path):
 
 
 def test_split_read_equals_serial(spark, tmp_path):
-    """read_pcap(split_single_files=True) is row-identical to the
-    serial path — incl. a truncated tail, pkt_no rebasing across
-    splits, and a gz neighbor that falls back to the serial split."""
+    """A split read is row-identical to the serial path — incl. a
+    truncated tail, pkt_no rebasing across splits, and a gz neighbor
+    that is decoded whole.  The cold read decodes the capture whole
+    and publishes its index; the warm read splits it."""
     from hadoop_pcap_spark.sources import read_pcap
 
     d = tmp_path / "caps"
@@ -697,18 +724,12 @@ def test_split_read_equals_serial(spark, tmp_path):
         (r.asDict() for r in read_pcap(spark, str(d), calculate_md5=True).collect()),
         key=key,
     )
-    split = sorted(
-        (
-            r.asDict()
-            for r in read_pcap(
-                spark, str(d), calculate_md5=True,
-                split_single_files=True, chunk_bytes=4096,
-            ).collect()
-        ),
-        key=key,
-    )
     assert len(serial) == 200 + 13  # 199 full + 1 ts-only + 13 gz
-    assert split == serial
+    for _cold_then_warm in range(2):
+        split = read_pcap(spark, str(d), calculate_md5=True, chunk_bytes=4096)
+        rows = sorted((r.asDict() for r in split.collect()), key=key)
+        assert rows == serial
+    assert _partitions(split) > 2  # the warm read ran the big capture's splits
 
 
 def test_read_pcap_uri_special_file_names(spark, tmp_path):
@@ -729,8 +750,8 @@ def test_read_pcap_uri_special_file_names(spark, tmp_path):
     want = {"a#1.pcap": 7, "b%41.pcap": 11}
     assert counts(read_pcap(spark, str(d))) == want
     for warm in (False, True):  # the first split read publishes the index
-        split = read_pcap(spark, str(d), split_single_files=True, chunk_bytes=256)
-        assert ("Exchange" not in _split_plan(split)) == warm
+        split = read_pcap(spark, str(d), chunk_bytes=256)
+        assert (_partitions(split) > 2) == warm
         assert counts(split) == want
 
 
@@ -738,17 +759,21 @@ def _split_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _partitions(df) -> int:
+    return df._jdf.queryExecution().toRdd().getNumPartitions()
+
+
 def _sorted_rows(df):
     return sorted((r.asDict() for r in df.collect()), key=lambda r: (r["file"], r["pkt_no"]))
 
 
 def test_split_read_warm_plans_splits_on_driver(spark, tmp_path):
-    """Once the index cache is warm, the split read is ONE decode stage
-    over a driver-built LocalTableScan: no index stage, no exchange,
-    min(n_splits, defaultParallelism) tasks — and the same rows as the
-    serial read, truncated tail and gz neighbour included.  The space
-    in the file name pins that driver-listed paths match binaryFile's
-    ``path`` column."""
+    """Cold or warm, the read is ONE decode stage over a driver-built
+    LocalTableScan, with no exchange; once the index cache is warm it
+    runs min(n_splits, defaultParallelism) tasks — and the same rows
+    as the serial read, truncated tail and gz neighbour included.  The
+    space in the file name pins that driver-listed paths match
+    binaryFile's ``path`` column."""
     from hadoop_pcap_spark.pcap.chunked import lookup_capture_splits
     from hadoop_pcap_spark.sources import read_pcap
 
@@ -759,14 +784,12 @@ def test_split_read_warm_plans_splits_on_driver(spark, tmp_path):
     (d / "sibling.pcap.gz").write_bytes(gzip.compress(_pcap_many(13)))
 
     def split_read():
-        return read_pcap(
-            spark, str(d), calculate_md5=True,
-            split_single_files=True, chunk_bytes=4096,
-        )
+        return read_pcap(spark, str(d), calculate_md5=True, chunk_bytes=4096)
 
     serial = _sorted_rows(read_pcap(spark, str(d), calculate_md5=True))
     cold = split_read()
-    assert "Exchange" in _split_plan(cold)
+    assert "Exchange" not in _split_plan(cold)
+    assert _partitions(cold) == 2  # one whole-file task per capture
     assert _sorted_rows(cold) == serial  # this run publishes the index
 
     warm = split_read()
@@ -774,13 +797,10 @@ def test_split_read_warm_plans_splits_on_driver(spark, tmp_path):
     assert "Exchange" not in plan, plan
     assert plan.count("MapInArrow") == 1, plan
     assert "LocalTableScan" in plan, plan
-    hits = [lookup_capture_splits(f"file:{p}", 4096) for p in sorted(d.iterdir())]
-    assert all(hit for hit, _ in hits)
-    big, gz = (s for _, s in hits)
-    assert gz is None and len(big) > 1
-    n_splits = len(big) + 1
-    parts = warm._jdf.queryExecution().toRdd().getNumPartitions()
-    assert parts == min(n_splits, spark.sparkContext.defaultParallelism)
+    hit, big = lookup_capture_splits(f"file:{d / 'big file.pcap'}", 4096)
+    assert hit and len(big) > 1
+    n_splits = len(big) + 1  # the small gz neighbour is decoded whole
+    assert _partitions(warm) == min(n_splits, spark.sparkContext.defaultParallelism)
     rows = _sorted_rows(warm)
     assert len(rows) == 200 + 13  # 199 full + 1 ts-only + 13 gz
     assert rows == serial
@@ -788,8 +808,9 @@ def test_split_read_warm_plans_splits_on_driver(spark, tmp_path):
 
 def test_split_read_rewritten_file_falls_back_to_index_stage(spark, tmp_path):
     """A rewrite changes the file identity (mtime alone, or size), so
-    the driver lookup misses and the plan goes back to the index stage
-    — whose output equals a fresh serial read of the new bytes."""
+    the driver lookup misses and the capture is decoded whole again —
+    equal to a fresh serial read of the new bytes — which republishes
+    the index for the new identity."""
     from hadoop_pcap_spark.sources import read_pcap
 
     d = tmp_path / "rw"
@@ -798,25 +819,160 @@ def test_split_read_rewritten_file_falls_back_to_index_stage(spark, tmp_path):
     p.write_bytes(_pcap_many(60, payload_size=80))
 
     def split_read():
-        return read_pcap(spark, str(d), split_single_files=True, chunk_bytes=2048)
+        return read_pcap(spark, str(d), chunk_bytes=2048)
 
     split_read().collect()  # warm the index
-    assert "Exchange" not in _split_plan(split_read())
+    assert _partitions(split_read()) > 1
 
     st = p.stat()
     os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns + 5_000_000_000))
     touched = split_read()
-    assert _split_plan(touched).count("MapInArrow") == 2
+    assert _split_plan(touched).count("MapInArrow") == 1
+    assert _partitions(touched) == 1
     assert _sorted_rows(touched) == _sorted_rows(read_pcap(spark, str(d)))
 
     p.write_bytes(_pcap_many(90, payload_size=50)[:-3])
     rewritten = split_read()
     plan = _split_plan(rewritten)
-    assert "Exchange" in plan and plan.count("MapInArrow") == 2, plan
+    assert "Exchange" not in plan and plan.count("MapInArrow") == 1, plan
+    assert _partitions(rewritten) == 1
     serial = _sorted_rows(read_pcap(spark, str(d)))
     assert len(serial) == 90
     assert _sorted_rows(rewritten) == serial
-    assert "Exchange" not in _split_plan(split_read())  # warm again
+    assert _partitions(split_read()) > 1  # warm again
+
+
+def _corrupt_incl_len(data: bytes, record: int = 4) -> bytes:
+    """``data`` with the incl_len of record ``record`` (0-based) set to
+    0xFFFFFFFF."""
+    out, pos = bytearray(data), GLOBAL_HEADER_SIZE
+    for _ in range(record):
+        pos += RECORD_HEADER_SIZE + int.from_bytes(out[pos + 8 : pos + 12], "little")
+    out[pos + 8 : pos + 12] = b"\xff\xff\xff\xff"
+    return bytes(out)
+
+
+def test_read_pcap_is_one_decode_over_a_local_scan(spark, tmp_path):
+    """Every read_pcap plan is ONE MapInArrow over a LocalTableScan with
+    no exchange — cold or warm, one file or many, with gz and pcapng
+    neighbours.  The first read of a cold raw capture larger than
+    chunk_bytes decodes it whole and publishes its split index; the
+    second plans min(n_splits, defaultParallelism) partitions and
+    returns the same rows.  A capture with a corrupt incl_len is
+    published unsplittable and still reads."""
+    from hadoop_pcap_spark.pcap.chunked import lookup_capture_splits
+    from hadoop_pcap_spark.sources import read_pcap
+
+    d = tmp_path / "mixed"
+    d.mkdir()
+    (d / "big.pcap").write_bytes(_pcap_many(120, payload_size=100))
+    (d / "small.pcap").write_bytes(_pcap_many(3))
+    (d / "bad.pcap").write_bytes(_corrupt_incl_len(_pcap_many(60, payload_size=100)))
+    stored = gzip.compress(_pcap_many(40, payload_size=100), compresslevel=0)
+    (d / "sib.pcap.gz").write_bytes(stored)
+    (d / "ng.pcapng").write_bytes(S.mixed_link_pcapng())
+    chunk = 2048
+    parallelism = spark.sparkContext.defaultParallelism
+
+    def read(target):
+        return read_pcap(spark, target, chunk_bytes=chunk, strict_reference=False)
+
+    def assert_one_decode(df):
+        plan = _split_plan(df)
+        assert "Exchange" not in plan, plan
+        assert plan.count("MapInArrow") == 1, plan
+        assert "LocalTableScan" in plan, plan
+
+    def serial(target):
+        return _sorted_rows(read_pcap(spark, target, strict_reference=False))
+
+    big = str(d / "big.pcap")
+    cold = read(big)
+    assert_one_decode(cold)
+    assert _partitions(cold) == 1
+    assert lookup_capture_splits(big, chunk) == (False, None)
+    assert _sorted_rows(cold) == serial(big)
+    hit, splits = lookup_capture_splits(big, chunk)
+    assert hit and len(splits) > 2  # published by the decode
+    warm = read(big)
+    assert_one_decode(warm)
+    assert _partitions(warm) == min(len(splits), parallelism)
+    assert _sorted_rows(warm) == serial(big)
+
+    want = serial(str(d))
+    assert len(want) == 120 + 3 + 5 + 40 + len(list(decode_pcap(
+        S.mixed_link_pcapng(), "ng", DecodeOptions(strict_reference=False))))
+    for _cold_then_warm in range(2):
+        df = read(str(d))
+        assert_one_decode(df)
+        assert _sorted_rows(df) == want
+    assert _partitions(df) == min(len(splits) + 4, parallelism)
+    for name in ("bad.pcap", "sib.pcap.gz", "ng.pcapng"):
+        assert (d / name).stat().st_size > chunk
+        assert lookup_capture_splits(str(d / name), chunk) == (True, None), name
+    # not larger than chunk_bytes: never looked up, nothing published
+    assert lookup_capture_splits(str(d / "small.pcap"), chunk) == (False, None)
+
+
+def test_whole_file_decode_publishes_the_index(tmp_path):
+    """``stream_file_chunks(publish_index=True)`` publishes what the
+    framing walk saw once the stream is read to its end: the chunks of
+    a raw capture as its split index (a record-aligned cover whose
+    splits decode to the serial rows), the unsplittable marker for a
+    compressed or pcapng capture, for an incl_len past the sanity
+    bound and for a stream that breaks — and nothing for a read that
+    stops early."""
+    from hadoop_pcap_spark.pcap.chunked import lookup_capture_splits, read_split
+
+    data = _pcap_many(80, payload_size=60)[:-9]  # truncated tail
+    raw = tmp_path / "raw.pcap"
+    raw.write_bytes(data)
+    it = stream_file_chunks([str(raw)], 700, publish_index=True)
+    next(it)
+    it.close()
+    assert lookup_capture_splits(str(raw), 700) == (False, None)
+    chunks = list(stream_file_chunks([str(raw)], 700, publish_index=True))
+    hit, splits = lookup_capture_splits(str(raw), 700)
+    assert hit and len(splits) == len(chunks) > 2
+    assert splits[0][0] == GLOBAL_HEADER_SIZE
+    assert splits[-1][0] + splits[-1][1] == len(data)
+    rows = []
+    for off, n_bytes, first in splits:
+        part = list(decode_pcap(read_split(str(raw), off, n_bytes), name="raw"))
+        rows += [dict(r, pkt_no=r["pkt_no"] + first - 1) for r in part]
+    assert rows == list(decode_pcap(data, name="raw"))
+
+    marked = {
+        "a.pcap.gz": gzip.compress(_pcap_many(30)),
+        "m.pcapng": S.mixed_link_pcapng(),
+        "bad.pcap": _corrupt_incl_len(_pcap_many(30)),
+    }
+    for name, blob in marked.items():
+        (tmp_path / name).write_bytes(blob)
+        list(stream_file_chunks([str(tmp_path / name)], 256, publish_index=True))
+        assert lookup_capture_splits(str(tmp_path / name), 256) == (True, None), name
+
+    broken = tmp_path / "broken.pcap.gz"
+    broken.write_bytes(gzip.compress(_pcap_many(30))[:-40])
+    with pytest.raises(OSError):
+        list(stream_file_chunks([str(broken)], 256, publish_index=True))
+    assert lookup_capture_splits(str(broken), 256) == (True, None)
+
+    # a capture that grows during the walk publishes nothing: the walk
+    # no longer ends at the size of the identity it started from
+    from hadoop_pcap_spark.pcap.chunked import _INDEX_PREFIX, _index_ident
+    from hadoop_pcap_spark.staging import keyed_tmp_path
+
+    grow = tmp_path / "grow.pcap"
+    grow.write_bytes(_pcap_many(30))
+    before = keyed_tmp_path(_INDEX_PREFIX, _index_ident(str(grow), 256))
+    it = stream_file_chunks([str(grow)], 256, publish_index=True)
+    next(it)
+    with open(grow, "ab") as f:
+        f.write(_pcap_many(5)[GLOBAL_HEADER_SIZE:])
+    list(it)
+    assert not os.path.exists(before)
+    assert lookup_capture_splits(str(grow), 256) == (False, None)
 
 
 def test_lookup_capture_splits_is_walk_free(tmp_path):
@@ -866,15 +1022,6 @@ def test_slice_balanced_evens_out_parallelize_slices():
     assert _listed_path("hdfs://nn:8020/c/d.pcap") == "hdfs://nn:8020/c/d.pcap"
 
 
-def test_split_read_requires_arrow_and_streamed(spark, tmp_path):
-    from hadoop_pcap_spark.sources import read_pcap
-
-    p = tmp_path / "x.pcap"
-    p.write_bytes(_pcap_many(3))
-    with pytest.raises(ValueError, match="seekable"):
-        read_pcap(spark, str(p), chunk_bytes=0, split_single_files=True)
-
-
 def test_index_split_cache_hits_and_invalidates(tmp_path):
     from hadoop_pcap_spark.pcap.chunked import (
         index_capture_splits,
@@ -899,24 +1046,6 @@ def test_index_split_cache_hits_and_invalidates(tmp_path):
     g.write_bytes(gzip.compress(_pcap_many(5)))
     assert index_capture_splits_cached(str(g)) is None
     assert index_capture_splits_cached(str(g)) is None
-
-
-def test_split_read_shuffles_metadata_only(spark, tmp_path):
-    """The split plan's ONE exchange moves 4-column split descriptors
-    (~40 B/row), never capture bytes: decode sits ABOVE the exchange,
-    the index pass below it."""
-    from hadoop_pcap_spark.sources import read_pcap
-
-    p = tmp_path / "m.pcap"
-    p.write_bytes(_pcap_many(20))
-    df = read_pcap(spark, str(p), split_single_files=True, chunk_bytes=512)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1
-    assert "first_pkt" in plan  # descriptor schema reaches the exchange
-    first_map = plan.find("MapInArrow")
-    second_map = plan.find("MapInArrow", first_map + 1)
-    exch = plan.find("Exchange")
-    assert first_map < exch < second_map, plan
 
 
 def test_index_splits_big_endian(tmp_path):

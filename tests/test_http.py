@@ -245,6 +245,24 @@ def test_split_anywhere_emits_what_the_whole_stream_does(data):
         assert live + flushed == whole
 
 
+def test_never_http_rules_out_only_what_cannot_open_as_http():
+    """A direction is ruled out only when no bytes could make it open
+    with a method token or ``HTTP/1.``: a proper prefix of one (what a
+    segment boundary can leave) still may."""
+    from hadoop_pcap_spark.operators.http import _METHODS, never_http
+
+    for maybe in (b"", b"G", b"GE", b"GET", b"GET ", b"GET /x HTTP/1.1\r\n",
+                  b"H", b"HTTP/", b"HTTP/1.", b"HTTP/1.1 200 OK", b"CONN",
+                  b"OPTIONS * HTTP/1.1"):
+        assert not never_http(maybe), maybe
+    for tok in _METHODS:
+        for i in range(1, len(tok) + 1):
+            assert not never_http(tok[:i]), tok[:i]
+    for junk in (b"\x16\x03\x01\x00\xa5", b"SSH-2.0-OpenSSH", b"get / HTTP/1.1",
+                 b"HTTP/2 200", b"GETX", b" GET /", b"\r\n"):
+        assert never_http(junk), junk
+
+
 def test_desynchronized_tells_desync_from_incomplete():
     """The live parsers return ``([], 0)`` both for a message still
     waiting for bytes and for a stream no bytes can resynchronize;

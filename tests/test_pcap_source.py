@@ -259,12 +259,12 @@ def test_datasource_pruning_reaches_decoder_opts():
     kernels skip md5/DNS/payload work (not compute-then-drop)."""
     from hadoop_pcap_spark.pcap.decode import DecodeOptions
     from hadoop_pcap_spark.pcap.decode_np import decode_pcap_columnar
-    from hadoop_pcap_spark.sources.datasource import _decode_opts
+    from hadoop_pcap_spark.sources.datasource import _options_plan
     from hadoop_pcap_spark.sources.pcap_source import packet_schema
 
-    assert _decode_opts({"decoder": "dns"}, packet_schema("dns")).wanted is None
+    assert _options_plan({"decoder": "dns"}, packet_schema("dns"))[1].wanted is None
     sub = packet_schema("dns", ["file", "ts", "src"])
-    opts = _decode_opts({"decoder": "dns", "calculatemd5": "true"}, sub)
+    opts = _options_plan({"decoder": "dns", "calculatemd5": "true"}, sub)[1]
     assert opts.wanted == {"file", "ts", "src"}
     # and the kernel observably skips the pruned work
     res = decode_pcap_columnar(
@@ -275,6 +275,38 @@ def test_datasource_pruning_reaches_decoder_opts():
     assert res.emit_payload is False  # payload never gathered
     assert all(v is None for v in res.objects["md5"])  # md5 never hashed
     assert all(v is None for v in res.objects["dns_qname"])  # DNS not parsed
+
+
+def test_datasource_options_share_read_pcaps_decode_policy():
+    """``format("pcap")`` options go through read_pcap's policy
+    (``_decode_plan``), so an opt-in column outside the default schema
+    (``tcp_seq``) reaches the decoder as ``wanted`` — the DataSource's
+    own derivation left ``wanted`` None and rendered it NULL."""
+    import pyarrow as pa
+
+    from hadoop_pcap_spark.sources.datasource import _options_plan
+    from hadoop_pcap_spark.sources.pcap_source import (
+        _decode_plan,
+        decode_files_to_arrow_columnar,
+        packet_schema,
+    )
+
+    schema, opts = _options_plan({"columns": "pkt_no, tcp_seq", "strictreference": "false"})
+    assert (schema, opts) == _decode_plan(
+        "ip", ["pkt_no", "tcp_seq"], False, False, True, False, "FAILFAST"
+    )
+    assert schema.fieldNames() == ["pkt_no", "tcp_seq"]
+    assert opts.wanted == {"pkt_no", "tcp_seq"}
+    data = S.global_header() + S.record(
+        1, S.ethernet(S.ipv4(S.tcp(b"x", 1, 2), 6, "10.0.0.1", "10.0.0.2"))
+    )
+    got = pa.Table.from_batches(
+        decode_files_to_arrow_columnar([("t", data)], schema, opts)
+    )
+    assert got.column("tcp_seq").null_count == 0
+    # the full default schema stays an unpruned decode
+    _full, full_opts = _options_plan({"decoder": "dns"}, packet_schema("dns", keep_frame=True))
+    assert full_opts.wanted is None and full_opts.keep_frame
 
 
 def test_sql_front_door(spark):

@@ -1753,3 +1753,102 @@ def test_streaming_http_objects_drops_a_desynchronized_direction(spark, tmp_path
         r = got[(t["client"], t["server_port"], t["obj_no"])]
         assert (r.method, r.url, r.status, r.body_len) == (
             t["method"], t["url"], t["status"], t["body_len"]), t
+
+
+def test_streaming_http_objects_rules_out_a_non_http_connection(spark, tmp_path):
+    """A TCP connection whose first bytes can open no HTTP message (a
+    TLS-like exchange) is ruled out in the micro-batch that shows it
+    and drained after: the ``statestore`` reader shows 0 residual
+    bytes after each of 3 batches (the connection sends 1,003 + 2,003
+    bytes per batch).  A connection that so far sent only a proper
+    prefix of a method token or of ``HTTP/1.`` is kept and, once
+    complete, emits; like batch ``http_objects``, the TLS-like
+    connection yields no rows, and the rotated fixture's rows are
+    unchanged."""
+    import os as _os
+
+    from hadoop_pcap_spark.operators.http import http_objects
+    from hadoop_pcap_spark.pcap import synth as S
+    from hadoop_pcap_spark.sources import read_pcap, read_pcap_stream
+    from hadoop_pcap_spark.streaming.stream import streaming_http_objects
+
+    tls_cli, tls_srv = "10.8.0.1", "10.8.0.2"
+    req = b"GET /p HTTP/1.1\r\nHost: d.example\r\n\r\n"
+    resp = b"HTTP/1.1 200 OK\r\nContent-Length: 2\r\n\r\nok"
+    # (client, server, client port) -> per batch (client bytes, server bytes)
+    conns = {
+        (tls_cli, tls_srv, 42001): [
+            (b"\x16\x03\x01" + bytes(1000), b"\x16\x03\x03" + bytes(2000)),
+            (b"\x17\x03\x03" + bytes(1000), b"\x17\x03\x03" + bytes(2000)),
+            (b"\x17\x03\x03" + bytes(1000), b"\x17\x03\x03" + bytes(2000)),
+        ],
+        ("10.8.0.3", "10.8.0.4", 42002): [
+            (req[:2], resp[:5]),  # "GE" and "HTTP/": prefixes, not ruled out
+            (req[2:], resp[5:]),
+            (b"", b""),
+        ],
+    }
+    d = tmp_path / "rot"
+    d.mkdir()
+    for fi, blob in enumerate(S.http_rotated_pcaps(3)):
+        recs = []
+        for (cli, srv, cport), batches in conns.items():
+            q, r = batches[fi]
+            for k, (payload, src, dst, sp, dp) in enumerate(
+                [(q, cli, srv, cport, 443), (r, srv, cli, 443, cport)]
+            ):
+                if payload:
+                    frame = S.ethernet(S.ipv4(S.tcp(payload, sp, dp), 6, src, dst))
+                    recs.append(S.record(1700000000 + fi * 10 + k, frame))
+        p = d / f"rot{fi}.pcap"
+        p.write_bytes(blob + b"".join(recs))
+        t = 1700000000 + fi * 10
+        _os.utime(p, (t, t))
+    cols = ["file", "src", "dst", "src_port", "dst_port", "protocol", "ts",
+            "pkt_no", "payload"]
+    pkts = read_pcap_stream(
+        spark, str(d), strict_reference=False, max_files_per_trigger=1,
+        columns=cols,
+    )
+    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    q = (
+        streaming_http_objects(pkts)
+        .writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+    for batch_id in range(3):
+        state = spark.read.format("statestore").option("batchId", batch_id).load(ckpt)
+        tls = [r.value.groupState for r in state.collect()
+               if set(r.key.conn.split("|")[::2]) == {tls_cli, tls_srv}]
+        assert len(tls) == 1, batch_id
+        g = tls[0]
+        assert g.client_is_a == -1, batch_id
+        assert len(g.a_resid or b"") + len(g.b_resid or b"") == 0, batch_id
+
+    rows = spark.read.parquet(sink).collect()
+    ours = {c for c, _s, _p in conns}
+    fields = ["client", "server", "server_port", "obj_no", "method", "url",
+              "status", "content_type", "content_encoding", "chunked",
+              "body_len", "body"]
+    whole = http_objects(read_pcap(spark, str(d), strict_reference=False, columns=cols))
+    assert [r for r in rows if r.client == tls_cli] == []
+    assert [r for r in whole.collect() if r.client == tls_cli] == []
+    # the batch operator keys connections by file too, so only the live
+    # operator sees the prefixed connection, which spans two files
+    live = [tuple(r[f] for f in fields) for r in rows if r.client in ours]
+    assert [(r[0], r[4], r[5], r[6], r[-1]) for r in live] == [
+        ("10.8.0.3", "GET", "http://d.example/p", 200, b"ok")]
+    truth = S.http_streaming_truth()
+    others = [r for r in rows if r.client not in ours]
+    assert len(others) == len(truth)
+    got = {(r.client, r.server_port, r.obj_no): r for r in others}
+    for t in truth:
+        r = got[(t["client"], t["server_port"], t["obj_no"])]
+        assert (r.method, r.url, r.status, r.body_len) == (
+            t["method"], t["url"], t["status"], t["body_len"]), t
