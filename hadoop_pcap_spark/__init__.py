@@ -10,7 +10,7 @@ text analysis, multimodal columns) a 100 TB deployment needs.
 
 Layout:
   pcap/       pure-Python decode kernel (no Spark dependency)
-  sources/    Spark sources: read_pcap() on binaryFile, DataSource V2
+  sources/    Spark sources: read_pcap(), the format("pcap") DataSource V2
   operators/  dedup, similarity, as-of join, top-k
   functions/  column-function libraries (text analysis, net helpers)
   plans/      the relational parity query suite + DuckDB oracles

@@ -17,7 +17,8 @@ reference's physical property for Spark tasks:
   single record, independent of file size.
 * the split index (:func:`index_capture_splits`) — the same walk's
   chunk offsets, published by a whole-file decode as a by-product —
-  and :func:`plan_splits`, the one planner of every pcap read.
+  and :func:`list_captures` + :func:`plan_splits`, the one listing
+  and the one planner of every pcap read.
 
 Record alignment: within a chunk the framing walk
 (ts_sec,ts_usec,incl_len,orig_len @ incl_len-sized hops) finds the
@@ -37,10 +38,13 @@ normalization inside the kernels is per-record, hence per-chunk safe.
 from __future__ import annotations
 
 import bz2
+import fnmatch
 import gzip
 import io
 import lzma
 import os
+import re
+import stat
 import struct
 import zlib
 from typing import BinaryIO, Iterator
@@ -377,36 +381,86 @@ def lookup_capture_splits(
     return hit, splits
 
 
-def index_capture_splits_cached(
-    path: str, split_bytes: int = DEFAULT_CHUNK_BYTES
-) -> "list | None":
-    """:func:`index_capture_splits` behind the sidecar cache keyed by
-    the file's identity (path + size + mtime_ns + split_bytes) — the
-    explicit form of what a whole-file decode publishes as a
-    by-product: index each capture ONCE (e.g. at ingest) and every
-    later read decodes it split-parallel, the way parquet amortizes
-    footer metadata.  A file whose identity cannot be stat'd (remote
-    URI without local stat) just pays the walk each time."""
-    hit, splits = lookup_capture_splits(path, split_bytes)
-    if not hit:
-        ident = _index_ident(path, split_bytes)
-        splits = index_capture_splits(path, split_bytes)
-        if ident is not None:
-            _publish_index(path, ident, splits)
-    return splits
+_GLOB_CHARS = re.compile(r"[*?\[]")
+
+
+def list_captures(path: str) -> list:
+    """The one file listing behind every pcap read: sorted ``(path,
+    size, mtime_ns)`` of the capture files a read of ``path`` decodes,
+    sizes and mtimes taken from the listing itself.
+
+    ``path`` is a file, a directory (its top-level files; no
+    recursion) or either with a glob in its last component
+    (``/caps/*.pcap``), which matches leaf names the way Spark's
+    ``pathGlobFilter`` does.  Names starting with ``_`` or ``.``
+    (``_SUCCESS``, ``.crc``) are hidden and empty files dropped — the
+    rules Spark's file sources apply.  A local file is given by its
+    plain absolute path (``file:`` stripped), a remote file by its URI
+    (scheme and authority kept).  A path that does not exist raises
+    FileNotFoundError.  A remote root costs two requests (its info and
+    one listing), never one per file."""
+    pattern = None
+    cut = path.rfind("/") + 1
+    if _GLOB_CHARS.search(path[cut:]):
+        path, pattern = path[:cut] or ".", path[cut:]
+    remote = _filesystem_for(path)
+    if remote is None:
+        entries = _local_entries(os.path.abspath(local_path(path)))
+    else:
+        entries = _remote_entries(path, *remote)
+    out = []
+    for p, size, mtime_ns in entries:
+        name = p.rpartition("/")[2]
+        if size and not name.startswith(("_", ".")) and (
+            pattern is None or fnmatch.fnmatchcase(name, pattern)
+        ):
+            out.append((p, size, mtime_ns))
+    return sorted(out)
+
+
+def _local_entries(path: str) -> list:
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return [(path, st.st_size, st.st_mtime_ns)]
+    out = []
+    with os.scandir(path) as it:
+        for e in it:
+            if e.is_file():
+                est = e.stat()
+                out.append((e.path, est.st_size, est.st_mtime_ns))
+    return out
+
+
+def _remote_entries(path: str, fs, inner: str) -> list:
+    import pyarrow.fs as pafs
+
+    info = fs.get_file_info(inner)
+    if info.type == pafs.FileType.NotFound:
+        raise FileNotFoundError(f"Path does not exist: {path}")
+    if info.type != pafs.FileType.Directory:
+        return [(path, info.size, info.mtime_ns or 0)]
+    # listed files are rebuilt as <uri>/<name>: FileInfo.path alone
+    # drops the authority (hdfs://namenode:8020/…, abfss://container@…)
+    base = path if path.endswith("/") else path + "/"
+    return [
+        (base + fi.base_name, fi.size, fi.mtime_ns or 0)
+        for fi in fs.get_file_info(pafs.FileSelector(inner))
+        if fi.type == pafs.FileType.File
+    ]
 
 
 def plan_splits(files, chunk_bytes: int = DEFAULT_CHUNK_BYTES) -> list:
     """The one split planner behind every file-based pcap read:
-    ``(path, size)`` pairs → ``(path, offset, n_bytes, first_pkt)``
-    descriptors.  A capture larger than ``chunk_bytes`` whose split
-    index is published becomes that index's splits (range-read by
-    :func:`read_split`); every other file one whole-file descriptor
-    ``(path, -1, size, 1)`` (streamed by :func:`stream_file_chunks`,
-    which publishes a large raw capture's index).  Only files larger
-    than ``chunk_bytes`` pay the lookup's stat and JSON read."""
+    :func:`list_captures` entries → ``(path, offset, n_bytes,
+    first_pkt)`` descriptors.  A capture larger than ``chunk_bytes``
+    whose split index is published becomes that index's splits
+    (range-read by :func:`read_split`); every other file one
+    whole-file descriptor ``(path, -1, size, 1)`` (streamed by
+    :func:`stream_file_chunks`, which publishes a large raw capture's
+    index).  Only files larger than ``chunk_bytes`` pay the lookup's
+    stat and JSON read."""
     out = []
-    for path, size in files:
+    for path, size, _mtime_ns in files:
         splits = None
         if 0 < chunk_bytes < size:
             _hit, splits = lookup_capture_splits(path, chunk_bytes)
@@ -507,15 +561,3 @@ def stream_file_chunks(
             raise OSError(f"{p}: {exc}") from exc
         if ident is not None:
             _publish_index(p, ident, splits)
-
-
-def file_size(path: str) -> int:
-    try:
-        remote = _filesystem_for(path)
-        if remote is not None:
-            fs, inner = remote
-            size = fs.get_file_info(inner).size
-            return -1 if size is None else size
-        return os.path.getsize(local_path(path))
-    except OSError:
-        return -1

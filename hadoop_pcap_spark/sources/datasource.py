@@ -21,22 +21,26 @@ behavior and will flag the upstream fix).  The supported SQL entry is
 same reader — full pushdown/pruning), matching the serde-table
 workflow end to end.
 
-Partitioning: one InputPartition per split descriptor from the planner
-``read_pcap`` uses (:func:`..pcap.chunked.plan_splits`) — one per file,
-except that a capture larger than ``chunkbytes`` whose split index is
-published becomes one partition per record-aligned split (the
-reference keeps it in one task: io/PcapInputFormat.java:72-75).  A
-streaming micro-batch plans one whole-file partition per new file.
-Every partition is decoded on an executor by the decoder all pcap
-reads share (:func:`.pcap_source.decode_splits`) into Arrow
+Listing and partitioning: the one file listing
+(:func:`..pcap.chunked.list_captures` — a directory's top-level
+files, ``_``/``.`` names hidden, empty files dropped, a glob in the
+last path component matching leaf names) feeds the one planner
+(:func:`..pcap.chunked.plan_splits`): one descriptor per file, except
+that a capture larger than ``chunkbytes`` whose split index is
+published becomes its record-aligned splits (the reference keeps it in
+one task: io/PcapInputFormat.java:72-75).  A batch read packs the
+descriptors into byte-balanced partitions, the small-file packing of
+the reference's ``CombinePcapInputFormat`` (``read_pcap`` plans the
+same descriptors on the driver).  A streaming micro-batch plans one whole-file partition per
+new file.  Every partition is decoded on an executor by the decoder
+all pcap reads share (:func:`.pcap_source.decode_splits`) into Arrow
 RecordBatches.
 """
 
 from __future__ import annotations
 
-import glob
 import os
-from typing import Iterator, List
+from typing import List
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -46,54 +50,36 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from .pcap_source import _decode_plan
-
-
-def _expand_paths(path: str) -> List[str]:
-    from ..pcap.chunked import _filesystem_for, uri_scheme
-
-    remote = _filesystem_for(path) if uri_scheme(path) else None
-    if remote is not None:
-        # remote URI: recursive listing via pyarrow.fs (no glob
-        # support remotely — pass a directory or an exact key).
-        # Listed paths are rebuilt as <original-uri> + <suffix
-        # relative to its inner path>, preserving scheme AND
-        # authority (hdfs://namenode:8020/..., abfss://container@
-        # account/... — FileInfo.path alone drops the netloc).
-        import pyarrow.fs as pafs
-
-        fs, inner = remote
-        info = fs.get_file_info(inner)
-        if info.type == pafs.FileType.Directory:
-            sel = pafs.FileSelector(inner, recursive=True)
-            base = path
-            while base.endswith("/") and not base.endswith("://"):
-                base = base[:-1]
-            inner_norm = inner.rstrip("/")
-            out = []
-            for fi in fs.get_file_info(sel):
-                if fi.type != pafs.FileType.File:
-                    continue
-                suffix = fi.path[len(inner_norm):] if inner_norm else "/" + fi.path
-                if base.endswith("://"):
-                    suffix = suffix.lstrip("/")
-                out.append(base + suffix)
-            return sorted(out)
-        return [path]
-    if os.path.isdir(path):
-        out = []
-        for root, _dirs, files in os.walk(path):
-            out.extend(os.path.join(root, f) for f in files)
-        return sorted(out)
-    matches = sorted(glob.glob(path))
-    return matches if matches else [path]
+from ..pcap.chunked import list_captures, plan_splits
+from .pcap_source import _decode_plan, _slice_balanced
 
 
 class _PcapSplit(InputPartition):
-    """One split descriptor ``(path, offset, n_bytes, first_pkt)``."""
+    """One task's split descriptors, each ``(path, offset, n_bytes,
+    first_pkt)``."""
 
-    def __init__(self, *split):
-        self.split, self.path = split, split[0]
+    def __init__(self, splits: list):
+        self.splits = splits
+
+
+def _planner_cpus() -> int:
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # not on Linux
+        return os.cpu_count() or 1
+
+
+def _packed(splits: list, chunk_bytes: int) -> List[_PcapSplit]:
+    """``splits`` packed into byte-balanced partitions, the shape of
+    the reference's ``CombinePcapInputFormat``: as many as the planning
+    host has CPUs, or one per ``chunk_bytes`` of input when that is
+    more, and never more than there are descriptors.  (The planner
+    runs in a Python worker, which cannot see ``defaultParallelism``.)"""
+    n = _planner_cpus()
+    if chunk_bytes > 0:
+        n = max(n, -(-sum(s[2] for s in splits) // chunk_bytes))
+    slices = _slice_balanced([s[2] for s in splits], min(len(splits), n))
+    return [_PcapSplit([splits[i] for i in sl]) for sl in slices]
 
 
 class PcapDataSourceReader(DataSourceReader):
@@ -132,10 +118,9 @@ class PcapDataSourceReader(DataSourceReader):
                 ".option('path', …) or register a SQL view via "
                 "hadoop_pcap_spark.sql.register_packets_view instead."
             )
-        from ..pcap.chunked import file_size, plan_splits
-
-        files = [(p, file_size(p)) for p in _expand_paths(path) if self._keep_file(p)]
-        return [_PcapSplit(*d) for d in plan_splits(files, _chunk_bytes(self._options))]
+        chunk_bytes = _chunk_bytes(self._options)
+        files = [f for f in list_captures(path) if self._keep_file(f[0])]
+        return _packed(plan_splits(files, chunk_bytes), chunk_bytes)
 
     def read(self, partition: _PcapSplit):
         """Yields pyarrow RecordBatches (PySpark 4 DataSource API fast
@@ -146,8 +131,10 @@ class PcapDataSourceReader(DataSourceReader):
         and the streaming reader."""
         from .pcap_source import decode_splits
 
+        if partition is None:  # Spark's one partition for an empty listing
+            return
         yield from decode_splits(
-            [partition.split],
+            partition.splits,
             self._schema,
             _options_plan(self._options, self._schema)[1],
             _chunk_bytes(self._options),
@@ -164,11 +151,11 @@ class PcapPushdownReader(PcapDataSourceReader):
 
     def pushFilters(self, filters):
         """Absorb predicates on the ``file`` column — they prune whole
-        files before any bytes are read (the pcap analog of partition
-        pruning: one file = one partition = one distinct ``file``
-        value, so path-level evaluation is EXACT and Spark need not
-        re-apply the filter).  Everything else is returned for Spark
-        to evaluate post-decode."""
+        files from the listing before any bytes are read (the pcap
+        analog of partition pruning: every row of a file carries its
+        path as ``file``, so path-level evaluation is EXACT and Spark
+        need not re-apply the filter).  Everything else is returned
+        for Spark to evaluate post-decode."""
         from pyspark.sql.datasource import (
             EqualTo,
             In,
@@ -231,7 +218,8 @@ class PcapStreamReader(DataSourceStreamReader):
     """Live-capture streaming: each micro-batch decodes the capture
     files that appeared in the directory since the last offset — the
     'live feed = more pcap files arriving' model (SURVEY §2.4
-    streaming analogs).  The driver only lists files and plans one
+    streaming analogs).  The driver only lists files (the listing
+    every pcap read shares, whose sizes it keeps) and plans one
     whole-file :class:`_PcapSplit` per new file; executors decode them
     through :meth:`PcapDataSourceReader.read`, so ``mode`` and
     ``chunkbytes`` mean what they mean for batch ``format("pcap")``.
@@ -268,6 +256,7 @@ class PcapStreamReader(DataSourceStreamReader):
         # (Spark replays the logged batch, or calls partitions(end,
         # end) for a committed one) or commit()
         self._current = None
+        self._sizes: dict = {}
 
     def initialOffset(self) -> dict:
         return {"wm": 0, "recent": {}}
@@ -278,40 +267,16 @@ class PcapStreamReader(DataSourceStreamReader):
             return path in set(start["seen"])
         return mtime_ns < start.get("wm", 0) or path in start.get("recent", {})
 
-    def _list_files(self):
-        from ..pcap.chunked import _filesystem_for, uri_scheme
-
-        out = []
-        for p in _expand_paths(self._path):
-            remote = _filesystem_for(p) if uri_scheme(p) else None
-            if remote is not None:
-                # remote: mtime from the filesystem's file info (the
-                # same watermark semantics; object stores report
-                # upload time, which is exactly the arrival signal
-                # the offset tracks)
-                import pyarrow.fs as pafs
-
-                fs, inner = remote
-                info = fs.get_file_info(inner)
-                if info.type == pafs.FileType.File and info.mtime_ns is not None:
-                    out.append((p, info.mtime_ns))
-                continue
-            try:
-                st = os.stat(p)
-            except OSError:
-                continue
-            if os.path.isfile(p):
-                out.append((p, st.st_mtime_ns))
-        return out
-
     def latestOffset(self) -> dict:
         if self._current is None:
             self._current = self.initialOffset()
         start = self._current
-        current = self._list_files()
-        cur = dict(current)
-        new = [(p, m) for p, m in current if not self._processed(start, p, m)]
-        max_m = max((m for _, m in current), default=0)
+        listed = list_captures(self._path)
+        # sizes for the next partitions(): no per-file request
+        self._sizes = {p: size for p, size, _m in listed}
+        cur = {p: m for p, _size, m in listed}
+        new = [(p, m) for p, m in cur.items() if not self._processed(start, p, m)]
+        max_m = max(cur.values(), default=0)
         wm = max(start.get("wm", 0), max_m - self._retention_ns)
         recent = {}
         if "seen" not in start:
@@ -338,13 +303,16 @@ class PcapStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict) -> List[InputPartition]:
         if self._current is None:
             self._current = end
-        from ..pcap.chunked import file_size
-
-        return [
-            _PcapSplit(p, -1, file_size(p), 1)
-            for p in sorted(end.get("recent", {}))
-            if not self._processed(start, p, end["recent"][p])
-        ]
+        new = sorted(
+            p for p, m in end.get("recent", {}).items()
+            if not self._processed(start, p, m)
+        )
+        if any(p not in self._sizes for p in new):
+            # a restarted query replaying a logged batch
+            self._sizes = {p: size for p, size, _m in list_captures(self._path)}
+        # a file gone since it was listed keeps size -1: its read
+        # fails (FAILFAST) or skips it (PERMISSIVE)
+        return [_PcapSplit([(p, -1, self._sizes.get(p, -1), 1)]) for p in new]
 
     def commit(self, end: dict) -> None:
         if self._current is None:

@@ -12,12 +12,15 @@ PcapDeserializer.java:21-66) with two Spark-native paths:
    one ``mapInArrow`` decodes them into a fixed wide schema.
 
 2. a registered Python DataSource (``spark.read.format("pcap")`` /
-   ``CREATE TABLE ... USING pcap``) — see :mod:`.datasource`.
+   ``CREATE TABLE ... USING pcap``) — see :mod:`.datasource`; it packs
+   the same descriptors into its partitions.
 
 Every file-based read — both of these and ``read_pcap_stream``, batch
-and streaming — plans with one planner
-(:func:`..pcap.chunked.plan_splits`) and decodes with one decoder
-(:func:`decode_splits`), on one kernel,
+and streaming — lists files by one set of rules
+(:func:`..pcap.chunked.list_captures`, which matches Spark's own
+listing behind ``read_pcap_stream``) and gives the same ``file``
+values, plans with one planner (:func:`..pcap.chunked.plan_splits`)
+and decodes with one decoder (:func:`decode_splits`), on one kernel,
 :func:`decode_files_to_arrow_columnar`, which ``decode_frames``
 shares; the scalar per-packet kernel is kept only as the
 differential oracle in tests and for the dump CLI.
@@ -38,9 +41,8 @@ configured).
 from __future__ import annotations
 
 import os
+import posixpath
 from typing import Iterable, Iterator, List, Optional
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -398,15 +400,19 @@ def read_pcap(
     The reference's pluggable-reader conf
     (``net.ripe.hadoop.pcap.io.reader.class``) becomes the ``decoder``
     argument; ``calculateMD5`` becomes ``calculate_md5``.  Decode runs
-    the vectorized columnar kernel and builds Arrow batches directly
-    (mapInArrow).
+    the vectorized columnar kernel and builds Arrow batches directly.
 
-    Plan: the driver lists the files (binaryFile's listing, so
-    ``pathGlobFilter`` and the ``file`` values are Spark's), plans
-    split descriptors (:func:`..pcap.chunked.plan_splits`) into a
-    ``LocalTableScan`` of ``min(n_descriptors, defaultParallelism)``
-    byte-balanced partitions, and ONE ``mapInArrow`` decodes them
-    (:func:`decode_splits`) — no exchange, whatever the files.
+    Plan: the driver lists the files with the one listing every pcap
+    read shares (:func:`..pcap.chunked.list_captures`: top-level
+    files, ``_``/``.`` names hidden, empty files dropped; ``path_glob``
+    matches leaf names; ``file`` is a local file's plain path or a
+    remote file's URI), plans split descriptors
+    (:func:`..pcap.chunked.plan_splits`) into a ``LocalTableScan`` of
+    ``min(n_descriptors, defaultParallelism)`` byte-balanced
+    partitions, and ONE ``mapInArrow`` decodes them
+    (:func:`decode_splits`) — no exchange, whatever the files.  It
+    reads what ``spark.read.format("pcap")`` reads, without the Python
+    planner workers a Python DataSource starts in every session.
 
     Splitting needs no knob and beats the reference's whole-file
     constraint (io/PcapInputFormat.java:72-75): a cold capture larger
@@ -431,7 +437,7 @@ def read_pcap(
 
     from ..pcap.chunked import (
         DEFAULT_CHUNK_BYTES,
-        file_size,
+        list_captures,
         plan_splits,
         supports_scheme,
     )
@@ -447,22 +453,15 @@ def read_pcap(
         decoder, columns, keep_frame,
         calculate_md5, keep_payload, strict_reference, mode,
     )
-    reader = spark.read.format("binaryFile")
-    if path_glob:
-        reader = reader.option("pathGlobFilter", path_glob)
-    files = []
-    for uri in reader.load(path).inputFiles():
-        p = _listed_path(uri)
-        size = file_size(p)
-        if size:  # an empty file decodes to no rows
-            files.append((p, size))
+    files = list_captures(posixpath.join(path, path_glob) if path_glob else path)
     splits = plan_splits(files, chunk_bytes)
-    order = _slice_balanced(
+    slices = _slice_balanced(
         [n_bytes for _p, _off, n_bytes, _first in splits],
         max(1, min(len(splits), spark.sparkContext.defaultParallelism)),
     )
+    names = SPLIT_SCHEMA.fieldNames()
     descriptors = pa.Table.from_pylist(
-        [dict(zip(SPLIT_SCHEMA.fieldNames(), splits[i])) for i in order],
+        [dict(zip(names, splits[i])) for sl in slices for i in sl],
         schema=to_arrow_schema(SPLIT_SCHEMA),
     )
     return spark.createDataFrame(descriptors, SPLIT_SCHEMA).mapInArrow(
@@ -517,12 +516,15 @@ def decode_splits(
 
 def _split_decoder(schema, opts, chunk_bytes: int):
     """:func:`decode_splits` as a ``mapInArrow`` function over
-    :data:`SPLIT_SCHEMA` rows."""
+    :data:`SPLIT_SCHEMA` rows.  binaryFile's ``file:/x/a.pcap`` paths
+    (``read_pcap_stream``) become the plain path every door gives."""
+    from ..pcap.chunked import local_path
 
     def decode(batches):
         for rb in batches:
+            paths, *rest = (c.to_pylist() for c in rb.columns)
             yield from decode_splits(
-                zip(*(c.to_pylist() for c in rb.columns)), schema, opts, chunk_bytes
+                zip(map(local_path, paths), *rest), schema, opts, chunk_bytes
             )
 
     return decode
@@ -634,11 +636,17 @@ def read_pcap_stream(
     here file listing and offsets ride Spark's own binaryFile
     FileStreamSource (checkpointed listing, maxFilesPerTrigger,
     cleanSource options all inherited), there a watermark-on-mtime
-    offset the source keeps itself.
+    offset the source keeps itself.  This door stays on
+    FileStreamSource because Spark 4.1's Python
+    ``DataSourceStreamReader`` has no read limit, so only here does
+    ``max_files_per_trigger`` bound an ``availableNow`` batch.  Both
+    list what batch reads list (top-level files, ``_``/``.`` names
+    hidden, empty files skipped) and give the same ``file`` values.
 
     Mechanics: the ``binaryFile`` file STREAM discovers newly landed
-    files per micro-batch; its ``path`` and ``length`` columns become
-    whole-file descriptors (never ``content``), so each task streams
+    files per micro-batch; its ``path`` (``file:`` stripped) and
+    ``length`` columns become whole-file descriptors (never
+    ``content``), so each task streams
     its file through the same record-aligned chunked feed as the
     batch reader (O(1) memory, decompression included) — the decode
     is literally shared (:func:`decode_splits`).
@@ -686,24 +694,13 @@ def read_pcap_stream(
     return files.mapInArrow(_split_decoder(schema, opts, chunk_bytes), schema)
 
 
-def _listed_path(uri: str) -> str:
-    """A ``DataFrame.inputFiles()`` URI (``file:///x/a%20b.pcap``) in
-    the Hadoop ``Path.toString`` form binaryFile writes to its
-    ``path`` column (``file:/x/a b.pcap``), so driver-planned
-    descriptors carry the ``file`` value binaryFile's listing gives."""
-    from urllib.parse import unquote, urlsplit
-
-    u = urlsplit(uri)
-    auth = f"//{unquote(u.netloc)}" if u.netloc else ""
-    return f"{u.scheme}:{auth}{unquote(u.path)}" if u.scheme else unquote(uri)
-
-
 def _slice_balanced(weights: list, n_slices: int) -> list:
-    """Row order (indices into ``weights``) under which the contiguous
-    slices Spark's ``parallelize`` cuts — the LocalTableScan's
-    partitions — carry near-equal weight: heaviest row first, into
-    the lightest slice that still has room.  Slice lengths follow
-    ``ParallelCollectionRDD.slice``."""
+    """``n_slices`` lists of indices into ``weights``, with counts at
+    most one apart and near-equal weight: heaviest first, into the
+    lightest slice that still has room.  The counts follow
+    ``ParallelCollectionRDD.slice``, so ``read_pcap``'s
+    ``LocalTableScan`` cuts its rows along these slices; the DataSource
+    packs its partitions with the same function."""
     n = len(weights)
     room = [(i + 1) * n // n_slices - i * n // n_slices for i in range(n_slices)]
     slices: list = [[] for _ in range(n_slices)]
@@ -713,7 +710,7 @@ def _slice_balanced(weights: list, n_slices: int) -> list:
         slices[j].append(i)
         room[j] -= 1
         load[j] += weights[i]
-    return [i for sl in slices for i in sl]
+    return slices
 
 
 def write_packets_parquet(
@@ -796,6 +793,11 @@ def write_pcap(
     def write_partition(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import struct as _struct
         import tempfile as _tempfile
+
+        # imported here, not by the module: every pcap DataSource
+        # planner worker imports this module, and pandas is ~0.4 s of
+        # each one's start-up
+        import pandas as pd
 
         fh, tmp, final, n_rec = None, None, None, 0
         for pdf in it:

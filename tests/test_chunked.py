@@ -21,6 +21,7 @@ import pytest
 
 from hadoop_pcap_spark.pcap import synth as S
 from hadoop_pcap_spark.pcap.chunked import (
+    DEFAULT_CHUNK_BYTES,
     GLOBAL_HEADER_SIZE,
     RECORD_HEADER_SIZE,
     iter_capture_chunks,
@@ -338,15 +339,18 @@ def test_batch_ranges_single_oversized_payload_raises(monkeypatch):
 @pytest.mark.skipif(
     shutil.disk_usage("/tmp").free < 8 * 2**30, reason="needs 8 GiB free disk"
 )
-def test_over_2gib_capture_bounded_memory(tmp_path):
+def test_over_2gib_capture_bounded_memory(tmp_path, request):
     """A 2.2 GiB capture (binaryFile's content path would hard-fail at
     2 GiB) decodes via the chunked feed in a fresh subprocess whose
-    peak RSS stays far below the file size."""
+    peak RSS stays far below the file size.  The capture is deleted
+    when the test ends, pass or fail: pytest keeps the tmp_path trees
+    of the last three runs."""
     payload = bytes(range(256)) * 16  # 4 KiB
     frame = S.ethernet(S.ipv4(S.udp(payload, 5353, 53), 17, "10.1.1.1", "10.2.2.2"))
     rec = S.record(1317993942, frame, ts_usec=1)
     n_pkts = (2200 * 2**20) // len(rec) + 1
     p = tmp_path / "big.pcap"
+    request.addfinalizer(lambda: p.unlink(missing_ok=True))
     with open(p, "wb") as f:
         f.write(S.global_header())
         one_mb = rec * max(1, (1 << 20) // len(rec))
@@ -436,7 +440,8 @@ def test_remote_uri_streams_record_aligned_chunks(fake_remote):
     remote = list(C.stream_file_chunks(["rmt://cap.pcap"], 1 << 12))
     assert [c for _p, c in local] == [c for _p, c in remote]
     assert len(remote) > 1  # actually chunked, not one blob
-    assert C.file_size("rmt://cap.pcap") == len(data)
+    [(path, size, mtime_ns)] = C.list_captures("rmt://cap.pcap")
+    assert (path, size) == ("rmt://cap.pcap", len(data)) and mtime_ns > 0
 
 
 def test_remote_uri_decodes_identically(fake_remote):
@@ -469,13 +474,66 @@ def test_remote_gzip_streams_decompressed(fake_remote):
 
 
 def test_remote_directory_listing(fake_remote, monkeypatch):
+    """A remote directory lists like a local one (top-level files only,
+    no recursion into ``sub/``), with the root URI kept in each path."""
     (fake_remote / "a.pcap").write_bytes(_pcap_many(4))
     (fake_remote / "sub").mkdir()
     (fake_remote / "sub" / "b.pcap").write_bytes(_pcap_many(4))
-    from hadoop_pcap_spark.sources.datasource import _expand_paths
+    from hadoop_pcap_spark.pcap.chunked import list_captures
 
-    got = _expand_paths("rmt://")
-    assert [p.split("://")[1] for p in got] == ["a.pcap", "sub/b.pcap"]
+    a_size = (fake_remote / "a.pcap").stat().st_size
+    got = list_captures("rmt://")
+    assert [(p, size) for p, size, _m in got] == [("rmt://a.pcap", a_size)]
+    assert [p for p, _s, _m in list_captures("rmt://sub/")] == ["rmt://sub/b.pcap"]
+    assert [p for p, _s, _m in list_captures("rmt://sub")] == ["rmt://sub/b.pcap"]
+    assert list_captures("rmt://*.pcapng") == []
+    with pytest.raises(FileNotFoundError):
+        list_captures("rmt://absent")
+
+
+def test_remote_planning_lists_once(fake_remote, monkeypatch):
+    """Planning a remote read costs one info request on the root and
+    one listing, never a request per file: the batch reader's
+    partitions and the streaming reader's offsets and partitions take
+    sizes and mtimes from the listing."""
+    import pyarrow.fs as pafs
+
+    from hadoop_pcap_spark.pcap import chunked as C
+    from hadoop_pcap_spark.sources.datasource import (
+        PcapDataSourceReader,
+        PcapStreamReader,
+    )
+    from hadoop_pcap_spark.sources.pcap_source import packet_schema
+
+    names = ["a.pcap", "b.pcap", "c.pcap"]
+    for n, name in enumerate(names):
+        (fake_remote / name).write_bytes(_pcap_many(4 + n))
+    sizes = {f"rmt://{name}": (fake_remote / name).stat().st_size for name in names}
+    fs = pafs.SubTreeFileSystem(str(fake_remote), pafs.LocalFileSystem())
+    calls = []
+
+    class CountingFileSystem:
+        def get_file_info(self, what):
+            calls.append("listing" if isinstance(what, pafs.FileSelector) else "info")
+            return fs.get_file_info(what)
+
+    def counting(path):
+        return (CountingFileSystem(), path[len("rmt://"):]) if path.startswith("rmt://") else None
+
+    monkeypatch.setattr(C, "_filesystem_for", counting)
+    schema = packet_schema("ip")
+    parts = PcapDataSourceReader(schema, {"path": "rmt://"}).partitions()
+    got = sorted(split for part in parts for split in part.splits)
+    assert got == [(p, -1, size, 1) for p, size in sorted(sizes.items())]
+    assert calls == ["info", "listing"]
+
+    calls.clear()
+    rdr = PcapStreamReader(schema, {"path": "rmt://"})
+    start = rdr.initialOffset()
+    end = rdr.latestOffset()
+    got = [part.splits for part in rdr.partitions(start, end)]
+    assert got == [[(p, -1, size, 1)] for p, size in sorted(sizes.items())]
+    assert calls == ["info", "listing"]
 
 
 def test_chunk_bytes_zero_yields_whole_stream():
@@ -772,8 +830,8 @@ def test_split_read_warm_plans_splits_on_driver(spark, tmp_path):
     LocalTableScan, with no exchange; once the index cache is warm it
     runs min(n_splits, defaultParallelism) tasks — and the same rows
     as the serial read, truncated tail and gz neighbour included.  The
-    space in the file name pins that driver-listed paths match
-    binaryFile's ``path`` column."""
+    space in the file name pins that listed paths are used verbatim,
+    for the ``file`` column and the index lookup alike."""
     from hadoop_pcap_spark.pcap.chunked import lookup_capture_splits
     from hadoop_pcap_spark.sources import read_pcap
 
@@ -977,12 +1035,13 @@ def test_whole_file_decode_publishes_the_index(tmp_path):
 
 def test_lookup_capture_splits_is_walk_free(tmp_path):
     """The driver-side lookup never walks and never creates the cache
-    dir on a miss; it hits once the walk-and-publish wrapper ran, and
-    reports a cached unsplittable file as a hit with ``None``."""
+    dir on a miss; it hits once a whole-file decode published the
+    index, and reports a cached unsplittable file as a hit with
+    ``None``."""
     from hadoop_pcap_spark.pcap.chunked import (
         _INDEX_PREFIX,
         _index_ident,
-        index_capture_splits_cached,
+        index_capture_splits,
         lookup_capture_splits,
     )
     from hadoop_pcap_spark.staging import keyed_tmp_path
@@ -992,8 +1051,9 @@ def test_lookup_capture_splits_is_walk_free(tmp_path):
     cache_dir = keyed_tmp_path(_INDEX_PREFIX, _index_ident(str(p), 400))
     assert lookup_capture_splits(str(p), 400) == (False, None)
     assert not os.path.exists(cache_dir)
-    splits = index_capture_splits_cached(str(p), 400)
+    list(stream_file_chunks([str(p)], 400, publish_index=True))
     assert os.path.isdir(cache_dir)
+    splits = index_capture_splits(str(p), 400)
     assert lookup_capture_splits(str(p), 400) == (True, splits)
     assert lookup_capture_splits(f"file://{p}", 400) == (True, splits)
     assert lookup_capture_splits(str(p), 401) == (False, None)  # other size
@@ -1003,49 +1063,63 @@ def test_lookup_capture_splits_is_walk_free(tmp_path):
     g = tmp_path / "l.pcap.gz"
     g.write_bytes(gzip.compress(_pcap_many(5)))
     assert lookup_capture_splits(str(g)) == (False, None)
-    assert index_capture_splits_cached(str(g)) is None
+    list(stream_file_chunks([str(g)], DEFAULT_CHUNK_BYTES, publish_index=True))
     assert lookup_capture_splits(str(g)) == (True, None)
 
 
 def test_slice_balanced_evens_out_parallelize_slices():
-    """Driver-planned descriptors are ordered so the contiguous slices
-    a LocalTableScan cuts carry near-equal bytes: two big splits that
-    arrive adjacent do not share one task."""
-    from hadoop_pcap_spark.sources.pcap_source import _listed_path, _slice_balanced
+    """Split descriptors are sliced into near-equal bytes and counts
+    (read_pcap's LocalTableScan slices, the DataSource's partitions):
+    two big splits do not share one task, and each slice gets its
+    share of the small ones."""
+    from hadoop_pcap_spark.sources.pcap_source import _slice_balanced
 
     weights = [1, 1, 1, 1, 1, 1, 100, 100]
-    order = _slice_balanced(weights, 4)
-    assert sorted(order) == list(range(8))
-    loads = [sum(weights[i] for i in order[k * 2 : k * 2 + 2]) for k in range(4)]
-    assert max(loads) == 101
-    assert _listed_path("file:///t/a%20b%2520.pcap") == "file:/t/a b%20.pcap"
-    assert _listed_path("hdfs://nn:8020/c/d.pcap") == "hdfs://nn:8020/c/d.pcap"
+    slices = _slice_balanced(weights, 4)
+    assert sorted(i for sl in slices for i in sl) == list(range(8))
+    assert [len(sl) for sl in slices] == [2, 2, 2, 2]
+    assert max(sum(weights[i] for i in sl) for sl in slices) == 101
+    assert _slice_balanced([], 0) == []
 
 
 def test_index_split_cache_hits_and_invalidates(tmp_path):
+    """What a whole-file decode publishes (``stream_file_chunks(...,
+    publish_index=True)``) is what the walk-free lookup returns, keyed
+    by file identity and split size: another split size or a rewrite
+    misses instead of returning stale splits."""
     from hadoop_pcap_spark.pcap.chunked import (
         index_capture_splits,
-        index_capture_splits_cached,
+        lookup_capture_splits,
     )
+
+    def publish(path, split_bytes):
+        list(stream_file_chunks([str(path)], split_bytes, publish_index=True))
 
     p = tmp_path / "c.pcap"
     p.write_bytes(_pcap_many(30))
-    first = index_capture_splits_cached(str(p), split_bytes=400)
-    assert first == index_capture_splits(str(p), split_bytes=400)
-    # cache hit returns the same splits
-    assert index_capture_splits_cached(str(p), split_bytes=400) == first
+    assert lookup_capture_splits(str(p), 400) == (False, None)
+    publish(p, 400)
+    first = index_capture_splits(str(p), split_bytes=400)
+    # a hit returns the splits the framing walk computes
+    assert lookup_capture_splits(str(p), 400) == (True, first)
     # different split size → different cache entry, not a stale hit
-    assert index_capture_splits_cached(str(p), split_bytes=10**9) != first
-    # rewrite (new size) → identity changes → recomputed, not stale
+    assert lookup_capture_splits(str(p), 10**9) == (False, None)
+    publish(p, 10**9)
+    hit, whole = lookup_capture_splits(str(p), 10**9)
+    assert hit and whole != first
+    # rewrite (new size) → identity changes → a miss, then republished
     p.write_bytes(_pcap_many(31))
-    again = index_capture_splits_cached(str(p), split_bytes=400)
-    assert again == index_capture_splits(str(p), split_bytes=400)
+    assert lookup_capture_splits(str(p), 400) == (False, None)
+    publish(p, 400)
+    hit, again = lookup_capture_splits(str(p), 400)
+    assert hit and again == index_capture_splits(str(p), split_bytes=400)
     assert sum(n for _, n, _ in again) != sum(n for _, n, _ in first)
     # unsplittable marker is cached too
     g = tmp_path / "c.pcap.gz"
     g.write_bytes(gzip.compress(_pcap_many(5)))
-    assert index_capture_splits_cached(str(g)) is None
-    assert index_capture_splits_cached(str(g)) is None
+    assert lookup_capture_splits(str(g)) == (False, None)
+    publish(g, DEFAULT_CHUNK_BYTES)
+    assert lookup_capture_splits(str(g)) == (True, None)
 
 
 def test_index_splits_big_endian(tmp_path):

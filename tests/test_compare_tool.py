@@ -12,9 +12,11 @@ moves the sum.
 from __future__ import annotations
 
 import os
+import subprocess
 import sys
 
 import duckdb
+import pytest
 
 sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
@@ -107,3 +109,22 @@ def test_hazard_type_detection():
     good = "SELECT CAST(sum(x) AS BIGINT) AS s FROM (VALUES (1),(2)) t(x)"
     assert oracle_type_hazards(con, bad) == [("s", "HUGEINT")]
     assert oracle_type_hazards(con, good) == []
+
+
+def test_only_refuses_names_of_no_query():
+    """``--only`` with a name that matches no registered query exits
+    non-zero and names every such entry, before any query runs: a
+    misspelt name must not drop its query from a gate silently."""
+    sf = os.environ.get("SPARK_GRAFT_SF_SMOKE", "/root/testdata/sf0.001")
+    if not os.path.isdir(sf):
+        pytest.skip(f"fixture corpus not found at {sf}")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, os.path.join(repo, "tools", "compare_oracle.py"),
+         "--sf", sf, "--only", "pcap_dedup,pcap_port_count,zz_absent"],
+        capture_output=True, text=True, cwd=repo, timeout=600,
+    )
+    assert out.returncode != 0
+    assert "pcap_dedup" in out.stderr and "zz_absent" in out.stderr
+    assert "pcap_port_count" not in out.stderr
+    assert "MATCH" not in out.stdout

@@ -175,6 +175,10 @@ def test_engines_identical(spark, pcap_dir):
         assert got == want
 
 
+def _planned_paths(reader) -> list:
+    return sorted(split[0] for part in reader.partitions() for split in part.splits)
+
+
 def test_datasource_file_filter_pushdown(spark, pcap_dir):
     """file-column predicates prune whole files at the source (the
     pcap partition-pruning analog; double-opt-in: session conf +
@@ -190,16 +194,16 @@ def test_datasource_file_filter_pushdown(spark, pcap_dir):
     leftover = list(rdr.pushFilters([EqualTo(("file",), a_path),
                                      GreaterThan(("ts",), 0)]))
     assert [type(f).__name__ for f in leftover] == ["GreaterThan"]
-    assert [p.path for p in rdr.partitions()] == [a_path]
+    assert _planned_paths(rdr) == [a_path]
     rdr2 = PcapPushdownReader(packet_schema("ip"), {"path": pcap_dir})
     assert list(rdr2.pushFilters([StringContains(("file",), "b.pcap")])) == []
-    assert [os.path.basename(p.path) for p in rdr2.partitions()] == ["b.pcap.gz"]
+    assert [os.path.basename(p) for p in _planned_paths(rdr2)] == ["b.pcap.gz"]
     # In filter: PySpark names the tuple field .value (regression:
     # .values raised AttributeError after the filter was absorbed)
     from pyspark.sql.datasource import In
     rdr3 = PcapPushdownReader(packet_schema("ip"), {"path": pcap_dir})
     assert list(rdr3.pushFilters([In(("file",), (a_path, "/nope"))])) == []
-    assert [p.path for p in rdr3.partitions()] == [a_path]
+    assert _planned_paths(rdr3) == [a_path]
     # plain reader has no pushFilters of its own -> never triggers
     # Spark's pushdown-disabled error
     assert "pushFilters" not in PcapDataSourceReader.__dict__
@@ -393,6 +397,50 @@ def test_read_pcap_stream_argument_guards(spark, tmp_path):
 
     with pytest.raises(ValueError, match="streamed chunked path"):
         read_pcap_stream(spark, str(tmp_path), chunk_bytes=0)
+
+
+def test_every_door_lists_the_same_files(spark, tmp_path):
+    """read_pcap, format("pcap"), readStream.format("pcap") and
+    read_pcap_stream read the same files of a directory and give each
+    the same ``file`` value, its plain path: top-level captures only
+    (no recursion into a subdirectory), ``_``/``.``-hidden names and
+    empty files left out, and a glob (``path_glob``, or one in the
+    path) matching leaf names."""
+    from hadoop_pcap_spark.sources import read_pcap_stream
+
+    register_pcap_datasource(spark)
+    d = tmp_path / "doors"
+    (d / "sub").mkdir(parents=True)
+    for name in ("a.pcap", "b.pcap", "x.cap", "sub/c.pcap", "_h.pcap", ".h.pcap"):
+        (d / name).write_bytes(S.dns_exchange_pcap())
+    (d / "empty.pcap").write_bytes(b"")
+
+    def files(df):
+        return {r["file"]: r["count"] for r in df.groupBy("file").count().collect()}
+
+    def streamed(df, name):
+        q = df.writeStream.format("memory").queryName(name).trigger(availableNow=True).start()
+        try:
+            q.awaitTermination()
+            return files(spark.table(name))
+        finally:
+            q.stop()
+            spark.catalog.dropTempView(name)
+
+    matching = {str(d / "a.pcap"): 2, str(d / "b.pcap"): 2}
+    every = {**matching, str(d / "x.cap"): 2}
+    glob = str(d / "*.pcap")
+    assert files(read_pcap(spark, str(d), path_glob="*.pcap")) == matching
+    assert files(spark.read.format("pcap").load(glob)) == matching
+    assert streamed(spark.readStream.format("pcap").load(glob), "doors_ds") == matching
+    assert streamed(read_pcap_stream(spark, str(d), path_glob="*.pcap"), "doors_fs") == matching
+    assert files(read_pcap(spark, str(d))) == every
+    assert files(spark.read.format("pcap").load(str(d))) == every
+    assert streamed(spark.readStream.format("pcap").load(str(d)), "doors_ds_all") == every
+    assert streamed(read_pcap_stream(spark, str(d)), "doors_fs_all") == every
+    # a listing that matches nothing reads as no rows
+    assert files(read_pcap(spark, str(d), path_glob="*.pcapng")) == {}
+    assert files(spark.read.format("pcap").load(str(d / "*.pcapng"))) == {}
 
 
 def test_dsv2_mixed_link_pcapng_nonstrict(spark, tmp_path):

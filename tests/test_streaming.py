@@ -414,9 +414,9 @@ def test_streaming_lists_remote_files(tmp_path, monkeypatch):
     (tmp_path / "b.pcap").write_bytes(S.dns_exchange_pcap(ts=1317994000))
 
     reader = DS.PcapStreamReader(packet_schema("ip"), {"path": "rmt://"})
-    files = reader._list_files()
-    assert sorted(p.split("://")[1] for p, _m in files) == ["a.pcap", "b.pcap"]
-    assert all(m > 0 for _p, m in files)
+    files = C.list_captures("rmt://")
+    assert [p for p, _s, _m in files] == ["rmt://a.pcap", "rmt://b.pcap"]
+    assert all(m > 0 for _p, _s, m in files)
     start = reader.initialOffset()
     rows = _stream_rows(reader, start, reader.latestOffset())
     assert sorted({r["file"] for r in rows}) == ["rmt://a.pcap", "rmt://b.pcap"]

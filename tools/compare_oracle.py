@@ -163,6 +163,15 @@ def main():
     import __spark_entry__ as entrymod
     from hadoop_pcap_spark.session import SESSION_CONF
 
+    qmap = entrymod.queries()
+    omap = entrymod.oracle_sql()
+    only = set(args.only.split(",")) if args.only else None
+    # a misspelt name would otherwise drop its query from the gate
+    # unnoticed: refuse before starting Spark
+    unknown = sorted(only - qmap.keys()) if only else []
+    if unknown:
+        sys.exit("--only names no registered query: " + ", ".join(unknown))
+
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
         .appName("compare_oracle")
@@ -183,10 +192,6 @@ def main():
         p = f"{args.sf}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-
-    qmap = entrymod.queries()
-    omap = entrymod.oracle_sql()
-    only = set(args.only.split(",")) if args.only else None
 
     n_pass = n_fail = n_rowsonly = 0
     failures = []
