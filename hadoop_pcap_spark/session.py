@@ -25,9 +25,36 @@ from pyspark.sql import SparkSession
 # manager resume under the other.  It is the manager Spark itself uses
 # for every scheme without a FileContext binding; on HDFS its rename is
 # atomic.
+#
+# Coalescing floor: AQE's parallelismFirst coalescing aims at
+# shuffle_bytes / defaultParallelism per partition but never below
+# ``coalescePartitions.minPartitionSize`` (Spark's default 1 MiB), so
+# any shuffle under ~2 MiB folds into ONE post-shuffle task.  The batch
+# L7 operators' connection shuffle is that size on small capture sets
+# (~1.1 MB per op on the pcap_l7 benchmark): on a 4-core host their HTTP
+# and TLS parse stages each ran as one ~220 ms Python task with 3 cores
+# idle, and at a 64 KiB floor run as 4 tasks in ~105-121 ms.
+# Only shuffles smaller than defaultParallelism x 1 MiB partition
+# differently; larger ones still coalesce toward the 64 MB advisory
+# size.  Streaming plans run without AQE and are unaffected.
+#
+# Call-site capture: with ``spark.python.sql.dataFrameDebugging.enabled``
+# (PySpark's default) every Column/DataFrame API call records the
+# caller's frame for error messages: ~5 extra py4j round trips per call
+# (getActiveSession, a PySparkCurrentOrigin set and clear, conf.get),
+# a stack walk and a failed ``import IPython`` that scans sys.path.
+# That was half the py4j calls of building the pcap_l7 plans (7,008 ->
+# 3,138 over 3 passes; profiled build 1.69 -> 1.15 s), and in plans the
+# engine builds the recorded frame is an engine line (``flows.py:85``),
+# never the user's.  Off, an error keeps its message and error class;
+# only its ``== DataFrame ==`` block names a JVM reflection frame where
+# it named a Python file and line.  The conf is static: it takes effect
+# only when set before the session starts.
 SESSION_CONF = MappingProxyType({
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.streaming.checkpointFileManagerClass":
