@@ -296,6 +296,30 @@ def proc_tree_cpu() -> float:
     return _TRACKER.read()
 
 
+def min_of_n(runs: int, body, setup=None, teardown=None):
+    """Run ``body`` ``runs`` times; return ``(min wall s, min
+    process-tree cpu s, last result)``.  Only ``body`` is timed.
+    ``setup()`` runs before each run and its value is passed to
+    ``body`` and ``teardown``; ``teardown`` runs in ``finally``, so a
+    failing run still cleans up and its error propagates.  Min-of-N
+    measures the engine rather than the neighbors (module docstring)."""
+    best_wall = best_cpu = result = None
+    for _ in range(runs):
+        args = (setup(),) if setup else ()
+        try:
+            c0 = proc_tree_cpu()
+            t0 = time.time()
+            result = body(*args)
+            wall = time.time() - t0
+            cpu = proc_tree_cpu() - c0  # CpuTracker banks exiting workers: no clamp
+        finally:
+            if teardown:
+                teardown(*args)
+        best_wall = wall if best_wall is None else min(best_wall, wall)
+        best_cpu = cpu if best_cpu is None else min(best_cpu, cpu)
+    return best_wall, best_cpu, result
+
+
 def normalized_block(extras: dict, cpu_timings: dict) -> dict:
     """Calibration-normalized per-row ratios (VERDICT r11 item 1): the
     committed artifact was contention-stamped two rounds running (r10,
@@ -466,20 +490,15 @@ def main():
         t_c = t if t_c is None else min(t_c, t)
     extras["dns_kernel_speedup"] = round(t_s / t_c, 2)
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from hadoop_pcap_spark.session import SESSION_CONF
+    from hadoop_pcap_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("hadoop_pcap_spark-bench")
-        .config(map=SESSION_CONF)
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
-        .getOrCreate()
-    )
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "48g")
+    spark = get_spark("hadoop_pcap_spark-bench", cpus=int(cpus))
     spark.sparkContext.setLogLevel("ERROR")
+
+    import shutil
 
     from hadoop_pcap_spark import plans
     from hadoop_pcap_spark.operators.cache import release_persisted
@@ -489,23 +508,25 @@ def main():
     timings = {}
     cpu_timings = {}
 
+    def record(name: str, wall: float, cpu: float) -> None:
+        timings[name], cpu_timings[name] = round(wall, 3), round(cpu, 3)
+        print(
+            f"# {name}: {timings[name]}s wall / {cpu_timings[name]}s cpu",
+            file=sys.stderr,
+            flush=True,
+        )
+
     def time_query(name: str):
-        """Min-of-N one registry query; returns (wall, cpu) and records
-        into timings/cpu_timings."""
+        """Min-of-N one registry query; returns (wall, cpu, rows),
+        wall and cpu rounded to ms."""
         fn = plans.QUERIES[name]
-        best = best_cpu = None
-        n = 0
         frames = []
-        for _ in range(runs):
-            c0 = proc_tree_cpu()
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            frames.append(df)
-            n = df.count()
-            dt = time.time() - t0
-            dc = proc_tree_cpu() - c0  # CpuTracker banks exiting workers, so the delta is monotone-true cpu (no clamp needed)
-            best = dt if best is None else min(best, dt)
-            best_cpu = dc if best_cpu is None else min(best_cpu, dc)
+
+        def run():
+            frames.append(fn(spark, sf_dir))
+            return frames[-1].count()
+
+        best, best_cpu, n = min_of_n(runs, run)
         # release the query's persisted intermediates AFTER its
         # min-of-3 loop, not inside it: Spark's CacheManager dedupes
         # identical plans, so runs 2-3 reuse run 1's cache — the same
@@ -551,11 +572,9 @@ def main():
         for root, _dirs, files in os.walk(giant_dir())
         for f in files
     )
-    serial_wall = serial_cpu = None
-    for _ in range(2):
-        t0 = time.time()
-        c0 = proc_tree_cpu()
-        (
+    serial_wall, serial_cpu, _ = min_of_n(
+        2,
+        lambda: (
             _read_pcap(
                 spark, giant_dir(), chunk_bytes=giant_bytes,
                 columns=["file", "pkt_no", "protocol", "src", "len"],
@@ -563,11 +582,9 @@ def main():
             .groupBy("protocol")
             .agg(F.count("*").alias("n"))
             .count()
-        )
-        w = round(time.time() - t0, 3)
-        c = round(proc_tree_cpu() - c0, 3)
-        serial_wall = w if serial_wall is None else min(serial_wall, w)
-        serial_cpu = c if serial_cpu is None else min(serial_cpu, c)
+        ),
+    )
+    serial_wall, serial_cpu = round(serial_wall, 3), round(serial_cpu, 3)
     extras["single_file_decode"] = {
         "serial_wall_s": serial_wall,
         "serial_cpu_s": serial_cpu,
@@ -615,37 +632,22 @@ def main():
     # per-file sort over lineitem, the cost a 100 TB deployment
     # schedules per OPTIMIZE pass (SCALING.md: α(cpu)=0.79 over 10×).
     def time_zorder() -> None:
-        import shutil
-        import tempfile
-
         from hadoop_pcap_spark.operators.layout import write_zordered
 
-        name = "layout_zorder_rewrite"
         li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).select(
             "l_orderkey", "l_partkey", "l_suppkey", "l_quantity"
         )
         zdir = tempfile.mkdtemp(prefix="bench_zorder_")
-        best = best_cpu = None
         try:
-            for _ in range(runs):
-                c0 = proc_tree_cpu()
-                t0 = time.time()
-                write_zordered(
+            wall, cpu, _ = min_of_n(
+                runs,
+                lambda: write_zordered(
                     li, zdir, ["l_partkey", "l_suppkey"], bits=8, n_files=16
-                )
-                dt = time.time() - t0
-                dc = proc_tree_cpu() - c0  # CpuTracker banks exiting workers, so the delta is monotone-true cpu (no clamp needed)
-                best = dt if best is None else min(best, dt)
-                best_cpu = dc if best_cpu is None else min(best_cpu, dc)
+                ),
+            )
         finally:
             shutil.rmtree(zdir, ignore_errors=True)
-        timings[name] = round(best, 3)
-        cpu_timings[name] = round(best_cpu, 3)
-        print(
-            f"# {name}: {timings[name]}s wall / {cpu_timings[name]}s cpu",
-            file=sys.stderr,
-            flush=True,
-        )
+        record("layout_zorder_rewrite", wall, cpu)
 
     time_zorder()
 
@@ -665,7 +667,6 @@ def main():
     # hadoop_pcap_spark/staging.py, grown from ADVICE r4/r5/r6 and
     # shared with the layout demo queries).
     import contextlib
-    import shutil
 
     from hadoop_pcap_spark.staging import ensure_staged, hold_stage
 
@@ -713,62 +714,58 @@ def main():
     # partitions: flow counter 5.1 vs 7.5 cpu-s, corpus filter 2.1 vs
     # 2.8, stream join 3.2 vs 6.5).  RocksDB's off-heap state and
     # incremental snapshots are for per-partition state far larger than
-    # these corpora's (tools/profile_state_scale.py measures RocksDB at
-    # 10k–1M keys).
+    # these corpora's (SCALING.md, "Round-12 addition: streaming state
+    # at 1M keys", measures RocksDB at 10k–1M keys).
     stream_parts = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8")
 
-    def time_stream(
-        name: str,
-        build,
-        output_mode: str,
-        partitions: "str | None" = None,
-    ) -> None:
-        """Min-of-N a streaming query end-to-end (source → noop sink,
-        processAllAvailable) and record it as a FIRST-CLASS headline
-        row (VERDICT r4 item 8: streaming regressions must gate like
-        batch ones, not live in extras).  ``partitions`` overrides the
-        shared state-partition sizing for queries whose per-partition
-        store count differs (see the stream-stream join note below)."""
-        best = best_cpu = None
+    def time_stream(name: str, writer, partitions: "str | None" = None) -> None:
+        """Min-of-N a streaming query end-to-end (processAllAvailable,
+        then stop, also when the run fails) and record it as a
+        FIRST-CLASS headline row (VERDICT r4 item 8: streaming
+        regressions must gate like batch ones, not live in extras).
+        ``writer(tmp)`` returns the query's DataStreamWriter; each run
+        gets a fresh ``tmp`` dir holding its checkpoint and any state
+        the writer keeps.  ``partitions`` overrides the shared
+        state-partition sizing for queries whose per-partition store
+        count differs (see the stream-stream join note below)."""
+
+        def run(tmp):
+            q = writer(tmp).option(
+                "checkpointLocation", os.path.join(tmp, "ckpt")
+            ).start()
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+
         spark.conf.set(
             "spark.sql.shuffle.partitions", partitions or stream_parts
         )
         try:
-            for _ in range(runs):
-                ckpt = tempfile.mkdtemp(prefix="bench_stream_ckpt_")
-                c0 = proc_tree_cpu()
-                t0 = time.time()
-                q = (
-                    build()
-                    .writeStream.outputMode(output_mode)
-                    .format("noop")
-                    .option("checkpointLocation", ckpt)
-                    .start()
-                )
-                q.processAllAvailable()
-                q.stop()
-                dt = time.time() - t0
-                dc = proc_tree_cpu() - c0  # CpuTracker banks exiting workers, so the delta is monotone-true cpu (no clamp needed)
-                shutil.rmtree(ckpt, ignore_errors=True)
-                best = dt if best is None else min(best, dt)
-                best_cpu = dc if best_cpu is None else min(best_cpu, dc)
+            wall, cpu, _ = min_of_n(
+                runs,
+                run,
+                setup=lambda: tempfile.mkdtemp(prefix="bench_stream_"),
+                teardown=lambda tmp: shutil.rmtree(tmp, ignore_errors=True),
+            )
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", cpus)
-        timings[name] = round(best, 3)
-        cpu_timings[name] = round(best_cpu, 3)
-        print(
-            f"# {name}: {timings[name]}s wall / {cpu_timings[name]}s cpu",
-            file=sys.stderr,
-            flush=True,
+        record(name, wall, cpu)
+
+    def noop_sink(build, output_mode: str):
+        return lambda _tmp: (
+            build().writeStream.outputMode(output_mode).format("noop")
         )
 
     time_stream(
         "streaming_corpus_filter",
-        lambda: streaming_corpus_filter(
-            spark.readStream.schema("doc_id long, ts timestamp, text string")
-            .parquet(stage_dir)
+        noop_sink(
+            lambda: streaming_corpus_filter(
+                spark.readStream.schema("doc_id long, ts timestamp, text string")
+                .parquet(stage_dir)
+            ),
+            "append",
         ),
-        "append",
     )
 
     # Stateful-operator timing: per-key running counters via
@@ -791,11 +788,13 @@ def main():
     leases.enter_context(hold_stage(ev_stage))
     time_stream(
         "streaming_flow_counts",
-        lambda: stateful_flow_counts(
-            spark.readStream.schema("user_id long, value double")
-            .parquet(ev_stage)
+        noop_sink(
+            lambda: stateful_flow_counts(
+                spark.readStream.schema("user_id long, value double")
+                .parquet(ev_stage)
+            ),
+            "update",
         ),
-        "update",
     )
 
     # Cross-run incremental dedup (foreachBatch + durable fingerprint
@@ -818,45 +817,15 @@ def main():
     )
     leases.enter_context(hold_stage(inc_stage))
 
-    def time_inc_dedup() -> None:
-        name = "streaming_incremental_dedup"
-        best = best_cpu = None
-        spark.conf.set("spark.sql.shuffle.partitions", stream_parts)
-        try:
-            for _ in range(runs):
-                snap = tempfile.mkdtemp(prefix="bench_incdedup_snap_")
-                ckpt = tempfile.mkdtemp(prefix="bench_incdedup_ckpt_")
-                c0 = proc_tree_cpu()
-                t0 = time.time()
-                q = (
-                    streaming_incremental_dedup(
-                        spark.readStream.schema("doc_id long, text string")
-                        .option("maxFilesPerTrigger", 2)
-                        .parquet(inc_stage),
-                        snap,
-                    )
-                    .option("checkpointLocation", ckpt)
-                    .start()
-                )
-                q.processAllAvailable()
-                q.stop()
-                dt = time.time() - t0
-                dc = proc_tree_cpu() - c0  # CpuTracker banks exiting workers, so the delta is monotone-true cpu (no clamp needed)
-                shutil.rmtree(ckpt, ignore_errors=True)
-                shutil.rmtree(snap, ignore_errors=True)
-                best = dt if best is None else min(best, dt)
-                best_cpu = dc if best_cpu is None else min(best_cpu, dc)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", cpus)
-        timings[name] = round(best, 3)
-        cpu_timings[name] = round(best_cpu, 3)
-        print(
-            f"# {name}: {timings[name]}s wall / {cpu_timings[name]}s cpu",
-            file=sys.stderr,
-            flush=True,
-        )
-
-    time_inc_dedup()
+    time_stream(
+        "streaming_incremental_dedup",
+        lambda tmp: streaming_incremental_dedup(
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", 2)
+            .parquet(inc_stage),
+            os.path.join(tmp, "snap"),
+        ),
+    )
 
     # Stream-stream watermarked interval join (views ⋈ purchases by
     # user within 1 h): the two-sided join-state path — four state
@@ -918,7 +887,9 @@ def main():
         str(max(4, int(stream_parts) // 2)),
     )
     time_stream(
-        "streaming_join_interval", _ssj_build, "append", partitions=ssj_parts
+        "streaming_join_interval",
+        noop_sink(_ssj_build, "append"),
+        partitions=ssj_parts,
     )
 
     leases.close()  # release the hold_stage reader leases

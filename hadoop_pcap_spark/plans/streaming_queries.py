@@ -18,8 +18,8 @@ are pytest territory: tests/test_streaming.py drives the same builders
 with ``maxFilesPerTrigger=1`` over time-ordered files.)
 
 Scale: these queries exist to pin SEMANTICS; rate/throughput behavior
-is benched separately (bench.py streaming rows, tools/
-profile_streaming.py).  The state-partition sizing lesson applies:
+is benched separately (bench.py streaming rows; cost model in
+SCALING.md).  The state-partition sizing lesson applies:
 a stateful operator pays a fixed cost per state partition per
 micro-batch (state-store load and commit, plus a Python worker for
 ``applyInPandasWithState``), so ``spark.sql.shuffle.partitions`` at

@@ -8,9 +8,10 @@ from types import MappingProxyType
 from pyspark.sql import SparkSession
 
 # The engine's session settings.  Every session the repo builds applies
-# this mapping (get_spark, bench.py, tools/compare_oracle.py, the test
-# fixture) and adds only its own master, partition and memory settings,
-# so benchmarks, oracle gates and tests all run what ships.
+# this mapping (get_spark, which bench.py and the tools/ scripts call,
+# and the test fixture) and adds only its own master, partition and
+# memory settings, so benchmarks, oracle gates and tests all run what
+# ships.
 #
 # Checkpoint manager: Spark's default FileContext-based manager renames
 # through ``AbstractFileSystem.rename``, which on the local filesystem

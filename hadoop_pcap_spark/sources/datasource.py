@@ -353,25 +353,38 @@ def _ddl_default_options() -> dict:
       clusters see it immediately, other clusters ship it with
       ``--files`` + ``SPARK_PCAP_DDL_OPTIONS_PATH``.
 
-    Precedence: explicit reader/DDL options > file > env."""
+    Precedence: explicit reader/DDL options > file > env.  A channel
+    holding anything but a JSON object raises ``ValueError`` naming
+    it: dropping it would fail the scan with a misleading missing-path
+    error, or run it with other defaults.  A missing file adds
+    nothing."""
     import json
+
+    def parse(text: str, source: str) -> dict:
+        try:
+            d = json.loads(text)
+        except ValueError as e:
+            raise ValueError(
+                f"pcap DDL options in {source}: invalid JSON ({e})"
+            ) from None
+        if not isinstance(d, dict):
+            raise ValueError(
+                f"pcap DDL options in {source}: expected a JSON object, "
+                f"got {type(d).__name__}"
+            )
+        return {str(k).lower(): str(v) for k, v in d.items()}
 
     out: dict = {}
     raw = os.environ.get(DDL_OPTIONS_ENV)
     if raw:
-        try:
-            d = json.loads(raw)
-            if isinstance(d, dict):
-                out.update({str(k).lower(): str(v) for k, v in d.items()})
-        except ValueError:
-            pass
+        out.update(parse(raw, f"${DDL_OPTIONS_ENV}"))
+    path = _ddl_options_path()
     try:
-        with open(_ddl_options_path()) as f:
-            d = json.load(f)
-        if isinstance(d, dict):
-            out.update({str(k).lower(): str(v) for k, v in d.items()})
-    except (OSError, ValueError):
-        pass
+        with open(path) as f:
+            text = f.read()
+    except FileNotFoundError:
+        return out
+    out.update(parse(text, path))
     return out
 
 

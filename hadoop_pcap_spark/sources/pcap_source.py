@@ -587,8 +587,9 @@ def decode_frames(
                 if fr is None:
                     continue
                 t = float(tss[i]) if tss is not None and tss[i] is not None else 0.0
-                sec = int(t)
-                usec = int(round((t - sec) * 1_000_000))
+                # round to whole microseconds BEFORE splitting: rounding
+                # only the fraction turns x.9999996 into usec=1000000
+                sec, usec = divmod(int(round(t * 1_000_000)), 1_000_000)
                 b = bytes(fr)
                 parts.append(
                     _struct.pack("<IIII", sec, usec, len(b), len(b)) + b

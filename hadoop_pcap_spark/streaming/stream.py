@@ -148,10 +148,10 @@ def stateful_flow_counts(events: DataFrame, key_col: str = "user_id") -> DataFra
     Scale: state lives in the state store partitioned by key; each
     micro-batch touches only keys present in the batch.
 
-    Cost model (measured, tools/profile_streaming.py, 100k rows /
-    1500 keys / 1 micro-batch, local[32] on a 4-core host, HDFS-backed
-    store): the dominant term is a PER-STATE-PARTITION fixed cost of
-    ~0.5 cpu-s per micro-batch.  About 0.1 of it is the JVM floor (a
+    Cost model (measured, see SCALING.md "streaming rows at sf10";
+    100k rows / 1500 keys / 1 micro-batch, local[32] on a 4-core host,
+    HDFS-backed store): the dominant term is a PER-STATE-PARTITION
+    fixed cost of ~0.5 cpu-s per micro-batch.  About 0.1 of it is the JVM floor (a
     no-Python built-in streaming agg pays it too: state-store load and
     commit, task launch); the rest is the Python boundary, a worker
     per partition.  Per-ROW work, state tuple serde and the 1-row
@@ -844,8 +844,8 @@ def streaming_ann_screen(
     O(batch × n_probe × corpus/n_cells) — batch times the probed
     CANDIDATE budget, with no training or corpus re-encode on the
     path; the budget is held flat as the corpus grows by scaling the
-    index's n_cells with it (measured: tools/profile_state_scale.py
-    --with-ann; at n_probe=16 of n_cells=32 the probed fraction is
+    index's n_cells with it (measured: SCALING.md, "streaming state at
+    1M keys"; at n_probe=16 of n_cells=32 the probed fraction is
     1/2 and per-query cost tracks the corpus — the knob matters).
 
     ``maintain_every=N`` (0 = off, the default) runs

@@ -7,6 +7,7 @@ import os
 import subprocess
 import sys
 import time
+import types
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -177,3 +178,42 @@ def test_bench_core_json_line_over_limit_still_parses(capsys):
     # within the limit nothing is dropped and no marker appears
     short = json.loads(bench.core_json_line(1.0, {"a": 1.0}, False, False, 3, "x"))
     assert "queries_dropped" not in short
+
+
+def test_min_of_n_runs_body_n_times_and_keeps_minimums(monkeypatch):
+    """bench.min_of_n (the timer every bench row and tools/ probe
+    uses): the body runs exactly N times, each with its own setup
+    value and teardown, and the result carries the MIN wall, the MIN
+    process-tree cpu and the last run's value."""
+    walls = iter([0.0, 5.0, 10.0, 12.0, 20.0, 27.0])  # 5, 2, 7
+    cpus = iter([0.0, 1.0, 10.0, 10.5, 20.0, 23.0])  # 1, 0.5, 3
+    # a stand-in clock for bench's module-global ``time`` only: the
+    # real time.time stays untouched for every other thread
+    clock = types.SimpleNamespace(time=lambda: next(walls))
+    monkeypatch.setattr(bench, "time", clock)
+    monkeypatch.setattr(bench, "proc_tree_cpu", lambda: next(cpus))
+    seen, torn = [], []
+    setups = iter(["a", "b", "c"])
+    wall, cpu, result = bench.min_of_n(
+        3,
+        lambda s: seen.append(s) or len(seen),
+        setup=lambda: next(setups),
+        teardown=torn.append,
+    )
+    assert seen == torn == ["a", "b", "c"]
+    assert (wall, cpu, result) == (2.0, 0.5, 3)
+
+
+def test_min_of_n_teardown_runs_and_error_propagates():
+    """A failing body still tears its run down, and the error reaches
+    the caller instead of being timed as a result."""
+    import pytest
+
+    torn = []
+
+    def body(tmp):
+        raise RuntimeError(f"query failed in {tmp}")
+
+    with pytest.raises(RuntimeError, match="query failed in d1"):
+        bench.min_of_n(3, body, setup=lambda: "d1", teardown=torn.append)
+    assert torn == ["d1"]

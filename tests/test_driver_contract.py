@@ -260,6 +260,33 @@ def test_run_query_cli_smoke():
     assert r2.returncode == 0 and "l_returnflag" in r2.stdout
 
 
+@pytest.mark.parametrize(
+    "script",
+    [
+        "compare_oracle.py",
+        "scaling_probe.py",
+        "core_scaling_probe.py",
+        "plan_audit.py",
+        "make_scaled_sf.py",
+    ],
+)
+def test_tools_cli_help(script):
+    """Every measurement/audit script imports cleanly and answers
+    --help without starting Spark: SPARK_HOME points nowhere, so any
+    attempt to launch the JVM fails the run."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_HOME=os.path.join(root, "no-spark-here"))
+    r = subprocess.run(
+        [sys.executable, os.path.join("tools", script), "--help"],
+        capture_output=True, text=True, cwd=root, env=env, timeout=120,
+    )
+    assert r.returncode == 0, r.stderr
+    assert r.stdout.startswith("usage:"), r.stdout
+
+
 def test_flagship_release_frees_all_blocks(spark):
     """release_persisted on the flagship must free EVERY cached block
     — the persisted rules stage AND the dedup chain's localCheckpoint

@@ -489,12 +489,17 @@ def test_decode_frames_column_matches_file_path(spark, tmp_path):
 
     frames = [f for f, _m in S.http_exchange_frames()]
     tss = [1470000000 + i + (i % 4) * 0.25 for i in range(len(frames))]
+    # within 0.5 µs below a whole second: rounds up into the next second
+    frames.append(frames[0])
+    tss.append(1470000000.9999996)
     p = tmp_path / "ref.pcap"
     p.write_bytes(
         S.global_header(1)
         + b"".join(
-            S.record(int(t), f, ts_usec=int(round((t - int(t)) * 1e6)))
-            for f, t in zip(frames, tss)
+            S.record(sec, f, ts_usec=usec)
+            for f, (sec, usec) in zip(
+                frames, (divmod(round(t * 1e6), 1_000_000) for t in tss)
+            )
         )
     )
     via_file = read_pcap(spark, str(tmp_path)).drop("file").orderBy("pkt_no")
@@ -511,6 +516,7 @@ def test_decode_frames_column_matches_file_path(spark, tmp_path):
     assert len(a) == len(b) == len(frames)
     for ra, rb in zip(a, b):
         assert ra == rb, (ra, rb)
+    assert (b[-1].ts, b[-1].ts_usec) == (1470000001, 0)
 
 
 def test_decode_frames_streaming_smoke(spark, tmp_path):

@@ -25,6 +25,7 @@ This module pins exactly what the Spark twin supports:
 """
 
 import os
+import re
 
 import pytest
 
@@ -209,3 +210,34 @@ def test_register_packets_view_sql_front_door_synth(spark, synth_dns_pcap):
     assert [r.src for r in rows] == ["193.0.10.82", "193.0.14.129"]
     assert {r.dns_qname for r in rows} == {"ripe.net."}
     spark.catalog.dropTempView("_pkts_synth")
+
+
+@pytest.mark.parametrize("bad", ["{not json", "[1, 2]", '"path"'])
+def test_ddl_default_options_rejects_non_object_json(tmp_path, monkeypatch, bad):
+    """A defaults channel holding invalid JSON, or JSON that is not an
+    object, raises a ValueError naming the env var or the file, instead
+    of being dropped (the scan would then fail with a misleading
+    missing-path error, or run with other defaults).  A missing file
+    stays a no-op."""
+    from hadoop_pcap_spark.sources.datasource import (
+        DDL_OPTIONS_ENV,
+        DDL_OPTIONS_PATH_ENV,
+        _ddl_default_options,
+    )
+
+    cfg = tmp_path / "ddl_options.json"
+    monkeypatch.setenv(DDL_OPTIONS_PATH_ENV, str(cfg))
+    monkeypatch.delenv(DDL_OPTIONS_ENV, raising=False)
+    assert _ddl_default_options() == {}
+
+    monkeypatch.setenv(DDL_OPTIONS_ENV, bad)
+    with pytest.raises(ValueError, match=DDL_OPTIONS_ENV):
+        _ddl_default_options()
+
+    monkeypatch.setenv(DDL_OPTIONS_ENV, '{"Decoder": "dns"}')
+    cfg.write_text(bad)
+    with pytest.raises(ValueError, match=re.escape(str(cfg))):
+        _ddl_default_options()
+
+    cfg.write_text('{"path": "/caps"}')
+    assert _ddl_default_options() == {"decoder": "dns", "path": "/caps"}

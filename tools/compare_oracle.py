@@ -158,10 +158,9 @@ def main():
     os.environ["SPARK_GRAFT_ORACLE_SF"] = args.sf
 
     import duckdb
-    from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
-    from hadoop_pcap_spark.session import SESSION_CONF
+    from hadoop_pcap_spark.session import get_spark
 
     qmap = entrymod.queries()
     omap = entrymod.oracle_sql()
@@ -172,19 +171,10 @@ def main():
     if unknown:
         sys.exit("--only names no registered query: " + ", ".join(unknown))
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("compare_oracle")
-        .config(map=SESSION_CONF)
-        .config("spark.sql.shuffle.partitions", args.cpus)
-        # pyspark's 1g default heap is fine at sf0.01 but genuinely
-        # undersized for sf1-scale runs (broadcast build + 6M-row
-        # shuffles on 8 local threads OOM'd the JVM mid-suite)
-        .config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g")
-        )
-        .getOrCreate()
-    )
+    # get_spark's 8g default heap: pyspark's 1g is fine at sf0.01 but
+    # undersized for sf1-scale runs (broadcast build + 6M-row shuffles
+    # on 8 local threads OOM'd the JVM mid-suite)
+    spark = get_spark("compare_oracle", cpus=int(args.cpus))
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

@@ -28,7 +28,6 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -56,44 +55,36 @@ DEFAULT_QUERIES = [
 
 def _sweep(sf: str, cpus: int, runs: int, names: list) -> dict:
     """One core count, one session — runs in the child process."""
-    from pyspark.sql import SparkSession
-
-    from bench import proc_tree_cpu
+    from bench import min_of_n
     from hadoop_pcap_spark import plans
     from hadoop_pcap_spark.operators.cache import release_persisted
-    from hadoop_pcap_spark.session import SESSION_CONF
+    from hadoop_pcap_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(f"core-scaling-{cpus}")
-        .config(map=SESSION_CONF)
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
-        .getOrCreate()
-    )
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
+    spark = get_spark(f"core-scaling-{cpus}", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     plans.load_all()
 
     def noop(df):
         df.write.mode("overwrite").format("noop").save()
 
+    def release(frames):
+        for df in frames:
+            release_persisted(df)
+
     # JVM/codegen warm-up outside any measurement
     noop(plans.QUERIES["tpch_q1"](spark, sf))
     out = {}
     for name in names:
         fn = plans.QUERIES[name]
-        best_w = best_c = None
-        for i in range(runs + 1):  # first run warms codegen, not recorded
-            c0 = proc_tree_cpu()
-            t0 = time.time()
-            df = fn(spark, sf)
-            noop(df)
-            w, c = time.time() - t0, proc_tree_cpu() - c0
-            release_persisted(df)
-            if i == 0:
-                continue
-            best_w = w if best_w is None else min(best_w, w)
-            best_c = c if best_c is None else min(best_c, c)
+
+        def run(frames):
+            frames.append(fn(spark, sf))
+            noop(frames[-1])
+
+        # the first run warms codegen and is not recorded
+        min_of_n(1, run, setup=list, teardown=release)
+        best_w, best_c, _ = min_of_n(runs, run, setup=list, teardown=release)
         out[name] = {"wall": round(best_w, 3), "cpu": round(best_c, 3)}
         print(
             f"# [{cpus} cores] {name}: {out[name]['wall']}s wall "

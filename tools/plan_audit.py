@@ -19,6 +19,7 @@ joins AQE re-plans as data grows.
 
 from __future__ import annotations
 
+import argparse
 import os
 import re
 import sys
@@ -34,6 +35,11 @@ JOIN_OPS = [
 
 
 def main() -> int:
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ap = argparse.ArgumentParser(description=__doc__)
+    ap.add_argument("out", nargs="?", default=os.path.join(root, "PLANS.md"))
+    dst = ap.parse_args().out
+
     from hadoop_pcap_spark.plans import ORACLES, QUERIES, load_all
     from hadoop_pcap_spark.session import get_spark
 
@@ -93,14 +99,6 @@ def main() -> int:
         "failed-to-plan): "
         + (", ".join(r[0] for r in bad) if bad else "none")
         + "."
-    )
-    dst = (
-        sys.argv[1]
-        if len(sys.argv) > 1
-        else os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "PLANS.md",
-        )
     )
     with open(dst, "w") as f:
         f.write("\n".join(out) + "\n")

@@ -35,11 +35,10 @@ import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import proc_tree_cpu  # noqa: E402  (same sampler as the bench)
+from bench import min_of_n  # noqa: E402  (same timer as the bench)
 
 # query -> the table whose row count drives its cost
 DRIVER_TABLE = {
@@ -136,15 +135,9 @@ def main():
         rows_metric = DRIVER_TABLE[name]
         points = []
         for d in sf_dirs:
-            best_w = best_c = None
-            for _ in range(args.runs):
-                c0 = proc_tree_cpu()
-                t0 = time.time()
-                _materialize(fn(spark, d))
-                w = time.time() - t0
-                c = proc_tree_cpu() - c0
-                best_w = w if best_w is None else min(best_w, w)
-                best_c = c if best_c is None else min(best_c, c)
+            best_w, best_c, _ = min_of_n(
+                args.runs, lambda: _materialize(fn(spark, d))
+            )
             points.append(
                 {
                     "sf": d,
