@@ -87,7 +87,7 @@ HEADLINE = [
     "dedup_substring_spans",
     # round 13: L7 extraction throughput — 2000 HTTP connections from
     # one capture through decode → connection collect_list → batched
-    # mapInPandas parse, every body md5-pinned; the captures→documents
+    # mapInArrow parse, every body md5-pinned; the captures→documents
     # bridge's scale shape (cost ∝ connections, not packets)
     "pcap_http_extract_2k",
 ]
@@ -320,6 +320,23 @@ def min_of_n(runs: int, body, setup=None, teardown=None):
     return best_wall, best_cpu, result
 
 
+DRIFT_SENTINELS = ("dedup_minhash_lsh", "pcap_decode_100k")
+
+
+def time_headline_row(time_query, name: str, runs: int):
+    """``time_query(name)`` → ``(wall, cpu, rows, ref)``; ``ref`` is a
+    drift sentinel's reference ``(wall, cpu)``, else None.  The
+    end-of-suite re-time runs on a warm JVM, so the reference must be
+    warm too: with ``runs == 1`` the row's only run is cold, and the
+    sentinel is timed once more right after it for its reference;
+    with ``runs > 1`` the row's warm min is the reference."""
+    wall, cpu, n = time_query(name)
+    ref = None
+    if name in DRIFT_SENTINELS:
+        ref = time_query(name)[:2] if runs == 1 else (wall, cpu)
+    return wall, cpu, n, ref
+
+
 def normalized_block(extras: dict, cpu_timings: dict) -> dict:
     """Calibration-normalized per-row ratios (VERDICT r11 item 1): the
     committed artifact was contention-stamped two rounds running (r10,
@@ -543,8 +560,13 @@ def main():
             release_persisted(df)
         return round(best, 3), round(best_cpu, 3), n
 
+    sentinel_refs = {}
     for name in HEADLINE:
-        timings[name], cpu_timings[name], n = time_query(name)
+        timings[name], cpu_timings[name], n, ref = time_headline_row(
+            time_query, name, runs
+        )
+        if ref is not None:
+            sentinel_refs[name] = ref
         print(
             f"# {name}: {timings[name]}s wall / {cpu_timings[name]}s cpu ({n} rows)",
             file=sys.stderr,
@@ -918,20 +940,22 @@ def main():
     # single minhash wall gate by 0.024 while the decode rows rose
     # ~1.9x unadjudicated; a Python-kernel-bound sentinel catches
     # pressure that a JVM-shuffle sentinel can sit just under.
-    sentinels = ["dedup_minhash_lsh", "pcap_decode_100k"]
+    # Each sentinel compares with its warm reference from
+    # time_headline_row (a warm re-time when runs == 1).
     extras["drift_sentinel"] = []
     drifted = False
-    for sentinel in sentinels:
+    for sentinel in DRIFT_SENTINELS:
         s_wall, s_cpu, _ = time_query(sentinel)
-        ratio = s_wall / timings[sentinel] if timings[sentinel] else 1.0
-        cpu_ratio = s_cpu / cpu_timings[sentinel] if cpu_timings[sentinel] else 1.0
+        ref_wall, ref_cpu = sentinel_refs[sentinel]
+        ratio = s_wall / ref_wall if ref_wall else 1.0
+        cpu_ratio = s_cpu / ref_cpu if ref_cpu else 1.0
         drifted = drifted or bool(max(ratio, 1.0 / ratio) > 1.25)
         extras["drift_sentinel"].append({
             "query": sentinel,
             "end_wall_s": s_wall,
             "end_cpu_s": s_cpu,
-            "ref_wall_s": timings[sentinel],
-            "ref_cpu_s": cpu_timings[sentinel],
+            "ref_wall_s": ref_wall,
+            "ref_cpu_s": ref_cpu,
             "wall_ratio": round(ratio, 3),
             "cpu_ratio": round(cpu_ratio, 3),
         })

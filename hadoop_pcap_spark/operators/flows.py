@@ -1,4 +1,6 @@
-"""TCP flow reassembly for DNS-over-TCP.
+"""TCP flow reassembly: the L7 operators' shared segment layout and
+direction join, and the DNS-over-TCP, generic TCP stream and IPv4
+fragment reassemblers.
 
 The reference silently yields no ``dns_*`` columns for TCP DNS — its
 per-packet decoder hands the raw TCP payload (2-byte length prefix
@@ -9,7 +11,7 @@ may carry several messages (RFC 1035 §4.2.2 framing).
 
 ``reassemble_dns_tcp`` is the flow-grain operator: it keeps only
 port-53 TCP segments that carry bytes, shuffles ONCE on the directional
-flow 5-tuple (JVM-side ``collect_list``; a batched ``mapInPandas``
+flow 5-tuple (JVM-side ``collect_list``; a batched ``mapInArrow``
 then handles a whole Arrow batch of flows per Python invocation),
 orders each flow's segments, concatenates their payloads, walks the
 2-byte big-endian length-prefix framing, and re-parses each complete
@@ -40,8 +42,6 @@ from __future__ import annotations
 
 from typing import Iterator, List
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -69,14 +69,12 @@ REASSEMBLED_SCHEMA = T.StructType(
     ]
 )
 
-_FLOW_KEY = ["file", "src", "dst", "src_port", "dst_port"]
-
 
 def canonical_pair_exprs():
     """The ONE definition of connection-key canonicalization, shared
-    by every consumer (batch extractors here, the SQL front-door
-    queries, the streaming L7 operators' ``conn`` key): returns
-    ``(a_first, src_ep, dst_ep)`` where ``a_first`` is true when the (src,
+    by every consumer (the ``conn`` key of :func:`l7_segments`, the SQL
+    front-door queries, :func:`flow_stats`): returns ``(a_first,
+    src_ep, dst_ep)`` where ``a_first`` is true when the (src,
     src_port) endpoint sorts first (string IP order; NULL port sorts
     as -1) and the two struct expressions are ``{ip, port}`` endpoint
     structs.  A drift between copies would silently split one
@@ -91,144 +89,238 @@ def canonical_pair_exprs():
     return a_first, src_ep, dst_ep
 
 
-def connection_segments(
+# --- the L7 operators' one segment layout and one direction join -------------
+#
+# Every L7 operator, batch and streaming, reads payload-bearing TCP
+# segments in one narrow layout (:func:`l7_segments`): ONE string key
+# and a few value columns.  Batch operators collect each connection's
+# segments JVM-side (``collect_list``, one shuffle) and parse whole
+# Arrow batches of connections in one ``mapInArrow`` (:func:`map_rows`);
+# the streaming operators group the same layout in
+# ``applyInPandasWithState``.  Both join a group's payloads per
+# direction with :func:`join_directions` (a numpy sort, then one
+# ``b"".join`` per direction; a byte cap adds a length pass).
+# Per-connection ``groupBy().applyInArrow`` was tried for the batch
+# operators and measured +65-85% on the ``http_objects`` and
+# ``tls_handshakes`` stages (pcap_l7 inputs, local[4]): its fixed cost
+# per group dominates when connections are small and numerous.
+
+
+def l7_segments(
     packets: DataFrame,
+    directional: bool = False,
     flow_filter=None,
+    order: str = "capture",
     window: "str | None" = None,
-    with_seq: bool = False,
+    stream: bool = False,
 ) -> DataFrame:
-    """Payload-bearing TCP segments grouped to CONNECTION grain: one
-    row per canonical (unordered) endpoint pair with the connection's
-    segments collected as ``segs: array<struct<src, src_port, pkt_no,
-    payload>>`` — the shared substrate of the L7 extractors
-    (:mod:`.http`, :mod:`.tls`).
+    """The payload-bearing TCP segments of ``packets`` in the L7
+    operators' narrow layout:
 
-    Shape matters at scale: the ``collect_list`` aggregation happens
-    JVM-side (one shuffle on the pair key, whole-stage codegen), and
-    downstream extractors consume the result with ``mapInPandas`` so
-    ONE Python invocation parses a whole Arrow batch of connections —
-    per-connection Python overhead is amortized across the batch,
-    unlike per-group ``applyInPandas``, whose fixed cost per group (one
-    pandas conversion per column, then a frame) dominates when
-    connections are small and numerous.  The streaming HTTP operator
-    pays the same per-group conversion: ~7.3 ms of Python CPU per group
-    call with ten columns, ~4.7 ms with five (``pcap_stream``, 4-core
-    host, per-task costs included).  ``flow_filter`` applies before
-    the shuffle.
+    * ``file`` — batch only: a connection never spans capture files.
+    * ``conn`` — ``"ip|port|ip|port"``, the one connection key.  By
+      default the canonical (unordered) connection from
+      :func:`canonical_pair_exprs`, a-side first; ``directional=True``
+      keys the directed flow (src, src_port, dst, dst_port) instead.
+      A NULL field renders as ``""`` (plain ``concat_ws`` would skip
+      it and shift the later fields); :func:`conn_endpoints` parses it
+      back.
+    * ``from_a`` — the row's source is the key's a-side (canonical keys
+      only; a self-connection puts both directions on the a-side).
+    * ``t_us`` — ``stream=True`` only: ``ts`` · 10⁶ + ``ts_usec``
+      (``ts_usec`` when the input carries it); with ``pkt_no`` the
+      capture order, also across the rotated files of one
+      micro-batch, where ``pkt_no`` restarts.
+    * ``pkt_no``, ``payload``;
+    * ``tcp_seq`` — ``order="seq"`` only (the opt-in decode column);
+    * ``_w`` — ``window`` only: a tumbling event-time bucket on ``ts``
+      (a duration string, e.g. ``"5 minutes"``), the endless-capture
+      lever: group state is then bounded by connections per window.
+      A connection straddling a boundary parses per window chunk.
 
-    ``window`` (a duration string, e.g. ``"5 minutes"``) adds a
-    tumbling event-time bucket on ``ts`` to the group key — the
-    endless-capture lever: group state is then bounded by
-    connections-per-window, not capture length.  REQUIRES a ``ts``
-    column (add ``"ts"`` to any pruned ``columns=`` decode).  A
-    connection straddling a boundary parses per window chunk (objects
-    spanning the cut are lost — the documented bounded-state
-    tradeoff; size the window ≫ typical connection duration)."""
-    segments = packets.filter(
+    ``flow_filter`` (a Column predicate, e.g. a port test) applies
+    before any shuffle, so only the flows an operator wants move."""
+    if order not in ("capture", "seq"):
+        raise ValueError(f"order must be 'capture' or 'seq', got {order!r}")
+    if order == "seq" and "tcp_seq" not in packets.columns:
+        raise ValueError(
+            "order='seq' needs the opt-in tcp_seq column — decode with "
+            "columns=[..., 'tcp_seq']"
+        )
+    segs = packets.filter(
         (F.col("protocol") == "TCP")
         & F.col("payload").isNotNull()
         & (F.length("payload") > 0)
     )
     if flow_filter is not None:
-        segments = segments.filter(flow_filter)
-    a_first, src_ep, dst_ep = canonical_pair_exprs()
-    seg_fields = ["src", "src_port", "pkt_no", "payload"] + (
-        ["tcp_seq"] if with_seq else []
-    )
-    cols = [
-        "file",
-        F.when(a_first, src_ep).otherwise(dst_ep).alias("_a"),
-        F.when(a_first, dst_ep).otherwise(src_ep).alias("_b"),
-        *seg_fields,
-    ]
-    keys = ["file", "_a", "_b"]
-    if window is not None:
-        cols.append(
-            F.window(F.timestamp_seconds(F.col("ts")), window).alias("_w")
-        )
-        keys.append("_w")
-    return (
-        segments.select(*cols)
-        .groupBy(*keys)
-        .agg(F.collect_list(F.struct(*seg_fields)).alias("segs"))
-    )
-
-
-def directional_streams(segs, max_bytes: int, order: str = "capture") -> list:
-    """Pure helper for the L7 extractors: a connection's collected
-    segments (dicts with ``src src_port pkt_no payload``) → list of
-    ``((src, src_port), stream_bytes, truncated)`` per direction,
-    segments concatenated in capture (``pkt_no``) order — or, with
-    ``order="seq"`` (segments then carry ``tcp_seq``), per-direction
-    seq-HEALED via :func:`_seq_order` (duplicates dropped, reordering
-    repaired) — each direction capped at ``max_bytes``."""
-    if order == "seq":
-        by_dir: dict = {}
-        for s in sorted(segs, key=lambda s: s["pkt_no"]):
-            port = s["src_port"]
-            by_dir.setdefault(
-                (s["src"], None if port is None else int(port)), []
-            ).append(s)
-        # the healed per-direction order MUST survive — re-sorting by
-        # pkt_no below would undo the seq repair, so iterate healed
-        ordered = [s for d in by_dir.values() for s in _seq_order(d)]
+        segs = segs.filter(flow_filter)
+    if directional:
+        ends = [F.col("src"), F.col("src_port"), F.col("dst"), F.col("dst_port")]
+        side = []
     else:
-        ordered = sorted(segs, key=lambda s: s["pkt_no"])
-    out: dict = {}
-    sizes: dict = {}
-    trunc: dict = {}
-    for s in ordered:
-        port = s["src_port"]
-        dkey = (s["src"], None if port is None else int(port))
-        have = sizes.get(dkey, 0)
-        if have >= max_bytes:
-            trunc[dkey] = True
-            continue
-        b = bytes(s["payload"])
-        if have + len(b) > max_bytes:
-            b = b[: max_bytes - have]
-            trunc[dkey] = True
-        out.setdefault(dkey, []).append(b)
-        sizes[dkey] = have + len(b)
-    return [
-        (k, b"".join(v), trunc.get(k, False)) for k, v in out.items()
-    ]
+        a_first, src_ep, dst_ep = canonical_pair_exprs()
+        a = F.when(a_first, src_ep).otherwise(dst_ep)
+        b = F.when(a_first, dst_ep).otherwise(src_ep)
+        ends = [a["ip"], a["port"], b["ip"], b["port"]]
+        side = [F.coalesce(a_first, F.lit(False)).alias("from_a")]
+    conn = F.concat_ws(
+        "|", *(F.coalesce(e.cast("string"), F.lit("")) for e in ends)
+    )
+    cols = [] if stream else ["file"]
+    cols += [conn.alias("conn"), *side]
+    if stream:
+        usec = (
+            F.coalesce(F.col("ts_usec").cast("long"), F.lit(0))
+            if "ts_usec" in packets.columns else F.lit(0)
+        )
+        cols.append((F.col("ts").cast("long") * 1_000_000 + usec).alias("t_us"))
+    cols += [F.col("pkt_no").cast("long").alias("pkt_no"), "payload"]
+    if order == "seq":
+        cols.append("tcp_seq")
+    if window is not None:
+        cols.append(F.window(F.timestamp_seconds(F.col("ts")), window).alias("_w"))
+    return segs.select(*cols)
 
 
-def _join_capped(segs, max_bytes: int) -> tuple:
-    """Ordered segments' payloads joined up to ``max_bytes`` (the
-    hot-flow guard) → ``(stream, truncated)``; reaching the cap exactly
-    still truncates if a payload-bearing segment remains unread."""
-    chunks: List[bytes] = []
-    total = 0
-    for si, s in enumerate(segs):
-        if s["payload"] is None:
+def collect_segments(segments: DataFrame) -> DataFrame:
+    """Batch :func:`l7_segments` rows → one row per ``file, conn[,
+    _w]`` group with its segments collected JVM-side as ``segs:
+    array<struct<pkt_no, [from_a,] payload[, tcp_seq]>>``."""
+    keys = [c for c in ("file", "conn", "_w") if c in segments.columns]
+    fields = [c for c in segments.columns if c not in keys]
+    return segments.groupBy(*keys).agg(
+        F.collect_list(F.struct(*fields)).alias("segs")
+    )
+
+
+def conn_endpoints(conn: str) -> tuple:
+    """``conn`` key → ``(ip, port, ip, port)`` in key order; the empty
+    field of a NULL endpoint part comes back as None."""
+    ip1, p1, ip2, p2 = conn.split("|")
+    return (
+        ip1 or None, int(p1) if p1 else None,
+        ip2 or None, int(p2) if p2 else None,
+    )
+
+
+def join_directions(keys, from_a, payload, max_bytes=None, seq=None) -> dict:
+    """One group's segments → ``{side: (stream, truncated, rows)}``, one
+    entry per direction in first-appearance order; ``side`` is the
+    ``from_a`` value (every segment is a-side when ``from_a`` is None).
+
+    ``keys`` are the order-key arrays, most significant first (batch:
+    ``(pkt_no,)``; stream: ``(t_us, pkt_no)``); ties keep input order.
+    With ``seq`` (the ``tcp_seq`` values, None/NaN where unknown) each
+    direction is healed by :func:`_seq_order` first.  ``max_bytes``
+    caps each direction's stream (the hot-flow guard): ``truncated`` is
+    true when payload bytes past the cap were dropped — reaching the
+    cap exactly still truncates if more payload follows.  ``rows`` are
+    the input positions of the direction's segments in stream order
+    (after healing, before the cap)."""
+    import numpy as np
+
+    order = np.lexsort(tuple(np.asarray(k) for k in reversed(keys)))
+    n = len(order)
+    payload = np.asarray(payload, dtype=object)
+    if from_a is None:
+        side, sides = np.ones(n, bool), [True] if n else []
+    else:
+        side = np.asarray(from_a, bool)[order]
+        _vals, first = np.unique(side, return_index=True)
+        sides = [bool(side[i]) for i in np.sort(first)]
+    out = {}
+    for s in sides:
+        rows = order[side == s]
+        if seq is None:
+            chunks = payload[rows]
+        else:
+            kept, chunks = _seq_order(np.asarray(seq, dtype=float)[rows], payload[rows])
+            rows = rows[kept]
+        if max_bytes is not None:
+            lens = np.fromiter(map(len, chunks), np.int64, len(chunks))
+        if max_bytes is None or lens.sum() <= max_bytes:
+            out[s] = (b"".join(chunks), False, rows)
             continue
-        b = bytes(s["payload"])
-        if total + len(b) > max_bytes:
-            chunks.append(b[: max_bytes - total])
-            return b"".join(chunks), True
-        chunks.append(b)
-        total += len(b)
-        if total >= max_bytes:
-            rest = any(t["payload"] is not None for t in segs[si + 1 :])
-            return b"".join(chunks), rest
-    return b"".join(chunks), False
+        k = int(np.searchsorted(np.cumsum(lens), max_bytes, side="right"))
+        head = b"".join(chunks[:k])
+        out[s] = (head + chunks[k][: max_bytes - len(head)], True, rows)
+    return out
+
+
+def _seq_order(seq, payload) -> tuple:
+    """One direction's capture-ordered ``tcp_seq`` (NaN where unknown)
+    and payloads → ``(kept, chunks)``: the positions kept in seq order
+    and their payloads, de-retransmitted and overlap-trimmed.
+
+    Relative seq = (tcp_seq - first_seen_seq) mod 2^32, so a flow
+    crossing the 32-bit wrap still orders correctly (capture shorter
+    than 2 GiB of in-flight span — the realistic case).  Exact
+    duplicates drop (first capture wins); a segment overlapping
+    already-delivered bytes is trimmed to its new suffix; segments
+    without a seq (e.g. a decode cut before the field) keep capture
+    order at their position by inheriting the previous segment's
+    relative seq (0 before the first known one)."""
+    import numpy as np
+
+    n = len(seq)
+    known = ~np.isnan(seq)
+    if not known.any():
+        return np.arange(n), list(payload)
+    rel = np.where(known, np.mod(seq - seq[known][0], 1 << 32), 0).astype(np.int64)
+    last = np.maximum.accumulate(np.where(known, np.arange(n), -1))
+    rel = np.where(last >= 0, rel[np.maximum(last, 0)], 0)
+    order = np.argsort(rel, kind="stable")
+    start = rel[order]
+    end = start + np.fromiter(map(len, payload), np.int64, n)[order]
+    # the delivered edge before each segment: every kept segment moves
+    # it to its end, a dropped one lies wholly below it
+    edge = np.concatenate(([0], np.maximum.accumulate(end)[:-1]))
+    keep = end > edge
+    trim = np.maximum(edge - start, 0)[keep]
+    kept = order[keep]
+    return kept, [payload[i][t:] if t else payload[i] for i, t in zip(kept, trim)]
 
 
 def map_rows(df: DataFrame, cols: list, fn, schema: T.StructType) -> DataFrame:
     """``fn(*values)`` → output row dicts for every row of ``df``'s
-    ``cols``, in ONE ``mapInPandas`` (a Python call per Arrow batch of
-    groups, not per group).  Only ``cols`` reach Python: mapInPandas
-    is opaque to column pruning."""
-    names = schema.fieldNames()
+    ``cols``, in ONE ``mapInArrow`` (a Python call per Arrow batch of
+    groups, not per group).  Scalar columns arrive as Python values; a
+    list-of-struct column (a :func:`collect_segments` ``segs``) arrives
+    as a dict of numpy arrays, the row's slice of each child array —
+    flattened once per Arrow batch.  Only ``cols`` reach Python:
+    mapInArrow is opaque to column pruning."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
 
     def batch_fn(batches):
-        for pdf in batches:
-            rows = [r for vals in zip(*(pdf[c] for c in cols)) for r in fn(*vals)]
-            yield pd.DataFrame(rows, columns=names)
+        import pyarrow as pa
 
-    return df.select(*cols).mapInPandas(batch_fn, schema)
+        for batch in batches:
+            values = [_arrow_values(c) for c in batch.columns]
+            rows = [r for vals in zip(*values) for r in fn(*vals)]
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+
+    return df.select(*cols).mapInArrow(batch_fn, schema)
+
+
+def _arrow_values(arr) -> list:
+    """An Arrow column's per-row values for :func:`map_rows`."""
+    import pyarrow as pa
+
+    if not (pa.types.is_list(arr.type) and pa.types.is_struct(arr.type.value_type)):
+        return arr.to_pylist()
+    offs = arr.offsets.to_numpy()
+    offs = offs - offs[0]
+    flat = arr.flatten()
+    fields = {
+        flat.type.field(i).name: child.to_numpy(zero_copy_only=False)
+        for i, child in enumerate(flat.flatten())
+    }
+    return [
+        {k: v[offs[i]:offs[i + 1]] for k, v in fields.items()}
+        for i in range(len(arr))
+    ]
 
 
 def _frame_messages(stream: bytes) -> List[bytes]:
@@ -276,6 +368,12 @@ def dns_columns(msg) -> dict:
     }
 
 
+def dns_ports():
+    """The DNS-over-TCP flow filter of :func:`reassemble_dns_tcp` and
+    the streaming DNS operator: either port is 53."""
+    return (F.col("src_port") == 53) | (F.col("dst_port") == 53)
+
+
 def reassemble_dns_tcp(
     packets: DataFrame,
     max_flow_bytes: int = 64 * 1024 * 1024,
@@ -288,45 +386,33 @@ def reassemble_dns_tcp(
     pkt_no payload`` (the default ``read_pcap`` schema; pass
     ``columns=[...]`` with exactly these for a pruned decode).
 
-    Execution shape: JVM-side ``collect_list`` to flow grain, then one
-    ``mapInPandas`` parsing a whole Arrow batch of flows per
-    invocation (the :func:`connection_segments` amortization — a busy
-    resolver trace is exactly the many-small-flows shape where
-    per-group ``applyInPandas`` overhead dominates)."""
-    segments = packets.filter(
-        (F.col("protocol") == "TCP")
-        & ((F.col("src_port") == 53) | (F.col("dst_port") == 53))
-        & F.col("payload").isNotNull()
-        & (F.length("payload") > 0)
-    )
-    # project BEFORE the shuffle: only the flow key + ordinal + bytes
-    # (+ the optional window bucket) move
-    cols = [*_FLOW_KEY, "pkt_no", "payload"]
-    keys = list(_FLOW_KEY)
-    if window is not None:  # endless-capture state bound (see connection_segments)
-        cols.append(F.window(F.timestamp_seconds(F.col("ts")), window).alias("_w"))
-        keys.append("_w")
-    segments = segments.select(*cols)
-    flows = segments.groupBy(*keys).agg(
-        F.collect_list(F.struct("pkt_no", "payload")).alias("segs")
+    Execution shape: the :func:`l7_segments` layout under the
+    directional ``conn`` key, a JVM-side ``collect_list`` to flow grain,
+    then one ``mapInArrow`` parsing a whole Arrow batch of flows per
+    invocation (:func:`map_rows` — a busy resolver trace is exactly the
+    many-small-flows shape where per-group Python overhead dominates)."""
+    flows = collect_segments(
+        l7_segments(packets, directional=True, flow_filter=dns_ports(), window=window)
     )
 
-    def _parse_flow(file, src, dst, sp, dp, segs):
-        segs = sorted(segs, key=lambda s: s["pkt_no"])
-        stream, _cut = _join_capped(segs, max_flow_bytes)
+    def _parse_flow(file, conn, segs):
+        src, src_port, dst, dst_port = conn_endpoints(conn)
+        ((stream, _cut, rows),) = join_directions(
+            (segs["pkt_no"],), None, segs["payload"], max_flow_bytes
+        ).values()
         for i, msg in dns_messages(_frame_messages(stream)):
             yield {
                 "file": file,
                 "src": src,
                 "dst": dst,
-                "src_port": None if pd.isna(sp) else int(sp),
-                "dst_port": None if pd.isna(dp) else int(dp),
-                "n_segments": int(len(segs)),
+                "src_port": src_port,
+                "dst_port": dst_port,
+                "n_segments": len(rows),
                 "msg_no": i,
                 **dns_columns(msg),
             }
 
-    return map_rows(flows, [*_FLOW_KEY, "segs"], _parse_flow, REASSEMBLED_SCHEMA)
+    return map_rows(flows, ["file", "conn", "segs"], _parse_flow, REASSEMBLED_SCHEMA)
 
 
 TCP_STREAM_SCHEMA = T.StructType(
@@ -343,55 +429,6 @@ TCP_STREAM_SCHEMA = T.StructType(
         T.StructField("stream", T.BinaryType(), True),
     ]
 )
-
-
-def _seq_order(segs: list) -> list:
-    """Capture-ordered segments (dicts with ``tcp_seq``/``payload``) →
-    seq-ordered, de-retransmitted, overlap-trimmed list.  Relative seq
-    = (tcp_seq - first_seen_seq) mod 2^32, so a flow crossing the
-    32-bit wrap still orders correctly (capture shorter than 2 GiB of
-    in-flight span — the realistic case).  Exact duplicates drop
-    (first capture wins); a segment overlapping already-delivered
-    bytes is trimmed to its new suffix; segments without a seq (e.g. a
-    decode cut before the field) keep capture order at their position
-    by inheriting the running delivered edge."""
-    first = None
-    for s in segs:
-        if s.get("tcp_seq") is not None:
-            first = int(s["tcp_seq"])
-            break
-    if first is None:
-        return segs
-    keyed = []
-    for i, s in enumerate(segs):
-        seq = s.get("tcp_seq")
-        rel = ((int(seq) - first) % (1 << 32)) if seq is not None else None
-        keyed.append((rel, i, s))
-    # stable sort: seq-less rows keep capture position via prior rel
-    last_rel = 0
-    for j, (rel, i, s) in enumerate(keyed):
-        if rel is None:
-            keyed[j] = (last_rel, i, s)
-        else:
-            last_rel = rel
-    keyed.sort(key=lambda t: (t[0], t[1]))
-    out = []
-    edge = 0  # next expected relative byte
-    for rel, _i, s in keyed:
-        b = s["payload"]
-        if b is None:
-            continue
-        b = bytes(b)
-        if rel + len(b) <= edge:
-            continue  # pure retransmission: fully delivered already
-        if rel < edge:
-            b = b[edge - rel:]  # overlap: keep the new suffix only
-            rel = edge
-        t = dict(s)
-        t["payload"] = b
-        out.append(t)
-        edge = rel + len(b)
-    return out
 
 
 def reassemble_tcp_streams(
@@ -436,60 +473,37 @@ def reassemble_tcp_streams(
     exchanged, removing the capture-order divergence for opt-in
     callers.
 
-    Execution shape: the group-to-flow step is a JVM-side
-    ``collect_list`` (whole-stage codegen), and ONE ``mapInPandas``
-    invocation assembles a whole Arrow batch of flows — the same
-    per-group-overhead amortization as :func:`connection_segments`
-    (per-group ``applyInPandas`` pays a fixed pandas conversion per
-    column per flow, ~5-7 ms of Python CPU at five to ten columns, the
-    dominant term on many-small-flow captures)."""
-    if order not in ("capture", "seq"):
-        raise ValueError(f"order must be 'capture' or 'seq', got {order!r}")
-    if order == "seq" and "tcp_seq" not in packets.columns:
-        raise ValueError(
-            "order='seq' needs the opt-in tcp_seq column — decode with "
-            "columns=[..., 'tcp_seq']"
-        )
-    segments = packets.filter(
-        (F.col("protocol") == "TCP")
-        & F.col("payload").isNotNull()
-        & (F.length("payload") > 0)
-    )
-    if flow_filter is not None:
-        segments = segments.filter(flow_filter)
-    seg_fields = ["pkt_no", "payload"] + (["tcp_seq"] if order == "seq" else [])
-    cols = [*_FLOW_KEY, *seg_fields]
-    keys = list(_FLOW_KEY)
-    if window is not None:  # endless-capture state bound (see connection_segments)
-        cols.append(F.window(F.timestamp_seconds(F.col("ts")), window).alias("_w"))
-        keys.append("_w")
-    flows = (
-        segments.select(*cols)
-        .groupBy(*keys)
-        .agg(
-            F.collect_list(F.struct(*seg_fields)).alias("segs"),
+    Execution shape: as :func:`reassemble_dns_tcp` — the
+    :func:`l7_segments` layout under the directional ``conn`` key, a
+    JVM-side ``collect_list``, and one ``mapInArrow`` assembling a whole
+    Arrow batch of flows per invocation."""
+    flows = collect_segments(
+        l7_segments(
+            packets, directional=True, flow_filter=flow_filter, order=order,
+            window=window,
         )
     )
 
-    def _join_flow(file, src, dst, sp, dp, segs):
-        segs = sorted(segs, key=lambda s: s["pkt_no"])
-        if order == "seq":
-            segs = _seq_order(segs)
-        stream, truncated = _join_capped(segs, max_flow_bytes)
+    def _join_flow(file, conn, segs):
+        src, sp, dst, dp = conn_endpoints(conn)
+        ((stream, truncated, rows),) = join_directions(
+            (segs["pkt_no"],), None, segs["payload"], max_flow_bytes,
+            seq=segs.get("tcp_seq"),
+        ).values()
         yield {
             "file": file,
             "src": src,
             "dst": dst,
-            "src_port": None if pd.isna(sp) else int(sp),
-            "dst_port": None if pd.isna(dp) else int(dp),
-            "n_segments": int(len(segs)),
-            "first_pkt_no": int(segs[0]["pkt_no"]),
+            "src_port": sp,
+            "dst_port": dp,
+            "n_segments": len(rows),
+            "first_pkt_no": int(segs["pkt_no"][rows[0]]),
             "stream_len": len(stream),
             "truncated": truncated,
             "stream": stream,
         }
 
-    return map_rows(flows, [*_FLOW_KEY, "segs"], _join_flow, TCP_STREAM_SCHEMA)
+    return map_rows(flows, ["file", "conn", "segs"], _join_flow, TCP_STREAM_SCHEMA)
 
 
 IPV4_REASSEMBLED_SCHEMA = T.StructType(
@@ -546,9 +560,8 @@ def reassemble_ipv4_fragments(
     corrupting output (duplicate offsets drop deterministically).
 
     Execution shape: JVM-side ``collect_list`` to datagram grain, then
-    one ``mapInPandas`` reassembling a whole Arrow batch of datagrams
-    per Python invocation (the :func:`connection_segments`
-    amortization)."""
+    one ``mapInArrow`` reassembling a whole Arrow batch of datagrams
+    per Python invocation (:func:`map_rows`)."""
     grouped = (
         packets.filter(F.col("frag") & F.col("frag_body").isNotNull())
         .select(
@@ -563,26 +576,26 @@ def reassemble_ipv4_fragments(
         )
     )
 
-    def _reassemble(file, src, dst, proto, ident, frag_rows):
-        frag_rows = sorted(
-            frag_rows, key=lambda r: (r["frag_offset"], r["pkt_no"])
-        )
+    def _reassemble(file, src, dst, proto, ident, frags):
+        import numpy as np
+
+        offs, mfs, bodies = frags["frag_offset"], frags["frag_mf"], frags["frag_body"]
         seen_off = set()
         ordered = []
-        for r in frag_rows:  # duplicate offsets drop — first retransmit wins
-            if r["frag_offset"] in seen_off:
+        for i in np.lexsort((frags["pkt_no"], offs)):
+            if offs[i] in seen_off:  # duplicate offsets drop — first retransmit wins
                 continue
-            seen_off.add(r["frag_offset"])
-            ordered.append(r)
+            seen_off.add(offs[i])
+            ordered.append(i)
         chunks: List[bytes] = []
         expect = 0
         total = 0
         contiguous = True
         truncated = False
         last_mf = True
-        for r in ordered:
-            off = int(r["frag_offset"])
-            body = bytes(r["frag_body"])
+        for i in ordered:
+            off = int(offs[i])
+            body = bytes(bodies[i])
             if off != expect:
                 contiguous = False
             if total + len(body) > max_datagram_bytes:
@@ -591,14 +604,14 @@ def reassemble_ipv4_fragments(
             chunks.append(body)
             total += len(body)
             expect = off + len(body)  # next fragment must start here
-            last_mf = bool(r["frag_mf"])
+            last_mf = bool(mfs[i])
             if truncated:
                 break
         datagram = b"".join(chunks)
         complete = contiguous and not last_mf and not truncated
         sp = dp = None
         payload = datagram
-        first_present = int(ordered[0]["frag_offset"]) == 0
+        first_present = int(offs[ordered[0]]) == 0
         if first_present and proto == "UDP" and len(datagram) >= 8:
             sp = int.from_bytes(datagram[0:2], "big")
             dp = int.from_bytes(datagram[2:4], "big")
@@ -613,7 +626,7 @@ def reassemble_ipv4_fragments(
             "src": src,
             "dst": dst,
             "protocol": proto,
-            "ip_ident": None if pd.isna(ident) else int(ident),
+            "ip_ident": ident,
             "src_port": sp,
             "dst_port": dp,
             "n_fragments": int(len(ordered)),

@@ -26,8 +26,8 @@ Scale notes (100 TB):
   ``max_flow_bytes`` each (``body_truncated`` rather than an OOM) —
   the same hot-flow guard as the DNS reassembler.
 * Parsing is pure-Python over Arrow batches of connections
-  (collect_list to connection grain JVM-side, then one mapInPandas —
-  flows.connection_segments): bytes move once, Python invocations
+  (collect_list to connection grain JVM-side, then one mapInArrow —
+  flows.l7_segments, flows.map_rows): bytes move once, Python invocations
   scale with batches, and the connection count — not the packet
   count — bounds task-side work.  ``window=`` adds a tumbling
   event-time bucket to the connection key for endless captures.
@@ -457,39 +457,40 @@ def http_objects(
     one shuffle co-locates both directions; request vs response
     direction is decided by stream content, not port numbers.
 
-    Execution shape: JVM-side ``collect_list`` to connection grain
-    (:func:`..operators.flows.connection_segments`), then ONE
-    ``mapInPandas`` whose each invocation parses a whole Arrow batch
-    of connections — per-connection Python overhead amortizes across
-    the batch (the per-group ``applyInPandas`` form measured ~5 ms of
-    fixed cost per connection, dominating small-object workloads).
+    Execution shape: each connection's segments in the
+    :func:`..operators.flows.l7_segments` layout, collected JVM-side
+    (one shuffle), then ONE ``mapInArrow`` whose each invocation parses
+    a whole Arrow batch of connections — per-connection Python overhead
+    amortizes across the batch (per-connection ``applyInArrow``
+    measured +65-85% on this stage).
 
     ``order="seq"`` (needs the opt-in ``tcp_seq`` column in
     ``columns=``) heals each direction by TCP sequence number before
     parsing — retransmitted duplicates drop and reordered segments
     re-sort, so damaged crawl captures still yield correct objects;
     the default stays capture order."""
-    from .flows import connection_segments, directional_streams, map_rows
-
-    if order not in ("capture", "seq"):
-        raise ValueError(f"order must be 'capture' or 'seq', got {order!r}")
-    if order == "seq" and "tcp_seq" not in packets.columns:
-        raise ValueError(
-            "order='seq' needs the opt-in tcp_seq column — decode with "
-            "columns=[..., 'tcp_seq']"
-        )
-    conns = connection_segments(
-        packets, flow_filter, window=window, with_seq=(order == "seq")
+    from .flows import (
+        collect_segments, conn_endpoints, join_directions, l7_segments, map_rows,
     )
 
-    def _parse_connection(fname, segs):
+    conns = collect_segments(
+        l7_segments(packets, flow_filter=flow_filter, order=order, window=window)
+    )
+
+    def _parse_connection(fname, conn, segs):
+        a_ip, a_port, b_ip, b_port = conn_endpoints(conn)
+        ends = {True: (a_ip, a_port), False: (b_ip, b_port)}
         req = resp = None
-        for key, stream, cut in directional_streams(segs, max_flow_bytes, order=order):
+        dirs = join_directions(
+            (segs["pkt_no"],), segs["from_a"], segs["payload"], max_flow_bytes,
+            seq=segs.get("tcp_seq"),
+        )
+        for side, (stream, cut, _rows) in dirs.items():
             role = classify_stream(stream)
             if role == "req":
-                req = (key, stream)
+                req = (ends[side], stream)
             elif role == "resp":
-                resp = (key, stream, cut)
+                resp = (ends[side], stream, cut)
         if req is None or resp is None:
             return
         (client, _cport), req_stream = req
@@ -506,9 +507,8 @@ def http_objects(
                 **object_fields(i, method, url, rs),
             }
 
-    # only file + segs reach Python: the canonical endpoint-pair key
-    # structs _a/_b (and _w when windowed) are never read, direction is
-    # decided by stream CONTENT.  Measured on the 2000-connection
-    # fixture: full query min wall 2.78 → 1.85 s (cpu 11.2 → 9.9 s)
-    # from this projection alone (r14).
-    return map_rows(conns, ["file", "segs"], _parse_connection, HTTP_OBJECT_SCHEMA)
+    # the window bucket _w (when windowed) never reaches Python;
+    # direction is decided by stream CONTENT
+    return map_rows(
+        conns, ["file", "conn", "segs"], _parse_connection, HTTP_OBJECT_SCHEMA
+    )

@@ -2,8 +2,9 @@
 
 Pattern: media lives as an opaque BinaryType column plus typed
 metadata columns; decode / feature-extract / resize / frame-sample run
-as Arrow-batched pandas iterators over ``mapInPandas`` so each task
-processes a column of byte blobs without JVM round-trips per row.
+per blob inside one Arrow-batched ``mapInArrow`` (``flows.map_rows``)
+so each task processes a column of byte blobs without JVM round-trips
+per row.
 
 Decoder resolution order (each step import-guarded / format-guarded):
 
@@ -25,14 +26,11 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .flows import map_rows
 from .partitioning import spread as _spread
 
 IMAGE_FEATURE_SCHEMA = T.StructType(
@@ -150,28 +148,22 @@ def image_features(
     repartitions ONLY when the scan is under-parallel; a no-op with
     zero Exchange at real file counts)."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                data = bytes(data) if data is not None else b""
-                try:
-                    w, h = _decode_image(data, codec)
-                except ValueError:
-                    w, h = None, None
-                rows.append(
-                    dict(
-                        media_id=int(mid),
-                        n_bytes=len(data),
-                        format_guess=sniff_format(data),
-                        width=w,
-                        height=h,
-                        content_sha=hashlib.sha256(data).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in IMAGE_FEATURE_SCHEMA.fields])
+    def fn(mid, data):
+        data = data or b""
+        try:
+            w, h = _decode_image(data, codec)
+        except ValueError:
+            w, h = None, None
+        yield dict(
+            media_id=mid,
+            n_bytes=len(data),
+            format_guess=sniff_format(data),
+            width=w,
+            height=h,
+            content_sha=hashlib.sha256(data).hexdigest(),
+        )
 
-    return _spread(df.select(id_col, bytes_col), id_col).mapInPandas(fn, IMAGE_FEATURE_SCHEMA)
+    return map_rows(_spread(df.select(id_col, bytes_col), id_col), [id_col, bytes_col], fn, IMAGE_FEATURE_SCHEMA)
 
 
 FRAME_SCHEMA = T.StructType(
@@ -189,23 +181,16 @@ def sample_frames(df: DataFrame, every_n_bytes: int = 1024, id_col: str = "media
     windows; a real implementation feeds ffmpeg and yields one row per
     sampled frame."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                data = bytes(data) if data is not None else b""
-                for i in range(0, max(len(data), 1), every_n_bytes):
-                    chunk = data[i : i + every_n_bytes]
-                    rows.append(
-                        dict(
-                            media_id=int(mid),
-                            frame_no=i // every_n_bytes,
-                            frame_sha=hashlib.sha256(chunk).hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in FRAME_SCHEMA.fields])
+    def fn(mid, data):
+        data = data or b""
+        for i in range(0, max(len(data), 1), every_n_bytes):
+            yield dict(
+                media_id=mid,
+                frame_no=i // every_n_bytes,
+                frame_sha=hashlib.sha256(data[i : i + every_n_bytes]).hexdigest(),
+            )
 
-    return _spread(df.select(id_col, bytes_col), id_col).mapInPandas(fn, FRAME_SCHEMA)
+    return map_rows(_spread(df.select(id_col, bytes_col), id_col), [id_col, bytes_col], fn, FRAME_SCHEMA)
 
 
 AUDIO_FEATURE_SCHEMA = T.StructType(
@@ -296,33 +281,27 @@ def audio_features(
     """Audio twin of image_features: binary → typed metadata rows,
     Arrow-batched, no shuffle."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                data = bytes(data) if data is not None else b""
-                fmt = "unknown"
-                for magic, name in _AUDIO_MAGIC.items():
-                    if data[: len(magic)] == magic:
-                        fmt = name
-                        break
-                try:
-                    dur, rate = _decode_audio(data, codec)
-                except ValueError:
-                    dur, rate = None, None
-                rows.append(
-                    dict(
-                        media_id=int(mid),
-                        n_bytes=len(data),
-                        format_guess=fmt,
-                        duration_ms=dur,
-                        sample_rate=rate,
-                        content_sha=hashlib.sha256(data).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_FEATURE_SCHEMA.fields])
+    def fn(mid, data):
+        data = data or b""
+        fmt = "unknown"
+        for magic, name in _AUDIO_MAGIC.items():
+            if data[: len(magic)] == magic:
+                fmt = name
+                break
+        try:
+            dur, rate = _decode_audio(data, codec)
+        except ValueError:
+            dur, rate = None, None
+        yield dict(
+            media_id=mid,
+            n_bytes=len(data),
+            format_guess=fmt,
+            duration_ms=dur,
+            sample_rate=rate,
+            content_sha=hashlib.sha256(data).hexdigest(),
+        )
 
-    return _spread(df.select(id_col, bytes_col), id_col).mapInPandas(fn, AUDIO_FEATURE_SCHEMA)
+    return map_rows(_spread(df.select(id_col, bytes_col), id_col), [id_col, bytes_col], fn, AUDIO_FEATURE_SCHEMA)
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -368,46 +347,37 @@ def resize_images(
     Scale: pure map, no shuffle; output rows carry re-encoded blobs so
     the downstream write re-partitions by size, not here."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        PILImage = None
-        if codec == "auto":
+    def fn(mid, data):
+        data = data or b""
+        try:
+            sw, sh = _decode_image(data, codec)
+        except ValueError:
+            sw, sh = None, None
+        if sw is None:
+            yield dict(media_id=mid, src_width=None, src_height=None,
+                       width=None, height=None, content=data, resized=False)
+            return
+        w, h = _fit_dims(sw, sh, max_dim)
+        out, did = data, False
+        if codec == "auto" and (w, h) != (sw, sh):
             try:
                 import io
 
                 import PIL.Image as PILImage
             except ImportError:
                 PILImage = None
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                data = bytes(data) if data is not None else b""
+            if PILImage is not None:
                 try:
-                    sw, sh = _decode_image(data, codec)
-                except ValueError:
-                    sw, sh = None, None
-                if sw is None:
-                    rows.append(
-                        dict(media_id=int(mid), src_width=None, src_height=None,
-                             width=None, height=None, content=data, resized=False)
-                    )
-                    continue
-                w, h = _fit_dims(sw, sh, max_dim)
-                out, did = data, False
-                if PILImage is not None and (w, h) != (sw, sh):
-                    try:
-                        img = PILImage.open(io.BytesIO(data)).resize((w, h))
-                        buf = io.BytesIO()
-                        img.save(buf, format="PNG")
-                        out, did = buf.getvalue(), True
-                    except Exception:
-                        out, did = data, False
-                rows.append(
-                    dict(media_id=int(mid), src_width=sw, src_height=sh,
-                         width=w, height=h, content=out, resized=did)
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in RESIZED_SCHEMA.fields])
+                    img = PILImage.open(io.BytesIO(data)).resize((w, h))
+                    buf = io.BytesIO()
+                    img.save(buf, format="PNG")
+                    out, did = buf.getvalue(), True
+                except Exception:
+                    out, did = data, False
+        yield dict(media_id=mid, src_width=sw, src_height=sh,
+                   width=w, height=h, content=out, resized=did)
 
-    return _spread(df.select(id_col, bytes_col), id_col).mapInPandas(fn, RESIZED_SCHEMA)
+    return map_rows(_spread(df.select(id_col, bytes_col), id_col), [id_col, bytes_col], fn, RESIZED_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -601,36 +571,25 @@ def image_pixel_stats(
     Scale: Arrow-batched pure map, no shuffle; per-task memory is one
     decoded raster at a time."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fn(mid, data):
         import numpy as np
 
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                data = bytes(data) if data is not None else b""
-                w = h = npx = sr = sg = sb = None
-                out = _decode_png_raster(data)
-                if out is not None:
-                    w, h, rgb_rows = out
-                    s = (
-                        np.frombuffer(b"".join(rgb_rows), dtype=np.uint8)
-                        .reshape(-1, 3)
-                        .astype(np.int64)
-                        .sum(axis=0)
-                    )
-                    sr, sg, sb = int(s[0]), int(s[1]), int(s[2])
-                    npx = w * h
-                rows.append(
-                    dict(media_id=int(mid), width=w, height=h, n_px=npx,
-                         sum_r=sr, sum_g=sg, sum_b=sb)
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in PIXEL_STATS_SCHEMA.fields]
+        w = h = npx = sr = sg = sb = None
+        out = _decode_png_raster(data or b"")
+        if out is not None:
+            w, h, rgb_rows = out
+            s = (
+                np.frombuffer(b"".join(rgb_rows), dtype=np.uint8)
+                .reshape(-1, 3)
+                .astype(np.int64)
+                .sum(axis=0)
             )
+            sr, sg, sb = int(s[0]), int(s[1]), int(s[2])
+            npx = w * h
+        yield dict(media_id=mid, width=w, height=h, n_px=npx,
+                   sum_r=sr, sum_g=sg, sum_b=sb)
 
-    return _spread(df.select(id_col, bytes_col), id_col).mapInPandas(
-        fn, PIXEL_STATS_SCHEMA
-    )
+    return map_rows(_spread(df.select(id_col, bytes_col), id_col), [id_col, bytes_col], fn, PIXEL_STATS_SCHEMA)
 
 
 def dhash64(w: int, h: int, rgb_rows, grid_w: int = 9, grid_h: int = 8):
@@ -717,21 +676,11 @@ def image_dhash(
     or sub-grid blobs yield NULL.  Scale: Arrow-batched pure map, no
     shuffle; downstream dedup is one group-by on the 64-bit hash."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                data = bytes(data) if data is not None else b""
-                raster = _decode_png_raster(data)
-                dh = dhash64(*raster) if raster is not None else None
-                rows.append(dict(media_id=int(mid), dhash=dh))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in DHASH_SCHEMA.fields]
-            )
+    def fn(mid, data):
+        raster = _decode_png_raster(data or b"")
+        yield dict(media_id=mid, dhash=dhash64(*raster) if raster is not None else None)
 
-    return _spread(df.select(id_col, bytes_col), id_col).mapInPandas(
-        fn, DHASH_SCHEMA
-    )
+    return map_rows(_spread(df.select(id_col, bytes_col), id_col), [id_col, bytes_col], fn, DHASH_SCHEMA)
 
 
 PCM_STATS_SCHEMA = T.StructType(
@@ -809,34 +758,25 @@ def audio_fingerprint(
     Arrow-batched pure map; dedup downstream is one group-by on the
     64-bit hash."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fn(mid, data):
         import io
         import wave
 
         import numpy as np
 
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                data = bytes(data) if data is not None else b""
-                fp = None
-                try:
-                    with wave.open(io.BytesIO(data)) as wf:
-                        if wf.getsampwidth() == 2:
-                            chans = wf.getnchannels()
-                            pcm = wf.readframes(wf.getnframes())
-                            samples = np.frombuffer(pcm, dtype="<i2")
-                            fp = audio_fingerprint64(chans, samples)
-                except (wave.Error, EOFError, OSError, ValueError):
-                    fp = None
-                rows.append(dict(media_id=int(mid), afp=fp))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_FP_SCHEMA.fields]
-            )
+        fp = None
+        try:
+            with wave.open(io.BytesIO(data or b"")) as wf:
+                if wf.getsampwidth() == 2:
+                    chans = wf.getnchannels()
+                    pcm = wf.readframes(wf.getnframes())
+                    samples = np.frombuffer(pcm, dtype="<i2")
+                    fp = audio_fingerprint64(chans, samples)
+        except (wave.Error, EOFError, OSError, ValueError):
+            fp = None
+        yield dict(media_id=mid, afp=fp)
 
-    return _spread(df.select(id_col, bytes_col), id_col).mapInPandas(
-        fn, AUDIO_FP_SCHEMA
-    )
+    return map_rows(_spread(df.select(id_col, bytes_col), id_col), [id_col, bytes_col], fn, AUDIO_FP_SCHEMA)
 
 
 def split_png_frames(data: bytes):
@@ -894,27 +834,16 @@ def video_frame_hashes(
     Scale: Arrow-batched pure map; per-task memory is one frame
     raster at a time."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                data = bytes(data) if data is not None else b""
-                for i, frame in enumerate(split_png_frames(data)):
-                    raster = _decode_png_raster(frame)
-                    if raster is None:
-                        continue
-                    dh = dhash64(*raster)
-                    if dh is not None:
-                        rows.append(
-                            dict(media_id=int(mid), frame_no=i + 1, dhash=dh)
-                        )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in VIDEO_FRAME_HASH_SCHEMA.fields]
-            )
+    def fn(mid, data):
+        for i, frame in enumerate(split_png_frames(data or b"")):
+            raster = _decode_png_raster(frame)
+            if raster is None:
+                continue
+            dh = dhash64(*raster)
+            if dh is not None:
+                yield dict(media_id=mid, frame_no=i + 1, dhash=dh)
 
-    return _spread(df.select(id_col, bytes_col), id_col).mapInPandas(
-        fn, VIDEO_FRAME_HASH_SCHEMA
-    )
+    return map_rows(_spread(df.select(id_col, bytes_col), id_col), [id_col, bytes_col], fn, VIDEO_FRAME_HASH_SCHEMA)
 
 
 def audio_pcm_stats(
@@ -932,40 +861,29 @@ def audio_pcm_stats(
 
     Scale: Arrow-batched pure map, no shuffle."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fn(mid, data):
         import io
         import wave
 
         import numpy as np
 
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                data = bytes(data) if data is not None else b""
-                rate = chans = nfr = dur = sabs = None
-                try:
-                    with wave.open(io.BytesIO(data)) as wf:
-                        if wf.getsampwidth() == 2:
-                            rate = wf.getframerate()
-                            chans = wf.getnchannels()
-                            nfr = wf.getnframes()
-                            pcm = wf.readframes(nfr)
-                            samples = np.frombuffer(pcm, dtype="<i2")
-                            # frames actually present can undershoot a
-                            # lying header; report what decoded
-                            nfr = len(samples) // chans if chans else 0
-                            dur = nfr * 1000 // rate if rate else None
-                            sabs = int(np.abs(samples.astype(np.int64)).sum())
-                except (wave.Error, EOFError, OSError, ValueError):
-                    rate = chans = nfr = dur = sabs = None
-                rows.append(
-                    dict(media_id=int(mid), sample_rate=rate, n_channels=chans,
-                         n_frames=nfr, duration_ms=dur, sum_abs=sabs)
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in PCM_STATS_SCHEMA.fields]
-            )
+        rate = chans = nfr = dur = sabs = None
+        try:
+            with wave.open(io.BytesIO(data or b"")) as wf:
+                if wf.getsampwidth() == 2:
+                    rate = wf.getframerate()
+                    chans = wf.getnchannels()
+                    nfr = wf.getnframes()
+                    pcm = wf.readframes(nfr)
+                    samples = np.frombuffer(pcm, dtype="<i2")
+                    # frames actually present can undershoot a
+                    # lying header; report what decoded
+                    nfr = len(samples) // chans if chans else 0
+                    dur = nfr * 1000 // rate if rate else None
+                    sabs = int(np.abs(samples.astype(np.int64)).sum())
+        except (wave.Error, EOFError, OSError, ValueError):
+            rate = chans = nfr = dur = sabs = None
+        yield dict(media_id=mid, sample_rate=rate, n_channels=chans,
+                   n_frames=nfr, duration_ms=dur, sum_abs=sabs)
 
-    return _spread(df.select(id_col, bytes_col), id_col).mapInPandas(
-        fn, PCM_STATS_SCHEMA
-    )
+    return map_rows(_spread(df.select(id_col, bytes_col), id_col), [id_col, bytes_col], fn, PCM_STATS_SCHEMA)

@@ -1039,51 +1039,10 @@ def embedding_near_dup_rp(
         auto_planes, auto_bands = rp_band_params(emb.count(), threshold)
         band_planes = band_planes if band_planes is not None else auto_planes
         n_bands = n_bands if n_bands is not None else auto_bands
-    from .cache import register_persisted
-    from .dedup import candidate_pairs
-
-    par = emb.sparkSession.sparkContext.defaultParallelism
-    # hash-partition on the join key (NOT round-robin): the cached
-    # partitioning then satisfies the merge-pinned verify joins below
-    # with no corpus-side exchange (measured: 9 -> 7 exchanges with
-    # AQE off; AQE currently re-exchanges cached plans regardless,
-    # so under AQE this costs nothing and removes two shuffles the
-    # moment the cache's partitioning is honored)
-    vecs = emb.repartition(par, id_col).select(
-        F.col(id_col).alias("doc_id"),
-        F.col(vec_col).alias("vec"),
-        _norm(F.col(vec_col)).alias("nrm"),
-    )
-    from pyspark import StorageLevel
-
-    vecs = vecs.persist(StorageLevel.MEMORY_AND_DISK)
-    cands = candidate_pairs(
-        rp_sign_bands(vecs, n_bands, band_planes, dim, seed), max_bucket
-    )
-    a = vecs.select(
-        F.col("doc_id").alias("a"), F.col("vec").alias("vec_a"), F.col("nrm").alias("nrm_a")
-    )
-    b = vecs.select(
-        F.col("doc_id").alias("b"), F.col("vec").alias("vec_b"), F.col("nrm").alias("nrm_b")
-    )
-    return register_persisted(
-        a.join(cands.hint("merge"), "a")
-        # merge-pinned for the same reason as jaccard_verify: the
-        # vector sides are corpus-sized; a static broadcast of them
-        # (observed when filters shrink estimates) cannot survive
-        # scale, while SMJ sorts the pre-partitioned cache in place
-        .join(b.hint("merge"), "b")
-        .withColumn(
-            "cos",
-            F.round(
-                _dot("vec_a", "vec_b", dim)
-                / F.nullif(F.col("nrm_a") * F.col("nrm_b"), F.lit(0.0)),
-                6,
-            ),
-        )
-        .filter(F.col("cos") >= threshold)
-        .select("a", "b", "cos"),
-        vecs,
+    return _cosine_near_dup(
+        emb,
+        lambda vecs: rp_sign_bands(vecs, n_bands, band_planes, dim, seed),
+        threshold, max_bucket, id_col, vec_col, dim,
     )
 
 
@@ -1107,6 +1066,23 @@ def embedding_near_dup(
     Never materializes O(n²) pairs — the 100 TB shape.
 
     Output: (a, b, cos) with a < b, cos rounded to 6 places."""
+    return _cosine_near_dup(
+        emb, lambda vecs: sign_bands(vecs, n_bands, band_dims),
+        threshold, max_bucket, id_col, vec_col, dim,
+    )
+
+
+def _cosine_near_dup(
+    emb: DataFrame, bands, threshold: float, max_bucket: int,
+    id_col: str, vec_col: str, dim: Optional[int],
+) -> DataFrame:
+    """The embedding near-dup body behind both banding schemes:
+    ``bands(vecs)`` → (doc_id, band, key) rows; candidates from
+    :func:`..operators.dedup.candidate_pairs`, then exact cosine ≥
+    ``threshold`` → (a, b, cos) with a < b, cos rounded to 6 places."""
+    from pyspark import StorageLevel
+
+    from .cache import register_persisted
     from .dedup import candidate_pairs
 
     par = emb.sparkSession.sparkContext.defaultParallelism
@@ -1121,23 +1097,19 @@ def embedding_near_dup(
         F.col(vec_col).alias("vec"),
         _norm(F.col(vec_col)).alias("nrm"),
     )
-    from pyspark import StorageLevel
-
     # vecs feeds banding + both verification sides.  The persist lives
     # as long as the returned (lazy) DataFrame; the result carries a
     # release handle — operators.release_persisted(result) after
     # materializing unpersists exactly this cache (ADVICE r2: relying
     # on spark.catalog.clearCache() evicted unrelated caches too).
     vecs = vecs.persist(StorageLevel.MEMORY_AND_DISK)
-    cands = candidate_pairs(sign_bands(vecs, n_bands, band_dims), max_bucket)
+    cands = candidate_pairs(bands(vecs), max_bucket)
     a = vecs.select(
         F.col("doc_id").alias("a"), F.col("vec").alias("vec_a"), F.col("nrm").alias("nrm_a")
     )
     b = vecs.select(
         F.col("doc_id").alias("b"), F.col("vec").alias("vec_b"), F.col("nrm").alias("nrm_b")
     )
-    from .cache import register_persisted
-
     return register_persisted(
         a.join(cands.hint("merge"), "a")
         # merge-pinned for the same reason as jaccard_verify: the

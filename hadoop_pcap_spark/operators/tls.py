@@ -26,7 +26,7 @@ Scale notes (100 TB):
   generous for certificate chains) long before the http-style 64 MiB
   flow cap, so application-data bytes never ship into Python.
 * Parsing is pure-Python over Arrow batches of connections
-  (collect_list + mapInPandas, the http_objects shape); work is
+  (collect_list + mapInArrow, the http_objects shape); work is
   bounded by the CONNECTION count, not packets or bytes.  ``window=``
   adds a tumbling event-time bucket for endless captures.
 
@@ -331,36 +331,40 @@ def tls_handshakes(
     row; a missing/unparseable ServerHello leaves the server-side
     columns NULL with ``server_hello_seen=false``.
 
-    Execution shape: JVM-side ``collect_list`` to connection grain
-    (:func:`..operators.flows.connection_segments`) + ONE
-    ``mapInPandas`` parsing a whole Arrow batch of connections per
-    invocation — the same amortized form as ``http_objects``."""
-    from .flows import connection_segments, directional_streams, map_rows
+    Execution shape: the :func:`..operators.flows.l7_segments` layout
+    collected JVM-side to connection grain + ONE ``mapInArrow`` parsing
+    a whole Arrow batch of connections per invocation — the same
+    amortized form as ``http_objects``."""
+    from .flows import (
+        collect_segments, conn_endpoints, join_directions, l7_segments, map_rows,
+    )
 
-    conns = connection_segments(packets, flow_filter, window=window)
+    conns = collect_segments(
+        l7_segments(packets, flow_filter=flow_filter, window=window)
+    )
 
-    def _parse_connection(fname, a, b, segs):
-        ch, ch_key, sh, sh_key = first_hellos(
-            (key, stream)
-            for key, stream, _tr in directional_streams(segs, max_handshake_bytes)
+    def _parse_connection(fname, conn, segs):
+        a_ip, a_port, b_ip, b_port = conn_endpoints(conn)
+        dirs = join_directions(
+            (segs["pkt_no"],), segs["from_a"], segs["payload"], max_handshake_bytes
+        )
+        ch, ch_a, sh, sh_a = first_hellos(
+            (side, stream) for side, (stream, _tr, _rows) in dirs.items()
         )
         if ch is None:
             return
-        client, _cport = ch_key
-        if sh is not None:
-            server, sport = sh_key
-        else:
-            # no ServerHello: the other endpoint of the pair is the server
-            other = b if (a["ip"], a["port"]) == (client, _cport) else a
-            server, sport = other["ip"], other["port"]
+        client = a_ip if ch_a else b_ip
+        # no ServerHello: the other endpoint of the pair is the server
+        server_a = sh_a if sh is not None else not ch_a
+        server, sport = (a_ip, a_port) if server_a else (b_ip, b_port)
         yield {
             "file": fname,
             "client": client,
             "server": server,
-            "server_port": None if sport is None else int(sport),
+            "server_port": sport,
             **session_fields(ch, sh),
         }
 
     return map_rows(
-        conns, ["file", "_a", "_b", "segs"], _parse_connection, TLS_SESSION_SCHEMA
+        conns, ["file", "conn", "segs"], _parse_connection, TLS_SESSION_SCHEMA
     )

@@ -160,7 +160,7 @@ def stateful_flow_counts(events: DataFrame, key_col: str = "user_id") -> DataFra
     because Spark converts each group's Arrow slice to pandas one
     column at a time: the HTTP operator below measured ~7.3 ms of
     Python CPU per group call at ten columns and ~4.7 ms at five
-    (see ``_l7_segments``).  So the operative knob is
+    (see :func:`..operators.flows.l7_segments`).  So the operative knob is
     ``spark.sql.shuffle.partitions`` AT FIRST QUERY START (it freezes
     into the checkpoint): size it to key cardinality × arrival
     rate, not to the box's core count — 1500 keys want ~8 partitions
@@ -197,99 +197,42 @@ def stateful_flow_counts(events: DataFrame, key_col: str = "user_id") -> DataFra
     )
 
 
-# --- the streaming L7 operators' shared segment layout ------------------------
+# --- the streaming L7 operators' input -------------------------------------
 #
 # applyInPandasWithState converts every group's Arrow slice to pandas
 # one column at a time and then joins the columns per group, so the
 # operators' cost per connection per micro-batch grows with the number
 # of columns they send.  The three L7 operators below therefore group
-# by ONE string key and send four value columns (three for DNS); the
-# Python side sorts and joins a group's payloads with numpy, no
-# per-row loop.  Measured on the pcap_stream benchmark (seed 71, 4
-# state partitions, 4-core host): the HTTP operator's state tasks took
-# 2.57 cpu-s of Python per pass with ten columns and a per-row loop,
-# 1.65 with this layout, over 353 group calls per pass.
+# the narrow :func:`..operators.flows.l7_segments` layout by its ONE
+# string key and send four value columns (three for DNS); the Python
+# side joins a group's payloads with
+# :func:`..operators.flows.join_directions` (numpy, no per-row loop).
+# Measured on the pcap_stream benchmark (seed 71, 4 state partitions,
+# 4-core host): the HTTP operator's state tasks took 2.57 cpu-s of
+# Python per pass with ten columns and a per-row loop, 1.65 with this
+# layout, over 353 group calls per pass.
 
 
-def _l7_segments(packets: DataFrame, directional: bool = False) -> DataFrame:
-    """The payload-bearing TCP segments of ``packets`` in the streaming
-    L7 operators' narrow layout:
-
-    * ``conn`` — ``"ip|port|ip|port"``, the one grouping key.  By
-      default the canonical (unordered) connection from
-      :func:`..operators.flows.canonical_pair_exprs`, a-side first;
-      ``directional=True`` keys the directed flow (src, src_port, dst,
-      dst_port) instead.  A NULL field renders as ``""`` (plain
-      ``concat_ws`` would skip it and shift the later fields);
-      :func:`_conn_endpoints` parses it back.
-    * ``from_a`` — the row's source is the key's a-side (canonical keys
-      only; a self-connection puts both directions on the a-side).
-    * ``t_us`` — ``ts`` · 10⁶ + ``ts_usec`` (``ts_usec`` when the input
-      carries it): with ``pkt_no`` the capture order, also across the
-      rotated files of one micro-batch, where ``pkt_no`` restarts.
-    * ``pkt_no``, ``payload``."""
-    from ..operators.flows import canonical_pair_exprs
-
-    segs = packets.filter(
-        (F.col("protocol") == "TCP")
-        & F.col("payload").isNotNull()
-        & (F.length("payload") > 0)
-    )
-    usec = (
-        F.coalesce(F.col("ts_usec").cast("long"), F.lit(0))
-        if "ts_usec" in packets.columns else F.lit(0)
-    )
-    if directional:
-        ends = [F.col("src"), F.col("src_port"), F.col("dst"), F.col("dst_port")]
-        side = []
-    else:
-        a_first, src_ep, dst_ep = canonical_pair_exprs()
-        a = F.when(a_first, src_ep).otherwise(dst_ep)
-        b = F.when(a_first, dst_ep).otherwise(src_ep)
-        ends = [a["ip"], a["port"], b["ip"], b["port"]]
-        side = [F.coalesce(a_first, F.lit(False)).alias("from_a")]
-    conn = F.concat_ws(
-        "|", *(F.coalesce(e.cast("string"), F.lit("")) for e in ends)
-    )
-    return segs.select(
-        conn.alias("conn"),
-        *side,
-        (F.col("ts").cast("long") * 1_000_000 + usec).alias("t_us"),
-        F.col("pkt_no").cast("long").alias("pkt_no"),
-        "payload",
-    )
-
-
-def _conn_endpoints(conn: str) -> tuple:
-    """``conn`` key → ``(ip, port, ip, port)`` in key order; the empty
-    field of a NULL endpoint part comes back as None."""
-    ip1, p1, ip2, p2 = conn.split("|")
-    return (
-        ip1 or None, int(p1) if p1 else None,
-        ip2 or None, int(p2) if p2 else None,
-    )
-
-
-def _segment_bytes(pdfs) -> tuple:
-    """One group's segments (the chunks ``applyInPandasWithState``
-    hands over) → ``(a_bytes, b_bytes, n_segments)``: payloads joined
-    per direction in (``t_us``, ``pkt_no``) order, stable for ties.
-    Without a ``from_a`` column every byte is a-side."""
-    import numpy as np
+def _group_streams(pdfs) -> tuple:
+    """One group's chunks (what ``applyInPandasWithState`` hands over)
+    → ``(a_bytes, b_bytes, n_segments)`` from
+    :func:`..operators.flows.join_directions` in (``t_us``, ``pkt_no``)
+    order.  Without a ``from_a`` column every byte is a-side."""
     import pandas as pd
+
+    from ..operators.flows import join_directions
 
     chunks = list(pdfs)
     if not chunks:
         return b"", b"", 0
-    batch = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-    if not len(batch):
-        return b"", b"", 0
-    order = np.lexsort((batch["pkt_no"].to_numpy(), batch["t_us"].to_numpy()))
-    payload = batch["payload"].to_numpy()[order]
-    if "from_a" not in batch.columns:
-        return b"".join(payload), b"", len(batch)
-    from_a = batch["from_a"].to_numpy(dtype=bool)[order]
-    return b"".join(payload[from_a]), b"".join(payload[~from_a]), len(batch)
+    seg = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+    dirs = join_directions(
+        (seg["t_us"].to_numpy(), seg["pkt_no"].to_numpy()),
+        seg["from_a"].to_numpy(bool) if "from_a" in seg.columns else None,
+        seg["payload"].to_numpy(),
+    )
+    a, b = (dirs[s][0] if s in dirs else b"" for s in (True, False))
+    return a, b, len(seg)
 
 
 DNS_TCP_OUTPUT = (
@@ -354,8 +297,8 @@ def streaming_http_objects(
     src/dst/src_port/dst_port/protocol/ts/pkt_no/payload; ``ts_usec``,
     when present, orders same-second segments across the rotated files
     of one micro-batch.  Each connection reaches Python in the narrow
-    :func:`_l7_segments` layout, keyed by its canonical ``conn`` string,
-    so state is keyed by that one column: a checkpoint whose state was
+    :func:`..operators.flows.l7_segments` layout, keyed by its canonical
+    ``conn`` string, so state is keyed by that one column: a checkpoint whose state was
     keyed by the four endpoint columns (a_ip, a_port, b_ip, b_port)
     does not resume — Spark stops the query at start with
     STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE."""
@@ -363,6 +306,7 @@ def streaming_http_objects(
 
     import pandas as pd
 
+    from ..operators.flows import conn_endpoints, l7_segments
     from ..operators.http import (
         classify_stream,
         desynchronized,
@@ -376,12 +320,12 @@ def streaming_http_objects(
     names = [c.split()[0] for c in HTTP_STREAM_OUTPUT.split(", ")]
 
     def update(key, pdfs, state):
-        a_ip, a_port, b_ip, b_port = _conn_endpoints(key[0])
+        a_ip, a_port, b_ip, b_port = conn_endpoints(key[0])
         a_res, b_res, client_is_a, n_objs, pending_json = (
             state.get if state.exists else (b"", b"", 0, 0, "[]")
         )
         pending = _json.loads(pending_json or "[]")
-        a_new, b_new, _n = _segment_bytes(pdfs)
+        a_new, b_new, _n = _group_streams(pdfs)
         a_res = bytes(a_res or b"") + a_new
         b_res = bytes(b_res or b"") + b_new
         if client_is_a == 0:
@@ -450,7 +394,7 @@ def streaming_http_objects(
         if rows:
             yield pd.DataFrame(rows, columns=names)
 
-    return _l7_segments(packets).groupBy("conn").applyInPandasWithState(
+    return l7_segments(packets, stream=True).groupBy("conn").applyInPandasWithState(
         update,
         outputStructType=HTTP_STREAM_OUTPUT,
         stateStructType=HTTP_STREAM_STATE,
@@ -488,16 +432,18 @@ def streaming_tls_clienthellos(
     — state bounded either way).
 
     Input and state key as :func:`streaming_http_objects`: one
-    canonical ``conn`` key in the :func:`_l7_segments` layout, so a
-    checkpoint keyed by the four endpoint columns does not resume."""
+    canonical ``conn`` key in the :func:`..operators.flows.l7_segments`
+    layout, so a checkpoint keyed by the four endpoint columns does not
+    resume."""
     import pandas as pd
 
+    from ..operators.flows import conn_endpoints, l7_segments
     from ..operators.tls import first_hellos, session_fields
 
     names = [c.split()[0] for c in TLS_STREAM_OUTPUT.split(", ")]
 
     def update(key, pdfs, state):
-        a_ip, a_port, b_ip, b_port = _conn_endpoints(key[0])
+        a_ip, a_port, b_ip, b_port = conn_endpoints(key[0])
         a_res, b_res, done = (
             state.get if state.exists else (b"", b"", False)
         )
@@ -506,7 +452,7 @@ def streaming_tls_clienthellos(
                 pass  # drain: connection already reported (or ruled out)
             state.update((b"", b"", True))
             return
-        a_new, b_new, _n = _segment_bytes(pdfs)
+        a_new, b_new, _n = _group_streams(pdfs)
         a_res = bytes(a_res or b"") + a_new
         b_res = bytes(b_res or b"") + b_new
         ch, ch_dir_a, _, _ = first_hellos(((True, a_res), (False, b_res)))
@@ -529,7 +475,7 @@ def streaming_tls_clienthellos(
             return
         state.update((a_res, b_res, False))
 
-    return _l7_segments(packets).groupBy("conn").applyInPandasWithState(
+    return l7_segments(packets, stream=True).groupBy("conn").applyInPandasWithState(
         update,
         outputStructType=TLS_STREAM_OUTPUT,
         stateStructType=TLS_STREAM_STATE,
@@ -570,19 +516,22 @@ def streaming_dns_tcp_reassembly(
     ordered by (``ts``·10⁶ + ``ts_usec``, ``pkt_no``): a micro-batch can
     carry several rotated captures, whose ``pkt_no`` restarts at 1 in
     each file.  Each flow reaches Python in the narrow
-    :func:`_l7_segments` layout under its directional ``conn`` key
-    (src|src_port|dst|dst_port); a checkpoint keyed by the four
+    :func:`..operators.flows.l7_segments` layout under its directional
+    ``conn`` key (src|src_port|dst|dst_port); a checkpoint keyed by the four
     columns (src, dst, src_port, dst_port) does not resume.
     """
     import pandas as pd
 
-    from ..operators.flows import _frame_messages, dns_columns, dns_messages
+    from ..operators.flows import (
+        _frame_messages, conn_endpoints, dns_columns, dns_messages, dns_ports,
+        l7_segments,
+    )
 
     def update(key, pdfs, state):
-        new, _b, n = _segment_bytes(pdfs)
+        new, _b, n = _group_streams(pdfs)
         if n == 0:
             return
-        src, src_port, dst, dst_port = _conn_endpoints(key[0])
+        src, src_port, dst, dst_port = conn_endpoints(key[0])
         residual, n_msgs, n_segs = (
             state.get if state.exists else (b"", 0, 0)
         )
@@ -609,10 +558,9 @@ def streaming_dns_tcp_reassembly(
         if rows:
             yield pd.DataFrame(rows)
 
-    port53 = packets.filter((F.col("src_port") == 53) | (F.col("dst_port") == 53))
-    return _l7_segments(port53, directional=True).groupBy(
-        "conn"
-    ).applyInPandasWithState(
+    return l7_segments(
+        packets, directional=True, flow_filter=dns_ports(), stream=True
+    ).groupBy("conn").applyInPandasWithState(
         update,
         outputStructType=DNS_TCP_OUTPUT,
         stateStructType=DNS_TCP_STATE,

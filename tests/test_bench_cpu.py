@@ -217,3 +217,34 @@ def test_min_of_n_teardown_runs_and_error_propagates():
     with pytest.raises(RuntimeError, match="query failed in d1"):
         bench.min_of_n(3, body, setup=lambda: "d1", teardown=torn.append)
     assert torn == ["d1"]
+
+
+def test_drift_sentinel_reference_is_warm_with_one_run():
+    """With one run per row, the row's only run is cold while the
+    end-of-suite sentinel re-time is warm: a sentinel row is timed once
+    more right after it and that warm run is its drift reference; the
+    row keeps its own (cold) time.  With more runs the row's warm min
+    is the reference and nothing is re-timed."""
+    sentinel, other = bench.DRIFT_SENTINELS[0], "tpch_q1"
+
+    def timer(walls):
+        calls = []
+
+        def time_query(name):
+            calls.append(name)
+            wall = walls[len(calls) - 1]
+            return wall, wall * 2, 7
+        return time_query, calls
+
+    tq, calls = timer([2.0, 0.8])
+    assert bench.time_headline_row(tq, sentinel, 1) == (2.0, 4.0, 7, (0.8, 1.6))
+    assert calls == [sentinel, sentinel]
+
+    tq, calls = timer([0.9])
+    assert bench.time_headline_row(tq, sentinel, 3) == (0.9, 1.8, 7, (0.9, 1.8))
+    assert calls == [sentinel]
+
+    for runs in (1, 3):
+        tq, calls = timer([1.5])
+        assert bench.time_headline_row(tq, other, runs) == (1.5, 3.0, 7, None)
+        assert calls == [other]

@@ -374,3 +374,139 @@ def test_seq_ordered_reassembly_heals_retrans_and_ooo(spark, tmp_path):
     )
     with _pytest.raises(ValueError, match="tcp_seq"):
         reassemble_tcp_streams(bare, order="seq")
+
+
+# --- the one direction join (flows.join_directions) ---------------------------
+
+
+def _ref_join(segs, max_bytes=None, order="capture"):
+    """Plain-Python reference: segments are dicts with src, src_port,
+    pkt_no, payload[, tcp_seq]; per (src, src_port) direction in
+    first-appearance order, payloads in pkt_no order (ties keep input
+    order) or seq-healed, joined up to ``max_bytes`` → list of
+    (direction, stream, truncated)."""
+    by_dir = {}
+    for s in sorted(segs, key=lambda s: s["pkt_no"]):
+        by_dir.setdefault((s["src"], s["src_port"]), []).append(s)
+    out = []
+    for d, ds in by_dir.items():
+        chunks = [s["payload"] for s in ds]
+        if order == "seq" and any(s["tcp_seq"] is not None for s in ds):
+            first = next(s["tcp_seq"] for s in ds if s["tcp_seq"] is not None)
+            keyed, rel = [], 0
+            for i, s in enumerate(ds):
+                if s["tcp_seq"] is not None:
+                    rel = (s["tcp_seq"] - first) % (1 << 32)
+                keyed.append((rel, i, s["payload"]))
+            chunks, edge = [], 0
+            for rel, _i, b in sorted(keyed):
+                if rel + len(b) <= edge:
+                    continue  # retransmission
+                chunks.append(b[max(edge - rel, 0):])
+                edge = rel + len(b)
+        stream, cut = b"", False
+        for b in chunks:
+            if max_bytes is not None and len(stream) + len(b) > max_bytes:
+                stream, cut = stream + b[: max_bytes - len(stream)], True
+                break
+            stream += b
+        out.append((d, stream, cut))
+    return out
+
+
+def _from_a(s):
+    """The canonical a-side rule of flows.canonical_pair_exprs."""
+    src, dst = s["src"], s["dst"]
+    sp = -1 if s["src_port"] is None else s["src_port"]
+    dp = -1 if s["dst_port"] is None else s["dst_port"]
+    return src < dst or (src == dst and sp <= dp)
+
+
+def _join(segs, max_bytes=None, order="capture"):
+    import numpy as np
+
+    from hadoop_pcap_spark.operators.flows import join_directions
+
+    got = join_directions(
+        (np.array([s["pkt_no"] for s in segs]),),
+        np.array([_from_a(s) for s in segs]),
+        [s["payload"] for s in segs],
+        max_bytes,
+        seq=[s["tcp_seq"] for s in segs] if order == "seq" else None,
+    )
+    return got
+
+
+def _seg(src, sp, dst, dp, pkt_no, payload, seq=None):
+    return {"src": src, "src_port": sp, "dst": dst, "dst_port": dp,
+            "pkt_no": pkt_no, "payload": payload, "tcp_seq": seq}
+
+
+def _check(segs, max_bytes=None, order="capture"):
+    got = _join(segs, max_bytes, order)
+    ref = _ref_join(segs, max_bytes, order)
+    sides = {_from_a(s): (s["src"], s["src_port"]) for s in segs}
+    assert [(sides[k], st, cut) for k, (st, cut, _rows) in got.items()] == ref
+    return got
+
+
+def test_join_directions_cases():
+    """Ties keep input order, directions come in first-appearance order,
+    a self-connection is one a-side stream, NULL ports key a direction,
+    and reaching the cap exactly truncates only if payload follows."""
+    c, s = "10.0.0.2", "10.0.0.1"  # the server sorts first: b-side client
+    ties = [_seg(c, 5, s, 80, 1, b"GE"), _seg(s, 80, c, 5, 2, b"HT"),
+            _seg(c, 5, s, 80, 2, b"T /"), _seg(c, 5, s, 80, 1, b"!")]
+    got = _check(ties)
+    assert [(k, v[0]) for k, v in got.items()] == [(False, b"GE!T /"), (True, b"HT")]
+    assert list(got[False][2]) == [0, 3, 2]
+
+    self_conn = [_seg(s, 7, s, 7, 2, b"b"), _seg(s, 7, s, 7, 1, b"a")]
+    got = _check(self_conn)
+    assert list(got) == [True] and got[True][0] == b"ab"
+
+    null_ports = [_seg(c, None, s, 80, 1, b"q"), _seg(s, 80, c, None, 2, b"r"),
+                  _seg(c, None, s, 80, 3, b"s")]
+    got = _check(null_ports)
+    assert [v[0] for v in got.values()] == [b"qs", b"r"]
+
+    exact = [_seg(c, 5, s, 80, 1, b"abc"), _seg(c, 5, s, 80, 2, b"de")]
+    assert _check(exact, 5)[False][:2] == (b"abcde", False)
+    assert _check(exact, 3)[False][:2] == (b"abc", True)  # cap hit, more follows
+    assert _check(exact, 4)[False][:2] == (b"abcd", True)
+    assert _join([], 4) == {}
+
+
+def test_join_directions_seq_heals_and_matches_reference():
+    """order="seq": out-of-order segments re-sort, retransmits drop,
+    overlaps trim, NULL seqs take the previous segment's seq, the 32-bit wrap
+    unwraps; randomized groups match the plain-Python reference."""
+    import random
+
+    c, s = "10.0.0.1", "10.0.0.2"
+    base = (1 << 32) - 3  # the flow crosses the wrap
+    healed = [_seg(c, 9, s, 80, 1, b"abc", base),
+              _seg(c, 9, s, 80, 2, b"ghi", (base + 6) % (1 << 32)),
+              _seg(c, 9, s, 80, 3, b"def", (base + 3) % (1 << 32)),
+              _seg(c, 9, s, 80, 4, b"abc", base),            # retransmit
+              _seg(c, 9, s, 80, 5, b"hijk", (base + 7) % (1 << 32)),  # overlap
+              _seg(c, 9, s, 80, 6, b"!", None)]  # seq-less: inherits 7, covered
+    got = _check(healed, order="seq")
+    assert got[True][0] == b"abcdefghijk"
+    assert list(got[True][2]) == [0, 2, 1, 4]
+
+    rng = random.Random(11)
+    for _ in range(300):
+        segs = []
+        for i in range(rng.randrange(1, 8)):
+            fwd = rng.random() < 0.5
+            segs.append(_seg(
+                c if fwd else s, 9 if fwd else 80, s if fwd else c,
+                80 if fwd else 9, rng.randrange(4),
+                bytes([rng.randrange(97, 123)]) * rng.randrange(1, 4),
+                None if rng.random() < 0.2
+                else (base + rng.randrange(10)) % (1 << 32),
+            ))
+        cap = rng.choice([None, 1, 2, 4, 7])
+        _check(segs, cap)
+        _check(segs, cap, order="seq")

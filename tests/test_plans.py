@@ -100,10 +100,11 @@ def test_reassembly_single_exchange_and_early_projection(spark):
     plan = plan_of(reassemble_dns_tcp(pkts))
     assert plan.count("Exchange hashpartitioning") == 1, plan
     # r13: group-to-flow is a JVM-side collect_list (ObjectHashAggregate),
-    # the Python stage is the BATCHED MapInPandas — not per-group
-    # FlatMapGroupsInPandas (see flows.connection_segments)
-    assert "MapInPandas" in plan
+    # the Python stage is the BATCHED MapInArrow — not per-group
+    # FlatMapGroupsInPandas/InArrow (see flows.map_rows)
+    assert "MapInArrow" in plan
     assert "FlatMapGroupsInPandas" not in plan
+    assert "FlatMapGroupsInArrow" not in plan
     assert "collect_list" in plan
 
 

@@ -46,7 +46,9 @@ def test_small_connection_shuffle_parses_on_more_than_one_task(spark, tmp_path):
         if n.nodeName() == "Exchange"
     )
     assert written >= 1 << 20, written
-    (parse,) = [n for n in nodes if n.nodeName() == "MapInPandas"]
+    # the decode is a MapInArrow too: the parse is the one after the shuffle
+    (parse,) = [n for n in nodes if n.nodeName() == "MapInArrow"
+                and "body" in n.output().toString()]
     assert parse.outputPartitioning().numPartitions() > 1
 
 

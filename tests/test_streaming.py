@@ -6,6 +6,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from hadoop_pcap_spark.operators.flows import conn_endpoints, l7_segments
 from hadoop_pcap_spark.plans import events_table
 from hadoop_pcap_spark.streaming import stream as STRM
 
@@ -1463,7 +1464,7 @@ def _l7_input(spark, rows):
 
 
 def test_l7_conn_key_round_trip(spark):
-    """The streaming L7 operators' one string key: canonical (HTTP/TLS)
+    """The L7 operators' one string key (flows.l7_segments): canonical (HTTP/TLS)
     keys are direction-free with ``from_a`` marking the a-side, the
     directional (DNS) key keeps src first, a NULL port renders empty
     without shifting later fields, and IPv6 colons survive the parse."""
@@ -1476,26 +1477,27 @@ def test_l7_conn_key_round_trip(spark):
         ("10.0.0.9", "10.0.0.9", 7, 7),  # self-connection
     ]
     pkts = _l7_input(spark, rows)
-    canon = STRM._l7_segments(pkts).orderBy("pkt_no").collect()
+    canon = l7_segments(pkts, stream=True).orderBy("pkt_no").collect()
     assert [c.conn for c in canon] == [
         f"{v6a}|443|{v6b}|50000", f"{v6a}|443|{v6b}|50000",
         "10.0.0.1||10.0.0.2|80", "10.0.0.1||10.0.0.2|80",
         "10.0.0.9|7|10.0.0.9|7",
     ]
     assert [c.from_a for c in canon] == [False, True, True, False, True]
-    assert [STRM._conn_endpoints(c.conn) for c in canon[1:4:2]] == [
+    assert [conn_endpoints(c.conn) for c in canon[1:4:2]] == [
         (v6a, 443, v6b, 50000), ("10.0.0.1", None, "10.0.0.2", 80),
     ]
-    assert STRM._conn_endpoints(canon[4].conn) == ("10.0.0.9", 7, "10.0.0.9", 7)
-    directed = STRM._l7_segments(pkts, directional=True).orderBy("pkt_no")
+    assert conn_endpoints(canon[4].conn) == ("10.0.0.9", 7, "10.0.0.9", 7)
+    directed = l7_segments(pkts, directional=True, stream=True).orderBy("pkt_no")
     assert directed.columns == ["conn", "t_us", "pkt_no", "payload"]
-    got = [STRM._conn_endpoints(c.conn) for c in directed.collect()]
+    got = [conn_endpoints(c.conn) for c in directed.collect()]
     assert got == [(s, sp, d, dp) for s, d, sp, dp in rows]
 
 
 def test_l7_segment_bytes_orders_by_time_then_pkt_no():
-    """The Python half of the layout: chunks of one group are joined in
-    (t_us, pkt_no) order per direction, ties keep arrival order."""
+    """The Python half of the layout: chunks of one group are joined
+    (flows.join_directions) in (t_us, pkt_no) order per direction, ties
+    keep arrival order."""
     import pandas as pd
 
     def chunk(rows):
@@ -1504,10 +1506,10 @@ def test_l7_segment_bytes_orders_by_time_then_pkt_no():
     first = chunk([(True, 20, 1, b"C"), (False, 10, 2, b"y")])
     second = chunk([(True, 10, 1, b"A"), (True, 10, 2, b"B"),
                     (False, 10, 1, b"x"), (True, 20, 1, b"D")])
-    assert STRM._segment_bytes(iter([first, second])) == (b"ABCD", b"xy", 6)
+    assert STRM._group_streams(iter([first, second])) == (b"ABCD", b"xy", 6)
     one_way = second.drop(columns="from_a")
-    assert STRM._segment_bytes(iter([one_way])) == (b"AxBD", b"", 4)
-    assert STRM._segment_bytes(iter([])) == (b"", b"", 0)
+    assert STRM._group_streams(iter([one_way])) == (b"AxBD", b"", 4)
+    assert STRM._group_streams(iter([])) == (b"", b"", 0)
 
     # against the per-row loop it replaces (stable sort, then append)
     import random
@@ -1528,7 +1530,7 @@ def test_l7_segment_bytes_orders_by_time_then_pkt_no():
                 a += row["payload"]
             else:
                 b += row["payload"]
-        assert STRM._segment_bytes(iter(chunks)) == (a, b, len(ref))
+        assert STRM._group_streams(iter(chunks)) == (a, b, len(ref))
 
 
 def _stateful_pandas_nodes(df):
